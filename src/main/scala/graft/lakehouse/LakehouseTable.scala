@@ -502,10 +502,12 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     // forward unless the writer set it explicitly (rollback restores the
     // TARGET's lineage, overwrite resets to Some(empty) — the sentinel
     // distinguishing "reset" from "inherit")
-    // ONE head resolution for the whole stamp sequence: each
-    // currentSnapshot() is a directory listing + sort, and this path
-    // paid up to five per commit (guide §1.2 driver work)
-    val head = currentSnapshot()
+    // the registries inherit from the commit's OWN parent — the head
+    // its writer read, main or branch alike (a branch commit inheriting
+    // main's registries would mis-resolve its eras). The parent was
+    // listed moments ago, so this is a cache hit, not a listing.
+    val head = s00.parentId.map(pid =>
+      Option(snapshotCache.get(f"$pid%09d.json")).getOrElse(snapshotOrThrow(pid)))
     val s0a = if (s00.renames.isEmpty)
       s00.copy(renames = head.flatMap(_.renames)) else s00
     // the dropped-column registry is cumulative the same way (compact
@@ -519,7 +521,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     // keeps its id, fresh names allocate monotonically, dropped ids
     // retire forever. A writer that set the state explicitly (rollback
     // restoring its target's ids) still gets the high-water mark
-    // clamped against the head — ids must never be re-allocated even
+    // clamped against the parent — ids must never be re-allocated even
     // across a rollback that rewinds past later ADDs.
     val s0 = s0b.fieldIds match {
       case None => s0b.copy(fieldIds = Some(assignFieldIds(head, s0b)))
@@ -656,49 +658,96 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * re-checks its mark per attempt: if the racing commit was a replica
     * of the SAME producer batch (two instances of one streaming app),
     * this one is absorbed (None) instead of double-applying.
+    * A branch `target` runs the same protocol against the branch head.
     */
   private def appendWith(df0: DataFrame, partitionBy: Seq[String],
-      mark: Option[TxnMark]): Option[Snapshot] = {
-    requireCompatibleSchema(df0)
-    val df = canonicalizedNames(df0)
-    val claimedId = nextId()
-    val baseTombs = currentSnapshot().map(_.tombstones.toSet).getOrElse(Set.empty)
-    val newFiles = writeDataFiles(df, claimedId, partitionCols = partitionBy)
-    var attempt = 0
-    while (attempt < LakehouseTable.MaxCommitAttempts) {
+      mark: Option[TxnMark], target: WriteTarget = MainLine): Option[Snapshot] = {
+    val (head, claimedId) = target.resolve()
+    requireCompatibleSchemaFor(head, df0.schema)
+    val df = canonicalizedNamesAt(head, df0)
+    val baseTombs = head.map(_.tombstones.toSet).getOrElse(Set.empty)
+    val newFiles = writeDataFiles(df, claimedId, partitionCols = partitionBy, head = head)
+    withCommitRetry {
       if (mark.exists(m => lastTxnVersion(m.appId).exists(_ >= m.version)))
-        return None // a racing replica of this exact batch already landed
-      val parent = currentSnapshot()
-      requireCompatibleSchema(df) // the head (and its schema) may have moved
-      // MoR masking sequences on the PATH-derived origin (= claimedId
-      // here), so a racing CDC apply whose tombstone is newer than our
-      // claimed id would mask this append's rows as if they predated
-      // it. That one interleaving is a genuine conflict — surface it;
-      // every other racer (append/compact/rewrite) rebases safely.
-      val racedTombs = parent.map(_.tombstones.toSet).getOrElse(Set.empty) -- baseTombs
-      if (racedTombs.exists(originOf(_) > claimedId))
-        throw new ConcurrentCommitException(root, claimedId)
-      try {
-        return Some(writeSnapshot(Snapshot(nextId(), parent.map(_.snapshotId),
+        Right(None) // a racing replica of this exact batch already landed
+      else {
+        val (parent, id) = target.resolve()
+        requireCompatibleSchemaFor(parent, df.schema) // the head (and its schema) may have moved
+        // MoR masking sequences on the PATH-derived origin (= claimedId
+        // here), so a racing CDC apply whose tombstone is newer than our
+        // claimed id would mask this append's rows as if they predated
+        // it. That one interleaving is a genuine conflict — surface it;
+        // every other racer (append/compact/rewrite) rebases safely.
+        val racedTombs = parent.map(_.tombstones.toSet).getOrElse(Set.empty) -- baseTombs
+        if (racedTombs.exists(originOf(_) > claimedId))
+          Left(new ConcurrentCommitException(root, claimedId))
+        else Right(Some(target.publish(Snapshot(id, parent.map(_.snapshotId),
           System.currentTimeMillis(), "append",
           parent.map(_.files).getOrElse(Nil) ++ newFiles,
-          evolvedSchemaJson(df), txn = mark,
-          deletes = parent.flatMap(_.deletes))))
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt >= LakehouseTable.MaxCommitAttempts)
-            throw e // livelock guard; the caller retries
-          // jittered backoff: under sustained cross-process contention
-          // N lock-step retry loops would otherwise keep colliding on
-          // every version until the attempt cap fires for someone
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current()
-              .nextLong(1L, math.min(128L, 4L << math.min(attempt, 5)) + 1))
+          evolvedSchemaJsonFor(parent, df.schema), txn = mark,
+          deletes = parent.flatMap(_.deletes)))))
       }
     }
-    sys.error("unreachable: loop exits only by return/throw")
   }
+
+  /** Run one optimistic commit attempt, re-running it after every LOST
+    * publish race ([[writeSnapshot]]'s put-if-absent) with jittered
+    * backoff — under sustained cross-process contention N lock-step
+    * retry loops would otherwise keep colliding on every version. The
+    * [[LakehouseTable.MaxCommitAttempts]]-th loss surfaces (livelock
+    * guard; the caller retries). A genuine conflict the attempt itself
+    * detects comes back as `Left` and surfaces at once, unretried.
+    */
+  private def withCommitRetry[T](attempt: => Either[ConcurrentCommitException, T]): T = {
+    var lost = 0
+    var outcome: Option[Either[ConcurrentCommitException, T]] = None
+    while (outcome.isEmpty) {
+      try outcome = Some(attempt)
+      catch {
+        case e: ConcurrentCommitException =>
+          lost += 1
+          if (lost >= LakehouseTable.MaxCommitAttempts) throw e
+          Thread.sleep(
+            java.util.concurrent.ThreadLocalRandom.current()
+              .nextLong(1L, math.min(128L, 4L << math.min(lost, 5)) + 1))
+      }
+    }
+    outcome.get.fold(conflict => throw conflict, identity)
+  }
+
+  /** Where a main-line write core commits: the MAIN lineage, or the
+    * current incarnation of a write-audit-publish branch. The core
+    * resolves its head, schema checks, name canonicalisation and
+    * registry inheritance from the target alone, so a branch write is
+    * the main write against another head — never a copy of it.
+    */
+  private sealed abstract class WriteTarget {
+    protected def headIn(snaps: Seq[Snapshot]): Option[Snapshot]
+    /** (head, next global version id) from ONE manifest listing. */
+    def resolve(): (Option[Snapshot], Long) = {
+      val snaps = listSnapshots()
+      (headIn(snaps), snaps.lastOption.map(_.snapshotId + 1).getOrElse(1L))
+    }
+    /** Publish `s`, stamped with this target's membership. */
+    def publish(s: Snapshot): Snapshot
+  }
+
+  private object MainLine extends WriteTarget {
+    protected def headIn(snaps: Seq[Snapshot]) = snaps.reverseIterator.find(_.branch.isEmpty)
+    def publish(s: Snapshot) = writeSnapshot(s)
+  }
+
+  /** Branch `name`, incarnation `ref` — the head is the newest commit
+    * of this incarnation, or the fork before any landed. Branch commits
+    * never carry txn marks: a WAP audit replays by re-forking.
+    */
+  private final class BranchLine(name: String, ref: BranchRef) extends WriteTarget {
+    protected def headIn(snaps: Seq[Snapshot]) = Some(branchHeadIn(snaps, name, ref))
+    def publish(s: Snapshot) =
+      writeSnapshot(s.copy(branch = Some(name), branchEpoch = ref.epoch))
+  }
+
+  private def onBranch(name: String): WriteTarget = new BranchLine(name, branchRef(name))
 
   // ---------------- DSv2 executor-write primitives ----------------
 
@@ -722,7 +771,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   private[lakehouse] def writeBinRecordsPerFile: Option[Long] =
     (if (optimizeWrite) optimizeWriteTargetBytes else None)
-      .flatMap(t => manifestBytesPerRow.map(bpr =>
+      .flatMap(t => manifestBytesPerRow(currentSnapshot()).map(bpr =>
         math.max(1L, (t / math.max(bpr, 1e-9)).toLong)))
 
   /** The canonicalization rules of [[canonicalizedNamesAt]] as a COLUMN
@@ -779,35 +828,28 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   private[lakehouse] def commitWrittenFiles(newFiles: Seq[String],
       batchSchema: StructType, claimedId: Long, mark: Option[TxnMark],
       targetAuthoritative: Boolean): Option[Snapshot] = writeLock.synchronized {
-    var attempt = 0
-    while (attempt < LakehouseTable.MaxCommitAttempts) {
+    withCommitRetry {
       if (mark.exists(m => lastTxnVersion(m.appId).exists(_ >= m.version)))
-        return None // a racing replica of this exact batch already landed
-      val parent = currentSnapshot()
-      requireCompatibleSchemaFor(parent, batchSchema)
-      // a raced tombstone NEWER than this write's claimed origin would
-      // mask the new rows as if they predated it — the appendWith rule
-      if (parent.exists(_.tombstones.exists(originOf(_) > claimedId)))
-        throw new ConcurrentCommitException(root, claimedId)
-      val schemaJson =
-        if (targetAuthoritative)
-          parent.map(_.schemaJson).getOrElse(batchSchema.json)
-        else evolvedSchemaJsonFor(parent, batchSchema)
-      try {
-        return Some(writeSnapshot(Snapshot(nextId(), parent.map(_.snapshotId),
-          System.currentTimeMillis(), "append",
-          parent.map(_.files).getOrElse(Nil) ++ newFiles,
-          schemaJson, txn = mark, deletes = parent.flatMap(_.deletes))))
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt >= LakehouseTable.MaxCommitAttempts) throw e
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current()
-              .nextLong(1L, math.min(128L, 4L << math.min(attempt, 5)) + 1))
+        Right(None) // a racing replica of this exact batch already landed
+      else {
+        val (parent, id) = MainLine.resolve()
+        requireCompatibleSchemaFor(parent, batchSchema)
+        // a raced tombstone NEWER than this write's claimed origin would
+        // mask the new rows as if they predated it — the appendWith rule
+        if (parent.exists(_.tombstones.exists(originOf(_) > claimedId)))
+          Left(new ConcurrentCommitException(root, claimedId))
+        else {
+          val schemaJson =
+            if (targetAuthoritative)
+              parent.map(_.schemaJson).getOrElse(batchSchema.json)
+            else evolvedSchemaJsonFor(parent, batchSchema)
+          Right(Some(writeSnapshot(Snapshot(id, parent.map(_.snapshotId),
+            System.currentTimeMillis(), "append",
+            parent.map(_.files).getOrElse(Nil) ++ newFiles,
+            schemaJson, txn = mark, deletes = parent.flatMap(_.deletes)))))
+        }
       }
     }
-    sys.error("unreachable: loop exits only by return/throw")
   }
 
   /** Full-overwrite commit over EXECUTOR-WRITTEN files: the DSv2 form
@@ -833,8 +875,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       filters: Seq[sources.Filter]): Option[Snapshot] = writeLock.synchronized {
     val cond = filters.map(LakehouseSource.toCondition)
       .reduceOption(_ && _).getOrElse(lit(true))
-    var attempt = 0
-    while (attempt < LakehouseTable.MaxCommitAttempts) {
+    withCommitRetry {
       val cur = currentSnapshot().getOrElse(throw new IllegalStateException(
         s"table $root has no snapshots"))
       val candidates = LakehouseSource.pruneForFilters(this, cur, filters,
@@ -846,21 +887,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
         else dropEmptyDataFiles(writeDataFiles(
           scanFiles(cur, candidates).filter(not(cond <=> lit(true))),
           id, suffix = "rw", partitionCols = partCols))
-      try {
-        return Some(writeSnapshot(Snapshot(id, Some(cur.snapshotId),
-          System.currentTimeMillis(), "overwrite",
-          cur.files.diff(candidates) ++ rewritten ++ staged,
-          cur.schemaJson, deletes = cur.deletes)))
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt >= LakehouseTable.MaxCommitAttempts) throw e
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current()
-              .nextLong(1L, math.min(128L, 4L << math.min(attempt, 5)) + 1))
-      }
+      Right(Some(writeSnapshot(Snapshot(id, Some(cur.snapshotId),
+        System.currentTimeMillis(), "overwrite",
+        cur.files.diff(candidates) ++ rewritten ++ staged,
+        cur.schemaJson, deletes = cur.deletes))))
     }
-    sys.error("unreachable: loop exits only by return/throw")
   }
 
   /** Keyed upsert over EXECUTOR-WRITTEN files: the DSv2 form of
@@ -918,15 +949,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
           // stage-1 prune ranges from the staged files' own footers —
           // zero Spark jobs; the aggregate-job fallback answers when
           // the footers can't (see footerKeyRanges)
-          val touched = touchedFilesFor(c, incomingKeys, keys,
-            knownRanges = footerKeyRanges(staged, keys, batchSchema))
           val id = nextId()
-          val partCols = inferPartitionCols(c.files)
-          val rewritten =
-            if (touched.isEmpty) Nil
-            else writeDataFiles(
-              scanFiles(c, touched).join(incomingKeys, keys, "left_anti"),
-              id, suffix = "rw", partitionCols = partCols)
+          val (touched, rewritten) = rewriteTouched(c, incomingKeys, keys, id,
+            inferPartitionCols(c.files), footerKeyRanges(staged, keys, batchSchema))
           writeSnapshot(Snapshot(id, Some(c.snapshotId),
             System.currentTimeMillis(), "upsert",
             c.files.diff(touched) ++ rewritten ++ staged,
@@ -1005,15 +1030,10 @@ final class LakehouseTable(spark: SparkSession, val root: String,
           // stage-1 prune ranges from the tomb key files' own footers —
           // zero Spark jobs (footerKeyRanges; the agg-job fallback
           // answers when the footers can't)
-          val touched = incoming.map(touchedFilesFor(c, _, keys,
-            knownRanges = footerKeyRanges(tombFiles, keys, keyFields))).getOrElse(Nil)
           val id = nextId()
-          val partCols = inferPartitionCols(c.files)
-          val rewritten =
-            if (touched.isEmpty) Nil
-            else writeDataFiles(
-              scanFiles(c, touched).join(incoming.get, keys, "left_anti"),
-              id, suffix = "rw", partitionCols = partCols)
+          val (touched, rewritten) = incoming.fold((Seq.empty[String], Seq.empty[String]))(
+            rewriteTouched(c, _, keys, id, inferPartitionCols(c.files),
+              footerKeyRanges(tombFiles, keys, keyFields)))
           Some(writeSnapshot(Snapshot(id, Some(c.snapshotId),
             System.currentTimeMillis(), op,
             c.files.diff(touched) ++ rewritten ++ dataFiles,
@@ -1128,53 +1148,49 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * not, and mixed spellings across files would poison later reads.
     */
   private def canonicalizedNames(df: DataFrame): DataFrame =
-    currentSnapshot() match {
-      case None => df
-      case Some(cur) => canonicalizedNamesAt(cur, df)
-    }
+    canonicalizedNamesAt(currentSnapshot(), df)
 
   /** [[canonicalizedNames]] against an explicit head (branch writes
     * canonicalize against the BRANCH head, not main).
     */
-  private def canonicalizedNamesAt(cur: Snapshot, df: DataFrame): DataFrame = {
-    {
-        val schema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
-        val canon = schema.fieldNames.map(n => nameKey(n) -> n).toMap
-        // a FORMER name (rename lineage) canonicalizes to the current
-        // one too: an upstream CDC feed that lags a rename keeps landing
-        // in the right column instead of forking a ghost sibling. A
-        // former name RE-INTRODUCED as a live column (reborn) is its
-        // own identity now — the current name shadows the alias.
-        val aliasCanon = cur.aliases.flatMap { case (current, olds) =>
-          olds.map(a => nameKey(a.name) -> current)
-        }.filterNot { case (k, _) => canon.contains(k) }
-        // a DROPPED column (or any of its former names) still arriving
-        // in a batch is discarded — the column no longer exists; an
-        // upstream CDC stream pinned pre-drop keeps sending it, and
-        // treating it as additive would resurrect stale data under a
-        // re-added name
-        val droppedKeys = cur.droppedCols.keySet.map(nameKey)
-        val pruned =
-          if (droppedKeys.isEmpty) df
-          else df.columns.filter(c => droppedKeys(nameKey(c)))
-            .foldLeft(df)((d, c) => d.drop(c))
-        val named = pruned.columns.foldLeft(pruned) { (d, c) =>
-          canon.get(nameKey(c)).orElse(aliasCanon.get(nameKey(c))).filter(_ != c)
-            .map(t => d.withColumnRenamed(c, t)).getOrElse(d)
+  private def canonicalizedNamesAt(head: Option[Snapshot], df: DataFrame): DataFrame =
+    head.fold(df) { cur =>
+      val schema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
+      val canon = schema.fieldNames.map(n => nameKey(n) -> n).toMap
+      // a FORMER name (rename lineage) canonicalizes to the current
+      // one too: an upstream CDC feed that lags a rename keeps landing
+      // in the right column instead of forking a ghost sibling. A
+      // former name RE-INTRODUCED as a live column (reborn) is its
+      // own identity now — the current name shadows the alias.
+      val aliasCanon = cur.aliases.flatMap { case (current, olds) =>
+        olds.map(a => nameKey(a.name) -> current)
+      }.filterNot { case (k, _) => canon.contains(k) }
+      // a DROPPED column (or any of its former names) still arriving
+      // in a batch is discarded — the column no longer exists; an
+      // upstream CDC stream pinned pre-drop keeps sending it, and
+      // treating it as additive would resurrect stale data under a
+      // re-added name
+      val droppedKeys = cur.droppedCols.keySet.map(nameKey)
+      val pruned =
+        if (droppedKeys.isEmpty) df
+        else df.columns.filter(c => droppedKeys(nameKey(c)))
+          .foldLeft(df)((d, c) => d.drop(c))
+      val named = pruned.columns.foldLeft(pruned) { (d, c) =>
+        canon.get(nameKey(c)).orElse(aliasCanon.get(nameKey(c))).filter(_ != c)
+          .map(t => d.withColumnRenamed(c, t)).getOrElse(d)
+      }
+      // NARROWER batch columns cast UP to the table's declared type at
+      // write time (exact by the lossless-widening lattice) so every
+      // file of one snapshot era shares one physical width
+      val declared = schema.fields.map(f => nameKey(f.name) -> f.dataType).toMap
+      named.columns.foldLeft(named) { (d, c) =>
+        declared.get(nameKey(c)) match {
+          case Some(t) if canWiden(d.schema(c).dataType, t) =>
+            d.withColumn(c, col(c).cast(t))
+          case _ => d
         }
-        // NARROWER batch columns cast UP to the table's declared type at
-        // write time (exact by the lossless-widening lattice) so every
-        // file of one snapshot era shares one physical width
-        val declared = schema.fields.map(f => nameKey(f.name) -> f.dataType).toMap
-        named.columns.foldLeft(named) { (d, c) =>
-          declared.get(nameKey(c)) match {
-            case Some(t) if canWiden(d.schema(c).dataType, t) =>
-              d.withColumn(c, col(c).cast(t))
-            case _ => d
-          }
-        }
+      }
     }
-  }
 
   /** The lossless type-widening lattice (the schema-monitor "widen ok"
     * policy, applied at the table): may a value of type `from` flow
@@ -1194,14 +1210,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
   }
 
-  /** Widen-only schema evolution (the schema-monitor policy applied at
-    * the table: additive columns flow, type changes stop the writer):
-    * a batch may ADD columns — older files read back with nulls there —
-    * and may omit existing ones (nulls for the batch's rows), but a
-    * column shared with the table must keep its exact type. The
-    * snapshot records the union schema so readers and time travel see
-    * a single coherent shape per snapshot.
-    */
   /** Column-name lookup key under the session's resolution semantics.
     * Spark resolves names case-INsensitively unless spark.sql
     * .caseSensitive is set, so the compatibility check must match on
@@ -1214,15 +1222,15 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) n
     else n.toLowerCase(java.util.Locale.ROOT)
 
-  private def requireCompatibleSchema(df: DataFrame): Unit =
-    requireCompatibleSchemaAt(currentSnapshot(), df)
-
-  /** [[requireCompatibleSchema]] against an explicit head. */
-  private def requireCompatibleSchemaAt(head: Option[Snapshot], df: DataFrame): Unit =
-    requireCompatibleSchemaFor(head, df.schema)
-
-  /** The schema-only form — the DSv2 write face validates its column
-    * plan without materializing a DataFrame.
+  /** Widen-only schema evolution (the schema-monitor policy applied at
+    * the table: additive columns flow, type changes stop the writer):
+    * a batch may ADD columns — older files read back with nulls there —
+    * and may omit existing ones (nulls for the batch's rows), but a
+    * column shared with the table must keep its exact type. The
+    * snapshot records the union schema so readers and time travel see
+    * a single coherent shape per snapshot.
+    * Schema-only, against an explicit head: the DSv2 write face
+    * validates its column plan without materializing a DataFrame.
     */
   private[lakehouse] def requireCompatibleSchemaFor(
       head: Option[Snapshot], schema: StructType): Unit = {
@@ -1254,7 +1262,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
               "(widen-only evolution: lossless widening flows, narrower batches " +
               "cast up at write; anything else must go through overwrite)")
           // a WIDER batch column would auto-widen the union schema
-          // (evolvedSchemaJson) — refused for bucket sources for the
+          // (evolvedSchemaJsonFor) — refused for bucket sources for the
           // same width-sensitive-hash reason widenColumn refuses
           require(!(canWiden(t, f.dataType) && t != f.dataType && bucketSrcs(key)),
             s"batch widens bucket-transform source column '${f.name}' " +
@@ -1266,14 +1274,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
   }
 
-  private def evolvedSchemaJson(df: DataFrame): String =
-    evolvedSchemaJsonAt(currentSnapshot(), df)
-
-  /** [[evolvedSchemaJson]] against an explicit head. */
-  private def evolvedSchemaJsonAt(head: Option[Snapshot], df: DataFrame): String =
-    evolvedSchemaJsonFor(head, df.schema)
-
-  /** The schema-only form (the DSv2 write face's commit path). */
+  /** The union schema a batch of `schema` evolves `head` to (additive
+    * columns append, lossless widenings widen).
+    */
   private[lakehouse] def evolvedSchemaJsonFor(
       head: Option[Snapshot], schema: StructType): String =
     head match {
@@ -1307,10 +1310,14 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * existing-file reads or rewrites. See [[applyChanges]].
     */
   def upsert(df0: DataFrame, keys: Seq[String], mergeOnRead: Boolean): Snapshot =
+    writeLock.synchronized { upsertOn(MainLine, df0, keys, mergeOnRead) }
+
+  private def upsertOn(target: WriteTarget, df0: DataFrame, keys: Seq[String],
+      mergeOnRead: Boolean): Snapshot =
     if (mergeOnRead)
-      applyChanges(df0.withColumn("_change", lit("insert")), keys,
-        txn = None, mergeOnRead = true).get
-    else writeLock.synchronized { upsertWith(df0, keys, mark = None) }
+      applyChangesWith(df0.withColumn("_change", lit("insert")), keys,
+        mark = None, mergeOnRead = true, target)
+    else upsertWith(df0, keys, mark = None, target)
 
   /** Upsert guarded by the transaction ledger — None means `version`
     * was already applied for `appId` and nothing was written. See
@@ -1428,19 +1435,17 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   }
 
   private def upsertWith(df0: DataFrame, keys: Seq[String],
-      mark: Option[TxnMark]): Snapshot = {
+      mark: Option[TxnMark], target: WriteTarget = MainLine): Snapshot = {
     require(keys.nonEmpty, "upsert requires key columns")
-    requireCompatibleSchema(df0)
-    val df = canonicalizedNames(df0)
-    val cur = currentSnapshot()
+    val (cur, id) = target.resolve()
+    requireCompatibleSchemaFor(cur, df0.schema)
+    val df = canonicalizedNamesAt(cur, df0)
     if (cur.isEmpty) {
-      val id = nextId()
-      val files = writeDataFiles(df, id)
-      return writeSnapshot(Snapshot(id, None, System.currentTimeMillis(),
+      val files = writeDataFiles(df, id, head = None)
+      return target.publish(Snapshot(id, None, System.currentTimeMillis(),
         "upsert", files, df.schema.json, txn = mark))
     }
 
-    val id = nextId()
     val existingFiles = cur.get.files
     val incoming = df.cache()
     try {
@@ -1454,28 +1459,37 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       // — files only become visible at the manifest commit, and a
       // failed attempt orphans them exactly like a failed rewrite
       // always has (snapshot expiry collects orphans).
-      val added = writeDataFiles(incoming, id,
+      val added = writeDataFiles(incoming, id, head = cur,
         partitionCols = partCols.filter(pc => incoming.columns.contains(specSourceCol(pc))))
-      // which physical files hold rows that collide with incoming keys?
-      // (two-stage: manifest-stats prune, then an exact column-pruned
-      // semi-join over only the candidates — see touchedFilesFor)
       val incomingKeys = incoming.select(keys.map(col): _*).distinct()
-      val touchedRel = touchedFilesFor(cur.get, incomingKeys, keys,
-        knownRanges = footerKeyRanges(added, keys, incoming.schema))
-      val rewritten: Seq[String] =
-        if (touchedRel.isEmpty) Nil
-        else {
-          // effective (tombstone-masked) read: a raw read would copy
-          // MoR-deleted rows into a fresh-origin file and resurrect them
-          val survivors = scanFiles(cur.get, touchedRel)
-            .join(incomingKeys, keys, "left_anti")
-          writeDataFiles(survivors, id, suffix = "rw", partitionCols = partCols)
-        }
-      val untouched = existingFiles.diff(touchedRel)
-      writeSnapshot(Snapshot(id, Some(cur.get.snapshotId), System.currentTimeMillis(),
-        "upsert", untouched ++ rewritten ++ added, evolvedSchemaJson(df), txn = mark,
-        deletes = cur.get.deletes))
+      val (touched, rewritten) = rewriteTouched(cur.get, incomingKeys, keys, id,
+        partCols, footerKeyRanges(added, keys, incoming.schema))
+      target.publish(Snapshot(id, Some(cur.get.snapshotId), System.currentTimeMillis(),
+        "upsert", existingFiles.diff(touched) ++ rewritten ++ added,
+        evolvedSchemaJsonFor(cur, df.schema), txn = mark, deletes = cur.get.deletes))
     } finally incoming.unpersist()
+  }
+
+  /** The copy-on-write half of every keyed write: find `head`'s data
+    * files holding any key tuple of `keyRows` (two-stage — manifest
+    * prune, then an exact semi-join over the candidates only; see
+    * [[touchedFilesFor]]) and rewrite them without those keys, under
+    * the table's hive layout `partCols`. Returns (touched, rewritten):
+    * the commit swaps the first for the second, every other file
+    * carries over by reference.
+    */
+  private def rewriteTouched(head: Snapshot, keyRows: DataFrame, keys: Seq[String],
+      id: Long, partCols: Seq[String],
+      knownRanges: Option[Seq[ScanPredicate.Range]]): (Seq[String], Seq[String]) = {
+    val touched = touchedFilesFor(head, keyRows, keys, knownRanges)
+    val rewritten =
+      if (touched.isEmpty) Nil
+      else writeDataFiles(
+        // effective (tombstone-masked) read: a raw read would copy
+        // MoR-deleted rows into a fresh-origin file and resurrect them
+        scanFiles(head, touched).join(keyRows, keys, "left_anti"),
+        id, suffix = "rw", partitionCols = partCols, head = Some(head))
+    (touched, rewritten)
   }
 
   /** CDC-apply: consume one change-feed batch (rows tagged by a
@@ -1494,132 +1508,126 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * the app's last recorded version returns None without writing.
     * An EMPTY batch still commits a snapshot so its mark is recorded
     * — otherwise a crash after an empty batch would replay it forever.
+    * [[applyChangesToBranch]] runs this same core against a branch head.
     */
   def applyChanges(ch0: DataFrame, keys: Seq[String],
       txn: Option[(String, Long)] = None,
       mergeOnRead: Boolean = false): Option[Snapshot] = writeLock.synchronized {
+    txn match {
+      case Some((app, v)) if lastTxnVersion(app).exists(_ >= v) => None
+      case _ => Some(applyChangesWith(ch0, keys,
+        txn.map { case (a, v) => TxnMark(a, v) }, mergeOnRead, MainLine))
+    }
+  }
+
+  private def applyChangesWith(ch0: DataFrame, keys: Seq[String],
+      mark: Option[TxnMark], mergeOnRead: Boolean, target: WriteTarget): Snapshot = {
     require(keys.nonEmpty, "applyChanges requires key columns")
     require(ch0.columns.contains("_change"),
       "applyChanges input must carry a _change column (insert|delete)")
-    txn match {
-      case Some((app, v)) if lastTxnVersion(app).exists(_ >= v) => None
-      case _ =>
-        val mark = txn.map { case (a, v) => TxnMark(a, v) }
-        val ch = canonicalizedNames(ch0).cache()
-        try {
-          requireCompatibleSchema(ch.drop("_change"))
-          // unknown tags must fail LOUDLY: an unvalidated tag (a typo,
-          // or another feed dialect's "update_postimage") would fall
-          // into the delete path below and silently destroy the row.
-          // NULL needs its own disjunct — under SQL three-valued logic
-          // `!isin(...)` is NULL for a null tag and the filter would
-          // silently drop exactly the row it exists to catch.
-          // ONE aggregate pass answers tag validity AND the emptiness
-          // probes the branches below need (nIns/nAll) — the separate
-          // distinct-collect + isEmpty actions cost a Spark job each
-          // per CDC batch (guide §1.2: don't compute things twice)
-          // per-key min/max ride the same pass: the CoW branch's
-          // touched-file prune needs exactly these ranges, and a
-          // separate agg job per CDC batch paid for them twice
-          val statAggs = Seq(
-            // bounded sample of bad tags (r16 ADVICE): an unbounded
-            // collect_set over a high-cardinality corrupt feed would
-            // materialize every distinct bad value on the driver just
-            // to fail; five examples diagnose the same
-            slice(sort_array(collect_set(when(
-              col("_change").isNull || !col("_change").isin("insert", "delete"),
-              coalesce(col("_change"), lit("NULL"))))), 1, 5).as("bad"),
-            count(when(col("_change") === "insert", lit(1))).as("nins"),
-            count(lit(1)).as("nall")) ++
-            keys.flatMap(k => Seq(min(col(k)), max(col(k))))
-          val chStats = ch.agg(statAggs.head, statAggs.tail: _*).head
-          val badTags = chStats.getSeq[String](0).take(5)
-          val keyRanges: Seq[ScanPredicate.Range] =
-            keys.zipWithIndex.flatMap { case (k, i) =>
-              Option(chStats.get(3 + 2 * i)).map(mn =>
-                ScanPredicate.Range(k, Some(mn), Some(chStats.get(3 + 2 * i + 1))))
-            }
-          require(badTags.isEmpty,
-            s"applyChanges: unsupported _change tag(s) ${badTags.mkString("'", "', '", "'")} " +
-              "(this feed speaks insert|delete; updates arrive as delete(old)+insert(new))")
-          val (nIns, nAll) = (chStats.getLong(1), chStats.getLong(2))
-          val inserts = ch.filter(col("_change") === "insert").drop("_change")
-          val cur = currentSnapshot()
-          val id = nextId()
-          cur match {
-            case None =>
-              Some(writeSnapshot(Snapshot(id, None, System.currentTimeMillis(),
-                "apply", writeDataFiles(inserts, id), inserts.schema.json,
-                txn = mark)))
-            case Some(c) =>
-              // preserve the table's hive layout: survivors of a
-              // rewritten partition file (and inserts) land back under
-              // the same partition scheme, so partition-pruned reads
-              // (e.g. the ANN codes table's cell dirs) keep their
-              // skipping power across CDC applies
-              val partCols = inferPartitionCols(c.files)
-              val touchedKeys = ch.select(keys.map(col): _*).distinct()
-              val added =
-                if (nIns == 0L) Nil
-                else writeDataFiles(inserts, id,
-                  partitionCols = partCols.filter(pc => inserts.columns.contains(specSourceCol(pc))))
-              if (mergeOnRead) {
-                // MERGE-ON-READ: no existing file is read OR rewritten —
-                // the batch's key set lands as a tombstone that masks
-                // older versions (insert = replace, delete = remove),
-                // and this batch's own inserts (origin == this id) stay
-                // visible. Write amplification is the batch, nothing
-                // else; reads pay the anti-join until compaction folds.
-                // the tombstone lands under the table's hive layout
-                // when the change batch carries the partition columns
-                // (beyond the keys): per-partition key-file accounting
-                // — e.g. the ANN occupancy probe — then answers from
-                // the MANIFEST alone. Masking semantics are unchanged:
-                // partition values live in the PATH, not the file, so
-                // the mask keys (read from the tomb file's columns)
-                // stay exactly `keys`.
-                val tombPartSpecs = partCols.filter { pc =>
-                  val src = specSourceCol(pc)
-                  ch.columns.exists(_.equalsIgnoreCase(src)) &&
-                    !keys.exists(_.equalsIgnoreCase(src))
-                }
-                val tombKeys =
-                  if (tombPartSpecs.isEmpty) touchedKeys
-                  else ch.select((keys ++ tombPartSpecs.map(specSourceCol))
-                    .map(col): _*).distinct()
-                val tomb =
-                  if (nAll == 0L) Nil
-                  else dropEmptyDataFiles(
-                    writeDataFiles(tombKeys, id, suffix = "tomb",
-                      partitionCols = tombPartSpecs))
-                Some(writeSnapshot(Snapshot(id, Some(c.snapshotId),
-                  System.currentTimeMillis(), "apply",
-                  c.files ++ added, evolvedSchemaJson(inserts), txn = mark,
-                  deletes = Some(c.tombstones ++ tomb).filter(_.nonEmpty))))
-              } else {
-                // two-stage touched-file discovery: manifest-stats prune
-                // first, exact semi-join over candidates only — a
-                // key-disjoint CDC batch reads zero existing files
-                // (ranges pre-computed by the chStats pass above)
-                val touchedRel = touchedFilesFor(c, touchedKeys, keys,
-                  knownRanges = Some(keyRanges))
-                val rewritten: Seq[String] =
-                  if (touchedRel.isEmpty) Nil
-                  else writeDataFiles(
-                    // effective read — raw would resurrect MoR-deleted rows
-                    scanFiles(c, touchedRel).join(touchedKeys, keys, "left_anti"),
-                    id, suffix = "rw", partitionCols = partCols)
-                // an empty-insert batch (pure deletes, or a compaction-only
-                // feed advance) must still snapshot for its txn mark, but
-                // writing zero-row part files would pollute the file list
-                Some(writeSnapshot(Snapshot(id, Some(c.snapshotId),
-                  System.currentTimeMillis(), "apply",
-                  c.files.diff(touchedRel) ++ rewritten ++ added,
-                  evolvedSchemaJson(inserts), txn = mark, deletes = c.deletes)))
+    val (cur, id) = target.resolve()
+    val ch = canonicalizedNamesAt(cur, ch0).cache()
+    try {
+      requireCompatibleSchemaFor(cur, ch.drop("_change").schema)
+      // unknown tags must fail LOUDLY: an unvalidated tag (a typo,
+      // or another feed dialect's "update_postimage") would fall
+      // into the delete path below and silently destroy the row.
+      // NULL needs its own disjunct — under SQL three-valued logic
+      // `!isin(...)` is NULL for a null tag and the filter would
+      // silently drop exactly the row it exists to catch.
+      // ONE aggregate pass answers tag validity AND the emptiness
+      // probes the branches below need (nIns/nAll) — the separate
+      // distinct-collect + isEmpty actions cost a Spark job each
+      // per CDC batch (guide §1.2: don't compute things twice)
+      // per-key min/max ride the same pass: the CoW branch's
+      // touched-file prune needs exactly these ranges, and a
+      // separate agg job per CDC batch paid for them twice
+      val statAggs = Seq(
+        // bounded sample of bad tags (r16 ADVICE): an unbounded
+        // collect_set over a high-cardinality corrupt feed would
+        // materialize every distinct bad value on the driver just
+        // to fail; five examples diagnose the same
+        slice(sort_array(collect_set(when(
+          col("_change").isNull || !col("_change").isin("insert", "delete"),
+          coalesce(col("_change"), lit("NULL"))))), 1, 5).as("bad"),
+        count(when(col("_change") === "insert", lit(1))).as("nins"),
+        count(lit(1)).as("nall")) ++
+        keys.flatMap(k => Seq(min(col(k)), max(col(k))))
+      val chStats = ch.agg(statAggs.head, statAggs.tail: _*).head
+      val badTags = chStats.getSeq[String](0).take(5)
+      val keyRanges: Seq[ScanPredicate.Range] =
+        keys.zipWithIndex.flatMap { case (k, i) =>
+          Option(chStats.get(3 + 2 * i)).map(mn =>
+            ScanPredicate.Range(k, Some(mn), Some(chStats.get(3 + 2 * i + 1))))
+        }
+      require(badTags.isEmpty,
+        s"applyChanges: unsupported _change tag(s) ${badTags.mkString("'", "', '", "'")} " +
+          "(this feed speaks insert|delete; updates arrive as delete(old)+insert(new))")
+      val (nIns, nAll) = (chStats.getLong(1), chStats.getLong(2))
+      val inserts = ch.filter(col("_change") === "insert").drop("_change")
+      cur match {
+        case None =>
+          target.publish(Snapshot(id, None, System.currentTimeMillis(),
+            "apply", writeDataFiles(inserts, id, head = None), inserts.schema.json,
+            txn = mark))
+        case Some(c) =>
+          // preserve the table's hive layout: survivors of a
+          // rewritten partition file (and inserts) land back under
+          // the same partition scheme, so partition-pruned reads
+          // (e.g. the ANN codes table's cell dirs) keep their
+          // skipping power across CDC applies
+          val partCols = inferPartitionCols(c.files)
+          val touchedKeys = ch.select(keys.map(col): _*).distinct()
+          val added =
+            if (nIns == 0L) Nil
+            else writeDataFiles(inserts, id, head = cur,
+              partitionCols = partCols.filter(pc => inserts.columns.contains(specSourceCol(pc))))
+          val (files, deletes) =
+            if (mergeOnRead) {
+              // MERGE-ON-READ: no existing file is read OR rewritten —
+              // the batch's key set lands as a tombstone that masks
+              // older versions (insert = replace, delete = remove),
+              // and this batch's own inserts (origin == this id) stay
+              // visible. Write amplification is the batch, nothing
+              // else; reads pay the anti-join until compaction folds.
+              // the tombstone lands under the table's hive layout
+              // when the change batch carries the partition columns
+              // (beyond the keys): per-partition key-file accounting
+              // — e.g. the ANN occupancy probe — then answers from
+              // the MANIFEST alone. Masking semantics are unchanged:
+              // partition values live in the PATH, not the file, so
+              // the mask keys (read from the tomb file's columns)
+              // stay exactly `keys`.
+              val tombPartSpecs = partCols.filter { pc =>
+                val src = specSourceCol(pc)
+                ch.columns.exists(_.equalsIgnoreCase(src)) &&
+                  !keys.exists(_.equalsIgnoreCase(src))
               }
-          }
-        } finally ch.unpersist()
-    }
+              val tombKeys =
+                if (tombPartSpecs.isEmpty) touchedKeys
+                else ch.select((keys ++ tombPartSpecs.map(specSourceCol))
+                  .map(col): _*).distinct()
+              val tomb =
+                if (nAll == 0L) Nil
+                else dropEmptyDataFiles(
+                  writeDataFiles(tombKeys, id, suffix = "tomb",
+                    partitionCols = tombPartSpecs, head = cur))
+              (c.files ++ added, Some(c.tombstones ++ tomb).filter(_.nonEmpty))
+            } else {
+              // copy-on-write; the key ranges come from the chStats pass
+              // above, so a key-disjoint CDC batch reads zero existing
+              // files. An empty-insert batch (pure deletes, or a
+              // compaction-only feed advance) still snapshots for its txn
+              // mark, but writes no zero-row part files.
+              val (touched, rewritten) = rewriteTouched(c, touchedKeys, keys, id,
+                partCols, Some(keyRanges))
+              (c.files.diff(touched) ++ rewritten ++ added, c.deletes)
+            }
+          target.publish(Snapshot(id, Some(c.snapshotId), System.currentTimeMillis(),
+            "apply", files, evolvedSchemaJsonFor(cur, inserts.schema), txn = mark,
+            deletes = deletes))
+      }
+    } finally ch.unpersist()
   }
 
   /** The hive partition scheme every file of a snapshot shares, from
@@ -1798,7 +1806,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * publish race here RE-RUNS the whole statement against the new
     * head (fresh candidates, fresh compute, fresh files; always
     * serializable because nothing of the failed attempt survives), with
-    * the append loop's jittered backoff and the same livelock cap. A
+    * the jittered backoff and livelock cap of [[withCommitRetry]]. A
     * failed attempt's data files are unreferenced and age out with
     * vacuum's grace like any orphan.
     */
@@ -1806,19 +1814,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       candidatesOf: Snapshot => Seq[String],
       compute: (Snapshot, Seq[String], DataFrame) => (Option[DataFrame], Option[DataFrame]))
       : Option[Snapshot] = writeLock.synchronized {
-    var attempt = 0
-    while (true) {
-      try return sqlMutateOnce(op, candidatesOf, compute)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt >= LakehouseTable.MaxCommitAttempts) throw e
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current()
-              .nextLong(1L, math.min(128L, 4L << math.min(attempt, 5)) + 1))
-      }
-    }
-    sys.error("unreachable: loop exits only by return/throw")
+    withCommitRetry(Right(sqlMutateOnce(op, candidatesOf, compute)))
   }
 
   private def sqlMutateOnce(op: String,
@@ -2900,165 +2896,50 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   /** The branch HEAD: the newest snapshot committed to THIS incarnation
     * of the branch, or its fork snapshot before any commit landed.
     */
-  def branchHead(name: String): Snapshot = {
-    val ref = branches.getOrElse(name, throw new IllegalArgumentException(
+  def branchHead(name: String): Snapshot =
+    branchHeadIn(listSnapshots(), name, branchRef(name))
+
+  private def branchHeadIn(snaps: Seq[Snapshot], name: String, ref: BranchRef): Snapshot =
+    snaps.reverseIterator.find(inBranch(_, name, ref))
+      .orElse(snaps.find(_.snapshotId == ref.fork))
+      .getOrElse(throw invalidSnapshot(ref.fork))
+
+  private def branchRef(name: String): BranchRef =
+    branches.getOrElse(name, throw new IllegalArgumentException(
       s"branch '$name' not found in table '$root'. " +
         s"Available branches: ${branches.keys.toSeq.sorted.mkString("[", ", ", "]")}"))
-    listSnapshots().reverseIterator.find(inBranch(_, name, ref))
-      .getOrElse(snapshotOrThrow(ref.fork))
-  }
 
-  /** Append `df` to branch `name` — the WRITE of write-audit-publish.
-    * Ordinary snapshot, global version id, put-if-absent commit; the
-    * parent is the BRANCH head and every registry inherits from it
-    * (the branch lineage is a pure extension of main as of the fork,
-    * so era resolution, floors, and field ids stay coherent). Lost
-    * races against main or other branch writers rebase like a main
-    * append (the files are written once).
+  /** Append `df` to branch `name` — the WRITE of write-audit-publish:
+    * [[append]] against the BRANCH head (ordinary snapshot, global
+    * version id, put-if-absent commit, every registry inherited from
+    * the branch head). Lost races rebase, and a raced merge-on-read
+    * tombstone newer than this append surfaces
+    * [[ConcurrentCommitException]], exactly as on main.
     */
   def appendToBranch(df0: DataFrame, name: String,
       partitionBy: Seq[String] = Nil): Snapshot = writeLock.synchronized {
-    val ref = branches.getOrElse(name, throw new IllegalArgumentException(
-      s"branch '$name' not found in table '$root'"))
-    val head0 = branchHead(name)
-    val df = canonicalizedNamesAt(head0, df0)
-    requireCompatibleSchemaAt(Some(head0), df)
-    val claimedId = nextId()
-    val newFiles = writeDataFiles(df, claimedId, partitionCols = partitionBy)
-    var attempt = 0
-    while (attempt < LakehouseTable.MaxCommitAttempts) {
-      val head = branchHead(name)
-      requireCompatibleSchemaAt(Some(head), df)
-      try {
-        return writeSnapshot(Snapshot(nextId(), Some(head.snapshotId),
-          System.currentTimeMillis(), "append",
-          head.files ++ newFiles,
-          evolvedSchemaJsonAt(Some(head), df),
-          deletes = head.deletes, branch = Some(name), branchEpoch = ref.epoch,
-          renames = head.renames.orElse(Some(Map.empty)),
-          drops = head.drops.orElse(Some(Map.empty)),
-          reborn = head.reborn.orElse(Some(Map.empty)),
-          fieldIds = Some(assignFieldIds(Some(head),
-            Snapshot(0L, None, 0L, "append", Nil,
-              evolvedSchemaJsonAt(Some(head), df))))))
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt >= LakehouseTable.MaxCommitAttempts) throw e
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current()
-              .nextLong(1L, math.min(128L, 4L << math.min(attempt, 5)) + 1))
-      }
-    }
-    sys.error("unreachable: loop exits only by return/throw")
+    appendWith(df0, partitionBy, mark = None, onBranch(name)).get
   }
 
-  /** Keyed UPSERT against branch `name`'s head — a WAP audit flow over
-    * a CDC-replicated table wants keyed writes on the branch, not just
-    * appends. Same latest-by-key materialization as [[upsert]], against
-    * the BRANCH head: touched fork-lineage files rewrite into branch
-    * files, untouched ones carry by reference. A branch that rewrote
-    * fork files can only publish by fast-forward (publish refuses a
-    * rebase — the rewrite's survivor set was computed against the fork,
-    * so main advancing makes it stale).
+  /** Keyed [[upsert]] against branch `name`'s head — a WAP audit flow
+    * over a CDC-replicated table wants keyed writes on the branch, not
+    * just appends. A branch that rewrote fork files can only publish by
+    * fast-forward (publish refuses a rebase — the rewrite's survivor
+    * set was computed against the fork, so main advancing makes it
+    * stale).
     */
   def upsertToBranch(df0: DataFrame, keys: Seq[String], name: String,
       mergeOnRead: Boolean = false): Snapshot = writeLock.synchronized {
-    if (mergeOnRead)
-      applyChangesToBranch(df0.withColumn("_change", lit("insert")), keys,
-        name, mergeOnRead = true)
-    else {
-      val ref = branches.getOrElse(name, throw new IllegalArgumentException(
-        s"branch '$name' not found in table '$root'"))
-      val head = branchHead(name)
-      require(keys.nonEmpty, "upsert requires key columns")
-      val df = canonicalizedNamesAt(head, df0)
-      requireCompatibleSchemaAt(Some(head), df)
-      val id = nextId()
-      val incoming = df.cache()
-      try {
-        val incomingKeys = incoming.select(keys.map(col): _*).distinct()
-        val touchedRel = touchedFilesFor(head, incomingKeys, keys)
-        val partCols = inferPartitionCols(head.files)
-        val rewritten: Seq[String] =
-          if (touchedRel.isEmpty) Nil
-          else writeDataFiles(
-            scanFiles(head, touchedRel).join(incomingKeys, keys, "left_anti"),
-            id, suffix = "rw", partitionCols = partCols)
-        val added = writeDataFiles(incoming, id,
-          partitionCols = partCols.filter(pc => incoming.columns.contains(specSourceCol(pc))))
-        writeSnapshot(Snapshot(id, Some(head.snapshotId), System.currentTimeMillis(),
-          "upsert", head.files.diff(touchedRel) ++ rewritten ++ added,
-          evolvedSchemaJsonAt(Some(head), df),
-          deletes = head.deletes, branch = Some(name), branchEpoch = ref.epoch,
-          renames = head.renames.orElse(Some(Map.empty)),
-          drops = head.drops.orElse(Some(Map.empty)),
-          reborn = head.reborn.orElse(Some(Map.empty)),
-          fieldIds = Some(assignFieldIds(Some(head),
-            Snapshot(0L, None, 0L, "upsert", Nil,
-              evolvedSchemaJsonAt(Some(head), df))))))
-      } finally { incoming.unpersist(); () }
-    }
+    upsertOn(onBranch(name), df0, keys, mergeOnRead)
   }
 
-  /** CDC-apply against branch `name`'s head — [[applyChanges]] scoped
-    * to the branch lineage (insert = replace in place, bare delete =
-    * remove the key; `mergeOnRead` lands the batch as tombstone+append
-    * with zero fork-file rewrites). No txn ledger on branches: the WAP
-    * audit flow replays by re-forking, not by ledger absorption.
+  /** [[applyChanges]] against branch `name`'s head. No txn ledger on
+    * branches: the WAP audit flow replays by re-forking, not by ledger
+    * absorption.
     */
   def applyChangesToBranch(ch0: DataFrame, keys: Seq[String], name: String,
       mergeOnRead: Boolean = false): Snapshot = writeLock.synchronized {
-    require(keys.nonEmpty, "applyChanges requires key columns")
-    require(ch0.columns.contains("_change"),
-      "applyChanges input must carry a _change column (insert|delete)")
-    val ref = branches.getOrElse(name, throw new IllegalArgumentException(
-      s"branch '$name' not found in table '$root'"))
-    val head = branchHead(name)
-    val ch = canonicalizedNamesAt(head, ch0).cache()
-    try {
-      requireCompatibleSchemaAt(Some(head), ch.drop("_change"))
-      val badTags = ch.filter(
-        col("_change").isNull || !col("_change").isin("insert", "delete"))
-        .select("_change").distinct().limit(5)
-        .collect().map(r => if (r.isNullAt(0)) "NULL" else r.getString(0))
-      require(badTags.isEmpty,
-        s"applyChanges: unsupported _change tag(s) ${badTags.mkString("'", "', '", "'")} " +
-          "(this feed speaks insert|delete; updates arrive as delete(old)+insert(new))")
-      val inserts = ch.filter(col("_change") === "insert").drop("_change")
-      val id = nextId()
-      val partCols = inferPartitionCols(head.files)
-      val touchedKeys = ch.select(keys.map(col): _*).distinct()
-      val added =
-        if (inserts.isEmpty) Nil
-        else writeDataFiles(inserts, id,
-          partitionCols = partCols.filter(pc => inserts.columns.contains(specSourceCol(pc))))
-      val (files, deletes, op) =
-        if (mergeOnRead) {
-          val tomb =
-            if (ch.isEmpty) Nil
-            else dropEmptyDataFiles(writeDataFiles(touchedKeys, id, suffix = "tomb"))
-          (head.files ++ added,
-            Some(head.tombstones ++ tomb).filter(_.nonEmpty), "apply")
-        } else {
-          val touchedRel = touchedFilesFor(head, touchedKeys, keys)
-          val rewritten: Seq[String] =
-            if (touchedRel.isEmpty) Nil
-            else writeDataFiles(
-              scanFiles(head, touchedRel).join(touchedKeys, keys, "left_anti"),
-              id, suffix = "rw", partitionCols = partCols)
-          (head.files.diff(touchedRel) ++ rewritten ++ added, head.deletes, "apply")
-        }
-      writeSnapshot(Snapshot(id, Some(head.snapshotId), System.currentTimeMillis(),
-        op, files, evolvedSchemaJsonAt(Some(head), inserts),
-        deletes = deletes, branch = Some(name), branchEpoch = ref.epoch,
-        renames = head.renames.orElse(Some(Map.empty)),
-        drops = head.drops.orElse(Some(Map.empty)),
-        reborn = head.reborn.orElse(Some(Map.empty)),
-        fieldIds = Some(assignFieldIds(Some(head),
-          Snapshot(0L, None, 0L, op, Nil,
-            evolvedSchemaJsonAt(Some(head), inserts))))))
-    } finally { ch.unpersist(); () }
+    applyChangesWith(ch0, keys, mark = None, mergeOnRead, onBranch(name))
   }
 
   /** PUBLISH — the PUBLISH of write-audit-publish: one main commit
@@ -3084,8 +2965,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * drop idempotently and returns the published snapshot (ADVICE r13).
     */
   def publishBranch(name: String): Snapshot = writeLock.synchronized {
-    val ref = branches.getOrElse(name, throw new IllegalArgumentException(
-      s"branch '$name' not found in table '$root'"))
+    val ref = branchRef(name)
     val pubKey = s"$name@${ref.epoch.getOrElse(0L)}"
     // already-published detection FIRST: a crash between the publish
     // commit and the ref drop must recover, not refuse forever
@@ -4803,8 +4683,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * zero-I/O estimate size-targeted optimize-write bins with. None
     * until the table has at least one stats-bearing data file.
     */
-  private def manifestBytesPerRow: Option[Double] =
-    currentSnapshot().flatMap { cur =>
+  private def manifestBytesPerRow(head: Option[Snapshot]): Option[Double] =
+    head.flatMap { cur =>
       val sts = cur.files.flatMap(f => fileStatsOf(cur, f))
         .filter(st => st.bytes.exists(_ > 0) && st.rows > 0)
       val rows = sts.map(_.rows).sum
@@ -4824,7 +4704,12 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   private def writeDataFiles(
       df0: DataFrame, id: Long, suffix: String = "",
-      partitionCols: Seq[String] = Nil): Seq[String] = {
+      partitionCols: Seq[String] = Nil,
+      /** The committed head the write builds on (its field ids stamp,
+        * its manifest sizes the optimize-write bins) — a branch write's
+        * is the BRANCH head.
+        */
+      head: Option[Snapshot] = currentSnapshot()): Seq[String] = {
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val dirName = (if (suffix.isEmpty) s"s$id" else s"s$id-$suffix") + s"-w$nonce"
     val outDir = dataDir.resolve(dirName)
@@ -4859,7 +4744,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     // (ids are write-once). Resolution is still name-based this round;
     // the stamps are the forward-compat groundwork (and make every
     // post-round-12 file Iceberg-grade identifiable).
-    val idsByName: Map[String, Int] = currentSnapshot().flatMap(_.fieldIds)
+    val idsByName: Map[String, Int] = head.flatMap(_.fieldIds)
       .map(_.ids.map { case (n, i) => nameKey(n) -> i })
       .getOrElse(Map.empty)
     val stamped =
@@ -4877,7 +4762,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     // the head manifest's bytes-per-row estimate, so a skewed partition
     // value bins into ≈targetBytes files instead of one giant one
     val writer = (if (optimizeWrite) optimizeWriteTargetBytes else None)
-      .flatMap(t => manifestBytesPerRow.map(bpr =>
+      .flatMap(t => manifestBytesPerRow(head).map(bpr =>
         math.max(1L, (t / math.max(bpr, 1e-9)).toLong)))
       .fold(writer0)(n => writer0.option("maxRecordsPerFile", n))
     (if (physCols.nonEmpty) writer.partitionBy(physCols: _*) else writer)

@@ -50,8 +50,10 @@ trait Sink {
 /** Lakehouse sink: value columns ∪ `_cdc_topic/_cdc_partition/_cdc_offset`
   * metadata (`sinks/iceberg.py:124-129`); append or key-upsert mode.
   * Deletes (null `after`) are tombstones: in upsert mode they remove the
-  * key from the table; in append mode they append with null payload
-  * (tombstone pass-through, §2.2 P4).
+  * key from the table in the SAME snapshot that lands the batch's
+  * upserts (one [[LakehouseTable.applyChanges]] commit, copy-on-write
+  * over only the files holding touched keys); in append mode they
+  * append with null payload (tombstone pass-through, §2.2 P4).
   *
   * `payloadSchema = None` → schema is INFERRED from the first non-empty
   * micro-batch's `after` JSON and frozen for the table's lifetime —
@@ -110,15 +112,19 @@ final class LakehouseSink private (
           Window.partitionBy(upsertKeys.map(k => col(s"_key.$k")): _*)
             .orderBy(col("_cdc_offset").desc)))
         .filter(col("_rn") === 1).drop("_rn")
-      val upserts = latest.filter(col("_cdc_op") =!= "d")
-        .drop("_key", "_cdc_key")
-      if (!upserts.isEmpty) table.upsert(upserts, upsertKeys)
-      val deletes = latest.filter(col("_cdc_op") === "d")
-        .select(upsertKeys.map(k => col(s"_key.$k").as(k)): _*)
-      if (!deletes.isEmpty) {
-        val cur = table.read()
-        table.overwrite(cur.join(deletes.distinct(), upsertKeys, "left_anti"))
-      }
+      // ONE applyChanges commit: d events land as deletes, the rest as
+      // inserts (replace in place), so no reader ever sees a batch's
+      // upserts without its deletes. Key columns come from the event
+      // key — a delete's payload is null. No txn mark: batch ids restart
+      // with every fresh checkpoint, so a (sinkId, batchId) mark would
+      // absorb a later pipeline's batches; a redelivered batch simply
+      // re-applies the same latest-wins state.
+      val changes = latest.select(
+        (latest.columns.filterNot(c => c == "_key" || c == "_cdc_key").toIndexedSeq.map(c =>
+          if (upsertKeys.contains(c)) coalesce(col(s"_key.$c"), col(c)).as(c) else col(c)) :+
+          when(col("_cdc_op") === "d", lit("delete")).otherwise(lit("insert"))
+            .as("_change")): _*)
+      table.applyChanges(changes, upsertKeys)
     } else table.append(rows.drop("_cdc_key"))
     // (no isEmpty pre-check in append mode: the pipeline only calls
     // write() for non-empty batches, and the check was an extra Spark

@@ -1,5 +1,6 @@
 package graft.lakehouse
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -306,6 +307,99 @@ class BranchSpec extends SparkSpec {
     assert(ids.size === 2 && ids.distinct.size === 2)
     a.publishBranch("wap")
     assert(a.read().collect().map(_.getLong(0)).toSet === Set(1L, 10L, 20L))
+  }
+
+  test("a branch append raced by a NEWER branch tombstone surfaces ConcurrentCommitException") {
+    val root = tmpDir("br-race-tomb")
+    val a = new LakehouseTable(spark, root)
+    a.append(Seq((1L, "a")).toDF("k", "v").coalesce(1))
+    a.forkBranch("wap")
+    val b = new LakehouseTable(spark, root)
+    // inside A's publish window B lands a branch append, then a branch
+    // merge-on-read delete of key 7: its tombstone is newer than A's
+    // claimed origin, so a rebase would silently mask A's own row
+    a.onBeforePublish = () => {
+      a.onBeforePublish = () => ()
+      b.appendToBranch(Seq((20L, "B")).toDF("k", "v").coalesce(1), "wap")
+      b.applyChangesToBranch(Seq((7L, "gone", "delete")).toDF("k", "v", "_change"),
+        Seq("k"), "wap", mergeOnRead = true)
+      ()
+    }
+    try intercept[ConcurrentCommitException](
+      a.appendToBranch(Seq((7L, "A")).toDF("k", "v").coalesce(1), "wap"))
+    finally a.onBeforePublish = () => ()
+    assert(spark.read.format("graft-lakehouse").option("snapshotBranch", "wap")
+      .load(root).collect().map(_.getLong(0)).toSet === Set(1L, 20L),
+      "the conflicting append must not commit")
+    // a re-run against the new branch head lands the row visibly
+    a.appendToBranch(Seq((7L, "A")).toDF("k", "v").coalesce(1), "wap")
+    assert(spark.read.format("graft-lakehouse").option("snapshotBranch", "wap")
+      .load(root).collect().map(_.getLong(0)).toSet === Set(1L, 7L, 20L))
+  }
+
+  /** Spark jobs `body` submits from this thread (and the threads its
+    * queries spawn, which inherit the thread's local properties).
+    */
+  private def jobsRunBy(body: => Unit): Int = {
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("graft.spec.jobs") == tag)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setLocalProperty("graft.spec.jobs", tag)
+    try {
+      body
+      // the listener bus is async: settle until the count holds a beat
+      var prev = -1
+      var spins = 0
+      while (jobs.get != prev && spins < 50) {
+        prev = jobs.get; Thread.sleep(100); spins += 1
+      }
+      jobs.get
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.spec.jobs", null)
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  test("drift pin: a branch write runs exactly the Spark jobs of its main-line write") {
+    def seeded(name: String): LakehouseTable = {
+      val t = new LakehouseTable(spark, tmpDir(name))
+      t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1))
+      t.append(Seq((10L, "x"), (11L, "y")).toDF("k", "v").coalesce(1))
+      t
+    }
+    val main = seeded("br-jobs-main")
+    val br = seeded("br-jobs-branch")
+    br.forkBranch("wap")
+    def rows = Seq((20L, "n")).toDF("k", "v").coalesce(1)
+    def upserts = Seq((2L, "B"), (30L, "m")).toDF("k", "v").coalesce(1)
+    def changes = Seq((3L, "c", "delete"), (11L, "Y", "insert"), (40L, "o", "insert"))
+      .toDF("k", "v", "_change").coalesce(1)
+    def morChanges = Seq((1L, "a", "delete"), (50L, "p", "insert"))
+      .toDF("k", "v", "_change").coalesce(1)
+    val writes: Seq[(String, LakehouseTable => Any, LakehouseTable => Any)] = Seq(
+      ("append", _.append(rows), _.appendToBranch(rows, "wap")),
+      ("copy-on-write upsert", _.upsert(upserts, Seq("k")),
+        _.upsertToBranch(upserts, Seq("k"), "wap")),
+      ("copy-on-write applyChanges", _.applyChanges(changes, Seq("k")),
+        _.applyChangesToBranch(changes, Seq("k"), "wap")),
+      ("merge-on-read applyChanges", _.applyChanges(morChanges, Seq("k"), mergeOnRead = true),
+        _.applyChangesToBranch(morChanges, Seq("k"), "wap", mergeOnRead = true)))
+    writes.foreach { case (what, onMain, onBranch) =>
+      val m = jobsRunBy { onMain(main); () }
+      val b = jobsRunBy { onBranch(br); () }
+      assert(m === b, s"$what: main ran $m Spark jobs, the branch ran $b")
+    }
+    // same writes, same state on both lineages
+    val mainRows = main.read().as[(Long, String)].collect().toSet
+    assert(spark.read.format("graft-lakehouse").option("snapshotBranch", "wap")
+      .load(br.root).as[(Long, String)].collect().toSet === mainRows)
+    assert(mainRows === Set((2L, "B"), (10L, "x"), (11L, "Y"), (20L, "n"),
+      (30L, "m"), (40L, "o"), (50L, "p")))
   }
 
 }

@@ -116,6 +116,30 @@ class ChangePipelineSpec extends SparkSpec {
       Set((1L, "alice2")))
   }
 
+  test("keyed sink: a c/u/d micro-batch commits ONE snapshot and keeps untouched files by reference") {
+    val src = tmpDir("cp7-src")
+    val table = new LakehouseTable(spark, tmpDir("cp7-table"))
+    val sink = new LakehouseSink("lh1", table, payloadSchema, upsertKeys = Seq("id"))
+    def batch(file: String, lines: String*): DataFrame = {
+      writeEnvelopes(src, lines, file)
+      spark.read.schema(ChangeEnvelope.schema).json(Paths.get(src, file).toString)
+    }
+    sink.write(batch("b0.json", env("c", 0, 1, "alice"), env("c", 1, 2, "bob")), 0)
+    val coldFiles = table.currentSnapshot().get.files // keys 1 and 2 only
+    sink.write(batch("b1.json", env("c", 2, 3, "carol"), env("c", 3, 4, "dave")), 1)
+    val before = table.listSnapshots().size
+    sink.write(batch("b2.json",
+      env("c", 4, 5, "erin"), env("u", 5, 3, "carol2"), env("d", 6, 4, "dave")), 2)
+    assert(table.listSnapshots().size === before + 1,
+      "the batch's upserts and deletes must land as ONE snapshot")
+    val head = table.currentSnapshot().get
+    assert(coldFiles.nonEmpty && coldFiles.forall(head.files.contains),
+      s"files holding no touched key must stay by reference: $coldFiles vs ${head.files}")
+    import spark.implicits._
+    assert(table.read().select("id", "name").as[(Long, String)].collect().toSet ===
+      Set((1L, "alice"), (2L, "bob"), (3L, "carol2"), (5L, "erin")))
+  }
+
   test("restart from checkpoint resumes without reprocessing (T9 recovery)") {
     val src = tmpDir("cp5-src")
     val ckpt = tmpDir("cp5-ckpt")
