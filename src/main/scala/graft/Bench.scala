@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Quiet-window gate for benchmark runs (round 14, verdict #8): the
   * round-13 driver artifact started at loadavg 4.8 and shipped
   * inflated numbers for every lexicographically-early row, costing a
@@ -57,24 +55,7 @@ object Bench {
       System.err.println(f"[bench] waited ${waitedMs / 1000.0}%.0f s for a " +
         f"quiet window (loadavg threshold $quietThreshold%.1f, now ${sysLoad()}%.2f)")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // explicit: runtime skew-split is part of the scale design
-      // (ScaleDesignSpec proves a hot key triggers it under AQE)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // let AQE re-optimize CACHED plans too (off by default): engine
-      // paths cache reused frames (merge joins, upsert batches), and
-      // without this every consumer of a cached frame scans the full
-      // pre-AQE shuffle partitioning — scale-neutral (the same
-      // advisory-size coalescing applies at any partition count)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-bench")
 
     // CDC-path throughput first (BASELINE.md metrics: decode msg/s, e2e
     // msg/s) — on a fresh heap, before the query phase fills old gen and

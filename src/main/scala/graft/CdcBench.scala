@@ -224,15 +224,7 @@ object CdcBench {
     * bench is `graft.Bench`).
     */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cdc-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-cdc-bench")
     val rate = e2eRateBest(spark, n = 100000, partitions = 8)
     println(f"cdc_e2e_msgs_per_sec=$rate%.1f")
     spark.stop()

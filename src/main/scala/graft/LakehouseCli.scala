@@ -25,14 +25,7 @@ object LakehouseCli {
     // error should print instantly, not after several seconds of
     // session bootstrap
     if (args.length < 2) { Console.out.println(usage); sys.exit(2) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-lakehouse")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-lakehouse", defaultCpus = 4)
     val code = run(args.toIndexedSeq, Console.out, spark)
     spark.stop()
     if (code != 0) sys.exit(code)

@@ -21,17 +21,7 @@ object PhaseProbe {
     val what = args.headOption.getOrElse("ann")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-phaseprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-phaseprobe")
     (1 to reps).foreach { rep =>
       println(s"=== $what rep$rep ===")
       what match {

@@ -18,17 +18,7 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-plandump")
     args.drop(1).foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
       try {

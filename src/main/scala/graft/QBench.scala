@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused single-query timing harness for iterating on one operator
   * without paying for the full [[Bench]] suite: `runMain graft.QBench
   * q63_ann_ivf [q47_ngram_jaccard ...] [--reps N]`. Same session
@@ -26,18 +24,7 @@ object QBench {
     }
     val (reps, profile, names) = parse(args.toList, 2, prof = false, Nil)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-qbench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-qbench")
     // --profile: count Spark jobs/stages/tasks per rep — the structural
     // signal behind a wall-clock number (a lifecycle gate that runs 120
     // tiny jobs is paying scheduler+codegen overhead 120×, whatever the

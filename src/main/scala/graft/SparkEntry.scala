@@ -12,6 +12,32 @@ import graft.queries._
   */
 object SparkEntry {
 
+  /** The one SparkSession recipe of the repo's mains (Bench, QBench,
+    * Verify, PlanDump, PhaseProbe, CdcBench, LakehouseCli):
+    * `local[SPARK_GRAFT_CPUS]` (default `defaultCpus`; `SPARK_MASTER`
+    * overrides the master, the CLI's cluster hook) with one shuffle
+    * partition per core, UTC session time, AQE with runtime skew-join
+    * splitting, AQE re-optimizing CACHED plans too (engine paths cache
+    * reused frames — merge joins, upsert batches — and without it every
+    * consumer of a cached frame scans the full pre-AQE shuffle
+    * partitioning), no UI, WARN logging.
+    */
+  def session(appName: String, defaultCpus: Int = 32): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")

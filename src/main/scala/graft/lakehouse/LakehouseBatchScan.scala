@@ -23,10 +23,10 @@ import org.apache.spark.util.SerializableConfiguration
 /** The native DSv2 batch scan over a lakehouse snapshot: the pruned
   * file list feeds Spark's own vectorized parquet reader factory
   * directly — columnar batches flow into whole-stage codegen with no
-  * per-action inner-plan build (the V1 bridge's remaining fixed cost)
-  * — and, because this is a real `Batch`, the scan participates in
-  * RUNTIME filtering: a fact⋈dim join hands the dim side's join keys
-  * to [[filter]] at execution time and the manifest (stats ranges,
+  * per-action inner-plan build — and, because this is a real `Batch`,
+  * the scan participates in RUNTIME filtering: a fact⋈dim join hands
+  * the dim side's join keys to [[filter]] at execution time and the
+  * manifest (stats ranges,
   * bloom sidecars, partition paths) drops every fact file that cannot
   * hold a matching key — dynamic file pruning, the 100 TB star-join
   * shape. [[estimateStatistics]] reports manifest-exact bytes/rows of
@@ -43,18 +43,22 @@ import org.apache.spark.util.SerializableConfiguration
   * (widen-only ADD COLUMNS) rides on the vectorized reader's
   * missing-column-as-null handling.
   *
-  * Merge-on-read snapshots stay NATIVE: the tombstone key sets load
-  * once at plan time into broadcast hash maps ([[MorMaskData]] — the
-  * same batch-sized volume the V1 anti-join broadcast), files that
-  * could hold a masked key (manifest-stats probe + origin compare)
-  * land in per-origin "masked" partitions whose row readers drop
-  * masked tuples, and every UNAFFECTED partition keeps pure columnar
-  * reads. Runtime file pruning, SPJ, and manifest statistics all stay
-  * on — the MoR norm (tombstones present between compactions on a
-  * busy CDC target) no longer forfeits the native path. Only key
-  * types outside [[LakehouseMor.canon]]'s space (binary/decimal/
-  * nested) fall back to the V1 composing scan (see
-  * [[LakehouseScanBuilder.build]]).
+  * Merge-on-read snapshots read here too: the tombstone key sets load
+  * once at plan time into broadcast hash maps ([[MorMaskData]]), files
+  * that could hold a masked key (manifest-stats probe + origin compare)
+  * land in per-origin "masked" partitions whose readers drop masked
+  * tuples, and every UNAFFECTED partition keeps pure columnar reads.
+  * Runtime file pruning, SPJ, and manifest statistics all stay on —
+  * the MoR norm (tombstones present between compactions on a busy CDC
+  * target) keeps the vectorized path.
+  *
+  * This is the ONE read path: user scans (`format("graft-lakehouse")`,
+  * catalog tables), the append-only micro-batch stream, and every
+  * engine-internal read ([[LakehouseTable.scanFiles]] — keyed rewrites,
+  * compaction, time travel, the change feed) all plan this scan.
+  * Internal reads pass the already-resolved table and snapshot
+  * (`pinned`) and never record [[ScanEvents]]; raw reads (key probes,
+  * sidecar builds, the change feed's file diff) pass `masked = false`.
   */
 final class LakehouseBatchScan(
     options: Map[String, String],
@@ -64,13 +68,34 @@ final class LakehouseBatchScan(
       * micro-batch stream's per-batch added-file slice); None = the
       * whole snapshot.
       */
-    fileSubset: Option[Set[String]] = None)
+    fileSubset: Option[Set[String]] = None,
+    /** Apply the snapshot's MoR tombstone masks (false = read the
+      * stored rows as committed: the micro-batch stream's incremental
+      * slices and the engine's raw file reads).
+      */
+    masked: Boolean = true,
+    /** The already-resolved (table, snapshot) of an engine-internal
+      * read; None resolves from `options` (user scans).
+      */
+    pinned: Option[(LakehouseTable, Snapshot)] = None)
   extends Scan with Batch with SupportsRuntimeFiltering with SupportsReportStatistics
   with SupportsReportPartitioning {
 
   @transient private lazy val spark = SparkSession.active
   @transient private lazy val resolved: (LakehouseTable, Snapshot) =
-    LakehouseSource.snapshotFor(spark, options)
+    pinned.getOrElse {
+      try LakehouseSource.snapshotFor(spark, options)
+      catch {
+        case e: IllegalArgumentException =>
+          // the isolation tradeoff surfaced: this DataFrame pinned its
+          // snapshot at load, and retention has since expired the
+          // manifest — the fix is a reload, not a mystery
+          throw new IllegalStateException(
+            s"the snapshot this DataFrame pinned at load time no longer exists " +
+              s"(snapshot retention likely expired it) — re-run spark.read.load " +
+              s"to pin the current snapshot. Cause: ${e.getMessage}", e)
+      }
+    }
   private def t: LakehouseTable = resolved._1
   private def snap: Snapshot = resolved._2
 
@@ -118,13 +143,12 @@ final class LakehouseBatchScan(
     * copy-on-write snapshots and all-null-key tombstones).
     */
   @transient private lazy val morMasks: Seq[MorMaskData] =
-    // ignoreMorMasks: the micro-batch stream's INCREMENTAL batches plan
+    // unmasked: the micro-batch stream's INCREMENTAL batches plan
     // tombstone-free — appended files deliver as-committed, so a
     // skipChangeCommits batch spanning append-then-MoR-apply can't let
     // the later masks retro-filter the earlier rows (delivered content
     // must not depend on trigger boundaries)
-    if (snap.tombstones.isEmpty ||
-        LakehouseSource.boolOpt(options, "ignoreMorMasks")) Nil
+    if (snap.tombstones.isEmpty || !masked) Nil
     else LakehouseMor.build(spark, t, snap)
 
   @transient private lazy val maskBcs
@@ -170,7 +194,7 @@ final class LakehouseBatchScan(
     * the OLD column name; the scan groups files by rename epoch and
     * gives each group a reader schema in its epoch's physical names,
     * relabelled positionally to current names — vectorized reads, no
-    * V1 fallback, no waiting for compaction.
+    * waiting for compaction.
     */
   @transient private lazy val renameCuts: Map[String, List[AliasEntry]] =
     snap.aliases.map { case (k, v) => t.resolvedNameKey(k) -> v }
@@ -257,7 +281,7 @@ final class LakehouseBatchScan(
   override def description(): String =
     s"graft-lakehouse native batch scan of ${LakehouseSource.rootOf(options)}, " +
       s"PushedFilters: [${accepted.mkString(", ")}]" +
-      (if (snap.tombstones.isEmpty) "" else ", MoR: masked")
+      (if (snap.tombstones.isEmpty || !masked) "" else ", MoR: masked")
 
   // ---------------- runtime filtering (dynamic file pruning) ----------------
 
@@ -393,7 +417,7 @@ final class LakehouseBatchScan(
     // under MoR the per-file counts over-estimate (masked rows still
     // counted) — report bytes only, never a wrong exact row count
     val rowsOpt =
-      if (snap.tombstones.nonEmpty) None
+      if (masked && snap.tombstones.nonEmpty) None
       else files.foldLeft(Option(0L)) { (acc, f) =>
         for (a <- acc; r <- t.fileRowsOf(snap, f)) yield a + r
       }
@@ -416,7 +440,9 @@ final class LakehouseBatchScan(
 
   override def planInputPartitions(): Array[InputPartition] = {
     val files = currentFiles
-    ScanEvents.record(LakehouseSource.rootOf(options), ScanInfo(
+    // the audit surface shows USER scans: an engine-internal read (a
+    // keyed write's probe, compaction) must not overwrite the record
+    if (pinned.isEmpty) ScanEvents.record(LakehouseSource.rootOf(options), ScanInfo(
       filesPlanned = files.size,
       filesTotal = snap.files.size,
       columnsRead = required.fieldNames.toSeq,

@@ -41,7 +41,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * layout grouping, and rename-epoch handling are the SAME code the
   * batch face runs; [[LakehouseReaderFactory]] dispatches on the spec
   * each partition carries, so one factory serves every batch.
-  * Incremental batches plan MASK-FREE (`ignoreMorMasks`): appended
+  * Incremental batches plan MASK-FREE (`masked = false`): appended
   * files must deliver as-committed — under `skipChangeCommits` a batch
   * spanning append(A) then MoR-apply(B) would otherwise let B's
   * tombstones retro-filter A's rows, making delivered content depend
@@ -387,11 +387,9 @@ private[lakehouse] final class LakehouseMicroBatchStream(
   private def partitionsFor(pinSnapshot: Long, files: Set[String],
       masked: Boolean): Array[InputPartition] = {
     if (files.isEmpty) return Array.empty
-    val opts = options + ("snapshotId" -> pinSnapshot.toString) ++
-      (if (masked) Map.empty[String, String]
-       else Map("ignoreMorMasks" -> "true"))
-    new LakehouseBatchScan(opts, requiredAt(pinSnapshot), accepted,
-      fileSubset = Some(files)).planInputPartitions()
+    new LakehouseBatchScan(options + ("snapshotId" -> pinSnapshot.toString),
+      requiredAt(pinSnapshot), accepted, fileSubset = Some(files),
+      masked = masked).planInputPartitions()
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

@@ -4,22 +4,20 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** Key-tombstone mask data for the NATIVE merge-on-read scan
-  * ([[LakehouseBatchScan]]): one entry per distinct tombstone KEY SET,
-  * holding every masked key tuple (canonicalized) with the max origin
-  * snapshot of a tombstone carrying it. A data row in a file with
-  * origin `o` is masked iff its key tuple maps to an origin `> o` —
-  * exactly the anti-join-with-origin-sequencing semantics the V1
-  * composing path evaluates ([[LakehouseTable.applyTombstones]]),
+/** Key-tombstone mask data for the merge-on-read scan
+  * ([[LakehouseBatchScan]], the lakehouse's one read path): one entry
+  * per distinct tombstone KEY SET, holding every masked key tuple
+  * (canonicalized) with the max origin snapshot of a tombstone carrying
+  * it. A data row in a file with origin `o` is masked iff its key tuple
+  * maps to an origin `> o` — anti-join-with-origin-sequencing semantics
   * folded into a hash probe the partition readers run per row.
   *
   * Scale shape: tombstones are CDC-batch-sized (each MoR apply writes
-  * its batch's keys), so the mask is the same data volume the V1 path
-  * broadcast per anti-join — built once at plan time, shipped once as
-  * a Spark broadcast, and gone after compaction folds the tombstones.
-  * This is what keeps a busy replication target on the vectorized
-  * reader + runtime file pruning + SPJ BETWEEN compactions, instead of
-  * dropping to the composing path exactly when the table is hot.
+  * its batch's keys), so the mask is batch-sized too — built once at
+  * plan time, shipped once as a Spark broadcast, and gone after
+  * compaction folds the tombstones. This is what keeps a busy
+  * replication target on the vectorized reader + runtime file pruning
+  * + SPJ BETWEEN compactions.
   */
 final case class MorMaskData(
     keyNames: Seq[String],
@@ -51,7 +49,10 @@ object LakehouseMor {
     * rows (executor, per probe) — both read through
     * `InternalRow.get(i, dt)`, so strings arrive as UTF8String and
     * date/timestamp as their int/long encodings. Integral widths fold
-    * to Long so a (future) type-widened lineage still matches.
+    * to Long so a (future) type-widened lineage still matches. Binary
+    * keys copy into an immutable byte sequence (content equality and
+    * hashing; the reader may reuse the row's buffer). Nested keys are
+    * refused at write time ([[requireMaskableKeys]]).
     */
   def canon(dt: DataType, v: Any): Any = dt match {
     case StringType => v.toString
@@ -65,6 +66,8 @@ object LakehouseMor {
     // fold the native scan would stop masking and resurrect deletes.
     case FloatType => v.asInstanceOf[Float].toDouble
     case DoubleType | BooleanType => v
+    case BinaryType =>
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(v.asInstanceOf[Array[Byte]].clone())
     // decimal normalizes scale-insensitively (stripTrailingZeros): the
     // tombstone dir's physical (precision, scale) and the declared
     // type agree today, but equality must not hinge on it — financial
@@ -75,7 +78,7 @@ object LakehouseMor {
       // semantics for zero on some paths — pin zero to ONE image
       if (jbd.signum == 0) java.math.BigDecimal.ZERO else jbd
     case other => throw new IllegalStateException(
-      s"unsupported MoR mask key type $other (typesSupported must gate this)")
+      s"unsupported MoR mask key type $other (merge-on-read writes refuse such keys)")
   }
 
   /** External-typed probe value for a canon'd key. The manifest prune
@@ -102,34 +105,23 @@ object LakehouseMor {
       val us = v.asInstanceOf[Long]
       java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
         (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
+    case BinaryType => v.asInstanceOf[scala.collection.immutable.ArraySeq[Byte]].toArray
     case _ => v
   }
 
-  private def typeOk(dt: DataType): Boolean = dt match {
-    case StringType | ByteType | ShortType | IntegerType | DateType | LongType |
-         TimestampType | TimestampNTZType | FloatType | DoubleType | BooleanType => true
-    case _: DecimalType => true
-    case _ => false
-  }
-
-  /** Can every tombstone key set of `snap` drive the native hash-probe
-    * mask? Schema-only check (one footer read per tombstone dir, plan
-    * time, no jobs); binary/nested keys — whose internal
-    * representations don't hash-canonicalize safely — send the scan to
-    * the V1 composing path instead.
+  /** Refuse a merge-on-read keyed write whose key columns are nested
+    * (struct/array/map) BEFORE any file is written: tombstone masks
+    * match flat key values, so such a tombstone could never be read.
     */
-  def typesSupported(spark: SparkSession, t: LakehouseTable, snap: Snapshot): Boolean =
-    snap.tombstones.groupBy(dirOf).values.forall { fs =>
-      // footer read on the driver — `spark.read.parquet(..).schema` ran
-      // a schema-inference JOB per dir per plan. Hive partition path
-      // columns (absent from the footer) infer as int/string — always
-      // mask-canon-safe, so footer fields alone decide.
-      t.footerSchemaOf(fs.head) match {
-        case Some(sch) => sch.fields.forall(f => typeOk(f.dataType))
-        case None =>
-          try spark.read.parquet(t.absDataPath(fs.head)).schema.fields
-            .forall(f => typeOk(f.dataType))
-          catch { case _: Exception => false }
+  def requireMaskableKeys(schema: StructType, keys: Seq[String]): Unit =
+    keys.foreach { k =>
+      schema.fields.find(_.name.equalsIgnoreCase(k)).map(_.dataType).foreach {
+        case dt @ (_: StructType | _: ArrayType | _: MapType) =>
+          throw new IllegalArgumentException(
+            s"merge-on-read key column '$k' has nested type ${dt.simpleString}: " +
+              "tombstones match flat key values only — key on flat columns or " +
+              "write copy-on-write (mergeOnRead = false)")
+        case _ => ()
       }
     }
 
@@ -156,7 +148,7 @@ object LakehouseMor {
     * fold tuples into `byKey` at that dir's origin; dirs sharing one
     * key set merge max-origin-wins. Null-key tuples drop (SQL equality:
     * a null key masks nothing). Driver-side collect of batch-sized key
-    * sets — the same volume the V1 anti-join broadcasts.
+    * sets.
     */
   def build(spark: SparkSession, t: LakehouseTable, snap: Snapshot): Seq[MorMaskData] = {
     val key = (t.rootAbsPath, snap.snapshotId, snap.tombstones)

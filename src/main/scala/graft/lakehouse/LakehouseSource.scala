@@ -33,11 +33,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * an answer. [[SupportsPushDownRequiredColumns]] prunes the projected
   * columns into the underlying parquet scan.
   *
-  * The scan itself adapts through [[V1Scan]] (the engine's official
-  * DSv2→V1 bridge, the same shape the built-in JDBC source uses): the
-  * pruned file list feeds the REAL parquet reader — vectorized,
-  * whole-stage-codegen'd — instead of a hand-rolled row reader, which
-  * is exactly what a 100 TB scan wants.
+  * The scan itself is [[LakehouseBatchScan]], a native DSv2 `Batch`:
+  * the pruned file list feeds Spark's own vectorized parquet readers,
+  * merge-on-read tombstones mask inside those readers, and the same
+  * scan serves the micro-batch stream and every engine-internal read
+  * ([[LakehouseTable.scanFiles]]) — one read path for one semantics.
   *
   * Reference scope: `lakehouse/time_travel.py:25-31` — predicate-driven
   * snapshot scans as the user-facing query surface.
@@ -659,15 +659,8 @@ private[lakehouse] final class LakehouseV2Table(
         caps
     }
 
-  override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder = {
-    // internal-only: the micro-batch stream plans its incremental
-    // slices mask-free by constructing the batch scan DIRECTLY — as a
-    // user read option this would silently resurrect deleted rows
-    require(!options.keys.exists(_.equalsIgnoreCase("ignoreMorMasks")) &&
-      !scanOptions.containsKey("ignoreMorMasks"),
-      "'ignoreMorMasks' is an internal planning flag, not a read option")
+  override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder =
     new LakehouseScanBuilder(tableSchema, options ++ scanOptions.asScala)
-  }
 
   /** V2 write face over the V1 table API (the official V1Write bridge):
     * `INSERT INTO` appends (honoring the table's stored partition
@@ -809,7 +802,8 @@ private[lakehouse] final class LakehouseV2Table(
 }
 
 private[lakehouse] final class LakehouseScanBuilder(
-    tableSchema: StructType, options: Map[String, String])
+    tableSchema: StructType, options: Map[String, String],
+    internal: Option[LakehouseInternalTable] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
@@ -870,7 +864,9 @@ private[lakehouse] final class LakehouseScanBuilder(
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     if (pushedAgg.isDefined) return true // idempotent re-probe
-    if (agg.groupByExpressions.nonEmpty || agg.aggregateExpressions.isEmpty ||
+    // an internal read covers a file SUBSET (or ignores tombstones):
+    // the snapshot-wide manifest answer would be wrong for it
+    if (internal.isDefined || agg.groupByExpressions.nonEmpty || agg.aggregateExpressions.isEmpty ||
       accepted.nonEmpty) return false
     val spark = SparkSession.active
     val (t, snap) = LakehouseSource.snapshotFor(spark, options)
@@ -906,25 +902,38 @@ private[lakehouse] final class LakehouseScanBuilder(
 
   override def build(): Scan = pushedAgg match {
     case Some((values, aggSchema)) => new LakehouseAggScan(values, aggSchema)
-    case None =>
-      // the native vectorized batch serves everything — INCLUDING
-      // merge-on-read snapshots, whose tombstone masks ride the
-      // partition readers as broadcast hash probes — except tombstone
-      // KEY TYPES outside the mask's canonical space (binary/decimal/
-      // nested), which keep the V1 composing anti-join. A root that
-      // doesn't resolve (snapshot-less sink target, expired pin) also
-      // stays on the V1 path so its error surfaces at action time
-      // with the established message.
-      val nativeOk = try {
-        val spark = SparkSession.active
-        val (t, snap) = LakehouseSource.snapshotFor(spark, options)
-        // renamed lineages stay native too: the batch scan groups files
-        // by rename epoch and reads each group in its physical names
-        snap.tombstones.isEmpty || LakehouseMor.typesSupported(spark, t, snap)
-      } catch { case _: Exception => false }
-      if (nativeOk) new LakehouseBatchScan(options, required, accepted)
-      else new LakehouseV1Scan(options, required, accepted)
+    case None => internal.fold(new LakehouseBatchScan(options, required, accepted))(
+      _.scan(required, accepted))
   }
+}
+
+/** An engine-internal read as a DSv2 table: `files` of one already-
+  * resolved snapshot, masked by its tombstones or raw (`masked =
+  * false`: the stored rows as committed). [[LakehouseTable.scanFiles]]
+  * wraps it in a relation, so internal reads plan the SAME native scan
+  * as user reads — column pruning, pushed-filter file skipping, rename
+  * eras and MoR masks included — without re-listing the manifest. The
+  * schema is the snapshot's, every column nullable (files that predate
+  * a column serve it as NULL).
+  */
+private[lakehouse] final class LakehouseInternalTable(
+    resolved: (LakehouseTable, Snapshot), files: Seq[String], masked: Boolean)
+    extends Table with SupportsRead {
+  private val (t, snap) = resolved
+  private val readSchema: StructType = org.apache.spark.sql.GraftDatasetAccess.nullable(
+    DataType.fromJson(snap.schemaJson).asInstanceOf[StructType])
+  private val options = Map("path" -> t.root)
+
+  override def name(): String = s"graft_lakehouse_internal:${t.root}@${snap.snapshotId}"
+  override def schema(): StructType = readSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    new LakehouseScanBuilder(readSchema, options, Some(this))
+
+  def scan(required: StructType, accepted: Array[Filter]): LakehouseBatchScan =
+    new LakehouseBatchScan(options, required, accepted, fileSubset = Some(files.toSet),
+      masked = masked, pinned = Some(resolved))
 }
 
 /** The pushed-aggregate scan: ONE row of manifest-derived values. */
@@ -941,10 +950,12 @@ private[lakehouse] final class LakehouseAggScan(
     }.asInstanceOf[T]
 }
 
-/** Per-root record of the last planned scan — how specs (and humans)
-  * observe that pushdown actually pruned: `filesPlanned` is the
+/** Per-root record of the last planned USER scan — how specs (and
+  * humans) observe that pushdown actually pruned: `filesPlanned` is the
   * post-skipping scan set, `filesTotal` the snapshot's, and
-  * `columnsRead` the projected schema that reached parquet.
+  * `columnsRead` the projected schema that reached parquet. The
+  * engine's own reads (keyed-write probes, compaction, `read()`) plan
+  * the same scan but never record here.
   */
 final case class ScanInfo(
     filesPlanned: Int, filesTotal: Int, columnsRead: Seq[String], pushed: Seq[String])
@@ -964,58 +975,4 @@ object ScanEvents {
     last.put(root, info)
   }
   def lastScan(root: String): Option[ScanInfo] = Option(last.get(root))
-}
-
-private[lakehouse] final class LakehouseV1Scan(
-    options: Map[String, String], required: StructType, filters: Array[Filter])
-    extends V1Scan {
-
-  override def readSchema(): StructType = required
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = required
-
-      /** The engine consumes our RDD as InternalRow directly (the
-        * documented V1-source fast path): the inner parquet pipeline's
-        * whole-stage-codegen'd UnsafeRows flow straight into the scan
-        * node, instead of paying InternalRow → Row → InternalRow per
-        * row. Measured on sf0.1 lineitem (BridgeBench, min-of-3): the
-        * Row bridge cost +72% on a full-width scan; with this path the
-        * remaining gap vs a raw parquet read is a width-INDEPENDENT
-        * ~0.08 s per action (inner-plan build), i.e. fixed planning
-        * overhead, not per-row cost.
-        */
-      override def needConversion: Boolean = false
-
-      override def buildScan(): RDD[Row] = {
-        val spark = context.sparkSession
-        val (t, snap) =
-          try LakehouseSource.snapshotFor(spark, options)
-          catch {
-            case e: IllegalArgumentException =>
-              // the isolation tradeoff surfaced: this DataFrame pinned
-              // its snapshot at load, and retention has since expired
-              // the manifest — the fix is a reload, not a mystery
-              throw new IllegalStateException(
-                s"the snapshot this DataFrame pinned at load time no longer exists " +
-                  s"(snapshot retention likely expired it) — re-run spark.read.load " +
-                  s"to pin the current snapshot. Cause: ${e.getMessage}", e)
-          }
-        val files = LakehouseSource.pruneForFilters(t, snap, filters.toSeq,
-          LakehouseSource.bucketSpecOf(options))
-        val base = t.scanFiles(snap, files)
-        // exactness: the residual Filter node Spark keeps above the
-        // scan re-applies every pushed predicate (pushFilters returns
-        // its whole input), so this path only prunes + projects
-        val df = base.select(required.fieldNames.map(col).toIndexedSeq: _*)
-        ScanEvents.record(LakehouseSource.rootOf(options), ScanInfo(
-          filesPlanned = files.size,
-          filesTotal = snap.files.size,
-          columnsRead = required.fieldNames.toSeq,
-          pushed = filters.map(_.toString).toSeq))
-        df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-      }
-    }.asInstanceOf[T]
 }

@@ -1383,7 +1383,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     val candidates = pruneFiles(cur, ranges)._1
     if (candidates.isEmpty) return Nil
     keyedWriteProbedFiles.addAndGet(candidates.size)
-    val probed = readFiles(cur, candidates)
+    val probed = scanFiles(cur, candidates, masked = false)
       .select(keys.map(col) :+ input_file_name().as("_file"): _*)
       .join(keyRows, keys, "left_semi")
       .select(col("_file")).distinct()
@@ -1525,6 +1525,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     require(keys.nonEmpty, "applyChanges requires key columns")
     require(ch0.columns.contains("_change"),
       "applyChanges input must carry a _change column (insert|delete)")
+    if (mergeOnRead) LakehouseMor.requireMaskableKeys(ch0.schema, keys)
     val (cur, id) = target.resolve()
     val ch = canonicalizedNamesAt(cur, ch0).cache()
     try {
@@ -2016,7 +2017,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   /** `ALTER TABLE ADD COLUMNS`: a schema-only snapshot (same file set,
     * widened schema) — the widen-only evolution contract as DDL.
     * Added columns must be nullable (existing files read them back as
-    * NULL via the snapshot-schema alignment in [[scanFiles]]); names
+    * NULL through the scan's snapshot schema); names
     * must be fresh under case-insensitive resolution.
     */
   def addColumns(cols: Seq[org.apache.spark.sql.types.StructField]): Snapshot =
@@ -2774,7 +2775,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     // references too (the full-lineage form): pre-deepen time travel
     // keeps working after the source expires, because the read path
     // prefers a file's local copy over a dangling foreign reference
-    // ([[localizedGroup]]) — history manifests stay IMMUTABLE (the
+    // ([[absDataPath]]) — history manifests stay IMMUTABLE (the
     // snapshot-cache contract), only bytes move.
     val histForeign =
       if (!allHistory) Nil
@@ -3292,28 +3293,22 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * the native scan runs), drop every tombstone from the manifest, and
     * carry everything else by reference. Cost scales with
     * tombstone-TOUCHED data, not table size — the auto-fold a budget
-    * trigger can afford to fire between full compactions. Key types
-    * outside the mask canon space fold every file older than the newest
-    * tombstone (correct, coarser). No-op without tombstones.
+    * trigger can afford to fire between full compactions. No-op
+    * without tombstones.
     */
   def foldTombstones(): Option[Snapshot] = writeLock.synchronized {
     val cur = currentSnapshot().getOrElse(return None)
     if (cur.tombstones.isEmpty) return None
     val byOrigin = cur.files.map(f => f -> originOf(f)).toMap
     val affected: Seq[String] =
-      if (LakehouseMor.typesSupported(spark, this, cur))
-        LakehouseMor.build(spark, this, cur).flatMap { m =>
-          val preds = m.keyNames.zipWithIndex.map { case (k, i) =>
-            ScanPredicate.InSet(k, m.byKey.keysIterator
-              .map(tup => LakehouseMor.decanon(m.keyTypes(i), tup(i))).toSeq.distinct)
-          }
-          val kept = pruneFiles(cur, preds)._1.toSet
-          cur.files.filter(f => kept(f) && byOrigin(f) < m.maxOrigin)
-        }.distinct
-      else {
-        val maxOrigin = cur.tombstones.map(originOf).max
-        cur.files.filter(byOrigin(_) < maxOrigin)
-      }
+      LakehouseMor.build(spark, this, cur).flatMap { m =>
+        val preds = m.keyNames.zipWithIndex.map { case (k, i) =>
+          ScanPredicate.InSet(k, m.byKey.keysIterator
+            .map(tup => LakehouseMor.decanon(m.keyTypes(i), tup(i))).toSeq.distinct)
+        }
+        val kept = pruneFiles(cur, preds)._1.toSet
+        cur.files.filter(f => kept(f) && byOrigin(f) < m.maxOrigin)
+      }.distinct
     val id = nextId()
     // effective read of ONLY the affected files: scanFiles masks per-row
     // by origin, so survivors re-land at a fresh origin beyond every
@@ -3432,11 +3427,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
         if (cur == c) d else d.withColumnRenamed(c, cur)
       }
     def side(s: Snapshot, files: Seq[String]): DataFrame = {
-      val base =
-        if (files.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], unionSchema)
-        else toNames(readFiles(s, files))
+      val base = toNames(scanFiles(s, files, masked = false))
       val have = base.columns.toSet
       unionSchema.fields.foldLeft(base) { (d, fld) =>
         if (!have(fld.name)) d.withColumn(fld.name, lit(null).cast(fld.dataType))
@@ -3485,7 +3476,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       val addedFiles = toS.files.filterNot(fromSet)
       val newTombs = toS.tombstones.filterNot(fromTombSet)
       val inserts = align(
-        if (addedFiles.isEmpty) scanFiles(toS, Nil) else scanFiles(toS, addedFiles))
+        scanFiles(toS, addedFiles))
       val deletes =
         if (newTombs.isEmpty) inserts.filter(lit(false))
         else {
@@ -3628,7 +3619,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     implicit val str: org.apache.spark.sql.Encoder[String] = Encoders.STRING
     implicit val tup: org.apache.spark.sql.Encoder[(String, Long)] =
       Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    val perFile = readFiles(snap, missing)
+    val perFile = scanFiles(snap, missing, masked = false)
       .select(input_file_name().as("f"), xxhash64(col(c)).as("h"))
       .as[(String, Long)]
       .groupByKey { case (f, _) =>
@@ -3904,24 +3895,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       val local = rootPath.resolve(LakehouseTable.claimDirRelative(relFile))
       if (Files.exists(local)) local.toString else relFile
     }
-
-  /** Group form of [[absDataPath]]'s foreign-entry fallback, for reads
-    * that share one `basePath` per claim dir (hive partition-value
-    * parsing): Some(localized entries) only when the group carries
-    * foreign references AND every one has a local copy — a MIXED
-    * resolution under one basePath would mis-parse partition values,
-    * so a partially-localized group (a deepen interrupted mid-copy)
-    * keeps reading the foreign originals until the copy completes.
-    */
-  private def localizedGroup(fs: Seq[String]): Option[Seq[String]] = {
-    val foreign = fs.filter(f => Paths.get(f).isAbsolute)
-    if (foreign.isEmpty) None
-    else if (foreign.forall(f =>
-      Files.exists(rootPath.resolve(LakehouseTable.claimDirRelative(f)))))
-      Some(fs.map(f =>
-        if (Paths.get(f).isAbsolute) LakehouseTable.claimDirRelative(f) else f))
-    else None
-  }
 
   /** On-disk bytes of a data file: manifest-recorded (write-time) when
     * available, one fs stat as the legacy-manifest fallback. Powers
@@ -4412,11 +4385,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     if (files.isEmpty) base else base.filter(residual(preds))
   }
 
-  /** Scan an explicit pruned file subset of `snap` (the DSv2 relation's
-    * entry point). An empty set keeps THE SNAPSHOT'S schema — building
-    * the empty frame off read() would leak the current snapshot's
-    * (possibly widened) schema into a time-traveled scan.
-    */
   /** The snapshot id a file was written under, from its
     * `data/s<id>[-suffix]/` path segment — the MoR sequencing key: a
     * tombstone masks only rows from files with a STRICTLY OLDER origin,
@@ -4461,81 +4429,27 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       }.flatten.getOrElse(current))
   }
 
-  private[lakehouse] def scanFiles(snap: Snapshot, files: Seq[String]): DataFrame = {
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      // align to the SNAPSHOT schema: a column added by ALTER (or a
-      // widening append) that no scanned file carries still reads back
-      // (as NULL), a column whose PHYSICAL type drifted from the
-      // declared one casts back (hive partition-path values are
-      // type-INFERRED on read — `cell=3` for a LONG column comes back
-      // as INT; the snapshot schema, written from the frame's true
-      // types, is authoritative — the DSv2 scan already casts path
-      // values this way), and column order is the declared order
-      // regardless of which file's footer won the merge
-      val df = applyTombstones(snap, readFiles(snap, files))
-      val have = df.columns.map(c => nameKey(c) -> c).toMap
-      val aligned = schema.fields.foldLeft(df)((d, f) =>
-        have.get(nameKey(f.name)) match {
-          case None => d.withColumn(f.name, lit(null).cast(f.dataType))
-          // nullability-insensitive: ARRAY<FLOAT> variants that differ
-          // only in containsNull must NOT cast (uncastable and
-          // semantically identical); INT-inferred partition values
-          // against a LONG column must
-          case Some(c) if !sameIgnoringNullability(d.schema(c).dataType, f.dataType) =>
-            d.withColumn(c, col(c).cast(f.dataType))
-          case _ => d
-        })
-      aligned.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    }
-  }
-
-  /** Mask rows the snapshot's key tombstones delete: one LEFT ANTI join
-    * per distinct tombstone KEY SET (all tombstone dirs of that key set
-    * union into ONE small side, so N micro-batch applies cost one join,
-    * not N), on key equality plus `row origin < tombstone origin`.
-    * The row's origin comes from `input_file_name()` evaluated in the
-    * scan stage. Tombstone sides are batch-sized — Spark broadcasts
-    * them — and compaction folds them away entirely.
+  /** Scan `files` of `snap` as ONE native DSv2 relation over
+    * [[LakehouseBatchScan]] (the user read path's scan, handed the
+    * already-resolved snapshot — no manifest re-listing). The frame
+    * carries the snapshot schema in declared order, every column
+    * nullable: columns a file predates read NULL, rename eras and
+    * reborn floors resolve by identity, hive path values cast to the
+    * declared types. `masked = false` ignores the snapshot's MoR
+    * tombstones (the rows as stored — key probes, sidecar builds, the
+    * change feed's file diff). Filters and projections applied to the
+    * frame push into the scan (file skipping, column pruning).
     */
-  private def applyTombstones(snap: Snapshot, df0: DataFrame): DataFrame = {
-    if (snap.tombstones.isEmpty) return df0
-    // greedy ^.* anchors the match to the LAST '/data/s<digits>' segment
-    // — always the table's own data dir (partition segments contain '='
-    // and escape '/', so nothing after it can re-match). An unanchored
-    // first-match parse would mis-derive the origin for every row of a
-    // table whose ROOT path itself contains '/data/s<digit>' (e.g.
-    // /data/s3cache/warehouse/t), silently corrupting MoR masking.
-    val df = df0.withColumn("__graft_origin",
-      regexp_extract(input_file_name(), "^.*/data/s([0-9]+)", 1).cast("long"))
-    val byDir = snap.tombstones.groupBy(LakehouseTable.claimDirOf)
-    val perDir: Seq[(Seq[String], DataFrame)] = byDir.toSeq.map { case (dir, fs) =>
-      val origin = originOf(fs.head)
-      val fsE = localizedGroup(fs).getOrElse(fs)
-      // leaf-file reads discover no hive partition columns either way;
-      // the footer schema (one claim dir = one write = one schema)
-      // skips the schema-inference job Spark runs per uninferred read
-      val rd = footerSchemaOf(fsE.head).fold(spark.read)(s => spark.read.schema(s))
-      val t = rd.parquet(fsE.map(f => rootPath.resolve(f).toString): _*)
-        .withColumn("__graft_t_origin", lit(origin))
-      (t.columns.filterNot(_ == "__graft_t_origin").sorted.toSeq, t)
-    }
-    val masked = perDir.groupBy(_._1).values.foldLeft(df) { (d, group) =>
-      val tomb = group.map(_._2).reduce(_.unionByName(_)).alias("__t")
-      val keys = group.head._1
-      val cond = keys.map(k => d(k) === tomb(k))
-        .reduce(_ && _) && (d("__graft_origin") < tomb("__graft_t_origin"))
-      d.join(tomb, cond, "left_anti")
-    }
-    masked.drop("__graft_origin")
-  }
+  private[lakehouse] def scanFiles(snap: Snapshot, files: Seq[String],
+      masked: Boolean = true): DataFrame =
+    org.apache.spark.sql.GraftDatasetAccess.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new LakehouseInternalTable((this, snap), files, masked), None, None))
 
   /** Structural type equality ignoring nullability at every level (the
-    * contract Spark's private `DataType.sameType` provides): the scan
-    * alignment cast must fire on genuine type drift (path-inferred INT
-    * vs declared LONG) but never on a bare containsNull difference.
+    * contract Spark's private `DataType.sameType` provides): schema
+    * checks must reject genuine type drift but never a bare
+    * containsNull difference.
     */
   private def sameIgnoringNullability(a: DataType, b: DataType): Boolean = (a, b) match {
     case (x: ArrayType, y: ArrayType) =>
@@ -4622,61 +4536,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   }
 
   // ---------------- helpers ----------------
-
-  private def readFiles(snap: Snapshot, relFiles: Seq[String]): DataFrame = {
-    require(relFiles.nonEmpty, "empty file list")
-    val declared = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    // IDENTITY resolution ([[physNameAt]], FIELD_IDS.md step 2): each
-    // file reads EXACTLY the physical name its column identities had at
-    // the file's origin snapshot — renamed eras read their era names,
-    // reborn floors read NULL — where the old name-union + coalesce
-    // could not tell a retired column's bytes from a reborn namesake's.
-    // Every requested type is the declared (WIDEST) one: a narrow
-    // physical file upcasts in the reader (int32→long, float→double),
-    // where a footer-schema merge would refuse the width mix outright.
-    // Files group by resolution signature (flat) or by snapshot dir
-    // (hive-partitioned — which need a per-dir basePath anyway), so the
-    // read count is bounded by the retained snapshot count and
-    // compaction folds it back to one.
-    def sigOf(o: Long): Seq[Option[String]] =
-      declared.fields.toSeq.map(f => physNameAt(snap, f.name, o))
-    val (partitioned, flat) = relFiles.partition(_.contains("="))
-    val groups: Seq[(Seq[Option[String]], Option[String], Seq[String])] =
-      flat.groupBy(f => sigOf(originOf(f))).toSeq
-        .sortBy(_._2.head)
-        .map { case (sig, fs) => (sig, None, fs) } ++
-        partitioned.groupBy(LakehouseTable.claimDirOf).toSeq.sortBy(_._1)
-          .map { case (sDir, fs) => (sigOf(originOf(fs.head)), Some(sDir), fs) }
-    val dfs = groups.map { case (sig, base, fs) =>
-      val physFields = declared.fields.toSeq.zip(sig).collect {
-        case (f, Some(n)) =>
-          org.apache.spark.sql.types.StructField(n, f.dataType, nullable = true)
-      }
-      // every column floored (all identities reborn after this era):
-      // request one impossible name so the reader still yields the
-      // file's ROW COUNT (all-null rows survive COUNT/DELETE semantics)
-      val phys = StructType(
-        if (physFields.nonEmpty) physFields
-        else Seq(org.apache.spark.sql.types.StructField(
-          "__graft_absent__", org.apache.spark.sql.types.LongType, nullable = true)))
-      // foreign entries (shallow clone) read their LOCAL copies when
-      // the whole group is localized — basePath must move with them
-      val (baseE, fsE) = localizedGroup(fs) match {
-        case Some(loc) => (base.map(LakehouseTable.claimDirRelative), loc)
-        case None => (base, fs)
-      }
-      val reader0 = spark.read.schema(phys)
-      val reader = baseE.fold(reader0)(d =>
-        reader0.option("basePath", rootPath.resolve(d).toString))
-      val df = reader.parquet(fsE.map(f => rootPath.resolve(f).toString): _*)
-      // era names -> current names; floored identities materialize NULL
-      df.select(declared.fields.toSeq.zip(sig).map {
-        case (f, Some(n)) => col(n).as(f.name)
-        case (f, None) => lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-    }
-    dfs.reduceLeft(_.unionByName(_))
-  }
 
   /** Average on-disk bytes per row of the HEAD snapshot, from manifest
     * stats alone (files whose stats carry both rows and bytes) — the

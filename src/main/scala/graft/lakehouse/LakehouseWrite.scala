@@ -140,6 +140,13 @@ private[lakehouse] final class LakehouseDsv2Write(
   private val partSpec: Seq[String] =
     LakehouseSource.colListOf(writeOpts, "partitionBy")
 
+  // a nested merge-on-read key fails here, at planning — before any
+  // executor writes a staged file
+  mode match {
+    case Dsv2CommitMode.Keyed(keys, true) => LakehouseMor.requireMaskableKeys(querySchema, keys)
+    case _ => ()
+  }
+
   /** Schema-channel detection, from the QUERY schema (both marker
     * columns present — same rule as the V1 sink). Effective ONLY on the
     * streaming face: a BATCH write carrying `_ddl`+`_change` columns

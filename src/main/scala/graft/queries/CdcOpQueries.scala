@@ -1008,8 +1008,8 @@ object CdcOpQueries {
     //      scan — plan-shape flags (BatchScanExec present, columnar,
     //      at least one batch paid the survivor copy) ride the hash
     //      gate next to the masked aggregate the oracle re-derives, so
-    //      a regression that silently drops MoR reads back to the
-    //      composing path (or stops masking) flips the gate. ----
+    //      a regression that silently leaves the native scan (or stops
+    //      masking) flips the gate. ----
     "q136_native_mor_scan" -> ((s, dir) => {
       import s.implicits._
       val root = java.nio.file.Paths.get(

@@ -735,12 +735,12 @@ class ScaleDesignSpec extends SparkSpec {
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
     val pShort = shortHalf.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // the compressed-corpus scan carries the probed-cell predicate AS A
-    // PARTITION FILTER (INSET over the hive cell= dirs) — at scale this
-    // is the partition-pruned read that touches nprobe/C of the index
-    // instead of all of it
-    assert(pShort.contains("PartitionFilters: [cell#"),
-      "probed-cell isin must reach the codes scan as a partition filter")
+    // the compressed-corpus scan carries the probed-cell predicate as a
+    // PUSHED filter, which the lakehouse scan answers from the hive
+    // cell= dirs — at scale this is the partition-pruned read that
+    // touches nprobe/C of the index instead of all of it
+    assert(pShort.contains("PushedFilters: [In(cell,"),
+      s"probed-cell isin must reach the codes scan as a pushed filter:\n$pShort")
     val served = graft.queries.LlmSimQueries.ivfpqServe(
       spark, en, idx.centroids, idx.books, idx.codes)
     val p = served.queryExecution.explainString(

@@ -378,4 +378,33 @@ class LakehouseDsv2Spec extends SparkSpec {
     assert(ScanEvents.lastScan(root).get.filesPlanned === 1,
       "a partition-value filter through the public read must prune to the one partition")
   }
+
+  test("engine-internal reads never overwrite the last recorded USER scan") {
+    import spark.implicits._
+    val t = rangedTable()
+    val df = dsv2(t).filter(col("id") === 4500L)
+    assert(df.collect().length === 1)
+    val user = ScanEvents.lastScan(t.root).get
+    assert(user.filesPlanned === 1 && user.filesTotal === 16)
+    // a keyed upsert (touched-file probe + rewrite) and a read() both
+    // plan the native scan internally
+    t.upsert(Seq((4501L, "new")).toDF("id", "payload"), Seq("id"))
+    assert(t.read().count() === 16000L)
+    assert(ScanEvents.lastScan(t.root).get === user,
+      "internal reads must leave the user scan's ScanInfo in place")
+  }
+
+  test("a pinned snapshot that retention expired fails at action time with the reload hint") {
+    import spark.implicits._
+    val root = tmpDir("dsv2-expired-pin")
+    val t = new LakehouseTable(spark, root)
+    t.append(Seq((1L, "a")).toDF("id", "v"))
+    val df = spark.read.format("graft-lakehouse").load(root)
+    Thread.sleep(15)
+    t.append(Seq((2L, "b")).toDF("id", "v"))
+    assert(t.expireSnapshotsOlderThan(System.currentTimeMillis() + 60000L) >= 1)
+    val e = intercept[IllegalStateException](df.collect())
+    assert(e.getMessage.contains("pinned at load time") &&
+      e.getMessage.contains("re-run spark.read.load"), e.getMessage)
+  }
 }

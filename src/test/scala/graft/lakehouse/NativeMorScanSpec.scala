@@ -1,20 +1,21 @@
 package graft.lakehouse
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Merge-on-read snapshots on the NATIVE vectorized scan: live
-  * tombstones no longer drop the read to the V1 composing path — the
-  * batch scan loads the tombstone key sets into broadcast hash masks,
+/** Merge-on-read snapshots on the NATIVE vectorized scan: the batch
+  * scan loads the tombstone key sets into broadcast hash masks,
   * prunes the affected-file set from manifest stats, and the partition
   * readers stay COLUMNAR (zero-copy passthrough for batches holding no
   * masked row; survivor copy otherwise). Runtime join-driven file
-  * pruning keeps working on tombstoned snapshots. Key types outside
-  * the mask's canonical space (binary/nested) still fall back
-  * to the composing path, loudly correct.
+  * pruning keeps working on tombstoned snapshots. This is the ONE read
+  * path: binary keys mask here too, and nested keys are refused when
+  * the merge-on-read write is attempted.
   *
   * This is the busy-CDC-table shape: tombstones are PRESENT between
   * compactions, which is exactly when a 100 TB replication target gets
@@ -64,12 +65,13 @@ class NativeMorScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(df.filter(col("id") === 500L).select("v").head.getString(0) === "v500")
   }
 
-  test("ignoreMorMasks is internal-only: as a user read option it refuses (would resurrect deletes)") {
+  test("ignoreMorMasks is no read option: setting it cannot resurrect deleted rows") {
     val t = rangedMor("nmor-ign")
-    val e = intercept[Exception](
-      spark.read.format("graft-lakehouse")
-        .option("ignoreMorMasks", "true").load(t.root).collect())
-    assert(e.getMessage.contains("internal planning flag"), e.getMessage)
+    t.applyChanges(ch((2100L, "x", "delete")), Seq("id"), mergeOnRead = true)
+    val df = spark.read.format("graft-lakehouse")
+      .option("ignoreMorMasks", "true").load(t.root)
+    assert(df.count() === 3999L)
+    assert(df.filter(col("id") === 2100L).collect().isEmpty)
   }
 
   test("only batches holding a masked row pay the survivor copy; the rest pass through zero-copy") {
@@ -176,15 +178,33 @@ class NativeMorScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(df2.select("v").collect().map(_.getString(0)).toSeq === Seq("y"))
   }
 
-  test("a binary tombstone key falls back to the composing path — loudly correct, never wrong") {
+  test("a binary tombstone key masks through the native scan — loudly correct, never wrong") {
     val t = new LakehouseTable(spark, tmpDir("nmor-bin"))
     t.append(Seq((Array[Byte](1), "a"), (Array[Byte](2), "b")).toDF("k", "v").coalesce(1))
     t.applyChanges(Seq((Array[Byte](1), "x", "delete")).toDF("k", "v", "_change"),
       Seq("k"), mergeOnRead = true)
     val df = dsv2(t)
-    assert(batchScans(df).isEmpty,
-      "binary keys are outside the mask canon space: must NOT plan the native scan")
+    assert(batchScans(df).nonEmpty, "binary keys mask inside the native scan")
     assert(df.select("v").collect().map(_.getString(0)).toSeq === Seq("b"))
+  }
+
+  test("a merge-on-read apply keyed on a STRUCT column refuses before writing anything") {
+    val root = tmpDir("nmor-struct")
+    val t = new LakehouseTable(spark, root)
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+      .select(struct(col("id")).as("k"), col("v")).coalesce(1))
+    def dataFiles(): Set[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "data"))
+      try s.iterator().asScala.map(_.toString).toSet finally s.close()
+    }
+    val (headBefore, filesBefore) = (t.currentSnapshot().get, dataFiles())
+    val batch = Seq((1L, "x", "delete")).toDF("id", "v", "_change")
+      .select(struct(col("id")).as("k"), col("v"), col("_change"))
+    val e = intercept[IllegalArgumentException](
+      t.applyChanges(batch, Seq("k"), mergeOnRead = true))
+    assert(e.getMessage.contains("'k'"), e.getMessage)
+    assert(t.currentSnapshot().get === headBefore, "the manifest must be unchanged")
+    assert(dataFiles() === filesBefore, "no data or tombstone file may be written")
   }
 
   test("float→double widening across live tombstones: the mask still drops deleted rows") {

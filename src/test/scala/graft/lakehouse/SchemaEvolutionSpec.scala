@@ -14,11 +14,11 @@ import graft.SparkSpec
   * upcast in the parquet readers, so the vectorized path stays on), a
   * NARROWER batch casts up at write. Renames: ALTER TABLE RENAME
   * COLUMN is a schema-only snapshot carrying the former name with its
-  * rename point ([[AliasEntry]]); the NATIVE scan groups files by
-  * rename epoch and reads each group in its physical names (the V1
-  * composing path coalesces name variants for the programmatic
-  * faces), and compaction folds epochs back to one. Time travel sees
-  * each snapshot's own shape.
+  * rename point ([[AliasEntry]]); the NATIVE scan — the one read path,
+  * behind the DSv2 face and the programmatic reads alike — groups files
+  * by rename epoch and reads each group in its physical names, and
+  * compaction folds epochs back to one. Time travel sees each
+  * snapshot's own shape.
   */
 class SchemaEvolutionSpec extends SparkSpec {
   import spark.implicits._

@@ -13,14 +13,17 @@ import graft.SparkSpec
   */
 class SkippingReadSpec extends SparkSpec {
 
-  /** Files the physical plan will actually open — the planner's scan
-    * set, not the files surviving rows happen to come from.
+  /** Files the physical plan will actually open — the native scan's
+    * planned partitions, not the files surviving rows happen to come
+    * from.
     */
   private def filesRead(df: DataFrame): Int =
     df.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.relation.location.inputFiles.length
-    }.sum
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions.flatMap {
+          case p: LakehouseGroupedPartition => p.fp.files.map(_.filePath.toString).toSeq
+        }
+    }.flatten.distinct.size
 
   /** 16 files, file i holding the contiguous id range [1000i, 1000i+999]. */
   private def rangedTable(): LakehouseTable = {
