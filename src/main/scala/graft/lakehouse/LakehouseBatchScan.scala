@@ -60,7 +60,7 @@ import org.apache.spark.util.SerializableConfiguration
   * (`pinned`) and never record [[ScanEvents]]; raw reads (key probes,
   * sidecar builds, the change feed's file diff) pass `masked = false`.
   */
-final class LakehouseBatchScan(
+final class LakehouseBatchScan private[lakehouse] (
     options: Map[String, String],
     required: StructType,
     accepted: Array[Filter],

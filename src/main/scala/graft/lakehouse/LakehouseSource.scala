@@ -866,8 +866,8 @@ private[lakehouse] final class LakehouseScanBuilder(
     if (pushedAgg.isDefined) return true // idempotent re-probe
     // an internal read covers a file SUBSET (or ignores tombstones):
     // the snapshot-wide manifest answer would be wrong for it
-    if (internal.isDefined || agg.groupByExpressions.nonEmpty || agg.aggregateExpressions.isEmpty ||
-      accepted.nonEmpty) return false
+    if (internal.isDefined || agg.groupByExpressions.nonEmpty ||
+      agg.aggregateExpressions.isEmpty || accepted.nonEmpty) return false
     val spark = SparkSession.active
     val (t, snap) = LakehouseSource.snapshotFor(spark, options)
     def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression)

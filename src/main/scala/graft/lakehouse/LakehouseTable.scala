@@ -3475,8 +3475,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
         fromS.tombstones.forall(toS.tombstones.contains)) {
       val addedFiles = toS.files.filterNot(fromSet)
       val newTombs = toS.tombstones.filterNot(fromTombSet)
-      val inserts = align(
-        scanFiles(toS, addedFiles))
+      val inserts = align(scanFiles(toS, addedFiles))
       val deletes =
         if (newTombs.isEmpty) inserts.filter(lit(false))
         else {
