@@ -34,12 +34,15 @@ class ReadPathModelSpec extends SparkSpec {
 
   // ---------------- the operation language ----------------
 
+  /** Keyed operations carry key PICKS, resolved against the table's
+    * live keys when the step runs ([[Run.keyFor]]).
+    */
   private sealed trait Op
   private final case class Append(ids: List[Int], hive: Boolean) extends Op
-  private final case class Upsert(ids: List[Int]) extends Op
+  private final case class Upsert(picks: List[Int]) extends Op
   /** per key: 0 = delete, 1 = insert (replace), 2 = delete+insert in one batch */
   private final case class ApplyMor(changes: List[(Int, Int)], binaryKey: Boolean) extends Op
-  private final case class DeleteWhere(ids: List[Int]) extends Op
+  private final case class DeleteWhere(picks: List[Int]) extends Op
   private case object AddColumn extends Op
   private final case class RenameColumn(pick: Int) extends Op
   private final case class DropColumn(pick: Int) extends Op
@@ -51,17 +54,18 @@ class ReadPathModelSpec extends SparkSpec {
 
   private val genIds: Gen[List[Int]] =
     Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, Gen.choose(0, KeySpace - 1)))
-  private val genDistinctIds: Gen[List[Int]] = genIds.map(_.distinct)
+  private val genPicks: Gen[List[Int]] =
+    Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, Gen.choose(0, 999)))
 
   private val genOp: Gen[Op] = Gen.oneOf(
     for (ids <- genIds; hive <- Gen.oneOf(true, false)) yield Append(ids, hive),
-    genDistinctIds.map(Upsert(_)),
+    genPicks.map(Upsert(_)),
     for {
-      ids <- genDistinctIds
-      kinds <- Gen.listOfN(ids.size, Gen.choose(0, 2))
+      picks <- genPicks
+      kinds <- Gen.listOfN(picks.size, Gen.choose(0, 2))
       bin <- Gen.oneOf(true, false)
-    } yield ApplyMor(ids.zip(kinds), bin),
-    genDistinctIds.map(DeleteWhere(_)),
+    } yield ApplyMor(picks.zip(kinds), bin),
+    genPicks.map(DeleteWhere(_)),
     Gen.const(AddColumn),
     Gen.choose(0, 9).map(RenameColumn(_)),
     Gen.choose(0, 9).map(DropColumn(_)),
@@ -70,24 +74,24 @@ class ReadPathModelSpec extends SparkSpec {
     Gen.const(Fold))
 
   /** Every sequence opens with an append, then visits every operation
-    * kind once (both MoR key types included) in a random order, with a
-    * few random extra operations mixed in.
+    * kind once (both MoR key types included) in a random order, with
+    * one random extra operation mixed in.
     */
   private val genSequence: Gen[List[Op]] = for {
     first <- genIds.map(Append(_, hive = false))
-    upsert <- genDistinctIds.map(Upsert(_))
-    morIds <- genDistinctIds
-    morKinds <- Gen.listOfN(morIds.size, Gen.choose(0, 2))
-    binIds <- genDistinctIds
-    binKinds <- Gen.listOfN(binIds.size, Gen.choose(0, 2))
+    upsert <- genPicks.map(Upsert(_))
+    morPicks <- genPicks
+    morKinds <- Gen.listOfN(morPicks.size, Gen.choose(0, 2))
+    binPicks <- genPicks
+    binKinds <- Gen.listOfN(binPicks.size, Gen.choose(0, 2))
     hiveIds <- genIds
-    del <- genDistinctIds
+    del <- genPicks
     rn <- Gen.choose(0, 9)
     dr <- Gen.choose(0, 9)
     extra <- Gen.listOfN(1, genOp)
     items = Seq[Op](Append(hiveIds, hive = true), upsert,
-      ApplyMor(morIds.zip(morKinds), binaryKey = false),
-      ApplyMor(binIds.zip(binKinds), binaryKey = true),
+      ApplyMor(morPicks.zip(morKinds), binaryKey = false),
+      ApplyMor(binPicks.zip(binKinds), binaryKey = true),
       DeleteWhere(del), AddColumn, RenameColumn(rn), DropColumn(dr),
       WidenColumn, Compact, Fold) ++ extra
     order <- Gen.listOfN(items.size, Gen.choose(0, 1 << 20))
@@ -187,6 +191,15 @@ class ReadPathModelSpec extends SparkSpec {
 
     private def keyOf(r: Map[Int, Any]): Long = r(IdU).asInstanceOf[Long]
 
+    /** The key a keyed op's `pick` acts on: three picks in four hit a
+      * key the table holds (so deletes, replacements and masks have
+      * rows to act on), the rest any key of the key space.
+      */
+    def keyFor(pick: Int): Int = {
+      val live = rows.map(keyOf).distinct.sorted
+      if (live.nonEmpty && pick % 4 != 0) live(pick % live.size).toInt else pick % KeySpace
+    }
+
     private def tombstoned: Boolean =
       t.currentSnapshot().exists(_.tombstones.nonEmpty)
 
@@ -196,13 +209,15 @@ class ReadPathModelSpec extends SparkSpec {
         t.append(frame(rs), if (hive) Seq("p") else Nil)
         rows ++= rs
         commit(op)
-      case Upsert(ids) =>
+      case Upsert(picks) =>
+        val ids = picks.map(keyFor).distinct
         val rs = ids.map(freshRow)
         t.upsert(frame(rs), Seq("id"))
         val keys = ids.map(_.toLong).toSet
         rows = rows.filterNot(r => keys(keyOf(r))) ++ rs
         commit(op)
-      case ApplyMor(changes, binaryKey) =>
+      case ApplyMor(picks, binaryKey) =>
+        val changes = picks.map { case (p, kind) => (keyFor(p), kind) }.distinctBy(_._1)
         val batch = changes.flatMap { case (id, kind) =>
           val del = if (kind != 1) Seq((freshRow(id), "delete")) else Nil
           val ins = if (kind != 0) Seq((freshRow(id), "insert")) else Nil
@@ -214,7 +229,8 @@ class ReadPathModelSpec extends SparkSpec {
         rows = rows.filterNot(r => keys(keyOf(r))) ++
           batch.collect { case (r, "insert") => r }
         commit(op)
-      case DeleteWhere(ids) =>
+      case DeleteWhere(picks) =>
+        val ids = picks.map(keyFor).distinct
         t.currentSnapshot().foreach { cur =>
           t.deleteWhere(cur.files, col("id").isin(ids.map(_.toLong): _*))
         }
