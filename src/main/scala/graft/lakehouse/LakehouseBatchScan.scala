@@ -292,10 +292,12 @@ final class LakehouseBatchScan private[lakehouse] (
     * a runtime filter when the dim side is broadcast anyway, so
     * over-reporting costs nothing). Restricted to the scan's output:
     * Spark resolves these against the pruned relation, and a join key
-    * is necessarily projected.
+    * is necessarily projected. Each name is one verbatim reference:
+    * Spark asks for these on every join over the scan, so a column
+    * name that is no SQL identifier must not fail a keyed rewrite.
     */
   override def filterAttributes(): Array[NamedReference] =
-    required.fieldNames.map(Expressions.column)
+    required.fieldNames.map(org.apache.spark.sql.GraftColumnAccess.fieldRef)
 
   override def filter(filters: Array[Filter]): Unit = {
     // Under storage-partitioned-join reporting Spark REQUIRES runtime

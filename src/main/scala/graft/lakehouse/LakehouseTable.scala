@@ -3889,9 +3889,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * preference order only changes which filesystem serves them.
     */
   private[lakehouse] def absDataPath(relFile: String): String =
-    if (!Paths.get(relFile).isAbsolute) rootPath.resolve(relFile).toString
+    if (!Paths.get(relFile).isAbsolute) rootPath.toAbsolutePath.resolve(relFile).toString
     else {
-      val local = rootPath.resolve(LakehouseTable.claimDirRelative(relFile))
+      val local = rootPath.toAbsolutePath.resolve(LakehouseTable.claimDirRelative(relFile))
       if (Files.exists(local)) local.toString else relFile
     }
 

@@ -13,4 +13,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftColumnAccess {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** A one-part connector column reference naming `name` verbatim.
+    * The public `Expressions.column` parses its argument as a multi-part
+    * SQL identifier instead: it splits `a.b`, rejects `unit price`, and
+    * its first call pays the SQL parser's one-time initialization.
+    */
+  def fieldRef(name: String): connector.expressions.NamedReference =
+    connector.expressions.FieldReference.column(name)
 }

@@ -407,4 +407,28 @@ class LakehouseDsv2Spec extends SparkSpec {
     assert(e.getMessage.contains("pinned at load time") &&
       e.getMessage.contains("re-run spark.read.load"), e.getMessage)
   }
+
+  test("keyed upserts rewrite a table whose column name is no SQL identifier") {
+    import spark.implicits._
+    val t = new LakehouseTable(spark, tmpDir("dsv2-odd-names"))
+    t.append(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "unit price"))
+    // the touched-file probe and the rewrite both join over the native
+    // scan, which names every projected column as a runtime-filter
+    // candidate: each name must resolve verbatim, not as SQL
+    t.upsert(Seq((2L, 25.0), (3L, 30.0)).toDF("id", "unit price"), Seq("id"))
+    val got = t.read().as[(Long, Double)].collect().sortBy(_._1).toSeq
+    assert(got === Seq((1L, 10.0), (2L, 25.0), (3L, 30.0)))
+  }
+
+  test("a table opened by a relative root path takes keyed upserts") {
+    import spark.implicits._
+    val abs = java.nio.file.Paths.get(tmpDir("dsv2-relative-root"))
+    val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(abs).toString
+    val t = new LakehouseTable(spark, rel)
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    // the probe maps input_file_name() back to manifest paths: the scan
+    // must hand the reader absolute paths whatever the root's form
+    t.upsert(Seq((2L, "B")).toDF("id", "v"), Seq("id"))
+    assert(t.read().as[(Long, String)].collect().sortBy(_._1).toSeq === Seq((1L, "a"), (2L, "B")))
+  }
 }
