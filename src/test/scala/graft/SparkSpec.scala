@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +13,34 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs `body` submits from this thread (and the threads its
+    * queries spawn, which inherit the thread's local properties).
+    */
+  def jobsRunBy(body: => Unit): Int = {
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("graft.spec.jobs") == tag)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setLocalProperty("graft.spec.jobs", tag)
+    try {
+      body
+      // the listener bus is async: settle until the count holds a beat
+      var prev = -1
+      var spins = 0
+      while (jobs.get != prev && spins < 50) {
+        prev = jobs.get; Thread.sleep(100); spins += 1
+      }
+      jobs.get
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.spec.jobs", null)
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
 }
 
 object SparkSpec {

@@ -1,6 +1,5 @@
 package graft.lakehouse
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -335,34 +334,6 @@ class BranchSpec extends SparkSpec {
     a.appendToBranch(Seq((7L, "A")).toDF("k", "v").coalesce(1), "wap")
     assert(spark.read.format("graft-lakehouse").option("snapshotBranch", "wap")
       .load(root).collect().map(_.getLong(0)).toSet === Set(1L, 7L, 20L))
-  }
-
-  /** Spark jobs `body` submits from this thread (and the threads its
-    * queries spawn, which inherit the thread's local properties).
-    */
-  private def jobsRunBy(body: => Unit): Int = {
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty("graft.spec.jobs") == tag)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setLocalProperty("graft.spec.jobs", tag)
-    try {
-      body
-      // the listener bus is async: settle until the count holds a beat
-      var prev = -1
-      var spins = 0
-      while (jobs.get != prev && spins < 50) {
-        prev = jobs.get; Thread.sleep(100); spins += 1
-      }
-      jobs.get
-    } finally {
-      spark.sparkContext.setLocalProperty("graft.spec.jobs", null)
-      spark.sparkContext.removeSparkListener(l)
-    }
   }
 
   test("drift pin: a branch write runs exactly the Spark jobs of its main-line write") {
