@@ -227,6 +227,23 @@ final case class Snapshot(
   def rebornFloors: Map[String, Long] = reborn.getOrElse(Map.empty)
 }
 
+/** What a keyed commit ([[LakehouseTable.commitKeyed]]) removes from
+  * its head besides adding the batch's files.
+  */
+private[lakehouse] sealed trait KeyedRemoval
+private[lakehouse] object KeyedRemoval {
+  /** Merge-on-read with tombstone files the caller already staged. */
+  final case class Tombstones(files: Seq[String]) extends KeyedRemoval
+  /** Merge-on-read: `batch`'s key tuples land as the tombstone. */
+  final case class MaskKeys(batch: DataFrame) extends KeyedRemoval
+  /** Copy-on-write: the head's files holding any of `keyRows` rewrite
+    * without them; `ranges` are the batch's per-key ranges when known
+    * (None runs the min/max job).
+    */
+  final case class RewriteKeys(keyRows: DataFrame,
+      ranges: Option[Seq[ScanPredicate.Range]]) extends KeyedRemoval
+}
+
 /** Pushed-down scan predicate for the skipping read path
   * ([[LakehouseTable.read(preds*)]]): equality probes consult bloom
   * sidecars AND parquet-footer min/max, ranges consult footer min/max
@@ -648,46 +665,19 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     else appendWith(df, partitionBy, Some(TxnMark(appId, version)))
   }
 
-  /** Append with cross-process rebase (the Delta blind-append rule):
-    * the data files are written ONCE; if another process claims the
-    * target version between this writer's head read and its publish,
-    * the commit REBASES — the same physical files re-commit on top of
-    * the new head (an append removes nothing, so it can never
-    * conflict). Schema compatibility re-validates against each new head
-    * (a racing writer may have evolved it), and a txn-marked append
-    * re-checks its mark per attempt: if the racing commit was a replica
-    * of the SAME producer batch (two instances of one streaming app),
-    * this one is absorbed (None) instead of double-applying.
-    * A branch `target` runs the same protocol against the branch head.
+  /** Append: the batch's files are written ONCE under the claimed id,
+    * then commit through [[commitWrittenFiles]] — the rebase protocol
+    * every append shares with the DSv2 executor-written face. A branch
+    * `target` runs it against the branch head.
     */
   private def appendWith(df0: DataFrame, partitionBy: Seq[String],
       mark: Option[TxnMark], target: WriteTarget = MainLine): Option[Snapshot] = {
     val (head, claimedId) = target.resolve()
     requireCompatibleSchemaFor(head, df0.schema)
     val df = canonicalizedNamesAt(head, df0)
-    val baseTombs = head.map(_.tombstones.toSet).getOrElse(Set.empty)
     val newFiles = writeDataFiles(df, claimedId, partitionCols = partitionBy, head = head)
-    withCommitRetry {
-      if (mark.exists(m => lastTxnVersion(m.appId).exists(_ >= m.version)))
-        Right(None) // a racing replica of this exact batch already landed
-      else {
-        val (parent, id) = target.resolve()
-        requireCompatibleSchemaFor(parent, df.schema) // the head (and its schema) may have moved
-        // MoR masking sequences on the PATH-derived origin (= claimedId
-        // here), so a racing CDC apply whose tombstone is newer than our
-        // claimed id would mask this append's rows as if they predated
-        // it. That one interleaving is a genuine conflict — surface it;
-        // every other racer (append/compact/rewrite) rebases safely.
-        val racedTombs = parent.map(_.tombstones.toSet).getOrElse(Set.empty) -- baseTombs
-        if (racedTombs.exists(originOf(_) > claimedId))
-          Left(new ConcurrentCommitException(root, claimedId))
-        else Right(Some(target.publish(Snapshot(id, parent.map(_.snapshotId),
-          System.currentTimeMillis(), "append",
-          parent.map(_.files).getOrElse(Nil) ++ newFiles,
-          evolvedSchemaJsonFor(parent, df.schema), txn = mark,
-          deletes = parent.flatMap(_.deletes)))))
-      }
-    }
+    commitWrittenFiles(newFiles, df.schema, claimedId, mark,
+      targetAuthoritative = false, target)
   }
 
   /** Run one optimistic commit attempt, re-running it after every LOST
@@ -721,7 +711,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * registry inheritance from the target alone, so a branch write is
     * the main write against another head — never a copy of it.
     */
-  private sealed abstract class WriteTarget {
+  private[lakehouse] sealed abstract class WriteTarget {
     protected def headIn(snaps: Seq[Snapshot]): Option[Snapshot]
     /** (head, next global version id) from ONE manifest listing. */
     def resolve(): (Option[Snapshot], Long) = {
@@ -732,7 +722,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     def publish(s: Snapshot): Snapshot
   }
 
-  private object MainLine extends WriteTarget {
+  private[lakehouse] object MainLine extends WriteTarget {
     protected def headIn(snaps: Seq[Snapshot]) = snaps.reverseIterator.find(_.branch.isEmpty)
     def publish(s: Snapshot) = writeSnapshot(s)
   }
@@ -812,38 +802,37 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       }
   }
 
-  /** Commit EXECUTOR-WRITTEN files as one append snapshot — the
-    * metadata half of the DSv2 write face. Identical contract to
-    * [[appendWith]] minus the data write: cross-process REBASE on a
-    * lost publish race (the files re-commit on the new head), schema
-    * compatibility re-validated per attempt, a txn `mark` absorbed
-    * (None returned, the CALLER discards the files) when a racing
-    * replica of the same producer batch already landed, and the one
-    * genuine conflict — a raced MoR tombstone newer than this write's
-    * claimed origin — surfaced as [[ConcurrentCommitException]].
-    * `targetAuthoritative` pins the snapshot schema to the head
-    * (schema-channel mode: the DDL records are the only evolution
-    * authority) instead of evolving additively from the batch.
+  /** The one APPEND commit: `newFiles` (written under `claimedId` —
+    * by [[appendWith]] driver-side or by the DSv2 executor writers)
+    * become one append snapshot on `target`. A lost publish race
+    * REBASES (the files re-commit on the new head — an append removes
+    * nothing, so it can never conflict), schema compatibility
+    * re-validates per attempt, a txn `mark` whose racing replica
+    * already landed is absorbed (None; the CALLER discards the files),
+    * and the one genuine conflict — a raced MoR tombstone newer than
+    * the claimed origin ([[racedTombstone]]) — surfaces as
+    * [[ConcurrentCommitException]]. `targetAuthoritative` pins the
+    * snapshot schema to the head (schema-channel mode: the DDL records
+    * are the only evolution authority) instead of evolving additively.
     */
   private[lakehouse] def commitWrittenFiles(newFiles: Seq[String],
       batchSchema: StructType, claimedId: Long, mark: Option[TxnMark],
-      targetAuthoritative: Boolean): Option[Snapshot] = writeLock.synchronized {
+      targetAuthoritative: Boolean,
+      target: WriteTarget = MainLine): Option[Snapshot] = writeLock.synchronized {
     withCommitRetry {
       if (mark.exists(m => lastTxnVersion(m.appId).exists(_ >= m.version)))
         Right(None) // a racing replica of this exact batch already landed
       else {
-        val (parent, id) = MainLine.resolve()
+        val (parent, id) = target.resolve()
         requireCompatibleSchemaFor(parent, batchSchema)
-        // a raced tombstone NEWER than this write's claimed origin would
-        // mask the new rows as if they predated it — the appendWith rule
-        if (parent.exists(_.tombstones.exists(originOf(_) > claimedId)))
+        if (racedTombstone(parent, claimedId))
           Left(new ConcurrentCommitException(root, claimedId))
         else {
           val schemaJson =
             if (targetAuthoritative)
               parent.map(_.schemaJson).getOrElse(batchSchema.json)
             else evolvedSchemaJsonFor(parent, batchSchema)
-          Right(Some(writeSnapshot(Snapshot(id, parent.map(_.snapshotId),
+          Right(Some(target.publish(Snapshot(id, parent.map(_.snapshotId),
             System.currentTimeMillis(), "append",
             parent.map(_.files).getOrElse(Nil) ++ newFiles,
             schemaJson, txn = mark, deletes = parent.flatMap(_.deletes)))))
@@ -852,195 +841,147 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
   }
 
-  /** Full-overwrite commit over EXECUTOR-WRITTEN files: the DSv2 form
-    * of [[overwrite]] — content replaced, schema reset to the batch's,
+  /** MoR masking sequences on the PATH-derived origin, so a tombstone
+    * in `head` newer than a write's claimed origin (a racing CDC apply
+    * landed between the claim and the commit) would mask the write's
+    * rows as if they predated it — the one conflict an append or a
+    * staged keyed commit cannot rebase past.
+    */
+  private def racedTombstone(head: Option[Snapshot], claimedId: Long): Boolean =
+    head.exists(_.tombstones.exists(originOf(_) > claimedId))
+
+  /** The one FULL-OVERWRITE commit, on the (head, id) its caller
+    * resolved: content replaced, schema reset to the batch's,
     * registries cleared (no pre-overwrite file survives).
     */
-  private[lakehouse] def commitOverwriteFiles(newFiles: Seq[String],
-      batchSchema: StructType): Snapshot = writeLock.synchronized {
-    writeSnapshot(Snapshot(nextId(), currentSnapshot().map(_.snapshotId),
+  private[lakehouse] def commitOverwriteFiles(head: Option[Snapshot], id: Long,
+      newFiles: Seq[String], batchSchema: StructType): Snapshot = writeLock.synchronized {
+    writeSnapshot(Snapshot(id, head.map(_.snapshotId),
       System.currentTimeMillis(), "overwrite", newFiles, batchSchema.json,
       renames = Some(Map.empty), drops = Some(Map.empty),
       reborn = Some(Map.empty)))
   }
 
-  /** Filter-scoped overwrite over EXECUTOR-WRITTEN files: the DSv2 form
-    * of [[overwriteWhere]] — ONE snapshot that rewrites the pruned
-    * candidates without their matching rows (NULL-condition rows
-    * survive, the DELETE rule) and adopts the staged files as the new
-    * data. Declared schema and lineage untouched (a row-set operation);
-    * lost cross-process races auto-retry like every SQL statement.
+  /** Filter-scoped overwrite over EXECUTOR-WRITTEN files: the
+    * [[overwriteWhere]] statement with `staged` as its already-written
+    * insert side.
     */
   private[lakehouse] def commitOverwriteWhereFiles(staged: Seq[String],
-      filters: Seq[sources.Filter]): Option[Snapshot] = writeLock.synchronized {
-    val cond = filters.map(LakehouseSource.toCondition)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    withCommitRetry {
-      val cur = currentSnapshot().getOrElse(throw new IllegalStateException(
-        s"table $root has no snapshots"))
-      val candidates = LakehouseSource.pruneForFilters(this, cur, filters,
-        declaredBucketSpec).filter(cur.files.toSet)
-      val id = nextId()
-      val partCols = inferPartitionCols(cur.files)
-      val rewritten =
-        if (candidates.isEmpty) Nil
-        else dropEmptyDataFiles(writeDataFiles(
-          scanFiles(cur, candidates).filter(not(cond <=> lit(true))),
-          id, suffix = "rw", partitionCols = partCols))
-      Right(Some(writeSnapshot(Snapshot(id, Some(cur.snapshotId),
-        System.currentTimeMillis(), "overwrite",
-        cur.files.diff(candidates) ++ rewritten ++ staged,
-        cur.schemaJson, deletes = cur.deletes))))
-    }
-  }
+      filters: Seq[sources.Filter]): Option[Snapshot] =
+    overwriteMatching(filters, inserts = None, written = staged)
 
-  /** Keyed upsert over EXECUTOR-WRITTEN files: the DSv2 form of
-    * [[upsert]]/merge-on-read — the staged files ARE the added side
-    * (no second write of the batch), touched existing files discover
-    * through the same two-stage probe and either rewrite (copy-on-
-    * write) or a key tombstone masks them (merge-on-read; the
-    * tombstone writes under the STAGED files' claimed origin so the
-    * batch's own rows stay visible — masking is strictly-older).
+  /** The one KEYED commit. Every face that lands a keyed batch — the
+    * table API's upsert / applyChanges (main line or branch), the DSv2
+    * batch write and the DSv2 stream epoch — stages its data files
+    * (`added`, written under `claimedId`), then commits here against
+    * the (head, id) and `target` it already resolved:
+    *
+    *  1. bootstrap: no head — the staged files become the table;
+    *  2. a raced tombstone newer than `claimedId` ([[racedTombstone]])
+    *     throws [[ConcurrentCommitException]];
+    *  3. merge-on-read: the tombstone appends to the head's — staged
+    *     files, or key rows written through [[writeTombstone]] at
+    *     `claimedId` (masking is strictly-older, so the batch's own
+    *     rows stay visible);
+    *  4. copy-on-write: the head's files holding the batch's keys swap
+    *     for their rewrites ([[rewriteTouched]]);
+    *  5. publish on `target`.
+    *
+    * `removal` is evaluated only past the bootstrap. This never
+    * re-resolves or retries: a lost publish race surfaces as
+    * [[ConcurrentCommitException]] to the caller.
     */
-  private[lakehouse] def commitUpsertFiles(staged: Seq[String],
-      batchSchema: StructType, claimedId: Long, keys: Seq[String],
-      mergeOnRead: Boolean): Snapshot = writeLock.synchronized {
-    require(keys.nonEmpty, "upsert requires key columns")
-    val cur = currentSnapshot()
-    requireCompatibleSchemaFor(cur, batchSchema)
-    cur match {
-      case None =>
-        writeSnapshot(Snapshot(nextId(), None, System.currentTimeMillis(),
-          "upsert", staged, batchSchema.json))
-      case Some(c) if staged.isEmpty => // empty batch: schema-only evolution
-        writeSnapshot(Snapshot(nextId(), Some(c.snapshotId),
-          System.currentTimeMillis(), "upsert", c.files,
-          evolvedSchemaJsonFor(Some(c), batchSchema), deletes = c.deletes))
+  private[lakehouse] def commitKeyed(target: WriteTarget, head: Option[Snapshot],
+      id: Long, claimedId: Long, op: String, added: Seq[String],
+      batchSchema: StructType, keys: Seq[String], mark: Option[TxnMark])(
+      removal: => KeyedRemoval): Snapshot = writeLock.synchronized {
+    require(keys.nonEmpty, "keyed commit requires key columns")
+    requireCompatibleSchemaFor(head, batchSchema)
+    val (files, deletes) = head match {
+      case None => (added, None)
       case Some(c) =>
-        // a raced MoR tombstone newer than the staged files' claimed
-        // origin would mask this batch's rows — the appendWith rule
-        if (c.tombstones.exists(originOf(_) > claimedId))
+        if (racedTombstone(head, claimedId))
           throw new ConcurrentCommitException(root, claimedId)
-        // read the staged files back for their KEY tuples only —
-        // basePath reconstitutes identity-partitioned key columns; the
-        // explicit cast pins path-inferred types to the batch's. The
-        // batch schema is passed EXPLICITLY: we wrote these files from
-        // exactly this schema one call ago, and letting Spark re-infer
-        // it costs a footer-reading job per commit (guide §2.4)
-        val dir = staged.head.split('/').take(2).mkString("/")
-        val stagedDf = spark.read
-          .schema(batchSchema)
-          .option("basePath", rootPath.resolve(dir).toString)
-          .parquet(staged.map(f => rootPath.resolve(f).toString): _*)
-        val canon = batchSchema.fields.map(f => nameKey(f.name) -> f).toMap
-        val incomingKeys = stagedDf.select(keys.map { k =>
-          val f = canon.getOrElse(nameKey(k), throw new IllegalArgumentException(
-            s"upsert key '$k' not in the batch schema ${batchSchema.simpleString}"))
-          col(f.name).cast(f.dataType).as(f.name)
-        }: _*).distinct()
-        if (mergeOnRead) {
-          val tomb = dropEmptyDataFiles(
-            writeDataFiles(incomingKeys, claimedId, suffix = "tomb"))
-          writeSnapshot(Snapshot(nextId(), Some(c.snapshotId),
-            System.currentTimeMillis(), "apply", c.files ++ staged,
-            evolvedSchemaJsonFor(Some(c), batchSchema),
-            deletes = Some(c.tombstones ++ tomb).filter(_.nonEmpty)))
-        } else {
-          // stage-1 prune ranges from the staged files' own footers —
-          // zero Spark jobs; the aggregate-job fallback answers when
-          // the footers can't (see footerKeyRanges)
-          val id = nextId()
-          val (touched, rewritten) = rewriteTouched(c, incomingKeys, keys, id,
-            inferPartitionCols(c.files), footerKeyRanges(staged, keys, batchSchema))
-          writeSnapshot(Snapshot(id, Some(c.snapshotId),
-            System.currentTimeMillis(), "upsert",
-            c.files.diff(touched) ++ rewritten ++ staged,
-            evolvedSchemaJsonFor(Some(c), batchSchema), deletes = c.deletes))
+        removal match {
+          case KeyedRemoval.Tombstones(tomb) =>
+            (c.files ++ added, Some(c.tombstones ++ tomb).filter(_.nonEmpty))
+          case KeyedRemoval.MaskKeys(batch) =>
+            (c.files ++ added, Some(c.tombstones ++
+              writeTombstone(c, batch, keys, claimedId)).filter(_.nonEmpty))
+          case KeyedRemoval.RewriteKeys(keyRows, ranges) =>
+            val (touched, rewritten) = rewriteTouched(c, keyRows, keys, id,
+              inferPartitionCols(c.files), ranges)
+            (c.files.diff(touched) ++ rewritten ++ added, c.deletes)
         }
     }
+    target.publish(Snapshot(id, head.map(_.snapshotId), System.currentTimeMillis(),
+      op, files, evolvedSchemaJsonFor(head, batchSchema), txn = mark,
+      deletes = deletes))
   }
 
-  /** KEYED STREAMING epoch commit over EXECUTOR-WRITTEN halves (round
-    * 15 — the DSv2 form of [[applyChanges]]/[[upsert]] for streams):
-    * `dataFiles` are the batch's insert rows, `tombFiles` its deduped
-    * touched-key tuples — both staged task-side, the driver never
-    * touches row data on the MoR path.
-    *
-    *  - merge-on-read: ONE metadata commit — data files add, the tomb
-    *    files become the snapshot's key tombstone (they were written
-    *    at the batch's claimed origin, so the batch's own rows stay
-    *    visible: masking is strictly-older). The V1 path wrote the
-    *    same tombstone driver-side from the batch; here it already
-    *    exists.
-    *  - copy-on-write: the tomb keys drive the two-stage touched-file
-    *    probe; touched files rewrite minus matching keys, the staged
-    *    data files land as the added side. The caller discards the
-    *    tomb files (transport only).
-    *
-    * `mark` is the epoch's exactly-once transaction mark: an absorbed
-    * replay returns None (caller discards every staged file). An empty
-    * epoch still commits so its mark is recorded. `cdc` only names the
-    * op lineage (`apply` vs `upsert`) — semantics are identical.
+  /** The one merge-on-read TOMBSTONE writer: `batch`'s distinct key
+    * tuples at origin `id`. The tombstone lands under `head`'s hive
+    * layout when the batch carries the partition columns (beyond the
+    * keys): per-partition key-file accounting — e.g. the ANN occupancy
+    * probe — then answers from the MANIFEST alone. Masking semantics
+    * are unchanged: partition values live in the PATH, not the file,
+    * so the mask keys (read from the tomb file's columns) stay exactly
+    * `keys`.
+    */
+  private def writeTombstone(head: Snapshot, batch: DataFrame, keys: Seq[String],
+      id: Long): Seq[String] = {
+    val tombPartSpecs = inferPartitionCols(head.files).filter { pc =>
+      val src = specSourceCol(pc)
+      batch.columns.exists(_.equalsIgnoreCase(src)) &&
+        !keys.exists(_.equalsIgnoreCase(src))
+    }
+    val tombKeys = batch.select((keys ++ tombPartSpecs.map(specSourceCol))
+      .map(col): _*).distinct()
+    dropEmptyDataFiles(writeDataFiles(tombKeys, id, suffix = "tomb",
+      partitionCols = tombPartSpecs, head = Some(head)))
+  }
+
+  /** KEYED STREAMING epoch over EXECUTOR-WRITTEN halves: `dataFiles`
+    * are the batch's insert rows, `tombFiles` its deduped touched-key
+    * tuples, both staged task-side at `claimedId` — the driver never
+    * touches row data on the merge-on-read path, where the tomb files
+    * ARE the tombstone. Copy-on-write reads the tomb keys back as the
+    * probe side (stage-1 ranges from their footers); the caller then
+    * discards them. `mark` is the epoch's exactly-once transaction
+    * mark: an absorbed replay returns None (caller discards every
+    * staged file); an empty epoch still commits so its mark is
+    * recorded. `cdc` only names the op lineage (`apply` vs `upsert`).
     */
   private[lakehouse] def commitApplyStagedFiles(dataFiles: Seq[String],
       tombFiles: Seq[String], batchSchema: StructType, claimedId: Long,
       keys: Seq[String], mergeOnRead: Boolean, cdc: Boolean,
       mark: Option[TxnMark]): Option[Snapshot] = writeLock.synchronized {
-    require(keys.nonEmpty, "keyed commit requires key columns")
     if (mark.exists(m => lastTxnVersion(m.appId).exists(_ >= m.version)))
       return None // a racing replica of this exact epoch already landed
-    val op = if (cdc || mergeOnRead) "apply" else "upsert"
-    currentSnapshot() match {
-      case None =>
-        // bootstrap: the staged data files become the table (nothing
-        // exists for the keys to touch; a pure-delete batch still
-        // commits for its mark). Caller discards the tomb files.
-        Some(writeSnapshot(Snapshot(nextId(), None, System.currentTimeMillis(),
-          op, dataFiles, batchSchema.json, txn = mark)))
-      case Some(c) =>
-        requireCompatibleSchemaFor(Some(c), batchSchema)
-        // a raced MoR tombstone NEWER than this batch's claimed origin
-        // would mask the staged rows as if they predated it (the
-        // appendWith rule — V1 applies claimed their id at commit time
-        // and never had this window; the staged faces do)
-        if (c.tombstones.exists(originOf(_) > claimedId))
-          throw new ConcurrentCommitException(root, claimedId)
-        if (mergeOnRead) {
-          Some(writeSnapshot(Snapshot(nextId(), Some(c.snapshotId),
-            System.currentTimeMillis(), op, c.files ++ dataFiles,
-            evolvedSchemaJsonFor(Some(c), batchSchema), txn = mark,
-            deletes = Some(c.tombstones ++ tombFiles).filter(_.nonEmpty))))
-        } else {
-          val canon = batchSchema.fields.map(f => nameKey(f.name) -> f).toMap
-          val keyFields = StructType(keys.map { k =>
-            val f = canon.getOrElse(nameKey(k), throw new IllegalArgumentException(
-              s"keys column '$k' not in the batch schema ${batchSchema.simpleString}"))
-            org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)
-          })
-          // explicit schema: the executor writers stamped the tomb key
-          // files with exactly these (name, type) pairs ([[LakehouseData
-          // Writer.keySchema]]); re-inferring would cost a footer job
-          // per epoch commit
-          val incoming =
-            if (tombFiles.isEmpty) None
-            else Some(spark.read.schema(keyFields).parquet(tombFiles.map(f =>
-              rootPath.resolve(f).toString): _*)
-              .select(keyFields.fields.map(f =>
-                col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*).distinct())
-          // stage-1 prune ranges from the tomb key files' own footers —
-          // zero Spark jobs (footerKeyRanges; the agg-job fallback
-          // answers when the footers can't)
-          val id = nextId()
-          val (touched, rewritten) = incoming.fold((Seq.empty[String], Seq.empty[String]))(
-            rewriteTouched(c, _, keys, id, inferPartitionCols(c.files),
-              footerKeyRanges(tombFiles, keys, keyFields)))
-          Some(writeSnapshot(Snapshot(id, Some(c.snapshotId),
-            System.currentTimeMillis(), op,
-            c.files.diff(touched) ++ rewritten ++ dataFiles,
-            evolvedSchemaJsonFor(Some(c), batchSchema), txn = mark,
-            deletes = c.deletes)))
-        }
-    }
+    val (head, id) = MainLine.resolve()
+    Some(commitKeyed(MainLine, head, id, claimedId,
+        if (cdc || mergeOnRead) "apply" else "upsert", dataFiles, batchSchema,
+        keys, mark) {
+      if (mergeOnRead || tombFiles.isEmpty)
+        KeyedRemoval.Tombstones(if (mergeOnRead) tombFiles else Nil)
+      else {
+        val canon = batchSchema.fields.map(f => nameKey(f.name) -> f).toMap
+        val keyFields = StructType(keys.map { k =>
+          val f = canon.getOrElse(nameKey(k), throw new IllegalArgumentException(
+            s"keys column '$k' not in the batch schema ${batchSchema.simpleString}"))
+          org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)
+        })
+        // explicit schema: the executor writers stamped the tomb key
+        // files with exactly these (name, type) pairs ([[LakehouseData
+        // Writer.keySchema]]); re-inferring would cost a footer job
+        // per epoch commit
+        KeyedRemoval.RewriteKeys(
+          spark.read.schema(keyFields)
+            .parquet(tombFiles.map(f => rootPath.resolve(f).toString): _*)
+            .distinct(),
+          footerKeyRanges(tombFiles, keys, keyFields))
+      }
+    })
   }
 
   /** Drop uncommitted executor-written files (aborted job, absorbed
@@ -1434,41 +1375,35 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
   }
 
+  /** Copy-on-write upsert: the batch lands FIRST, under the head's hive
+    * layout — its freshly written footers then answer the stage-1
+    * key-range prune driver-side ([[footerKeyRanges]]), so no min/max
+    * job runs. Order is safe: files only become visible at the commit,
+    * and a failed attempt orphans them like a failed rewrite (snapshot
+    * expiry collects orphans).
+    */
   private def upsertWith(df0: DataFrame, keys: Seq[String],
       mark: Option[TxnMark], target: WriteTarget = MainLine): Snapshot = {
     require(keys.nonEmpty, "upsert requires key columns")
     val (cur, id) = target.resolve()
     requireCompatibleSchemaFor(cur, df0.schema)
-    val df = canonicalizedNamesAt(cur, df0)
-    if (cur.isEmpty) {
-      val files = writeDataFiles(df, id, head = None)
-      return target.publish(Snapshot(id, None, System.currentTimeMillis(),
-        "upsert", files, df.schema.json, txn = mark))
-    }
-
-    val existingFiles = cur.get.files
-    val incoming = df.cache()
+    val incoming = canonicalizedNamesAt(cur, df0).cache()
     try {
-      // preserve the parent's hive layout on rewrite (same discipline
-      // as applyChanges): survivors and merged rows land back under
-      // the partition scheme, keeping partition-pruned reads sharp
-      val partCols = inferPartitionCols(existingFiles)
-      // the batch lands FIRST: its freshly written footers then answer
-      // the stage-1 key-range prune driver-side (footerKeyRanges), so
-      // the per-upsert min/max aggregate job disappears. Order is safe
-      // — files only become visible at the manifest commit, and a
-      // failed attempt orphans them exactly like a failed rewrite
-      // always has (snapshot expiry collects orphans).
       val added = writeDataFiles(incoming, id, head = cur,
-        partitionCols = partCols.filter(pc => incoming.columns.contains(specSourceCol(pc))))
-      val incomingKeys = incoming.select(keys.map(col): _*).distinct()
-      val (touched, rewritten) = rewriteTouched(cur.get, incomingKeys, keys, id,
-        partCols, footerKeyRanges(added, keys, incoming.schema))
-      target.publish(Snapshot(id, Some(cur.get.snapshotId), System.currentTimeMillis(),
-        "upsert", existingFiles.diff(touched) ++ rewritten ++ added,
-        evolvedSchemaJsonFor(cur, df.schema), txn = mark, deletes = cur.get.deletes))
+        partitionCols = layoutFor(cur, incoming))
+      commitKeyed(target, cur, id, id, "upsert", added, incoming.schema, keys, mark)(
+        KeyedRemoval.RewriteKeys(incoming.select(keys.map(col): _*).distinct(),
+          footerKeyRanges(added, keys, incoming.schema)))
     } finally incoming.unpersist()
   }
+
+  /** The hive layout a keyed write's batch lands under: the head's
+    * partition scheme, restricted to the entries whose source column
+    * the batch carries (nothing for a bootstrap).
+    */
+  private def layoutFor(head: Option[Snapshot], batch: DataFrame): Seq[String] =
+    head.fold(Seq.empty[String])(c => inferPartitionCols(c.files))
+      .filter(pc => batch.columns.contains(specSourceCol(pc)))
 
   /** The copy-on-write half of every keyed write: find `head`'s data
     * files holding any key tuple of `keyRows` (two-stage — manifest
@@ -1566,67 +1501,22 @@ final class LakehouseTable(spark: SparkSession, val root: String,
           "(this feed speaks insert|delete; updates arrive as delete(old)+insert(new))")
       val (nIns, nAll) = (chStats.getLong(1), chStats.getLong(2))
       val inserts = ch.filter(col("_change") === "insert").drop("_change")
-      cur match {
-        case None =>
-          target.publish(Snapshot(id, None, System.currentTimeMillis(),
-            "apply", writeDataFiles(inserts, id, head = None), inserts.schema.json,
-            txn = mark))
-        case Some(c) =>
-          // preserve the table's hive layout: survivors of a
-          // rewritten partition file (and inserts) land back under
-          // the same partition scheme, so partition-pruned reads
-          // (e.g. the ANN codes table's cell dirs) keep their
-          // skipping power across CDC applies
-          val partCols = inferPartitionCols(c.files)
-          val touchedKeys = ch.select(keys.map(col): _*).distinct()
-          val added =
-            if (nIns == 0L) Nil
-            else writeDataFiles(inserts, id, head = cur,
-              partitionCols = partCols.filter(pc => inserts.columns.contains(specSourceCol(pc))))
-          val (files, deletes) =
-            if (mergeOnRead) {
-              // MERGE-ON-READ: no existing file is read OR rewritten —
-              // the batch's key set lands as a tombstone that masks
-              // older versions (insert = replace, delete = remove),
-              // and this batch's own inserts (origin == this id) stay
-              // visible. Write amplification is the batch, nothing
-              // else; reads pay the anti-join until compaction folds.
-              // the tombstone lands under the table's hive layout
-              // when the change batch carries the partition columns
-              // (beyond the keys): per-partition key-file accounting
-              // — e.g. the ANN occupancy probe — then answers from
-              // the MANIFEST alone. Masking semantics are unchanged:
-              // partition values live in the PATH, not the file, so
-              // the mask keys (read from the tomb file's columns)
-              // stay exactly `keys`.
-              val tombPartSpecs = partCols.filter { pc =>
-                val src = specSourceCol(pc)
-                ch.columns.exists(_.equalsIgnoreCase(src)) &&
-                  !keys.exists(_.equalsIgnoreCase(src))
-              }
-              val tombKeys =
-                if (tombPartSpecs.isEmpty) touchedKeys
-                else ch.select((keys ++ tombPartSpecs.map(specSourceCol))
-                  .map(col): _*).distinct()
-              val tomb =
-                if (nAll == 0L) Nil
-                else dropEmptyDataFiles(
-                  writeDataFiles(tombKeys, id, suffix = "tomb",
-                    partitionCols = tombPartSpecs, head = cur))
-              (c.files ++ added, Some(c.tombstones ++ tomb).filter(_.nonEmpty))
-            } else {
-              // copy-on-write; the key ranges come from the chStats pass
-              // above, so a key-disjoint CDC batch reads zero existing
-              // files. An empty-insert batch (pure deletes, or a
-              // compaction-only feed advance) still snapshots for its txn
-              // mark, but writes no zero-row part files.
-              val (touched, rewritten) = rewriteTouched(c, touchedKeys, keys, id,
-                partCols, Some(keyRanges))
-              (c.files.diff(touched) ++ rewritten ++ added, c.deletes)
-            }
-          target.publish(Snapshot(id, Some(c.snapshotId), System.currentTimeMillis(),
-            "apply", files, evolvedSchemaJsonFor(cur, inserts.schema), txn = mark,
-            deletes = deletes))
+      // an empty-insert batch (pure deletes, or a compaction-only feed
+      // advance) still snapshots for its txn mark, but writes no
+      // zero-row part files
+      val added =
+        if (nIns == 0L) Nil
+        else writeDataFiles(inserts, id, head = cur, partitionCols = layoutFor(cur, inserts))
+      commitKeyed(target, cur, id, id, "apply", added, inserts.schema, keys, mark) {
+        // MERGE-ON-READ: no existing file is read OR rewritten — the
+        // batch's key set lands as a tombstone that masks older
+        // versions (insert = replace, delete = remove). COPY-ON-WRITE:
+        // the key ranges come from the chStats pass above, so a
+        // key-disjoint CDC batch reads zero existing files.
+        if (!mergeOnRead)
+          KeyedRemoval.RewriteKeys(ch.select(keys.map(col): _*).distinct(), Some(keyRanges))
+        else if (nAll == 0L) KeyedRemoval.Tombstones(Nil)
+        else KeyedRemoval.MaskKeys(ch)
       }
     } finally ch.unpersist()
   }
@@ -1813,21 +1703,24 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   private[lakehouse] def sqlMutate(op: String,
       candidatesOf: Snapshot => Seq[String],
-      compute: (Snapshot, Seq[String], DataFrame) => (Option[DataFrame], Option[DataFrame]))
-      : Option[Snapshot] = writeLock.synchronized {
-    withCommitRetry(Right(sqlMutateOnce(op, candidatesOf, compute)))
+      compute: (Snapshot, Seq[String], DataFrame) => (Option[DataFrame], Option[DataFrame]),
+      /** Insert-side files already written (the DSv2 filter overwrite's
+        * executor-written batch): they land with every attempt's commit.
+        */
+      written: Seq[String] = Nil): Option[Snapshot] = writeLock.synchronized {
+    withCommitRetry(Right(sqlMutateOnce(op, candidatesOf, compute, written)))
   }
 
   private def sqlMutateOnce(op: String,
       candidatesOf: Snapshot => Seq[String],
-      compute: (Snapshot, Seq[String], DataFrame) => (Option[DataFrame], Option[DataFrame]))
-      : Option[Snapshot] = {
+      compute: (Snapshot, Seq[String], DataFrame) => (Option[DataFrame], Option[DataFrame]),
+      written: Seq[String]): Option[Snapshot] = {
     val cur = currentSnapshot().getOrElse(
       throw new IllegalStateException(s"table $root has no snapshots"))
     val curSet = cur.files.toSet
     val candidates = candidatesOf(cur).filter(curSet)
     val (survivors, inserts) = compute(cur, candidates, scanFiles(cur, candidates))
-    if (survivors.isEmpty && inserts.isEmpty) return None
+    if (survivors.isEmpty && inserts.isEmpty && written.isEmpty) return None
     val id = nextId()
     val partCols = inferPartitionCols(cur.files)
     val rewritten = survivors.map(df =>
@@ -1836,7 +1729,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       dropEmptyDataFiles(writeDataFiles(df, id, partitionCols = partCols.filter(pc => df.columns.contains(specSourceCol(pc)))))).getOrElse(Nil)
     val kept = if (survivors.isDefined) cur.files.diff(candidates) else cur.files
     Some(writeSnapshot(Snapshot(id, Some(cur.snapshotId), System.currentTimeMillis(),
-      op, kept ++ rewritten ++ added, cur.schemaJson, deletes = cur.deletes)))
+      op, kept ++ rewritten ++ added ++ written, cur.schemaJson, deletes = cur.deletes)))
   }
 
   /** Writers emit a zero-row part file for empty task partitions of a
@@ -1873,12 +1766,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
 
   def overwrite(df: DataFrame): Snapshot = writeLock.synchronized {
-    val id = nextId()
-    val files = writeDataFiles(df, id)
-    writeSnapshot(Snapshot(id, currentSnapshot().map(_.snapshotId),
-      System.currentTimeMillis(), "overwrite", files, df.schema.json,
-      renames = Some(Map.empty), drops = Some(Map.empty),
-      reborn = Some(Map.empty)))
+    val (head, id) = MainLine.resolve()
+    commitOverwriteFiles(head, id, writeDataFiles(df, id, head = head), df.schema)
   }
 
   /** Filter-scoped overwrite — `INSERT OVERWRITE t PARTITION (p='x')`,
@@ -1892,17 +1781,27 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * types — the SQL path always does (the analyzer casts). Lost
     * cross-process races auto-retry like every SQL statement.
     */
-  def overwriteWhere(df: DataFrame, filters: Seq[sources.Filter]): Option[Snapshot] = {
+  def overwriteWhere(df: DataFrame, filters: Seq[sources.Filter]): Option[Snapshot] =
+    overwriteMatching(filters,
+      inserts = Some(requireDeclaredTypes(canonicalizedNames(df), "overwriteWhere")),
+      written = Nil)
+
+  /** The filter overwrite statement: rows matching `filters` out of the
+    * pruned candidates, the insert side (`inserts` to write, or
+    * `written` files already staged) in — one snapshot.
+    */
+  private def overwriteMatching(filters: Seq[sources.Filter],
+      inserts: Option[DataFrame], written: Seq[String]): Option[Snapshot] = {
     val cond = filters.map(LakehouseSource.toCondition)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val data = requireDeclaredTypes(canonicalizedNames(df), "overwriteWhere")
     sqlMutate("overwrite",
       candidatesOf = snap =>
         LakehouseSource.pruneForFilters(this, snap, filters, declaredBucketSpec),
       compute = (_, cands, scan) =>
         (if (cands.isEmpty) None
          else Some(scan.filter(not(cond <=> lit(true)))),
-          Some(data)))
+          inserts),
+      written = written)
   }
 
   /** Dynamic partition overwrite — replace EXACTLY the partitions

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, functions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection, XxHash64Function}
@@ -344,11 +344,23 @@ private[lakehouse] final class LakehouseDsv2Write(
         t.commitWrittenFiles(files, batchSchema, claimed,
           mark = None, targetAuthoritative = false)
       case Dsv2CommitMode.Truncate =>
-        t.commitOverwriteFiles(files, batchSchema)
+        val (head, id) = t.MainLine.resolve()
+        t.commitOverwriteFiles(head, id, files, batchSchema)
       case Dsv2CommitMode.OverwriteBy(filters) =>
         t.commitOverwriteWhereFiles(files, filters)
       case Dsv2CommitMode.Keyed(keys, mor) =>
-        t.commitUpsertFiles(files, batchSchema, claimed, keys, mergeOnRead = mor)
+        val (head, id) = t.MainLine.resolve()
+        t.commitKeyed(t.MainLine, head, id, claimed,
+            if (mor && files.nonEmpty) "apply" else "upsert", files, batchSchema,
+            keys, mark = None) {
+          // the staged files read back (key and partition columns only
+          // are consumed) as the keyed removal's key side
+          lazy val staged = readStaged(t, files, batchSchema)
+          if (files.isEmpty) KeyedRemoval.Tombstones(Nil) // schema-only evolution
+          else if (mor) KeyedRemoval.MaskKeys(staged)
+          else KeyedRemoval.RewriteKeys(staged.select(keys.map(functions.col): _*).distinct(),
+            t.footerKeyRanges(files, keys, batchSchema))
+        }
     }
     ()
   }

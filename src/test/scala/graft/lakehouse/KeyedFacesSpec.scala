@@ -126,4 +126,21 @@ class KeyedFacesSpec extends SparkSpec {
         assert(l === Landed(applied, "apply", tombstoned = mor), face) }
     }
   }
+
+  test("a DSv2 merge-on-read tombstone follows the hive layout, as the table API's does") {
+    // both faces write the tombstone through one writer: the batch
+    // carries the partition column, so the tombstone lands under rk=
+    val (name, root) = seeded(hive = true)
+    upsertBatch.writeTo(name).option("keys", "k").option("mergeOnRead", "true").append()
+    val dsv2 = new LakehouseTable(spark, root)
+    val (_, apiRoot) = seeded(hive = true)
+    val api = new LakehouseTable(spark, apiRoot)
+    api.upsert(upsertBatch, Seq("k"), mergeOnRead = true)
+    def layoutOf(t: LakehouseTable): Seq[Seq[String]] =
+      t.currentSnapshot().get.tombstones.map(f => LakehouseTable.hiveSegsOf(f).toSeq)
+    assert(layoutOf(api) === Seq(Seq("rk=even")))
+    assert(layoutOf(dsv2) === layoutOf(api),
+      s"DSv2 tombstone ${dsv2.currentSnapshot().get.tombstones} lands outside the hive layout")
+    assert(rowsOf(dsv2.read()) === upserted && rowsOf(api.read()) === upserted)
+  }
 }
