@@ -4,7 +4,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
@@ -53,68 +53,22 @@ final class LakehouseSourceProvider extends TableProvider with DataSourceRegiste
   // duplicate keyed dispatch are retired as of round 16.
 
   /** `df.write.format("graft-lakehouse").mode(...).save(root)` — the
-    * batch write face. Append appends (or UPSERTS when a `keys` option
-    * names merge columns), Overwrite replaces the table content,
-    * ErrorIfExists/Ignore follow their SaveMode contracts against
-    * table existence. `partitionBy` option (comma-separated) lays
-    * appends out hive-style for partition-pruned reads.
+    * batch write face, dispatched by [[LakehouseSource.writePath]].
     */
   override def createRelation(
       sqlContext: SQLContext,
-      mode: org.apache.spark.sql.SaveMode,
+      mode: SaveMode,
       parameters: Map[String, String],
-      data: org.apache.spark.sql.DataFrame): BaseRelation = {
-    import org.apache.spark.sql.SaveMode
+      data: DataFrame): BaseRelation = {
     val root = LakehouseSource.rootOf(parameters)
-    val t = new LakehouseTable(sqlContext.sparkSession, root,
-      optimizeWrite = LakehouseSource.boolOpt(parameters, "optimizeWrite"),
-      optimizeWriteTargetBytes =
-        LakehouseSource.longOptOf(parameters, "optimizeWriteTargetBytes"))
-    val exists = t.currentSnapshot().isDefined
-    val keys = parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("keys") => v }
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val partCols = parameters.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("partitionBy") => v
-    }.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val mor = parameters.exists { case (k, v) =>
-      k.equalsIgnoreCase("mergeOnRead") && v.trim.equalsIgnoreCase("true") }
-    // write-audit-publish: `.option("branch", "wap")` writes to a
-    // BRANCH (invisible to main until publishBranch) — the batch half
-    // of the WAP ingest story. Appends AND keyed writes (a `keys`
-    // option upserts against the branch head; with a `_change` column
-    // it CDC-applies) — a WAP audit over a CDC-replicated table needs
-    // keyed branch writes. Overwrites still refuse: replacing a branch
-    // is re-forking, which is what forkBranch is for.
-    val branch = parameters.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("branch") => v.trim }.filter(_.nonEmpty)
-    branch match {
-      case Some(b) =>
-        require(mode == SaveMode.Append,
-          s"branch writes are append/upsert-shaped (write-audit-publish), got " +
-            s"$mode — to replace a branch, drop and re-fork it")
-        if (keys.nonEmpty && data.columns.contains("_change"))
-          t.applyChangesToBranch(data, keys, b, mergeOnRead = mor)
-        else if (keys.nonEmpty) t.upsertToBranch(data, keys, b, mergeOnRead = mor)
-        else {
-          require(!mor, "mergeOnRead on a branch needs `keys` (tombstones are keyed)")
-          t.appendToBranch(data, b, partCols)
-        }
-      case None => mode match {
-        case SaveMode.ErrorIfExists if exists =>
-          throw new IllegalStateException(s"lakehouse table $root already exists")
-        case SaveMode.Ignore if exists => ()
-        case SaveMode.Overwrite => t.overwrite(data)
-        case _ => // Append, or first write under ErrorIfExists/default
-          if (keys.nonEmpty) t.upsert(data, keys, mergeOnRead = mor)
-          else t.append(data, partCols)
-      }
-    }
+    val t = LakehouseSource.writeTableOf(sqlContext.sparkSession, root, parameters)
+    LakehouseSource.writePath(t, data, parameters, mode, overwriteBy = None)
     val ctx = sqlContext
     // pin the relation to the snapshot THIS write produced (or found,
     // under Ignore): scanning it later must not surface a concurrent
     // writer's rows — the same load-time pinning discipline as the
     // read face. A branch write pins the BRANCH head it landed.
-    val writtenId = branch.map(b => t.branchHead(b).snapshotId)
+    val writtenId = LakehouseSource.branchWriteOf(parameters).map(b => t.branchHead(b).snapshotId)
       .orElse(t.currentSnapshot().map(_.snapshotId))
     new BaseRelation with TableScan {
       override def sqlContext: SQLContext = ctx
@@ -127,10 +81,10 @@ final class LakehouseSourceProvider extends TableProvider with DataSourceRegiste
   }
 
   /** Empty schema (not an exception) when the root has no snapshots:
-    * the streaming WRITER resolves the provider through this same path
-    * before falling back to the V1 sink, and a sink target is
-    * typically auto-created by its first batch. Reads of a missing
-    * table still fail loudly — at scan time instead of here.
+    * the streaming WRITER resolves the provider through this same path,
+    * and its DSv2 write seeds a snapshot-less target from the query
+    * schema on the first epoch. Reads of a missing table still fail
+    * loudly — at scan time instead of here.
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = options.asScala.toMap
@@ -249,6 +203,72 @@ private[lakehouse] object LakehouseSource {
   def boolOpt(options: Map[String, String], name: String): Boolean =
     options.exists { case (k, v) =>
       k.equalsIgnoreCase(name) && v.trim.equalsIgnoreCase("true") }
+
+  /** The table handle a path-face write lands through (its
+    * optimize-write options applied).
+    */
+  def writeTableOf(spark: SparkSession, root: String,
+      options: Map[String, String]): LakehouseTable =
+    new LakehouseTable(spark, root,
+      optimizeWrite = boolOpt(options, "optimizeWrite"),
+      optimizeWriteTargetBytes = longOptOf(options, "optimizeWriteTargetBytes"))
+
+  /** `.option("branch", "wap")` on a write — the write-audit-publish
+    * target branch.
+    */
+  def branchWriteOf(options: Map[String, String]): Option[String] =
+    options.collectFirst {
+      case (k, v) if k.equalsIgnoreCase("branch") => v.trim }.filter(_.nonEmpty)
+
+  /** A path-face write's `keys` and `mergeOnRead` options; merge-on-read
+    * needs keys (tombstones are keyed).
+    */
+  def keyedOptsOf(options: Map[String, String]): (Seq[String], Boolean) = {
+    val keys = colListOf(options, "keys")
+    val mor = boolOpt(options, "mergeOnRead")
+    require(!mor || keys.nonEmpty, "mergeOnRead needs `keys` (tombstones are keyed)")
+    (keys, mor)
+  }
+
+  /** The PATH face's batch write, shared by `df.write...save(root)`
+    * and the V1Write insert: (save mode, `keys`, `mergeOnRead`,
+    * `partitionBy`, filter overwrite, `branch`) map onto one table call.
+    * Without a branch, Append appends — or UPSERTS when `keys` names
+    * merge columns — Overwrite replaces the content, a filter overwrite
+    * replaces the matching rows, and ErrorIfExists/Ignore follow their
+    * SaveMode contracts against table existence. A `branch` write
+    * (write-audit-publish: invisible to main until publishBranch) takes
+    * the append and keyed shapes only — with `keys` and a `_change`
+    * column it CDC-applies; replacing a branch is re-forking, which is
+    * what forkBranch is for.
+    */
+  def writePath(t: LakehouseTable, data: DataFrame, options: Map[String, String],
+      mode: SaveMode, overwriteBy: Option[Seq[Filter]]): Unit = {
+    val (keys, mor) = keyedOptsOf(options)
+    val partitionBy = colListOf(options, "partitionBy")
+    branchWriteOf(options) match {
+      case Some(b) =>
+        require(mode == SaveMode.Append && overwriteBy.isEmpty,
+          s"branch writes are append/upsert-shaped (write-audit-publish), got " +
+            s"${overwriteBy.fold(mode.toString)(_ => "a filter overwrite")} — to " +
+            "replace a branch, drop and re-fork it")
+        if (keys.nonEmpty && data.columns.contains("_change"))
+          t.applyChangesToBranch(data, keys, b, mergeOnRead = mor)
+        else if (keys.nonEmpty) t.upsertToBranch(data, keys, b, mergeOnRead = mor)
+        else t.appendToBranch(data, b, partitionBy)
+      case None => mode match {
+        case SaveMode.ErrorIfExists if t.currentSnapshot().isDefined =>
+          throw new IllegalStateException(s"lakehouse table ${t.root} already exists")
+        case SaveMode.Ignore if t.currentSnapshot().isDefined => ()
+        case _ if overwriteBy.isDefined => t.overwriteWhere(data, overwriteBy.get)
+        case SaveMode.Overwrite => t.overwrite(data)
+        case _ => // Append, or first write under ErrorIfExists/Ignore
+          if (keys.nonEmpty) t.upsert(data, keys, mergeOnRead = mor)
+          else t.append(data, partitionBy)
+      }
+    }
+    ()
+  }
 
   /** Case-insensitive long option (optimizeWriteTargetBytes). */
   def longOptOf(options: Map[String, String], name: String): Option[Long] =
@@ -723,12 +743,11 @@ private[lakehouse] final class LakehouseV2Table(
         // shape — append / CTAS / full and filter overwrite / keyed
         // writeTo — each as a commit mode over the same writers. The
         // PATH face keeps V1 batch writes (V1_BATCH_WRITE +
-        // CreatableRelationProvider) while its keyless STREAMING rides
-        // the same DSv2 face through toStreaming.
-        val keys = LakehouseSource.colListOf(writeOpts, "keys")
-        val mor = writeOpts.exists { case (k, v) =>
-          k.equalsIgnoreCase("mergeOnRead") && v.trim.equalsIgnoreCase("true") }
+        // CreatableRelationProvider) while its STREAMING rides the
+        // same DSv2 face through toStreaming.
         if (options.keys.exists(_.equalsIgnoreCase("graft.catalogTable"))) {
+          val keys = LakehouseSource.colListOf(writeOpts, "keys")
+          val mor = LakehouseSource.boolOpt(writeOpts, "mergeOnRead")
           val mode =
             if (doTruncate) Dsv2CommitMode.Truncate
             else if (overwriteBy.isDefined) Dsv2CommitMode.OverwriteBy(overwriteBy.get)
@@ -737,64 +756,27 @@ private[lakehouse] final class LakehouseV2Table(
           return new LakehouseDsv2Write(
             LakehouseSource.rootOf(options), writeOpts, info.schema(), mode)
         }
-        if (!doTruncate && overwriteBy.isEmpty && keys.isEmpty && !mor) {
-          val dsv2 = new LakehouseDsv2Write(
-            LakehouseSource.rootOf(options), writeOpts, info.schema())
-          return new org.apache.spark.sql.connector.write.V1Write {
-            override def toInsertableRelation
-                : org.apache.spark.sql.sources.InsertableRelation =
-              new org.apache.spark.sql.sources.InsertableRelation {
-                override def insert(data: org.apache.spark.sql.DataFrame,
-                    overwrite: Boolean): Unit = {
-                  val t = new LakehouseTable(data.sparkSession,
-                    LakehouseSource.rootOf(options),
-                    optimizeWrite = LakehouseSource.boolOpt(writeOpts, "optimizeWrite"),
-                    optimizeWriteTargetBytes =
-                      LakehouseSource.longOptOf(writeOpts, "optimizeWriteTargetBytes"))
-                  if (overwrite) { t.overwrite(data); () }
-                  else {
-                    t.append(data, LakehouseSource.colListOf(writeOpts, "partitionBy"))
-                    ()
-                  }
-                }
-              }
-            override def toStreaming
-                : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-              dsv2.toStreaming
-          }
-        }
+        // the PATH face: batch inserts dispatch like `df.write.save`,
+        // streams ride the DSv2 face (append- or keyed-shaped only)
+        val root = LakehouseSource.rootOf(options)
         new org.apache.spark.sql.connector.write.V1Write {
           override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
             new org.apache.spark.sql.sources.InsertableRelation {
-              override def insert(data: org.apache.spark.sql.DataFrame,
-                  overwrite: Boolean): Unit = {
-                val t = new LakehouseTable(data.sparkSession,
-                  LakehouseSource.rootOf(options),
-                  optimizeWrite = LakehouseSource.boolOpt(writeOpts, "optimizeWrite"),
-                  optimizeWriteTargetBytes =
-                    LakehouseSource.longOptOf(writeOpts, "optimizeWriteTargetBytes"))
-                val keys = LakehouseSource.colListOf(writeOpts, "keys")
-                val mor = writeOpts.exists { case (k, v) =>
-                  k.equalsIgnoreCase("mergeOnRead") && v.trim.equalsIgnoreCase("true") }
-                if (overwriteBy.isDefined) { t.overwriteWhere(data, overwriteBy.get); () }
-                else if (doTruncate || overwrite) { t.overwrite(data); () }
-                else if (keys.nonEmpty) { t.upsert(data, keys, mergeOnRead = mor); () }
-                else {
-                  t.append(data, LakehouseSource.colListOf(writeOpts, "partitionBy"))
-                  ()
-                }
-              }
+              override def insert(data: DataFrame, overwrite: Boolean): Unit =
+                LakehouseSource.writePath(
+                  LakehouseSource.writeTableOf(data.sparkSession, root, writeOpts),
+                  data, writeOpts,
+                  if (doTruncate || overwrite) SaveMode.Overwrite else SaveMode.Append,
+                  overwriteBy)
             }
-          // round 15: KEYED streams ride the DSv2 face too (split
-          // writers + commitApplyStagedFiles) — this V1Write serves
-          // their batch shape, so its streaming half routes to the
-          // keyed commit mode; overwrite-shaped streams stay illegal
           override def toStreaming
               : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-            require(keys.nonEmpty && !doTruncate && overwriteBy.isEmpty,
+            require(!doTruncate && overwriteBy.isEmpty,
               "graft-lakehouse streaming writes are append- or keyed-shaped")
-            new LakehouseDsv2Write(LakehouseSource.rootOf(options), writeOpts,
-              info.schema(), Dsv2CommitMode.Keyed(keys, mor)).toStreaming
+            val (keys, mor) = LakehouseSource.keyedOptsOf(writeOpts)
+            new LakehouseDsv2Write(root, writeOpts, info.schema(),
+              if (keys.isEmpty) Dsv2CommitMode.Append else Dsv2CommitMode.Keyed(keys, mor))
+              .toStreaming
           }
         }
       }
