@@ -86,12 +86,8 @@ final class ChangeFeedSource(sqlContext: SQLContext, root: String,
     extends Source
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
-  require(maxSnapshotsPerTrigger.forall(_ > 0),
-    s"maxSnapshotsPerTrigger must be positive, got $maxSnapshotsPerTrigger")
-  require(maxFilesPerTrigger.forall(_ > 0),
-    s"maxFilesPerTrigger must be positive, got $maxFilesPerTrigger")
-  require(maxBytesPerTrigger.forall(_ > 0),
-    s"maxBytesPerTrigger must be positive, got $maxBytesPerTrigger")
+  /** Admission control, shared with `readStream.table` ([[TriggerCaps]]). */
+  private val caps = TriggerCaps(maxSnapshotsPerTrigger, maxFilesPerTrigger, maxBytesPerTrigger)
   require(Seq(startingVersionOpt, startingTimestampOpt, startingTagOpt)
     .count(_.isDefined) <= 1,
     "startingVersion / startingTimestamp / startingTag are mutually exclusive")
@@ -132,66 +128,7 @@ final class ChangeFeedSource(sqlContext: SQLContext, root: String,
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowHead = table.currentSnapshot().map(_.snapshotId)
 
-  /** Admission control (the Delta maxFilesPerTrigger analogue, in this
-    * source's natural unit): `maxSnapshotsPerTrigger` clamps each
-    * micro-batch to at most N snapshots past the committed offset, so
-    * a long-downtime backlog drains as MANY checkpointed batches — a
-    * failure mid-drain replays one clamped batch, not the whole
-    * backlog — and a cold-start bootstrap begins from the EARLIEST
-    * retained snapshot's state instead of materializing the whole
-    * head in one batch. The offset-is-snapshot-id design keeps every
-    * clamped batch a pure function of its range, so the exactly-once
-    * replay contract is untouched. Under Trigger.AvailableNow the
-    * engine keeps cycling batches until the clamped offset reaches
-    * the head pinned at prepare time.
-    */
   private def filesOf(s: Long): Seq[String] = table.snapshotOrThrow(s).files
-
-  /** Bootstrap cursor advance from file index `from` of snapshot `s`:
-    * take files while BOTH caps hold (manifest-recorded byte sizes —
-    * zero I/O), always at least one so the stream can't stall.
-    */
-  private def nextSliceEnd(s: Long, from: Long): Long = {
-    val snap = table.snapshotOrThrow(s)
-    val countCap = maxFilesPerTrigger.getOrElse(Long.MaxValue)
-    val bytesCap = maxBytesPerTrigger.getOrElse(Long.MaxValue)
-    var i = from
-    var acc = 0L
-    var cont = true
-    while (cont && i < snap.files.size && (i - from) < countCap) {
-      val sz = table.fileSizeOf(snap, snap.files(i.toInt))
-      if (i > from && acc + sz > bytesCap) cont = false
-      else { acc += sz; i += 1 }
-    }
-    i
-  }
-
-  /** Incremental range end past committed snapshot `s`: the furthest
-    * snapshot whose cumulative ADDED-file bytes stay within the bytes
-    * cap (manifest sizes, metadata-only), intersected with the
-    * snapshot-count cap; always at least one snapshot of progress.
-    */
-  private def incrementalEnd(s: Long, head: Long): Long = {
-    val bySnaps = maxSnapshotsPerTrigger.fold(head)(n => math.min(head, s + n))
-    maxBytesPerTrigger match {
-      case Some(b) if bySnaps > s =>
-        val snaps = table.listSnapshots()
-        var prev = snaps.find(_.snapshotId == s).map(_.files.toSet).getOrElse(Set.empty)
-        var e = s
-        var acc = 0L
-        snaps.filter(x => x.snapshotId > s && x.snapshotId <= bySnaps &&
-            x.branch.isEmpty) // branch commits are invisible until published
-          .takeWhile { sn =>
-            val bytes = sn.files.filterNot(prev)
-              .map(f => table.fileSizeOf(sn, f)).sum
-            val fits = e == s || acc + bytes <= b
-            if (fits) { acc += bytes; e = sn.snapshotId; prev = sn.files.toSet }
-            fits
-          }
-        e
-      case _ => bySnaps
-    }
-  }
 
   override def latestOffset(
       start: org.apache.spark.sql.connector.read.streaming.Offset,
@@ -206,24 +143,13 @@ final class ChangeFeedSource(sqlContext: SQLContext, root: String,
         // never a state bootstrap (the batch face's startingSnapshot
         // contract; the state-bootstrap pin is readStream.table's)
         val pin = startSnapshot.get
-        LongOffset(math.max(incrementalEnd(pin, head), pin))
+        LongOffset(math.max(caps.incrementalEnd(table, pin, head), pin))
       case None =>
         // cold start: with a snapshot cap, bootstrap from the earliest
         // retained snapshot and drain forward N at a time; otherwise
         // bootstrap the head state directly
-        val bootEnd = maxSnapshotsPerTrigger match {
-          case Some(n) =>
-            val from = table.listSnapshots().headOption
-              .map(_.snapshotId - 1).getOrElse(head)
-            // round DOWN to a MAIN snapshot: a bootstrap end must never
-            // pin an unpublished branch commit
-            val cand = math.min(head, from + n)
-            val mains = table.listSnapshots().filter(_.branch.isEmpty)
-            mains.filter(_.snapshotId <= cand).lastOption
-              .getOrElse(mains.head).snapshotId
-          case None => head
-        }
-        val cut = nextSliceEnd(bootEnd, 0L)
+        val bootEnd = caps.bootSnapshot(table, head)
+        val cut = caps.sliceEnd(table, bootEnd, 0L)
         if (cut < filesOf(bootEnd).size) FileSliceOffset(bootEnd, cut)
         else LongOffset(bootEnd)
       case Some(Right((s, k))) =>
@@ -231,11 +157,11 @@ final class ChangeFeedSource(sqlContext: SQLContext, root: String,
         // on the plain snapshot offset, ending the bootstrap phase (if
         // the caps were removed across a restart, the remainder is one
         // batch)
-        val cut = nextSliceEnd(s, k)
+        val cut = caps.sliceEnd(table, s, k)
         if (cut < filesOf(s).size) FileSliceOffset(s, cut) else LongOffset(s)
       case Some(Left(s)) =>
         // the head never regresses below a committed offset
-        LongOffset(math.max(incrementalEnd(s, head), s))
+        LongOffset(math.max(caps.incrementalEnd(table, s, head), s))
     }
   }
 

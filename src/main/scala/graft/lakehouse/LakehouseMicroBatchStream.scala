@@ -61,36 +61,10 @@ private[lakehouse] final class LakehouseMicroBatchStream(
 
   private val skipChangeCommits = LakehouseSource.boolOpt(options, "skipChangeCommits")
 
-  /** Admission control (the changefeed caps, in this face's natural
-    * units): `maxSnapshotsPerTrigger` clamps each batch to N snapshots
-    * past the committed offset — a cold start then bootstraps from the
-    * EARLIEST retained snapshot's state and drains forward N at a
-    * time. `maxFilesPerTrigger` additionally bounds the BOOTSTRAP: a
-    * table bulk-loaded in ONE snapshot would otherwise arrive as a
-    * single batch no matter what the snapshot cap says — with M set,
-    * the bootstrap snapshot's file list (immutable, manifest-ordered)
-    * drains as ⌈files/M⌉ checkpointed batches through mid-bootstrap
-    * [[FileSliceOffset]]s, each a pure function of its pinned range —
-    * a restart resumes at the recorded file index, never from zero.
-    * `maxBytesPerTrigger` is the byte-denominated form, answered
-    * ENTIRELY from manifest-recorded file sizes (zero I/O): bootstrap
-    * slices stop growing at B bytes, incremental ranges stop where the
-    * cumulative ADDED-file bytes cross it. All caps compose (whichever
-    * binds first); each batch always makes one file / one snapshot of
-    * progress so the stream can't stall.
+  /** Admission control: the changefeed's caps ([[TriggerCaps]]); a
+    * mid-bootstrap cursor rides a [[FileSliceOffset]].
     */
-  private val maxSnapshotsPerTrigger =
-    LakehouseSource.longOptOf(options, "maxSnapshotsPerTrigger")
-  private val maxFilesPerTrigger =
-    LakehouseSource.longOptOf(options, "maxFilesPerTrigger")
-  private val maxBytesPerTrigger =
-    LakehouseSource.longOptOf(options, "maxBytesPerTrigger")
-  require(maxSnapshotsPerTrigger.forall(_ > 0),
-    s"maxSnapshotsPerTrigger must be positive, got $maxSnapshotsPerTrigger")
-  require(maxFilesPerTrigger.forall(_ > 0),
-    s"maxFilesPerTrigger must be positive, got $maxFilesPerTrigger")
-  require(maxBytesPerTrigger.forall(_ > 0),
-    s"maxBytesPerTrigger must be positive, got $maxBytesPerTrigger")
+  private val caps = TriggerCaps.of(options)
 
   /** Stream-start pin — `.option("startingVersion", 3)` /
     * `.option("startingTimestamp", "2026-01-01 00:00:00")` (epoch
@@ -143,74 +117,6 @@ private[lakehouse] final class LakehouseMicroBatchStream(
         .fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet)
       .getOrElse(Set.empty)
 
-  /** Bootstrap cursor advance from file index `from` of snapshot `s`:
-    * take files while BOTH the file-count and byte caps hold (manifest
-    * byte sizes — zero I/O), always at least one.
-    */
-  private def sliceEnd(s: Long, from: Long): Long = {
-    val snap = table.snapshotOrThrow(s)
-    val countCap = maxFilesPerTrigger.getOrElse(Long.MaxValue)
-    val bytesCap = maxBytesPerTrigger.getOrElse(Long.MaxValue)
-    var i = from
-    var acc = 0L
-    var cont = true
-    while (cont && i < snap.files.size && (i - from) < countCap) {
-      val sz = table.fileSizeOf(snap, snap.files(i.toInt))
-      if (i > from && acc + sz > bytesCap) cont = false
-      else { acc += sz; i += 1 }
-    }
-    i
-  }
-
-  /** Clamped INCREMENTAL range end past committed snapshot `s` toward
-    * `head` (snapshot-count and added-file-byte caps).
-    */
-  private def incrementalEnd(s: Long, head: Long): Long = {
-    val bySnaps = maxSnapshotsPerTrigger.fold(head)(n => math.min(head, s + n))
-    maxBytesPerTrigger match {
-      case Some(cap) if bySnaps > s =>
-        val snaps = table.listSnapshots()
-        val byId = snaps.map(x => x.snapshotId -> x).toMap
-        var e = s
-        var acc = 0L
-        snaps.filter(x => x.snapshotId > s && x.snapshotId <= bySnaps &&
-            x.branch.isEmpty) // branch commits are invisible until published
-          .takeWhile { sn =>
-            val pf = sn.parentId.flatMap(byId.get).map(_.files.toSet)
-              .getOrElse(Set.empty[String])
-            val bytes = sn.files.filterNot(pf).map(f => table.fileSizeOf(sn, f)).sum
-            val fits = e == s || acc + bytes <= cap
-            if (fits) { acc += bytes; e = sn.snapshotId }
-            fits
-          }
-        e
-      case _ => bySnaps
-    }
-  }
-
-  /** The bootstrap snapshot for a cold start toward `head`: the
-    * earliest retained snapshot clamped forward under a snapshot cap
-    * (bounded cold start), the head state otherwise.
-    */
-  private def bootSnapshot(head: Long): Long = maxSnapshotsPerTrigger match {
-    case Some(n) =>
-      val from = table.listSnapshots().headOption
-        .map(_.snapshotId - 1).getOrElse(head)
-      mainAtOrBefore(math.min(head, from + n))
-    case None => head
-  }
-
-  /** Round a candidate offset DOWN to a MAIN-lineage snapshot id — a
-    * batch end must never pin a BRANCH commit (unpublished state).
-    * Falls to the earliest main snapshot when every id at or below the
-    * candidate is branch-side (the cap overshoots by at most the
-    * branch commits in the window — admission control, not exactness).
-    */
-  private def mainAtOrBefore(id: Long): Long = {
-    val mains = table.listSnapshots().filter(_.branch.isEmpty)
-    mains.filter(_.snapshotId <= id).lastOption.getOrElse(mains.head).snapshotId
-  }
-
   // Trigger.AvailableNow: pin the head at prepare time and cycle
   // batches until the stream reaches it (without the trait Spark
   // falls back to single-batch execution, and a WAL-replayed batch
@@ -236,8 +142,7 @@ private[lakehouse] final class LakehouseMicroBatchStream(
       .getOrElse(return null)
     val pos = Option(start).map(o => ChangeFeedSource.parsePos(o.json))
     val cold = pos.forall(_ == Left(0L))
-    if (maxSnapshotsPerTrigger.isEmpty && maxFilesPerTrigger.isEmpty &&
-        maxBytesPerTrigger.isEmpty && !(cold && startSnapshot.isDefined))
+    if (caps.isEmpty && !(cold && startSnapshot.isDefined))
       return LongOffset(head)
     pos match {
       case None | Some(Left(0L)) =>
@@ -245,8 +150,9 @@ private[lakehouse] final class LakehouseMicroBatchStream(
         // pin when given (the pin wins over the snapshot cap; the
         // file/byte caps still slice its file list), else the earliest
         // retained snapshot clamped forward under the snapshot cap
-        val bootEnd = startSnapshot.map(math.min(_, head)).getOrElse(bootSnapshot(head))
-        val cut = sliceEnd(bootEnd, 0L)
+        val bootEnd = startSnapshot.map(math.min(_, head))
+          .getOrElse(caps.bootSnapshot(table, head))
+        val cut = caps.sliceEnd(table, bootEnd, 0L)
         if (cut < table.snapshotOrThrow(bootEnd).files.size) FileSliceOffset(bootEnd, cut)
         else LongOffset(bootEnd)
       case Some(Right((s, k))) =>
@@ -254,12 +160,12 @@ private[lakehouse] final class LakehouseMicroBatchStream(
         // on the plain snapshot offset, ending the bootstrap phase (if
         // the caps were removed across a restart, the remainder is one
         // batch)
-        val cut = sliceEnd(s, k)
+        val cut = caps.sliceEnd(table, s, k)
         if (cut < table.snapshotOrThrow(s).files.size) FileSliceOffset(s, cut)
         else LongOffset(s)
       case Some(Left(s)) =>
         // the head never regresses below a committed offset
-        LongOffset(math.max(incrementalEnd(s, head), s))
+        LongOffset(math.max(caps.incrementalEnd(table, s, head), s))
     }
   }
 
