@@ -85,7 +85,7 @@ object Dsv2CommitMode {
   *    the same writers per epoch; [[commit(Long*]] is OFFSET-AWARE —
   *    the epoch id lands as the snapshot's `(txnAppId, epochId)`
   *    transaction mark, so a crash-replayed epoch is absorbed (its
-  *    files discarded) exactly like the V1 sink's ledger contract.
+  *    files discarded) — the table's txn-ledger contract.
   *    The schema-history channel (`_change='schema'` rows carrying
   *    `_ddl` records) rides the COMMIT MESSAGES: writers divert the
   *    handful of DDL rows instead of caching the whole batch for a
@@ -102,13 +102,14 @@ object Dsv2CommitMode {
   * `-del` file. The epoch commit
   * ([[LakehouseTable.commitApplyStagedFiles]]) is then pure metadata
   * for merge-on-read (data files add, the tomb files ARE the
-  * tombstone — the V1 path wrote them driver-side) and a probe +
-  * touched-file rewrite for copy-on-write; semantics are the V1
-  * applyChanges/upsert contract exactly (tag validation, strictly-
-  * older masking, txn absorption). Only a DDL-CARRYING keyed epoch
-  * reconstructs the batch driver-side — the same bounded trade as the
-  * keyless face. The V1 sink remains solely for snapshot-less roots
-  * (batch 1 auto-creates; restarts ride this face).
+  * tombstone) and a probe + touched-file rewrite for copy-on-write.
+  * Every keyed face — this one, the keyed batch write and the table
+  * API's upsert/applyChanges — commits through the one keyed core
+  * ([[LakehouseTable.commitKeyed]]), so tag validation, strictly-older
+  * masking and txn absorption are one contract. Only a DDL-CARRYING
+  * keyed epoch reconstructs the batch driver-side — the same bounded
+  * trade as the keyless face. Snapshot-less roots ride this face from
+  * the first epoch (the write seeds the table from the query schema).
   */
 private[lakehouse] final class LakehouseDsv2Write(
     root: String, writeOpts: Map[String, String], querySchema: StructType,
@@ -327,13 +328,15 @@ private[lakehouse] final class LakehouseDsv2Write(
     messages.toSeq.collect { case m: LakehouseWriteMessage => m.ddl }
       .flatten.distinct.sortBy(DdlRecord.seqOf)
 
-  /** BATCH commit: one snapshot over the executor-written files, shaped
-    * by the mode — append (rebase loop inside: a racing writer costs a
-    * metadata retry, the files are written once), full overwrite,
-    * filter overwrite (candidates rewrite, files land), or keyed upsert
-    * (the staged files are the added side). An all-empty append still
-    * commits, so `INSERT INTO t SELECT ... WHERE false` records a
-    * version like the V1 path did.
+  /** BATCH commit: one snapshot over the executor-written files,
+    * through the table's commit for the mode's shape — append (rebase
+    * loop inside: a racing writer costs a metadata retry, the files are
+    * written once), full overwrite, filter overwrite (the overwriteWhere
+    * statement with the files as its insert side), or keyed (the staged
+    * files are the added side; their key and partition columns read
+    * back as the tombstone or the rewrite probe). An all-empty append
+    * still commits, so `INSERT INTO t SELECT ... WHERE false` records a
+    * version.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val (claimed, batchSchema) = staged
