@@ -862,14 +862,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       reborn = Some(Map.empty)))
   }
 
-  /** Filter-scoped overwrite over EXECUTOR-WRITTEN files: the
-    * [[overwriteWhere]] statement with `staged` as its already-written
-    * insert side.
-    */
-  private[lakehouse] def commitOverwriteWhereFiles(staged: Seq[String],
-      filters: Seq[sources.Filter]): Option[Snapshot] =
-    overwriteMatching(filters, inserts = None, written = staged)
-
   /** The one KEYED commit. Every face that lands a keyed batch — the
     * table API's upsert / applyChanges (main line or branch), the DSv2
     * batch write and the DSv2 stream epoch — stages its data files
@@ -1787,10 +1779,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       written = Nil)
 
   /** The filter overwrite statement: rows matching `filters` out of the
-    * pruned candidates, the insert side (`inserts` to write, or
-    * `written` files already staged) in — one snapshot.
+    * pruned candidates, the insert side in — one snapshot. The insert
+    * side is `inserts` to write, or `written` files already staged (the
+    * DSv2 filter overwrite's executor-written batch).
     */
-  private def overwriteMatching(filters: Seq[sources.Filter],
+  private[lakehouse] def overwriteMatching(filters: Seq[sources.Filter],
       inserts: Option[DataFrame], written: Seq[String]): Option[Snapshot] = {
     val cond = filters.map(LakehouseSource.toCondition)
       .reduceOption(_ && _).getOrElse(lit(true))

@@ -350,7 +350,7 @@ private[lakehouse] final class LakehouseDsv2Write(
         val (head, id) = t.MainLine.resolve()
         t.commitOverwriteFiles(head, id, files, batchSchema)
       case Dsv2CommitMode.OverwriteBy(filters) =>
-        t.commitOverwriteWhereFiles(files, filters)
+        t.overwriteMatching(filters, inserts = None, written = files)
       case Dsv2CommitMode.Keyed(keys, mor) =>
         val (head, id) = t.MainLine.resolve()
         t.commitKeyed(t.MainLine, head, id, claimed,
