@@ -954,8 +954,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     Some(commitKeyed(MainLine, head, id, claimedId,
         if (cdc || mergeOnRead) "apply" else "upsert", dataFiles, batchSchema,
         keys, mark) {
-      if (mergeOnRead || tombFiles.isEmpty)
-        KeyedRemoval.Tombstones(if (mergeOnRead) tombFiles else Nil)
+      if (mergeOnRead || tombFiles.isEmpty) KeyedRemoval.Tombstones(tombFiles)
       else {
         val canon = batchSchema.fields.map(f => nameKey(f.name) -> f).toMap
         val keyFields = StructType(keys.map { k =>
