@@ -51,12 +51,7 @@ object Cli {
     // lakehouse sub-app (the reference's `cdc lakehouse …` typer
     // sub-app, `cli.py:251-366`) — positional args pass through
     if (args.head == "lakehouse") {
-      val s = sparkOpt.getOrElse(SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-        .appName("graft-cli")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
+      val s = sparkOpt.getOrElse(SparkEntry.session("graft-cli", defaultCpus = 4))
       return LakehouseCli.run(args.tail, out, s)
     }
     // flag grammar: `--name=value` and `--name value` both work (the
@@ -107,16 +102,7 @@ object Cli {
       }
 
     // one lazily-created session for the commands that need one
-    lazy val spark = sparkOpt.getOrElse {
-      val s = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-        .appName("graft-cli")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    lazy val spark = sparkOpt.getOrElse(SparkEntry.session("graft-cli", defaultCpus = 4))
 
     args.head match {
       case "validate" => cfgOr(1) { (cfg, platform) =>

@@ -88,31 +88,13 @@ final class ChangeFeedSource(sqlContext: SQLContext, root: String,
 
   /** Admission control, shared with `readStream.table` ([[TriggerCaps]]). */
   private val caps = TriggerCaps(maxSnapshotsPerTrigger, maxFilesPerTrigger, maxBytesPerTrigger)
-  require(Seq(startingVersionOpt, startingTimestampOpt, startingTagOpt)
-    .count(_.isDefined) <= 1,
-    "startingVersion / startingTimestamp / startingTag are mutually exclusive")
 
   private val table = new LakehouseTable(sqlContext.sparkSession, root)
 
-  /** The pinned bootstrap snapshot (see the constructor doc); branch
-    * snapshots refuse — a main feed cannot start from unpublished state.
-    */
-  @transient private lazy val startSnapshot: Option[Long] = {
-    val resolved = startingVersionOpt.map(x => table.snapshotOrThrow(
-        scala.util.Try(x.trim.toLong).getOrElse(throw new IllegalArgumentException(
-          s"startingVersion must be a snapshot id, got '$x'"))))
-      .orElse(startingTimestampOpt.map { x =>
-        val ms = scala.util.Try(x.trim.toLong).getOrElse(
-          java.sql.Timestamp.valueOf(x.trim).getTime)
-        table.snapshotAsOf(ms)
-      })
-      .orElse(startingTagOpt.map(g => table.snapshotForTag(g)))
-    resolved.foreach(sn => require(sn.branch.isEmpty,
-      s"stream-start snapshot ${sn.snapshotId} belongs to branch " +
-        s"'${sn.branch.get}' — a change feed cannot start from unpublished " +
-        "state; publish the branch first"))
-    resolved.map(_.snapshotId)
-  }
+  /** The pinned start snapshot (see the constructor doc). */
+  @transient private lazy val startSnapshot: Option[Long] =
+    LakehouseSource.streamStartSnapshot(table, startingVersionOpt,
+      startingTimestampOpt, startingTagOpt)
 
   override val schema: StructType =
     ChangeFeedSource.feedSchema(table, withDdl = emitSchemaChanges)
@@ -468,11 +450,7 @@ final class ChangeFeedSourceProvider extends StreamSourceProvider with DataSourc
     require(Seq(sid, tag, ts).count(_.isDefined) <= 1,
       "startingSnapshot / startingTag / startingTimestamp are mutually exclusive")
     sid.orElse(tag.map(g => t.snapshotForTag(g).snapshotId))
-      .orElse(ts.map { x =>
-        val ms = scala.util.Try(x.trim.toLong).getOrElse(
-          java.sql.Timestamp.valueOf(x.trim).getTime)
-        t.snapshotAsOf(ms).snapshotId
-      })
+      .orElse(ts.map(x => t.snapshotAsOf(LakehouseSource.parseTsMillis(x)).snapshotId))
   }
 
   /** The batch face's ending pin: `endingSnapshot` (id), `endingTag`,
@@ -488,11 +466,7 @@ final class ChangeFeedSourceProvider extends StreamSourceProvider with DataSourc
     require(Seq(sid, tag, ts).count(_.isDefined) <= 1,
       "endingSnapshot / endingTag / endingTimestamp are mutually exclusive")
     sid.orElse(tag.map(g => t.snapshotForTag(g).snapshotId))
-      .orElse(ts.map { x =>
-        val ms = scala.util.Try(x.trim.toLong).getOrElse(
-          java.sql.Timestamp.valueOf(x.trim).getTime)
-        t.snapshotAsOf(ms).snapshotId
-      })
+      .orElse(ts.map(x => t.snapshotAsOf(LakehouseSource.parseTsMillis(x)).snapshotId))
   }
 
   override def createRelation(

@@ -155,27 +155,13 @@ final class LakehouseBatchScan private[lakehouse] (
       : Seq[org.apache.spark.broadcast.Broadcast[MorMaskData]] =
     morMasks.map(spark.sparkContext.broadcast(_))
 
-  /** Files a tombstone could actually mask rows in → their origin id.
-    * Metadata-only: per mask, the file must be OLDER than the mask's
-    * newest tombstone AND its manifest stats / partition path must
-    * admit at least one masked key value per key column (the
-    * conjunctive InSet probe — a superset of truly affected files;
-    * the per-row probe is exact). Everything else reads columnar with
-    * zero masking work.
+  /** Files a tombstone could actually mask rows in
+    * ([[LakehouseMor.affectedFiles]]) → their origin id. Everything
+    * else reads columnar with zero masking work.
     */
   @transient private lazy val affectedOrigin: Map[String, Long] =
-    if (morMasks.isEmpty) Map.empty
-    else {
-      val originOf = staticFiles.map(f => f -> t.originOfFile(f)).toMap
-      morMasks.flatMap { m =>
-        val preds = m.keyNames.zipWithIndex.map { case (k, i) =>
-          ScanPredicate.InSet(k, m.byKey.keysIterator
-            .map(tup => LakehouseMor.decanon(m.keyTypes(i), tup(i))).toSeq.distinct)
-        }
-        val kept = t.pruneFiles(snap, preds)._1.toSet
-        staticFiles.filter(f => kept(f) && originOf(f) < m.maxOrigin)
-      }.distinct.map(f => f -> originOf(f)).toMap
-    }
+    LakehouseMor.affectedFiles(t, snap, morMasks, staticFiles)
+      .map(f => f -> t.originOfFile(f)).toMap
 
   /** Snapshot-schema fields backing every mask key column (the reader
     * schemas widen with these when the projection lacks them).

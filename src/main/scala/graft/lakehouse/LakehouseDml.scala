@@ -1,20 +1,18 @@
 package graft.lakehouse
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnAccess, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions
 import org.apache.spark.sql.catalyst.{expressions => cexp}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, ExprId, Expression, Literal, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, OverwritePartitionsDynamic, UpdateAction, UpdateTable}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-import org.apache.spark.sql.functions.{coalesce, col, lit, monotonically_increasing_id, not, when}
-import org.apache.spark.sql.sources
+import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id, not, when}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** SQL `UPDATE` / `MERGE INTO` / full-predicate `DELETE` over lakehouse
+/** SQL `UPDATE` / `MERGE INTO` / `DELETE` over lakehouse
   * tables — the row-mutating verbs Spark only grants to sources that
   * bring their own planning (the Delta approach: intercept the analyzed
   * command and execute it through the table's own copy-on-write
@@ -29,7 +27,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     WHEN MATCHED THEN UPDATE SET *
   *     WHEN NOT MATCHED THEN INSERT *
   *     WHEN NOT MATCHED BY SOURCE THEN DELETE
-  *   DELETE FROM graft.db.t WHERE v LIKE '%stale%'   -- beyond SupportsDelete
+  *   DELETE FROM graft.db.t WHERE v LIKE '%stale%'
   * }}}
   *
   * All three execute as ONE snapshot commit with the table's
@@ -521,64 +519,15 @@ object LakehouseDml {
               "a probe list that large belongs in the merge join itself: fold " +
               "the membership into the USING source (JOIN / LEFT SEMI JOIN " +
               "the subquery there) instead of the ON clause")
-        expressions.In(value, rows.toSeq.map(r => Literal.create(r.get(0), dt)))
+        cexp.In(value, rows.toSeq.map(r => Literal.create(r.get(0), dt)))
       case ex: cexp.Exists if !ex.isCorrelated =>
         // NOT EXISTS arrives as Not(Exists(…)) and negates the literal
         Literal(ofRows(spark, ex.plan).limit(1).collect().nonEmpty)
     }
-
-  /** Catalyst predicate → `sources.Filter`, for file PRUNING only (the
-    * residual is always the rebound original condition, so an
-    * untranslated conjunct costs pruning power, never correctness).
-    * Mirrors exactly the shapes [[LakehouseSource.acceptable]] accepts.
-    */
-  private[lakehouse] def translateForPrune(e: Expression): Option[sources.Filter] = {
-    def scala2(l: Literal): Option[Any] =
-      Option(l.value).map(v => CatalystTypeConverters.convertToScala(v, l.dataType))
-    e match {
-      case expressions.EqualTo(a: AttributeReference, l: Literal) =>
-        scala2(l).map(sources.EqualTo(a.name, _))
-      case expressions.EqualTo(l: Literal, a: AttributeReference) =>
-        scala2(l).map(sources.EqualTo(a.name, _))
-      case expressions.GreaterThan(a: AttributeReference, l: Literal) =>
-        scala2(l).map(sources.GreaterThan(a.name, _))
-      case expressions.GreaterThan(l: Literal, a: AttributeReference) =>
-        scala2(l).map(sources.LessThan(a.name, _))
-      case expressions.GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        scala2(l).map(sources.GreaterThanOrEqual(a.name, _))
-      case expressions.GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        scala2(l).map(sources.LessThanOrEqual(a.name, _))
-      case expressions.LessThan(a: AttributeReference, l: Literal) =>
-        scala2(l).map(sources.LessThan(a.name, _))
-      case expressions.LessThan(l: Literal, a: AttributeReference) =>
-        scala2(l).map(sources.GreaterThan(a.name, _))
-      case expressions.LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        scala2(l).map(sources.LessThanOrEqual(a.name, _))
-      case expressions.LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        scala2(l).map(sources.GreaterThanOrEqual(a.name, _))
-      case expressions.In(a: AttributeReference, vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        val conv = vs.map(v => scala2(v.asInstanceOf[Literal]))
-        if (conv.forall(_.isDefined)) Some(sources.In(a.name, conv.map(_.get).toArray))
-        else None
-      case expressions.InSet(a: AttributeReference, set) if !set.contains(null) =>
-        Some(sources.In(a.name,
-          set.map(v => CatalystTypeConverters.convertToScala(v, a.dataType)).toArray))
-      case expressions.IsNull(a: AttributeReference) => Some(sources.IsNull(a.name))
-      case expressions.IsNotNull(a: AttributeReference) => Some(sources.IsNotNull(a.name))
-      case expressions.StartsWith(a: AttributeReference, l: Literal) =>
-        scala2(l).map(p => sources.StringStartsWith(a.name, p.toString))
-      case expressions.Or(x, y) =>
-        for (fx <- translateForPrune(x); fy <- translateForPrune(y))
-          yield sources.Or(fx, fy)
-      case _ => None
-    }
-  }
 }
 
 /** Plans the three DML commands over lakehouse relations; everything
-  * else falls through to the built-in strategies (including translatable
-  * DELETEs, which keep the cheaper metadata-only `SupportsDelete` path).
+  * else falls through to the built-in strategies.
   */
 object LakehouseDmlStrategy extends SparkStrategy {
   import LakehouseDml._
@@ -672,23 +621,13 @@ object LakehouseDmlStrategy extends SparkStrategy {
         MergeLakehouseExec(SparkSession.active, table.options, tOut, m) :: Nil
       }.getOrElse(Nil)
 
-    // predicates the SupportsDelete face REFUSES: shapes beyond the
-    // pruner's filter grammar (LIKE '%x', NOT, arithmetic, functions)
-    // AND subquery shapes — uncorrelated (IN (SELECT…)/EXISTS/scalar,
-    // the decontamination DELETE) and correlated (EXISTS/IN/scalar
-    // keyed on target columns, the dedup-purge DELETE); translatable
-    // deletes keep the built-in metadata-pruned path
+    // every predicate, subqueries and no WHERE included: one
+    // copy-on-write statement through sqlMutate
     case d: DeleteFromTable =>
-      lakeRelation(d.table) match {
-        case Some((tOut, table)) if SubqueryExpression.hasSubquery(d.condition) =>
-          DeleteLakehouseExec(SparkSession.active, table.options,
-            new DmlPayload((tOut, d.condition))) :: Nil
-        case Some((tOut, table))
-            if !conjuncts(d.condition).forall(c => translateForPrune(c).isDefined) =>
-          DeleteLakehouseExec(SparkSession.active, table.options,
-            new DmlPayload((tOut, d.condition))) :: Nil
-        case _ => Nil // built-in SupportsDelete / error paths
-      }
+      lakeRelation(d.table).map { case (tOut, table) =>
+        DeleteLakehouseExec(SparkSession.active, table.options,
+          new DmlPayload((tOut, d.condition))) :: Nil
+      }.getOrElse(Nil)
 
     case _ => Nil
   }
@@ -763,7 +702,7 @@ private[lakehouse] final case class UpdateLakehouseExec(
     val t = new LakehouseTable(spark, LakehouseSource.rootOf(tableOptions))
     val names: Map[ExprId, String] = targetOutput.map(a => a.exprId -> a.name).toMap
     val conj = condition.toSeq.flatMap(LakehouseDml.conjuncts)
-    val filters = conj.flatMap(LakehouseDml.translateForPrune)
+    val filters = conj.flatMap(GraftColumnAccess.translateFilter)
     val setByName = sets.map { case (k, v) => k.name.toLowerCase(java.util.Locale.ROOT) -> v }.toMap
     t.sqlMutate("update",
       candidatesOf = { snap =>
@@ -822,10 +761,10 @@ private[lakehouse] final case class UpdateLakehouseExec(
   }
 }
 
-/** `DELETE FROM t WHERE <beyond the filter grammar>`: same file-pruned
-  * copy-on-write as the SupportsDelete path, but the survivors filter
-  * is the FULL original predicate (LIKE, NOT, functions, arithmetic),
-  * with translatable conjuncts still pruning the candidate set.
+/** `DELETE FROM t [WHERE …]`, every predicate shape: translatable
+  * conjuncts prune the candidate files (anything else carries by
+  * reference), and candidates rewrite keeping the rows where the FULL
+  * original predicate (LIKE, NOT, functions, subqueries) is not TRUE.
   */
 private[lakehouse] final case class DeleteLakehouseExec(
     @transient spark: SparkSession,
@@ -838,7 +777,7 @@ private[lakehouse] final case class DeleteLakehouseExec(
     val t = new LakehouseTable(spark, LakehouseSource.rootOf(tableOptions))
     val names: Map[ExprId, String] = targetOutput.map(a => a.exprId -> a.name).toMap
     val conj = LakehouseDml.conjuncts(condition)
-    val filters = conj.flatMap(LakehouseDml.translateForPrune)
+    val filters = conj.flatMap(GraftColumnAccess.translateFilter)
     t.sqlMutate("delete",
       candidatesOf = { snap =>
         val base = LakehouseSource.pruneForFilters(t, snap, filters,
@@ -970,7 +909,7 @@ private[lakehouse] final case class MergeLakehouseExec(
             val targetOnly = LakehouseDml.conjuncts(mergeCond).filter(c =>
               c.references.nonEmpty && c.deterministic &&
                 c.references.forall(x => tIds(x.exprId)))
-              .flatMap(LakehouseDml.translateForPrune)
+              .flatMap(GraftColumnAccess.translateFilter)
             if (targetOnly.isEmpty) base
             else {
               val keep = LakehouseSource.pruneForFilters(t, snap, targetOnly).toSet

@@ -67,9 +67,9 @@ private[lakehouse] final class LakehouseMicroBatchStream(
   private val caps = TriggerCaps.of(options)
 
   /** Stream-start pin — `.option("startingVersion", 3)` /
-    * `.option("startingTimestamp", "2026-01-01 00:00:00")` (epoch
-    * millis accepted too) / `.option("startingTag", "corpus-v1")`: a
-    * FRESH checkpoint bootstraps the PINNED snapshot's full state and
+    * `.option("startingTimestamp", "2026-01-01 00:00:00")` (UTC; epoch
+    * millis and ISO-8601 instants accepted too) /
+    * `.option("startingTag", "corpus-v1")`: a FRESH checkpoint bootstraps the PINNED snapshot's full state and
     * follows increments from there, instead of replaying the
     * head-state bootstrap — how a 100 TB corpus table streams from a
     * pinned release tag without rereading history it doesn't want.
@@ -84,25 +84,8 @@ private[lakehouse] final class LakehouseMicroBatchStream(
     // lowercase keys through CaseInsensitiveStringMap)
     def opt(name: String): Option[String] =
       options.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
-    val v = opt("startingVersion")
-    val ts = opt("startingTimestamp")
-    val tag = opt("startingTag")
-    require(Seq(v, ts, tag).count(_.isDefined) <= 1,
-      "startingVersion / startingTimestamp / startingTag are mutually exclusive")
-    val resolved = v.map(x => table.snapshotOrThrow(
-        scala.util.Try(x.trim.toLong).getOrElse(throw new IllegalArgumentException(
-          s"startingVersion must be a snapshot id, got '$x'"))))
-      .orElse(ts.map { x =>
-        val ms = scala.util.Try(x.trim.toLong).getOrElse(
-          java.sql.Timestamp.valueOf(x.trim).getTime)
-        table.snapshotAsOf(ms)
-      })
-      .orElse(tag.map(g => table.snapshotForTag(g)))
-    resolved.foreach(sn => require(sn.branch.isEmpty,
-      s"stream-start snapshot ${sn.snapshotId} belongs to branch " +
-        s"'${sn.branch.get}' — a main stream cannot start from unpublished " +
-        "state; publish the branch first"))
-    resolved.map(_.snapshotId)
+    LakehouseSource.streamStartSnapshot(table, opt("startingVersion"),
+      opt("startingTimestamp"), opt("startingTag"))
   }
 
   /** Column names (lowercased) the stream PINNED at start — the

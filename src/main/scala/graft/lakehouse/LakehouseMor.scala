@@ -161,6 +161,28 @@ object LakehouseMor {
     }
   }
 
+  /** The files among `files` that `masks` could mask rows in.
+    * Metadata-only: per mask, the file must be OLDER than the mask's
+    * newest tombstone AND its manifest stats / partition path must
+    * admit at least one masked key value per key column (the
+    * conjunctive InSet probe — a superset of truly affected files;
+    * the per-row probe is exact).
+    */
+  def affectedFiles(t: LakehouseTable, snap: Snapshot, masks: Seq[MorMaskData],
+      files: Seq[String]): Seq[String] =
+    if (masks.isEmpty) Nil
+    else {
+      val originOf = files.map(f => f -> t.originOfFile(f)).toMap
+      masks.flatMap { m =>
+        val preds = m.keyNames.zipWithIndex.map { case (k, i) =>
+          ScanPredicate.InSet(k, m.byKey.keysIterator
+            .map(tup => decanon(m.keyTypes(i), tup(i))).toSeq.distinct)
+        }
+        val kept = t.pruneFiles(snap, preds)._1.toSet
+        files.filter(f => kept(f) && originOf(f) < m.maxOrigin)
+      }.distinct
+    }
+
   private def buildUncached(spark: SparkSession, t: LakehouseTable,
       snap: Snapshot): Seq[MorMaskData] = {
     val declared = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]

@@ -300,7 +300,12 @@ private[lakehouse] object LakehouseSource {
       case (k, v) if k.equalsIgnoreCase("asOfTimestamp") => parseTsMillis(v)
     }
 
-  private def parseTsMillis(s: String): Long = {
+  /** A timestamp option value in epoch millis: epoch millis, an
+    * ISO-8601 instant, or `yyyy-MM-dd[ HH:mm:ss]` read as UTC — the
+    * spelling every snapshot pin (`asOfTimestamp`, `startingTimestamp`,
+    * `endingTimestamp`) takes.
+    */
+  private[lakehouse] def parseTsMillis(s: String): Long = {
     val t = s.trim
     if (t.matches("-?\\d+")) t.toLong
     else try java.time.Instant.parse(t).toEpochMilli
@@ -309,6 +314,27 @@ private[lakehouse] object LakehouseSource {
         val norm = if (t.contains(' ') || t.contains('T')) t.replace(' ', 'T') else t + "T00:00:00"
         java.time.LocalDateTime.parse(norm).toInstant(java.time.ZoneOffset.UTC).toEpochMilli
     }
+  }
+
+  /** A stream's start pin — `startingVersion` (a snapshot id),
+    * `startingTimestamp` ([[parseTsMillis]]) or `startingTag`, at most
+    * one — as the main-line snapshot id it names. A branch snapshot
+    * refuses: a stream cannot start from unpublished state.
+    */
+  private[lakehouse] def streamStartSnapshot(t: LakehouseTable, version: Option[String],
+      timestamp: Option[String], tag: Option[String]): Option[Long] = {
+    require(Seq(version, timestamp, tag).count(_.isDefined) <= 1,
+      "startingVersion / startingTimestamp / startingTag are mutually exclusive")
+    val resolved = version.map(x => t.snapshotOrThrow(
+        scala.util.Try(x.trim.toLong).getOrElse(throw new IllegalArgumentException(
+          s"startingVersion must be a snapshot id, got '$x'"))))
+      .orElse(timestamp.map(x => t.snapshotAsOf(parseTsMillis(x))))
+      .orElse(tag.map(t.snapshotForTag))
+    resolved.foreach(sn => require(sn.branch.isEmpty,
+      s"stream-start snapshot ${sn.snapshotId} belongs to branch " +
+        s"'${sn.branch.get}' — a stream cannot start from unpublished " +
+        "state; publish the branch first"))
+    resolved.map(_.snapshotId)
   }
 
   /** (table, resolved snapshot) for an options map. */
@@ -455,7 +481,6 @@ private[lakehouse] final class LakehouseV2Table(
     private[lakehouse] val options: Map[String, String],
     catalogProps: Map[String, String] = Map.empty) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.TruncatableTable
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
 
@@ -573,33 +598,6 @@ private[lakehouse] final class LakehouseV2Table(
   override def loadPartitionMetadata(
       ident: org.apache.spark.sql.catalyst.InternalRow): java.util.Map[String, String] =
     java.util.Collections.emptyMap()
-
-  /** SQL `DELETE FROM t WHERE ...`: accepted iff every conjunct is a
-    * filter the pruner + residual understand on top-level columns —
-    * Spark falls back to an analysis error otherwise (row-level MERGE
-    * rewrites are out of scope; updates arrive via the CDC feed).
-    */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean = {
-    val cols = tableSchema.fieldNames.map(nameKeyOf).toSet
-    filters.forall(LakehouseSource.acceptable(_, r => cols(nameKeyOf(r))))
-  }
-
-  /** File-pruned delete against the CURRENT head (mutations never run
-    * against the read pin): non-candidate files carry by reference,
-    * candidates rewrite without the matching rows — one snapshot.
-    */
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val spark = SparkSession.active
-    val t = new LakehouseTable(spark, LakehouseSource.rootOf(options))
-    val snap = t.currentSnapshot().getOrElse(
-      throw new IllegalStateException("cannot DELETE from a snapshot-less table"))
-    val cond = filters.map(LakehouseSource.toCondition)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val candidates = LakehouseSource.pruneForFilters(t, snap, filters.toSeq,
-      LakehouseSource.bucketSpecOf(options))
-    t.deleteWhere(candidates, cond)
-    ()
-  }
 
   /** SQL `TRUNCATE TABLE t`: one overwrite commit to empty, schema
     * preserved, history time-travelable.

@@ -1640,45 +1640,27 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       case LakehouseTable.BucketSpecRe(_, c) => nameKey(c)
     }.toSet
 
-  /** SQL DELETE: remove the current snapshot's rows matching `cond`,
-    * where `candidates0` is the pre-pruned file set that can hold
-    * matches (anything else carries over BY REFERENCE — the skipping
-    * indexes prove it holds none). Candidate files rewrite keeping
-    * rows where the condition is false OR null (SQL DELETE only
-    * removes rows where the predicate IS TRUE), preserving the hive
-    * layout. A delete whose predicate pruned to zero candidates
-    * commits nothing and returns the current snapshot.
+  /** Remove the current snapshot's rows matching `cond`, where
+    * `candidates0` is the pre-pruned file set that can hold matches
+    * (anything else carries over BY REFERENCE — the skipping indexes
+    * prove it holds none). Candidate files rewrite keeping rows where
+    * the condition is false OR null (DELETE only removes rows where the
+    * predicate IS TRUE), preserving the hive layout — the SQL DELETE
+    * statement, run once: the candidates are intersected with the files
+    * still current under the lock, and a lost publish race throws
+    * [[ConcurrentCommitException]] instead of retrying (re-planning
+    * stale candidates would not be serializable). A delete with zero
+    * candidates commits nothing and returns the current snapshot.
     */
   def deleteWhere(candidates0: Seq[String],
       cond: org.apache.spark.sql.Column): Snapshot = writeLock.synchronized {
-    val cur = currentSnapshot().getOrElse(
-      throw new IllegalStateException(s"table $root has no snapshots"))
-    // intersect with the files still current under the lock — the
-    // caller pruned against a snapshot read a moment earlier
-    val candidates = cur.files.filter(candidates0.toSet)
-    if (candidates.isEmpty) return cur
-    val id = nextId()
-    val partCols = inferPartitionCols(cur.files)
-    val survivors = scanFiles(cur, candidates).filter(coalesce(not(cond), lit(true)))
-    val rewritten = writeDataFiles(survivors, id, suffix = "del", partitionCols = partCols)
-    writeSnapshot(Snapshot(id, Some(cur.snapshotId), System.currentTimeMillis(),
-      "delete", cur.files.diff(candidates) ++ rewritten, cur.schemaJson,
-      deletes = cur.deletes))
+    sqlMutateOnce("delete", candidatesOf = _ => candidates0,
+      compute = (_, candidates, scan) =>
+        if (candidates.isEmpty) (None, None)
+        else (Some(scan.filter(not(cond <=> lit(true)))), None),
+      written = Nil).getOrElse(currentSnapshot().get)
   }
 
-  /** Copy-on-write commit primitive for the SQL row-mutating verbs
-    * (UPDATE / MERGE / full-predicate DELETE — [[LakehouseDml]]):
-    * under the write lock, `candidatesOf(head)` names the files that
-    * may hold affected rows (anything else carries BY REFERENCE), and
-    * `compute(head, candidates, candidateScan)` returns
-    * `(survivors, inserts)` — `survivors = Some(df)` rewrites the
-    * candidate set to exactly those rows, `None` leaves every file in
-    * place (an insert-only merge never rewrites); `inserts` appends
-    * new files. `(None, None)` commits nothing and returns None.
-    * Mutations always run against the HEAD snapshot (never a read
-    * pin), the same discipline as [[deleteWhere]]; the table's hive
-    * layout is preserved on both rewrite and insert.
-    */
   /** One SQL DML statement (UPDATE / DELETE / MERGE) as one snapshot —
     * with AUTO-RETRY past lost cross-process races (the Delta conflict
     * behavior for SQL statements): unlike the programmatic rewrite
@@ -1702,6 +1684,20 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     withCommitRetry(Right(sqlMutateOnce(op, candidatesOf, compute, written)))
   }
 
+  /** Copy-on-write commit primitive for the SQL row-mutating verbs
+    * (UPDATE / MERGE / DELETE — [[LakehouseDml]]), run once:
+    * under the write lock, `candidatesOf(head)` names the files that
+    * may hold affected rows (anything else carries BY REFERENCE), and
+    * `compute(head, candidates, candidateScan)` returns
+    * `(survivors, inserts)` — `survivors = Some(df)` rewrites the
+    * candidate set to exactly those rows, `None` leaves every file in
+    * place (an insert-only merge never rewrites); `inserts` appends
+    * new files. `(None, None)` commits nothing and returns None.
+    * Mutations always run against the HEAD snapshot (never a read
+    * pin); the table's hive layout is preserved on both rewrite and
+    * insert, and zero-row files the writer leaves behind stay out of
+    * the manifest.
+    */
   private def sqlMutateOnce(op: String,
       candidatesOf: Snapshot => Seq[String],
       compute: (Snapshot, Seq[String], DataFrame) => (Option[DataFrame], Option[DataFrame]),
@@ -1731,10 +1727,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   private def dropEmptyDataFiles(files: Seq[String]): Seq[String] =
     files.filter(f => footerFileStats(f).forall(_.rows > 0))
 
-  /** Replace the whole table content with `df` (schema AND rename
-    * lineage reset — no pre-overwrite file survives, so no alias can
-    * ever resolve again).
-    */
   /** Create an EMPTY table — schema only, ZERO files (the DSv2 stream
     * bootstrap seed). An empty [[overwrite]] would land a zero-row
     * FLAT part file, and that one file poisons layout inference for
@@ -1756,9 +1748,15 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       } catch { case _: ConcurrentCommitException => () }
     }
 
+  /** Replace the whole table content with `df` (schema AND rename
+    * lineage reset — no pre-overwrite file survives, so no alias can
+    * ever resolve again). An empty `df` (`TRUNCATE TABLE`) commits no
+    * file at all.
+    */
   def overwrite(df: DataFrame): Snapshot = writeLock.synchronized {
     val (head, id) = MainLine.resolve()
-    commitOverwriteFiles(head, id, writeDataFiles(df, id, head = head), df.schema)
+    commitOverwriteFiles(head, id,
+      dropEmptyDataFiles(writeDataFiles(df, id, head = head)), df.schema)
   }
 
   /** Filter-scoped overwrite — `INSERT OVERWRITE t PARTITION (p='x')`,
@@ -3190,16 +3188,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   def foldTombstones(): Option[Snapshot] = writeLock.synchronized {
     val cur = currentSnapshot().getOrElse(return None)
     if (cur.tombstones.isEmpty) return None
-    val byOrigin = cur.files.map(f => f -> originOf(f)).toMap
-    val affected: Seq[String] =
-      LakehouseMor.build(spark, this, cur).flatMap { m =>
-        val preds = m.keyNames.zipWithIndex.map { case (k, i) =>
-          ScanPredicate.InSet(k, m.byKey.keysIterator
-            .map(tup => LakehouseMor.decanon(m.keyTypes(i), tup(i))).toSeq.distinct)
-        }
-        val kept = pruneFiles(cur, preds)._1.toSet
-        cur.files.filter(f => kept(f) && byOrigin(f) < m.maxOrigin)
-      }.distinct
+    val affected =
+      LakehouseMor.affectedFiles(this, cur, LakehouseMor.build(spark, this, cur), cur.files)
     val id = nextId()
     // effective read of ONLY the affected files: scanFiles masks per-row
     // by origin, so survivors re-land at a fresh origin beyond every

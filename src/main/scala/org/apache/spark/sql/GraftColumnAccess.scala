@@ -21,4 +21,11 @@ object GraftColumnAccess {
     */
   def fieldRef(name: String): connector.expressions.NamedReference =
     connector.expressions.FieldReference.column(name)
+
+  /** `protected[sql]` `DataSourceStrategy.translateFilter` over
+    * top-level columns: a Catalyst predicate as the `sources.Filter`
+    * Spark itself would push to a V1 source, or None.
+    */
+  def translateFilter(e: Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = false)
 }

@@ -98,4 +98,28 @@ class DeleteShapesSpec extends SparkSpec {
       spark.sql(s"DROP TABLE $side")
     }
   }
+
+  private def rowsInFile(t: LakehouseTable, file: String): Long =
+    spark.read.parquet(java.nio.file.Paths.get(t.root, file).toString).count()
+
+  test("a DELETE that empties its candidate file commits no zero-row file") {
+    val (name, t) = seeded("dempty", hive = false)
+    val before = t.currentSnapshot().get.files
+    // ids 40..59 are exactly the third insert's files
+    spark.sql(s"DELETE FROM $name WHERE id >= 40")
+    val files = t.currentSnapshot().get.files
+    assert(files.forall(rowsInFile(t, _) > 0), s"a zero-row file was committed: $files")
+    assert(files.toSet.subsetOf(before.toSet), s"an emptied file needs no rewrite: $files")
+    assert(rowsOf(name) === seedRows.filter(_._1 < 40).toSet)
+    spark.sql(s"DROP TABLE $name")
+  }
+
+  test("TRUNCATE TABLE commits a snapshot with no files") {
+    val (name, t) = seeded("dtrunc", hive = false)
+    spark.sql(s"TRUNCATE TABLE $name")
+    assert(t.currentSnapshot().get.files === Nil)
+    assert(rowsOf(name).isEmpty)
+    assert(spark.table(name).columns.toSeq === Seq("id", "rk", "v"))
+    spark.sql(s"DROP TABLE $name")
+  }
 }

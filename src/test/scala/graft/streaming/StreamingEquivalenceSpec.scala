@@ -1268,6 +1268,30 @@ class StreamingEquivalenceSpec extends SparkSpec {
     assert(e.getMessage.contains("nope") || e.getCause != null, e.getMessage)
   }
 
+  test("startingTimestamp takes a date-only string read as UTC midnight, like asOfTimestamp") {
+    import spark.implicits._
+    import graft.lakehouse.LakehouseTable
+    val t = new LakehouseTable(spark, tmpDir("rst-date"))
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1))
+    // tomorrow's UTC midnight follows every commit: the pin is the head
+    val day = java.time.LocalDate.now(java.time.ZoneOffset.UTC).plusDays(1).toString
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = spark.readStream.format("graft-lakehouse")
+      .option("startingTimestamp", day).load(t.root)
+      .writeStream.foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        got.synchronized { got ++= df.select("id").collect().map(_.getLong(0)) }
+        ()
+      }
+      .option("checkpointLocation", tmpDir("rst-date-ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000))
+    assert(got.sorted.toSeq === Seq(1L, 2L))
+    // the changefeed's batch face reads the same spelling
+    val none = spark.read.format("graft-changefeed").option("path", t.root)
+      .option("startingTimestamp", day).load().count()
+    assert(none === 0L, "a pin at the head has no changes after it")
+  }
+
   test("changefeed startingTag: a fresh stream delivers CHANGES after the pin, never a bootstrap; checkpoint wins on restart") {
     import spark.implicits._
     import graft.lakehouse.LakehouseTable
