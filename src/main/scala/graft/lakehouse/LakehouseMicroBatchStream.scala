@@ -69,8 +69,9 @@ private[lakehouse] final class LakehouseMicroBatchStream(
   /** Stream-start pin — `.option("startingVersion", 3)` /
     * `.option("startingTimestamp", "2026-01-01 00:00:00")` (UTC; epoch
     * millis and ISO-8601 instants accepted too) /
-    * `.option("startingTag", "corpus-v1")`: a FRESH checkpoint bootstraps the PINNED snapshot's full state and
-    * follows increments from there, instead of replaying the
+    * `.option("startingTag", "corpus-v1")`: a FRESH checkpoint
+    * bootstraps the PINNED snapshot's full state and follows
+    * increments from there, instead of replaying the
     * head-state bootstrap — how a 100 TB corpus table streams from a
     * pinned release tag without rereading history it doesn't want.
     * The Delta option pair plus the tag form q141's refs make natural.

@@ -1727,12 +1727,12 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   private def dropEmptyDataFiles(files: Seq[String]): Seq[String] =
     files.filter(f => footerFileStats(f).forall(_.rows > 0))
 
-  /** Create an EMPTY table — schema only, ZERO files (the DSv2 stream
-    * bootstrap seed). An empty [[overwrite]] would land a zero-row
-    * FLAT part file, and that one file poisons layout inference for
-    * every partitioned epoch after it (mixed-scheme evidence stands
-    * [[inferPartitionCols]] down); a file-less snapshot carries the
-    * schema without touching the layout story.
+  /** Create an EMPTY table — schema only, ZERO files, no Spark job
+    * (the DSv2 stream bootstrap seed). A file-less snapshot carries the
+    * schema without touching the layout story: a zero-row FLAT part
+    * file would poison layout inference for every partitioned epoch
+    * after it (mixed-scheme evidence stands [[inferPartitionCols]]
+    * down).
     */
   private[lakehouse] def createEmpty(schema: StructType): Unit =
     writeLock.synchronized {

@@ -113,13 +113,4 @@ class DeleteShapesSpec extends SparkSpec {
     assert(rowsOf(name) === seedRows.filter(_._1 < 40).toSet)
     spark.sql(s"DROP TABLE $name")
   }
-
-  test("TRUNCATE TABLE commits a snapshot with no files") {
-    val (name, t) = seeded("dtrunc", hive = false)
-    spark.sql(s"TRUNCATE TABLE $name")
-    assert(t.currentSnapshot().get.files === Nil)
-    assert(rowsOf(name).isEmpty)
-    assert(spark.table(name).columns.toSeq === Seq("id", "rk", "v"))
-    spark.sql(s"DROP TABLE $name")
-  }
 }

@@ -172,8 +172,10 @@ class LakehouseCatalogSpec extends SparkSpec {
     spark.sql("DELETE FROM graftcat.db.del_t WHERE id = 999999")
     assert(t.listSnapshots().size === snapCount,
       "a delete pruned to zero candidates must not commit a snapshot")
-    // TRUNCATE: empty content, schema kept, history time-travelable
+    // TRUNCATE: empty content and no file, schema kept, history
+    // time-travelable
     spark.sql("TRUNCATE TABLE graftcat.db.del_t")
+    assert(t.currentSnapshot().get.files === Nil)
     assert(spark.sql("SELECT * FROM graftcat.db.del_t").collect().isEmpty)
     assert(spark.table("graftcat.db.del_t").columns.toSeq === Seq("id", "v"))
     val lastDelete = t.listSnapshots().filter(_.operation == "delete").last.snapshotId
