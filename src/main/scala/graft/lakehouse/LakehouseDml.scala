@@ -1,7 +1,7 @@
 package graft.lakehouse
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnAccess, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnAccess, GraftDatasetAccess, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.{expressions => cexp}
@@ -532,18 +532,25 @@ object LakehouseDml {
 object LakehouseDmlStrategy extends SparkStrategy {
   import LakehouseDml._
 
-  /** The command's target as (output attributes, table) — matching both
-    * the analyzed relation and the optimizer's scan-relation rewrite
-    * (V2ScanRelationPushDown transforms the target before planning;
-    * kept columns keep their exprIds).
+  /** The command's target as (output attributes, table, cache
+    * refresh) — matching both the analyzed relation and the optimizer's
+    * scan-relation rewrite (V2ScanRelationPushDown transforms the target
+    * before planning; kept columns keep their exprIds). The refresh
+    * re-caches every cached plan reading the target, as Spark's own V2
+    * write and DELETE execs do after they commit.
     */
-  private def lakeRelation(plan: LogicalPlan): Option[(Seq[Attribute], LakehouseV2Table)] =
+  private def lakeRelation(
+      plan: LogicalPlan): Option[(Seq[Attribute], LakehouseV2Table, () => Unit)] = {
+    def of(out: Seq[Attribute], r: DataSourceV2Relation) =
+      (out, r.table.asInstanceOf[LakehouseV2Table],
+        () => GraftDatasetAccess.refreshCache(SparkSession.active, r))
     plan.collectFirst {
       case r: DataSourceV2Relation if r.table.isInstanceOf[LakehouseV2Table] =>
-        (r.output, r.table.asInstanceOf[LakehouseV2Table])
+        of(r.output, r)
       case s: DataSourceV2ScanRelation if s.relation.table.isInstanceOf[LakehouseV2Table] =>
-        (s.output, s.relation.table.asInstanceOf[LakehouseV2Table])
+        of(s.output, s.relation)
     }
+  }
 
   /** MERGE ON hosts the JOIN condition, where Spark cannot plan
     * subqueries at all. UNCORRELATED scalar / single-column IN /
@@ -583,21 +590,21 @@ object LakehouseDmlStrategy extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case u: UpdateTable =>
-      lakeRelation(u.table).map { case (tOut, table) =>
+      lakeRelation(u.table).map { case (tOut, table, refresh) =>
         // WHERE takes correlated subqueries (filter-planted in the exec)
         val sets = assignmentPairs(u.assignments, "UPDATE SET")
         UpdateLakehouseExec(SparkSession.active, table.options,
-          new DmlPayload((tOut, sets, u.condition))) :: Nil
+          new DmlPayload((tOut, sets, u.condition)), refresh) :: Nil
       }.getOrElse(Nil)
 
     case o: OverwritePartitionsDynamic =>
-      lakeRelation(o.table).map { case (_, table) =>
+      lakeRelation(o.table).map { case (_, table, refresh) =>
         DynamicOverwriteLakehouseExec(SparkSession.active, table.options,
-          o.query) :: Nil
+          o.query, refresh) :: Nil
       }.getOrElse(Nil)
 
     case m: MergeIntoTable =>
-      lakeRelation(m.targetTable).map { case (tOut, table) =>
+      lakeRelation(m.targetTable).map { case (tOut, table, refresh) =>
         // WITH SCHEMA EVOLUTION is the ANALYZER's job (the table
         // advertises AUTOMATIC_SCHEMA_EVOLUTION): by planning time the
         // target relation has been altered through the catalog (adds /
@@ -618,15 +625,15 @@ object LakehouseDmlStrategy extends SparkStrategy {
           case other => throw new UnsupportedOperationException(
             s"graft-lakehouse MERGE: unsupported action $other")
         }
-        MergeLakehouseExec(SparkSession.active, table.options, tOut, m) :: Nil
+        MergeLakehouseExec(SparkSession.active, table.options, tOut, m, refresh) :: Nil
       }.getOrElse(Nil)
 
     // every predicate, subqueries and no WHERE included: one
     // copy-on-write statement through sqlMutate
     case d: DeleteFromTable =>
-      lakeRelation(d.table).map { case (tOut, table) =>
+      lakeRelation(d.table).map { case (tOut, table, refresh) =>
         DeleteLakehouseExec(SparkSession.active, table.options,
-          new DmlPayload((tOut, d.condition))) :: Nil
+          new DmlPayload((tOut, d.condition)), refresh) :: Nil
       }.getOrElse(Nil)
 
     case _ => Nil
@@ -643,14 +650,18 @@ object LakehouseDmlStrategy extends SparkStrategy {
   */
 private[lakehouse] final class DmlPayload[T](@transient val value: T) extends Serializable
 
-/** Driver-side command node: run once, produce no rows (the v2-command
-  * execution shape — `spark.sql(...)` eagerly collects).
+/** Driver-side command node: run once, then refresh the cached plans
+  * reading the target, and produce no rows (the v2-command execution
+  * shape — `spark.sql(...)` eagerly collects).
   */
 private[lakehouse] trait GraftDmlExec extends LeafExecNode {
   @transient protected def spark: SparkSession
+  protected def refresh: () => Unit
   protected def run(): Unit
   @transient private var done = false
-  private def ensure(): Unit = synchronized { if (!done) { run(); done = true } }
+  private def ensure(): Unit = synchronized {
+    if (!done) { run(); refresh(); done = true }
+  }
   override def output: Seq[Attribute] = Nil
   override def executeCollect(): Array[InternalRow] = { ensure(); Array.empty }
   override protected def doExecute(): RDD[InternalRow] = {
@@ -669,7 +680,8 @@ private[lakehouse] trait GraftDmlExec extends LeafExecNode {
 private[lakehouse] final case class DynamicOverwriteLakehouseExec(
     @transient spark: SparkSession,
     tableOptions: Map[String, String],
-    @transient query: LogicalPlan) extends GraftDmlExec {
+    @transient query: LogicalPlan,
+    refresh: () => Unit) extends GraftDmlExec {
   override protected def run(): Unit = {
     val t = new LakehouseTable(spark, LakehouseSource.rootOf(tableOptions),
       optimizeWrite = LakehouseSource.boolOpt(tableOptions, "optimizeWrite"),
@@ -692,8 +704,8 @@ private[lakehouse] final case class DynamicOverwriteLakehouseExec(
 private[lakehouse] final case class UpdateLakehouseExec(
     @transient spark: SparkSession,
     tableOptions: Map[String, String],
-    payload: DmlPayload[(Seq[Attribute], Seq[(AttributeReference, Expression)], Option[Expression])])
-  extends GraftDmlExec {
+    payload: DmlPayload[(Seq[Attribute], Seq[(AttributeReference, Expression)], Option[Expression])],
+    refresh: () => Unit) extends GraftDmlExec {
 
   @transient private lazy val (targetOutput, sets, condition) = payload.value
   @transient private var scanCache: Option[DataFrame] = None
@@ -769,7 +781,8 @@ private[lakehouse] final case class UpdateLakehouseExec(
 private[lakehouse] final case class DeleteLakehouseExec(
     @transient spark: SparkSession,
     tableOptions: Map[String, String],
-    payload: DmlPayload[(Seq[Attribute], Expression)]) extends GraftDmlExec {
+    payload: DmlPayload[(Seq[Attribute], Expression)],
+    refresh: () => Unit) extends GraftDmlExec {
 
   @transient private lazy val (targetOutput, condition) = payload.value
 
@@ -833,7 +846,8 @@ private[lakehouse] final case class MergeLakehouseExec(
     @transient spark: SparkSession,
     tableOptions: Map[String, String],
     @transient targetOutput: Seq[Attribute],
-    @transient merge: MergeIntoTable) extends GraftDmlExec {
+    @transient merge: MergeIntoTable,
+    refresh: () => Unit) extends GraftDmlExec {
   import LakehouseDml.{exprColumn, rebind}
 
   override protected def run(): Unit = {

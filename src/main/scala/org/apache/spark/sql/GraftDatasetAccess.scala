@@ -16,4 +16,19 @@ object GraftDatasetAccess {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def nullable(schema: types.StructType): types.StructType = schema.asNullable
+
+  /** Rebuild every cached plan that reads `r` after a commit — the
+    * body of Spark's private `DataSourceV2Strategy.refreshCache`, which
+    * its own V2 write and DELETE execs run: by catalog name when the
+    * relation has one, else by plan.
+    */
+  def refreshCache(spark: SparkSession, r: execution.datasources.v2.DataSourceV2Relation): Unit = {
+    import connector.catalog.CatalogV2Implicits._
+    val s = spark.asInstanceOf[classic.SparkSession]
+    r match {
+      case execution.datasources.v2.ExtractV2CatalogAndIdentifier(catalog, ident) =>
+        s.sharedState.cacheManager.recacheTableOrView(s, ident.toQualifiedNameParts(catalog), false)
+      case _ => s.sharedState.cacheManager.recacheByPlan(s, r)
+    }
+  }
 }

@@ -633,4 +633,23 @@ class LakehouseDmlSpec extends SparkSpec {
          WHEN MATCHED THEN UPDATE SET v = s.v""")
     assert(t.listSnapshots().size === snaps)
   }
+
+  test("DELETE, UPDATE and MERGE refresh a cached target table") {
+    freshTable("cached", "id BIGINT, v STRING")
+    spark.sql("INSERT INTO dmlcat.db.cached SELECT id, 'a' FROM range(10)")
+    spark.sql("CACHE TABLE dmlcat.db.cached")
+    try {
+      def ids: Seq[Long] = spark.sql("SELECT id FROM dmlcat.db.cached ORDER BY id")
+        .collect().map(_.getLong(0)).toSeq
+      assert(ids === (0L until 10L))
+      spark.sql("DELETE FROM dmlcat.db.cached WHERE id >= 5")
+      assert(ids === (0L until 5L), "DELETE")
+      spark.sql("UPDATE dmlcat.db.cached SET id = id + 100 WHERE id < 2")
+      assert(ids === Seq(2L, 3L, 4L, 100L, 101L), "UPDATE")
+      spark.sql(
+        """MERGE INTO dmlcat.db.cached t USING (SELECT CAST(3 AS BIGINT) AS id) s
+           ON t.id = s.id WHEN MATCHED THEN DELETE""")
+      assert(ids === Seq(2L, 4L, 100L, 101L), "MERGE")
+    } finally spark.sql("UNCACHE TABLE dmlcat.db.cached")
+  }
 }
