@@ -451,7 +451,7 @@ private[lakehouse] object LakehouseSource {
       .asInstanceOf[StructType].fields
       .find(f => t.resolvedNameKey(f.name) == key).map(_.dataType)
     def idOf(v: Any): Option[Int] = dt.flatMap(d =>
-      scala.util.Try(((t.probeHashOf(v, d) % n + n) % n).toInt).toOption)
+      scala.util.Try(((t.probeHash(v, d) % n + n) % n).toInt).toOption)
     // spec evolution: a file written under a PREVIOUS spec may carry a
     // bucket dir computed with a different N — its dir value must never
     // drive a drop (5 mod 8 ≠ 5 mod 4); only post-evolution files prune

@@ -3,7 +3,7 @@ package graft.lakehouse
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.sources
@@ -744,25 +744,33 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   /** Absolute table root, for executor-side writers. */
   private[lakehouse] def rootAbsPath: String = rootPath.toAbsolutePath.toString
 
-  /** Claim a data-dir name for a DSv2 write: the next version id (the
+  /** Claim a data dir for a DSv2 write: the next version id (the
     * origin the dir digits record — the same claim-then-maybe-rebase
-    * discipline as [[appendWith]]) plus a per-write nonce so two
-    * claimants can never clobber each other's uncommitted files.
+    * discipline as [[appendWith]]) and its [[LakehouseTable.claimDirName]].
     */
   private[lakehouse] def claimWriteDir(tag: String): (Long, String) = {
     val id = nextId()
-    (id, s"s$id-$tag-w${java.util.UUID.randomUUID().toString.take(8)}")
+    (id, LakehouseTable.claimDirName(id, tag))
   }
 
-  /** Size-targeted optimize-write as a per-file record cap (the
-    * writeDataFiles maxRecordsPerFile computation, for the DSv2
-    * executor writers): None unless the table opted in AND a
-    * bytes-per-row estimate exists.
+  /** Size-targeted optimize-write as a per-file record cap: the target
+    * bytes over `head`'s average on-disk bytes per row, from manifest
+    * stats alone (files whose stats carry both rows and bytes) — so a
+    * skewed partition value bins into ≈targetBytes files instead of one
+    * giant one. None unless the table opted in AND `head` has a
+    * stats-bearing data file.
     */
-  private[lakehouse] def writeBinRecordsPerFile: Option[Long] =
-    (if (optimizeWrite) optimizeWriteTargetBytes else None)
-      .flatMap(t => manifestBytesPerRow(currentSnapshot()).map(bpr =>
-        math.max(1L, (t / math.max(bpr, 1e-9)).toLong)))
+  private[lakehouse] def writeRecordCap(head: Option[Snapshot]): Option[Long] =
+    (if (optimizeWrite) optimizeWriteTargetBytes else None).flatMap { target =>
+      val sts = head.toSeq.flatMap(cur => cur.files.flatMap(f => fileStatsOf(cur, f)))
+        .filter(st => st.bytes.exists(_ > 0) && st.rows > 0)
+      val rows = sts.map(_.rows).sum
+      if (rows <= 0) None
+      else {
+        val bytesPerRow = sts.flatMap(_.bytes).sum.toDouble / rows
+        Some(math.max(1L, (target / math.max(bytesPerRow, 1e-9)).toLong))
+      }
+    }
 
   /** The canonicalization rules of [[canonicalizedNamesAt]] as a COLUMN
     * PLAN the DSv2 executors run without a DataFrame: dropped columns
@@ -802,8 +810,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       }
   }
 
-  /** The one APPEND commit: `newFiles` (written under `claimedId` —
-    * by [[appendWith]] driver-side or by the DSv2 executor writers)
+  /** The one APPEND commit: `newFiles` (written under `claimedId` by
+    * the DSv2 executor writers, for [[appendWith]] or a DSv2 write)
     * become one append snapshot on `target`. A lost publish race
     * REBASES (the files re-commit on the new head — an append removes
     * nothing, so it can never conflict), schema compatibility
@@ -929,8 +937,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
     val tombKeys = batch.select((keys ++ tombPartSpecs.map(specSourceCol))
       .map(col): _*).distinct()
-    dropEmptyDataFiles(writeDataFiles(tombKeys, id, suffix = "tomb",
-      partitionCols = tombPartSpecs, head = Some(head)))
+    writeDataFiles(tombKeys, id, suffix = "tomb",
+      partitionCols = tombPartSpecs, head = Some(head))
   }
 
   /** KEYED STREAMING epoch over EXECUTOR-WRITTEN halves: `dataFiles`
@@ -1541,9 +1549,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     case c => c
   }
 
-  /** The declared partition layout from the catalog metadata file
-    * (empty for tables created outside the catalog or laid out flat).
-    */
   /** The declared `bucket(N, col)` entry, if any — the pruner's
     * bucket-dir evidence input.
     */
@@ -1552,6 +1557,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       case LakehouseTable.BucketSpecRe(n, c) => (n.toInt, c)
     }
 
+  /** The declared partition layout from the catalog metadata file
+    * (empty for tables created outside the catalog or laid out flat).
+    */
   private def declaredPartitionSpec: Seq[String] = {
     val metaP = rootPath.resolve("_catalog.json")
     if (Files.exists(metaP))
@@ -1695,8 +1703,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * new files. `(None, None)` commits nothing and returns None.
     * Mutations always run against the HEAD snapshot (never a read
     * pin); the table's hive layout is preserved on both rewrite and
-    * insert, and zero-row files the writer leaves behind stay out of
-    * the manifest.
+    * insert.
     */
   private def sqlMutateOnce(op: String,
       candidatesOf: Snapshot => Seq[String],
@@ -1711,21 +1718,13 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     val id = nextId()
     val partCols = inferPartitionCols(cur.files)
     val rewritten = survivors.map(df =>
-      dropEmptyDataFiles(writeDataFiles(df, id, suffix = "rw", partitionCols = partCols))).getOrElse(Nil)
+      writeDataFiles(df, id, suffix = "rw", partitionCols = partCols)).getOrElse(Nil)
     val added = inserts.map(df =>
-      dropEmptyDataFiles(writeDataFiles(df, id, partitionCols = partCols.filter(pc => df.columns.contains(specSourceCol(pc)))))).getOrElse(Nil)
+      writeDataFiles(df, id, partitionCols = partCols.filter(pc => df.columns.contains(specSourceCol(pc))))).getOrElse(Nil)
     val kept = if (survivors.isDefined) cur.files.diff(candidates) else cur.files
     Some(writeSnapshot(Snapshot(id, Some(cur.snapshotId), System.currentTimeMillis(),
       op, kept ++ rewritten ++ added ++ written, cur.schemaJson, deletes = cur.deletes)))
   }
-
-  /** Writers emit a zero-row part file for empty task partitions of a
-    * tiny frame — keep those out of the manifest (the footers are in
-    * the write-time stats cache, so this costs no extra I/O; the files
-    * themselves fall to snapshot expiry like any unreferenced file).
-    */
-  private def dropEmptyDataFiles(files: Seq[String]): Seq[String] =
-    files.filter(f => footerFileStats(f).forall(_.rows > 0))
 
   /** Create an EMPTY table — schema only, ZERO files, no Spark job
     * (the DSv2 stream bootstrap seed). A file-less snapshot carries the
@@ -1755,8 +1754,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   def overwrite(df: DataFrame): Snapshot = writeLock.synchronized {
     val (head, id) = MainLine.resolve()
-    commitOverwriteFiles(head, id,
-      dropEmptyDataFiles(writeDataFiles(df, id, head = head)), df.schema)
+    commitOverwriteFiles(head, id, writeDataFiles(df, id, head = head), df.schema)
   }
 
   /** Filter-scoped overwrite — `INSERT OVERWRITE t PARTITION (p='x')`,
@@ -3198,8 +3196,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     val partCols = inferPartitionCols(cur.files)
     val rewritten =
       if (affected.isEmpty) Nil
-      else dropEmptyDataFiles(writeDataFiles(
-        scanFiles(cur, affected), id, suffix = "fold", partitionCols = partCols))
+      else writeDataFiles(
+        scanFiles(cur, affected), id, suffix = "fold", partitionCols = partCols)
     Some(writeSnapshot(Snapshot(id, Some(cur.snapshotId),
       System.currentTimeMillis(), "fold",
       cur.files.filterNot(affected.toSet) ++ rewritten, cur.schemaJson)))
@@ -3594,9 +3592,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   @transient private lazy val footerCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[FileStats]]()
 
-  /** Read one parquet footer → FileStats (all top-level primitive
-    * columns in one open). Unreadable footer → None (no evidence).
-    */
   /** One Hadoop conf for every driver-side footer read of this handle:
     * `newHadoopConf()` copies the whole SparkConf into a fresh
     * Configuration per call, and the footer readers only READ it —
@@ -3605,6 +3600,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   @transient private lazy val footerHadoopConf =
     spark.sessionState.newHadoopConf()
 
+  /** Read one parquet footer → FileStats (all top-level primitive
+    * columns in one open). Unreadable footer → None (no evidence).
+    */
   private def footerFileStats(relFile: String): Option[FileStats] =
     footerCache.computeIfAbsent(relFile, { _ =>
       footerOpens.incrementAndGet()
@@ -3730,36 +3728,13 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       case "long" => asLong(probe).map(p => java.lang.Long.compare(statVal.toLong, p))
       case "double" => asDouble(probe).map(p => java.lang.Double.compare(statVal.toDouble, p))
       case "string" if declared.contains(org.apache.spark.sql.types.StringType) =>
-        Some(utf8Compare(
+        Some(InProbes.utf8Cmp(
           statVal.getBytes(java.nio.charset.StandardCharsets.UTF_8),
           String.valueOf(probe).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
       case _ => None
     }
   }
 
-  private def utf8Compare(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
-
-  /** Stats verdict: can `relFile` hold a row with `c` in [lo, hi]?
-    * Manifest stats answer first — a file PRESENT in the snapshot's
-    * stats map never opens its footer (even if the column is missing
-    * there: absence already means "no usable stats"). Only files from
-    * pre-stats manifests fall back to a footer open. Missing stats or
-    * incomparable types keep the file.
-    */
-  /** Stats for one snapshot file: manifest-first, footer fallback for
-    * pre-stats manifests (a file PRESENT in the stats map never opens
-    * its footer — even with the column absent, absence already means
-    * "no usable stats").
-    */
   /** Absolute filesystem path of a root-relative data file (the native
     * batch scan hands these to the parquet reader factory). A FOREIGN
     * absolute entry (a shallow clone's reference) prefers its LOCAL
@@ -3792,15 +3767,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
 
   private[lakehouse] def resolvedNameKey(n: String): String = nameKey(n)
 
-  /** xxhash64(seed 42) of `value` coerced to `dt` — the write-path
-    * bucket hash base ([[LakehouseTable.bucketId]]) and the bloom probe
-    * hash, exposed for bucket-dir pruning (the probe's bucket must be
-    * computed with EXACTLY the layout hash or pruning would wrongly
-    * drop files).
+  /** Stats for one snapshot file: manifest-first, footer fallback for
+    * pre-stats manifests (a file PRESENT in the stats map never opens
+    * its footer — even with the column absent, absence already means
+    * "no usable stats").
     */
-  private[lakehouse] def probeHashOf(value: Any, dt: DataType): Long =
-    probeHash(value, dt)
-
   private def fileStatsOf(snap: Snapshot, relFile: String): Option[FileStats] =
     snap.stats match {
       case Some(m) if m.contains(relFile) => m.get(relFile)
@@ -3814,6 +3785,13 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   private[lakehouse] def fileFullyStamped(snap: Snapshot, relFile: String): Boolean =
     snap.stats.exists(_.get(relFile).exists(_.fids.contains(true)))
 
+  /** Stats verdict: can `relFile` hold a row with `c` in [lo, hi]?
+    * Manifest stats answer first — a file PRESENT in the snapshot's
+    * stats map never opens its footer (even if the column is missing
+    * there: absence already means "no usable stats"). Only files from
+    * pre-stats manifests fall back to a footer open. Missing stats or
+    * incomparable types keep the file.
+    */
   private def statsMayMatch(snap: Snapshot, relFile: String, c: String,
       declared: Option[DataType], lo: Option[Any], hi: Option[Any]): Boolean = {
     fileStatsOf(snap, relFile).flatMap(_.cols.get(nameKey(c))) match {
@@ -3841,8 +3819,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
         val p = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val mn = st.min.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val mx = st.max.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        utf8Compare(mx, p) >= 0 &&
-          (utf8Compare(mn, p) < 0 ||
+        InProbes.utf8Cmp(mx, p) >= 0 &&
+          (InProbes.utf8Cmp(mn, p) < 0 ||
             (mn.length >= p.length && java.util.Arrays.equals(
               java.util.Arrays.copyOf(mn, p.length), p)))
       case _ => true
@@ -3934,9 +3912,12 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * computed DRIVER-SIDE with the same Catalyst expressions the bloom
     * builder's `xxhash64(col)` compiles to — a sub-millisecond metadata
     * step, where a `spark.range(1)` job would pay full job-submission
-    * latency per predicate on the planning path.
+    * latency per predicate on the planning path. It is also the
+    * write-path bucket hash base ([[LakehouseTable.bucketId]]), so
+    * bucket-dir pruning computes a probe's bucket with EXACTLY the
+    * layout hash.
     */
-  private def probeHash(value: Any, dt: DataType): Long = {
+  private[lakehouse] def probeHash(value: Any, dt: DataType): Long = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
     val l = Literal(value)
     val coerced = if (l.dataType == dt) l
@@ -4013,7 +3994,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       case (StringType, "string") =>
         def bytes(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         Some(stats.map(side).reduce((a, b) =>
-          if ((utf8Compare(bytes(a), bytes(b)) < 0) == wantMin) a else b))
+          if ((InProbes.utf8Cmp(bytes(a), bytes(b)) < 0) == wantMin) a else b))
       case _ => None // date/timestamp/decimal/binary: real scan answers
     }
   }
@@ -4079,9 +4060,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
               Some(ScanPredicate.Range(k, Some(mn.toFloat), Some(mx.toFloat)))
             case (StringType, "string") =>
               val mn = xs.map(_.min).reduce((a, b) =>
-                if (utf8Compare(bytes(a), bytes(b)) < 0) a else b)
+                if (InProbes.utf8Cmp(bytes(a), bytes(b)) < 0) a else b)
               val mx = xs.map(_.max).reduce((a, b) =>
-                if (utf8Compare(bytes(a), bytes(b)) < 0) b else a)
+                if (InProbes.utf8Cmp(bytes(a), bytes(b)) < 0) b else a)
               Some(ScanPredicate.Range(k, Some(mn), Some(mx)))
             case _ => None // date/timestamp/decimal/binary: real agg answers
           }
@@ -4417,104 +4398,47 @@ final class LakehouseTable(spark: SparkSession, val root: String,
 
   // ---------------- helpers ----------------
 
-  /** Average on-disk bytes per row of the HEAD snapshot, from manifest
-    * stats alone (files whose stats carry both rows and bytes) — the
-    * zero-I/O estimate size-targeted optimize-write bins with. None
-    * until the table has at least one stats-bearing data file.
-    */
-  private def manifestBytesPerRow(head: Option[Snapshot]): Option[Double] =
-    head.flatMap { cur =>
-      val sts = cur.files.flatMap(f => fileStatsOf(cur, f))
-        .filter(st => st.bytes.exists(_ > 0) && st.rows > 0)
-      val rows = sts.map(_.rows).sum
-      if (rows <= 0) None
-      else Some(sts.flatMap(_.bytes).sum.toDouble / rows)
-    }
-
-  /** Write `df` as parquet under `data/s<id>[-suffix]-w<nonce>/`,
-    * returning the root-relative paths of the files produced
-    * (hive-style `col=value` sub-dirs when `partitionCols` is set).
-    * The per-write nonce makes the directory unique to THIS write
-    * attempt: two processes that both claimed version `id` can never
-    * clobber each other's uncommitted files (the dir name is a label —
-    * the manifest is the truth, and [[originOf]] reads only the digits,
-    * which stay correct under an append rebase because a rebased append
-    * carries no tombstones and masks nothing).
+  /** Write `df` verbatim as parquet under `data/s<id>[-suffix]-w<nonce>/`
+    * through the DSv2 executor writers ([[LakehouseStagingTable]]),
+    * returning the root-relative paths of the files produced (hive
+    * `col=value` / `col_bucket=` sub-dirs when `partitionCols` is set).
+    * Optimize-write clusters the batch on its dir columns; a local sort
+    * on them (the one Spark's own file writer runs) keeps one file per
+    * value per task past the writer's open-file cap. `head` stamps the
+    * field ids and sizes the bins — a branch write's is the BRANCH head.
     */
   private def writeDataFiles(
       df0: DataFrame, id: Long, suffix: String = "",
       partitionCols: Seq[String] = Nil,
-      /** The committed head the write builds on (its field ids stamp,
-        * its manifest sizes the optimize-write bins) — a branch write's
-        * is the BRANCH head.
-        */
       head: Option[Snapshot] = currentSnapshot()): Seq[String] = {
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dirName = (if (suffix.isEmpty) s"s$id" else s"s$id-$suffix") + s"-w$nonce"
-    val outDir = dataDir.resolve(dirName)
-    // a `bucket(N, col)` spec entry lays out by the DERIVED bucket id
-    // (`<col>_bucket=<pmod(xxhash64(col), N)>` dirs — the Iceberg bucket
-    // transform shape): the source column's data stays IN the files,
-    // the dir value is pure layout, and two tables bucketed the same
-    // way join with zero shuffle (storage-partitioned join). The hash
-    // is [[LakehouseTable.bucketId]] — identical on the write path, the
-    // catalog's SQL function, and any future probe.
-    val (df, physCols) = partitionCols.foldLeft((df0, Seq.empty[String])) {
-      case ((d, acc), LakehouseTable.BucketSpecRe(n, c)) =>
-        val dir = s"${c}_bucket"
-        (d.withColumn(dir,
-          pmod(xxhash64(col(c)), lit(n.toInt)).cast("int")), acc :+ dir)
-      case ((d, acc), c) => (d, acc :+ c)
+    val dirs = partitionCols.map {
+      case LakehouseTable.BucketSpecRe(n, c) => pmod(xxhash64(col(c)), lit(n.toInt))
+      case c => col(c)
     }
-    // optimize-write: cluster the batch on its partition columns so
-    // each partition value writes from ONE task (one file per value
-    // per batch, not tasks×values)
-    val clustered =
-      if (optimizeWrite && physCols.nonEmpty)
-        df.repartition(physCols.map(col): _*)
-      else df
-    // FIELD_IDS.md step 1: stamp head-CONFIRMED field ids into the
-    // files (`parquet.field.id` column metadata — Spark's parquet
-    // writer emits the native field-id attribute for schema fields
-    // that carry it). Only ids the committed head already assigned are
-    // stamped: a column THIS commit introduces stays unstamped until
-    // its next rewrite, so a lost-publish rebase can never leave a
-    // file carrying an id the final manifest assigned differently
-    // (ids are write-once). Resolution is still name-based this round;
-    // the stamps are the forward-compat groundwork (and make every
-    // post-round-12 file Iceberg-grade identifiable).
-    val idsByName: Map[String, Int] = head.flatMap(_.fieldIds)
-      .map(_.ids.map { case (n, i) => nameKey(n) -> i })
-      .getOrElse(Map.empty)
-    val stamped =
-      if (idsByName.isEmpty) clustered
-      else clustered.select(clustered.schema.fields.map { f =>
-        idsByName.get(nameKey(f.name)).fold(col(f.name)) { i =>
-          col(f.name).as(f.name,
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata).putLong("parquet.field.id", i.toLong)
-              .build())
-        }
-      }.toIndexedSeq: _*)
-    val writer0 = stamped.write.mode(SaveMode.Overwrite)
-    // size-targeted optimize-write: cap records per output file from
-    // the head manifest's bytes-per-row estimate, so a skewed partition
-    // value bins into ≈targetBytes files instead of one giant one
-    val writer = (if (optimizeWrite) optimizeWriteTargetBytes else None)
-      .flatMap(t => manifestBytesPerRow(head).map(bpr =>
-        math.max(1L, (t / math.max(bpr, 1e-9)).toLong)))
-      .fold(writer0)(n => writer0.option("maxRecordsPerFile", n))
-    (if (physCols.nonEmpty) writer.partitionBy(physCols: _*) else writer)
-      .parquet(outDir.toString)
-    graft.Fs.walkAll(outDir)
-      .filter(p => p.getFileName.toString.startsWith("part-") &&
-        p.toString.endsWith(".parquet"))
-      .map(p => rootPath.relativize(p).toString)
-      .sorted
+    val df =
+      if (dirs.isEmpty) df0
+      else (if (optimizeWrite) df0.repartition(dirs: _*) else df0).sortWithinPartitions(dirs: _*)
+    val stage = Dsv2CommitMode.Stage(this, id, suffix, partitionCols, head)
+    org.apache.spark.sql.GraftDatasetAccess.ofRows(spark,
+      org.apache.spark.sql.catalyst.plans.logical.AppendData.byPosition(
+        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+          new LakehouseStagingTable(df.schema, stage), None, None),
+        df.queryExecution.analyzed))
+    stage.written
   }
 }
 
 object LakehouseTable {
+  /** The claim dir of a write of version `id`: `s<id>[-tag]-w<nonce>`.
+    * The digits record the origin ([[originOf]] reads only them; they
+    * stay correct under an append rebase, which masks nothing), and the
+    * per-write nonce makes the dir unique to THIS write attempt, so two
+    * claimants of one id never clobber each other's uncommitted files.
+    */
+  private[lakehouse] def claimDirName(id: Long, tag: String): String =
+    (if (tag.isEmpty) s"s$id" else s"s$id-$tag") +
+      s"-w${java.util.UUID.randomUUID().toString.take(8)}"
+
   /** `bucket(N, col)` partition-spec entry (whitespace-tolerant). */
   private[lakehouse] val BucketSpecRe =
     """(?i)bucket\(\s*([0-9]+)\s*,\s*([^)\s]+)\s*\)""".r

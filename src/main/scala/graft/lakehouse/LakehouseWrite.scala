@@ -9,6 +9,7 @@ import org.apache.spark.sql.{SparkSession, functions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection, XxHash64Function}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.write._
@@ -42,6 +43,22 @@ final case class LakehouseWriteMessage(files: Seq[String], ddl: Seq[String],
 final case class WriteColPlan(inputIdx: Int, name: String,
     from: DataType, to: DataType, fieldId: Option[Int])
 
+object WriteColPlan {
+  /** A batch written VERBATIM (no declared-type casts, no alias
+    * canonicalization), stamping the field ids `head` already assigned,
+    * by name (the Iceberg REPLACE TABLE identity rule): a full
+    * overwrite's plan, and every table-API write's.
+    */
+  def verbatim(head: Option[Snapshot], schema: StructType): Seq[WriteColPlan] = {
+    def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+    val ids = head.flatMap(_.fieldIds).map(_.ids.map { case (n, i) => key(n) -> i })
+      .getOrElse(Map.empty)
+    schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      WriteColPlan(i, f.name, f.dataType, f.dataType, ids.get(key(f.name)))
+    }
+  }
+}
+
 /** A partition-spec entry resolved against the column plan: identity
   * (`col=value` dir, column stripped from the file) or bucket
   * (`col_bucket=<pmod(xxhash64(col),n)>` dir, source column kept).
@@ -66,17 +83,26 @@ object Dsv2CommitMode {
     */
   final case class Keyed(keys: Seq[String], mergeOnRead: Boolean)
       extends Dsv2CommitMode
+  /** A table-API data write (`LakehouseTable.writeDataFiles`): the
+    * batch lands verbatim under claim dir `s<id>[-suffix]-w<nonce>`,
+    * ids stamped and bins sized from `head`. Nothing publishes: the
+    * files come back through `written`.
+    */
+  final case class Stage(table: LakehouseTable, id: Long, suffix: String,
+      partitionCols: Seq[String], head: Option[Snapshot]) extends Dsv2CommitMode {
+    @volatile private[lakehouse] var written: Seq[String] = Nil
+    override def toString: String = s"Stage(${table.root}, $id, $suffix)"
+  }
 }
 
-/** The DSv2 WRITE FACE (round 14): executor-side parquet writers + a
-  * metadata-only driver commit — replacing the V1Write bridge for the
-  * append shapes.
+/** The DSv2 WRITE FACE: executor-side parquet writers + a
+  * metadata-only driver commit — the ONE data-file writer, table-API
+  * writes included ([[Dsv2CommitMode.Stage]]).
   *
   *  - BATCH (`INSERT INTO` a catalog table, `df.writeTo(...).append()`):
   *    [[createBatchWriterFactory]] claims a data dir against the head,
   *    each task writes its partitions' rows DIRECTLY as parquet (Spark's
-  *    own `ParquetWriteSupport`, so files are byte-compatible with the
-  *    `df.write` path — field-id stamps included), and
+  *    own `ParquetWriteSupport`, field-id stamps included), and
   *    [[commit(Array*]] publishes ONE snapshot referencing the
   *    executor-written files, with the same cross-process rebase loop
   *    as every other append. N partitions = N writers in parallel, one
@@ -133,13 +159,18 @@ private[lakehouse] final class LakehouseDsv2Write(
 
   private def spark = SparkSession.active
 
-  private def table() = new LakehouseTable(spark, root,
-    optimizeWrite = LakehouseSource.boolOpt(writeOpts, "optimizeWrite"),
-    optimizeWriteTargetBytes =
-      LakehouseSource.longOptOf(writeOpts, "optimizeWriteTargetBytes"))
+  private def table() = mode match {
+    case s: Dsv2CommitMode.Stage => s.table
+    case _ => new LakehouseTable(spark, root,
+      optimizeWrite = LakehouseSource.boolOpt(writeOpts, "optimizeWrite"),
+      optimizeWriteTargetBytes =
+        LakehouseSource.longOptOf(writeOpts, "optimizeWriteTargetBytes"))
+  }
 
-  private val partSpec: Seq[String] =
-    LakehouseSource.colListOf(writeOpts, "partitionBy")
+  private val partSpec: Seq[String] = mode match {
+    case s: Dsv2CommitMode.Stage => s.partitionCols
+    case _ => LakehouseSource.colListOf(writeOpts, "partitionBy")
+  }
 
   // a nested merge-on-read key fails here, at planning — before any
   // executor writes a staged file
@@ -162,7 +193,7 @@ private[lakehouse] final class LakehouseDsv2Write(
   /** optimize-write as a DSv2 required distribution: cluster the write
     * by its partition columns (bucket entries cluster by their SOURCE
     * column) so each partition value lands from one task — the
-    * declarative form of the V1 path's repartition.
+    * declarative form of the table API's repartition.
     */
   override def requiredDistribution(): Distribution =
     if (LakehouseSource.boolOpt(writeOpts, "optimizeWrite") && partSpec.nonEmpty)
@@ -216,19 +247,15 @@ private[lakehouse] final class LakehouseDsv2Write(
       if (!declared.fieldNames.exists(_.equalsIgnoreCase("_change")))
         t.addColumns(Seq(StructField("_change", StringType, nullable = true)))
     }
-    val head = t.currentSnapshot()
+    val head = mode match {
+      case s: Dsv2CommitMode.Stage => s.head
+      case _ => t.currentSnapshot()
+    }
     val plan = mode match {
-      case Dsv2CommitMode.Truncate =>
-        // a full overwrite REPLACES content and schema — the batch is
-        // written verbatim (no declared-type casts, no alias
-        // canonicalization), inheriting field ids by name like the V1
-        // overwrite (the Iceberg REPLACE TABLE identity rule)
-        val ids = head.flatMap(_.fieldIds).map(_.ids.map { case (n, i) =>
-          n.toLowerCase(java.util.Locale.ROOT) -> i }).getOrElse(Map.empty)
-        querySchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-          WriteColPlan(i, f.name, f.dataType, f.dataType,
-            ids.get(f.name.toLowerCase(java.util.Locale.ROOT)))
-        }
+      // a full overwrite REPLACES content and schema, and a staged
+      // table-API batch arrives canonicalized: both write verbatim
+      case Dsv2CommitMode.Truncate | _: Dsv2CommitMode.Stage =>
+        WriteColPlan.verbatim(head, querySchema)
       case _ =>
         t.writeColumnPlan(head, querySchema,
           // DDL-mode files skip id stamps: a drop-then-re-add DDL in
@@ -240,7 +267,8 @@ private[lakehouse] final class LakehouseDsv2Write(
     val batchSchema = StructType(plan.map(p =>
       StructField(p.name, p.to, nullable = true)))
     mode match {
-      case Dsv2CommitMode.Truncate => () // replace: any schema is legal
+      // replace: any schema is legal; staged: the caller checked it
+      case Dsv2CommitMode.Truncate | _: Dsv2CommitMode.Stage => ()
       case Dsv2CommitMode.OverwriteBy(_) =>
         // a row-set overwrite keeps the snapshot schema, so the batch
         // must CONFORM exactly (the V1 requireDeclaredTypes rule; the
@@ -260,7 +288,10 @@ private[lakehouse] final class LakehouseDsv2Write(
       case _ =>
         t.requireCompatibleSchemaFor(head, batchSchema) // fail at job start, not commit
     }
-    val (claimed, dirName) = t.claimWriteDir("dsv2")
+    val (claimed, dirName) = mode match {
+      case s: Dsv2CommitMode.Stage => (s.id, LakehouseTable.claimDirName(s.id, s.suffix))
+      case _ => t.claimWriteDir("dsv2")
+    }
     staged = (claimed, batchSchema)
     def keyOf(n: String) = n.toLowerCase(java.util.Locale.ROOT)
     val byKey = plan.zipWithIndex.map { case (p, i) => keyOf(p.name) -> i }.toMap
@@ -309,8 +340,13 @@ private[lakehouse] final class LakehouseDsv2Write(
       ddlMode, if (ddlMode || cdcStream) idxOf("_change") else -1,
       if (ddlMode) idxOf("_ddl") else -1,
       // size-targeted optimize-write: roll files at ≈targetBytes
-      maxRecordsPerFile = t.writeBinRecordsPerFile,
-      keyIdxs = keyIdxs)
+      maxRecordsPerFile = t.writeRecordCap(head),
+      keyIdxs = keyIdxs,
+      // a staged batch arrives sorted by its dirs (writeDataFiles), so
+      // a file closes when its value ends — Spark's own file writer's
+      // discipline, one buffered row group per task
+      maxOpenWriters = if (mode.isInstanceOf[Dsv2CommitMode.Stage]) 1
+        else LakehouseDataWriter.MaxOpenWriters)
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
@@ -343,6 +379,7 @@ private[lakehouse] final class LakehouseDsv2Write(
     val files = filesOf(messages)
     val t = table()
     mode match {
+      case s: Dsv2CommitMode.Stage => s.written = files
       case Dsv2CommitMode.Append =>
         t.commitWrittenFiles(files, batchSchema, claimed,
           mark = None, targetAuthoritative = false)
@@ -373,24 +410,6 @@ private[lakehouse] final class LakehouseDsv2Write(
       messages.toSeq.collect { case m: LakehouseWriteMessage => m.files }.flatten)
   }
 
-  /** STREAMING commit — the offset-aware half: the data files commit
-    * UNDER the epoch's transaction mark, an absorbed replay (crash
-    * between the table commit and the checkpoint commit) discards its
-    * files and warns on the reset-checkpoint shape — exactly the V1
-    * sink's contract.
-    *
-    * A DDL-CARRYING epoch (the schema-channel records rode the commit
-    * messages — one pass, no whole-batch cache) applies the records
-    * first, idempotently, then lands its data through the DRIVER-side
-    * append: the staged files re-read, re-canonicalized against the
-    * POST-DDL schema (a rename record plus data still under the
-    * stream's pinned OLD name must land in the renamed column — the
-    * alias mapping only exists after the DDL applies, so the
-    * executor-written files' names can be stale in either direction),
-    * and written once more. DDL epochs are rare (schema changes, not
-    * data volume), so the double-write is bounded by change frequency;
-    * every DDL-free epoch commits the executor files directly.
-    */
   /** The batch reconstructed from staged parquet halves (driver
     * fallback for DDL-carrying epochs): basePath restores identity-
     * partition columns, explicit casts pin path-inferred types to the
@@ -546,6 +565,24 @@ private[lakehouse] final class LakehouseDsv2Write(
     }
   }
 
+  /** STREAMING commit — the offset-aware half: the data files commit
+    * UNDER the epoch's transaction mark, an absorbed replay (crash
+    * between the table commit and the checkpoint commit) discards its
+    * files and warns on the reset-checkpoint shape — exactly the V1
+    * sink's contract.
+    *
+    * A DDL-CARRYING epoch (the schema-channel records rode the commit
+    * messages — one pass, no whole-batch cache) applies the records
+    * first, idempotently, then lands its data through the DRIVER-side
+    * append: the staged files re-read, re-canonicalized against the
+    * POST-DDL schema (a rename record plus data still under the
+    * stream's pinned OLD name must land in the renamed column — the
+    * alias mapping only exists after the DDL applies, so the
+    * executor-written files' names can be stale in either direction),
+    * and written once more. DDL epochs are rare (schema changes, not
+    * data volume), so the double-write is bounded by change frequency;
+    * every DDL-free epoch commits the executor files directly.
+    */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val t = table()
     val (claimed, batchSchema) = staged
@@ -621,6 +658,25 @@ private[lakehouse] final class LakehouseDsv2Write(
     abort(messages)
 }
 
+/** A table-API write as a DSv2 table: [[LakehouseTable.writeDataFiles]]
+  * plans an `AppendData` over it (by position, no cast: the schema is
+  * the batch's), so the batch runs the executor writers in the `stage`
+  * mode under Spark's commit coordinator, like any V2 write.
+  */
+private[lakehouse] final class LakehouseStagingTable(
+    batchSchema: StructType, stage: Dsv2CommitMode.Stage)
+    extends Table with SupportsWrite {
+  override def name(): String = s"graft_lakehouse_stage:${stage.table.root}@${stage.id}"
+  override def schema(): StructType = batchSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_WRITE)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder {
+      override def build(): Write =
+        new LakehouseDsv2Write(stage.table.root, Map.empty, info.schema(), stage)
+    }
+}
+
 /** Serializable task-side writer factory: everything a task needs to
   * write canonical parquet into the claimed dir with zero driver
   * round-trips.
@@ -631,14 +687,15 @@ private[lakehouse] final class LakehouseWriterFactory(
     tz: String, parquetConf: Map[String, String], codec: String,
     ddlMode: Boolean, changeIdx: Int, ddlIdx: Int,
     maxRecordsPerFile: Option[Long] = None,
-    keyIdxs: Seq[Int] = Nil)
+    keyIdxs: Seq[Int] = Nil,
+    maxOpenWriters: Int = LakehouseDataWriter.MaxOpenWriters)
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     LakehouseWriteStats.writersCreated.incrementAndGet()
     new LakehouseDataWriter(rootAbs, dirName, plan, partCols, tz,
       parquetConf, codec, ddlMode, changeIdx, ddlIdx, partitionId, taskId,
-      maxRecordsPerFile, keyIdxs)
+      maxRecordsPerFile, keyIdxs, maxOpenWriters)
   }
 
   override def createWriter(partitionId: Int, taskId: Long,
@@ -658,8 +715,8 @@ object LakehouseWriteStats {
   * partition name; bucket dirs via THE layout hash), projects the
   * canonical file columns (case-canonical names, widening casts,
   * field-id stamps), and streams them through Spark's
-  * `ParquetWriteSupport` — the files are indistinguishable from the
-  * V1 path's. DDL-channel rows divert into the commit message.
+  * `ParquetWriteSupport`. A file opens on its first row, so an empty
+  * task writes none. DDL-channel rows divert into the commit message.
   */
 private[lakehouse] final class LakehouseDataWriter(
     rootAbs: String, dirName: String,
@@ -668,7 +725,8 @@ private[lakehouse] final class LakehouseDataWriter(
     ddlMode: Boolean, changeIdx: Int, ddlIdx: Int,
     partitionId: Int, taskId: Long,
     maxRecordsPerFile: Option[Long] = None,
-    keyIdxs: Seq[Int] = Nil)
+    keyIdxs: Seq[Int] = Nil,
+    maxOpenWriters: Int = LakehouseDataWriter.MaxOpenWriters)
     extends DataWriter[InternalRow] {
 
   /** Keyed-stream split mode (round 15): data rows land in the data
@@ -691,7 +749,7 @@ private[lakehouse] final class LakehouseDataWriter(
     keyed && (p.name.equalsIgnoreCase("_change") || p.name.equalsIgnoreCase("_ddl"))
 
   /** File columns = the plan minus identity partition columns (their
-    * values live in the path, the hive layout writeDataFiles produces).
+    * values live in the path, the hive layout).
     */
   private val fileCols: Seq[WriteColPlan] =
     plan.zipWithIndex.collect {
@@ -712,10 +770,16 @@ private[lakehouse] final class LakehouseDataWriter(
     })
 
   // per-task key dedup (insertion-ordered for deterministic files):
-  // batch-sized key tuples — the same volume the V1 path's driver-side
-  // `touchedKeys.distinct()` materializes
-  private val tombKeys = mutable.LinkedHashSet.empty[InternalRow]
+  // batch-sized key tuples, tomb keys per tomb partition dir
+  private val tombKeys =
+    mutable.LinkedHashMap.empty[String, mutable.LinkedHashSet[InternalRow]]
   private val delKeys = mutable.LinkedHashSet.empty[InternalRow]
+
+  /** The `-tomb` key files' hive layout — the table API tombstone's
+    * rule: the partition entries whose source column is not a key.
+    */
+  private val tombPartIdx: Seq[Int] =
+    partCols.indices.filterNot(j => keyIdxs.contains(partCols(j).planIdx))
 
   private val fileSchema: StructType = StructType(fileCols.map { p =>
     val md = p.fieldId.fold(org.apache.spark.sql.types.Metadata.empty) { id =>
@@ -736,7 +800,7 @@ private[lakehouse] final class LakehouseDataWriter(
     case WritePartCol(i, Some(n)) =>
       val p = plan(i)
       val dir = s"${p.name}_bucket"
-      // CAST-then-hash, like the V1 layout: the input row holds the
+      // CAST-then-hash, [[LakehouseTable.bucketId]]: the input row holds the
       // QUERY type, so reading it with the widened declared type would
       // zero-extend negative ints (UnsafeRow) or throw (generic rows)
       // and land rows in the wrong bucket dir (ADVICE r14)
@@ -746,7 +810,7 @@ private[lakehouse] final class LakehouseDataWriter(
       }))
       row => {
         // xxhash64(NULL) leaves the seed untouched — the exact
-        // pmod(xxhash64(col), n) the V1 layout writes
+        // pmod(xxhash64(col), n) of the SQL bucket function
         val w = widen(row)
         val h = if (w.isNullAt(0)) 42L
           else XxHash64Function.hash(w.get(0, p.to), p.to, 42L)
@@ -795,16 +859,16 @@ private[lakehouse] final class LakehouseDataWriter(
       conf, new HPath(rootAbs + "/" + rel), codecName)
   }
 
-  /** Flush a deduped key set to ONE parquet key file in a SIBLING
-    * claim dir (`<dirName>-<kind>` — same path-derived origin id as
-    * the data files, so MoR masking stays strictly-older). None for
-    * an empty set.
+  /** Flush a deduped key set to ONE parquet key file under partition
+    * dir `dir` of a SIBLING claim dir (`<dirName>-<kind>` — same
+    * path-derived origin id as the data files, so MoR masking stays
+    * strictly-older). None for an empty set.
     */
-  private def writeKeyFile(kind: String,
+  private def writeKeyFile(kind: String, dir: String,
       rows: Iterable[InternalRow]): Option[String] = {
     if (rows.isEmpty) None
     else {
-      val rel = s"data/$dirName-$kind" +
+      val rel = s"data/$dirName-$kind" + (if (dir.isEmpty) "" else "/" + dir) +
         f"/part-$partitionId%05d-$taskId-$nonce-k.parquet"
       val rw = openParquet(rel, keySchema)
       rows.foreach(rw.write(null, _))
@@ -819,32 +883,31 @@ private[lakehouse] final class LakehouseDataWriter(
       if (!row.isNullAt(ddlIdx)) ddl += row.getUTF8String(ddlIdx).toString
       return
     }
-    if (cdc) {
-      // the V1 applyChanges tag contract, enforced at the row: unknown
-      // tags (a typo, another dialect's "update_postimage") and NULL
-      // must fail LOUDLY — falling through would silently corrupt the
-      // replica (this feed speaks insert|delete; updates arrive as
-      // delete(old)+insert(new))
-      val tag = if (row.isNullAt(changeIdx)) null
-        else row.getUTF8String(changeIdx).toString
-      require(tag == "insert" || tag == "delete",
-        s"applyChanges: unsupported _change tag '${if (tag == null) "NULL" else tag}' " +
-          "(this feed speaks insert|delete; updates arrive as delete(old)+insert(new))")
+    // the applyChanges tag contract, enforced at the row: unknown tags
+    // (a typo, another dialect's "update_postimage") and NULL must fail
+    // LOUDLY — falling through would silently corrupt the replica (this
+    // feed speaks insert|delete; updates arrive as delete(old)+insert(new))
+    val tag = if (!cdc || row.isNullAt(changeIdx)) null
+      else row.getUTF8String(changeIdx).toString
+    require(!cdc || tag == "insert" || tag == "delete",
+      s"applyChanges: unsupported _change tag '${if (tag == null) "NULL" else tag}' " +
+        "(this feed speaks insert|delete; updates arrive as delete(old)+insert(new))")
+    val dirs = partRender.map(_(row))
+    if (keyed) {
       // contains() probes with the projection's REUSED row (value-based
       // UnsafeRow equality); only a fresh tuple pays the copy
       val k0 = keyProj(row)
-      val k = if (tombKeys.contains(k0)) k0 else {
-        val c = k0.copy(); tombKeys += c; c
+      val set = tombKeys.getOrElseUpdate(tombPartIdx.map(dirs).mkString("/"),
+        mutable.LinkedHashSet.empty[InternalRow])
+      val k = if (set.contains(k0)) k0 else {
+        val c = k0.copy(); set += c; c
       }
       if (tag == "delete") {
         if (!delKeys.contains(k)) delKeys += (if (k eq k0) k.copy() else k)
         return // delete rows carry keys only — never data
       }
-    } else if (keyed) {
-      val k0 = keyProj(row)
-      if (!tombKeys.contains(k0)) { tombKeys += k0.copy(); () }
     }
-    val suffix = if (partRender.isEmpty) "" else partRender.map(_(row)).mkString("/")
+    val suffix = if (dirs.isEmpty) "" else dirs.mkString("/")
     // bound OPEN writers: an unclustered task spanning many partition
     // values would otherwise hold a parquet buffer set per value (the
     // 100 TB date-partitioned-append OOM). True LRU: a hit REMOVES and
@@ -855,7 +918,7 @@ private[lakehouse] final class LakehouseDataWriter(
     // a new file — bounded memory for a few extra small files, and
     // optimizeWrite clustering avoids the spread entirely
     val w = open.remove(suffix).getOrElse {
-      if (open.size >= LakehouseDataWriter.MaxOpenWriters) {
+      if (open.size >= maxOpenWriters) {
         val (oldSuffix, oldW) = open.head
         oldW._2.close(null)
         closed += oldW._1
@@ -880,8 +943,8 @@ private[lakehouse] final class LakehouseDataWriter(
   override def commit(): WriterCommitMessage = {
     open.values.foreach(_._2.close(null))
     LakehouseWriteMessage(closed.toSeq ++ open.values.map(_._1).toSeq, ddl.toSeq,
-      tombFiles = writeKeyFile("tomb", tombKeys).toSeq,
-      delFiles = writeKeyFile("del", delKeys).toSeq)
+      tombFiles = tombKeys.toSeq.flatMap { case (dir, ks) => writeKeyFile("tomb", dir, ks) },
+      delFiles = writeKeyFile("del", "", delKeys).toSeq)
   }
 
   override def abort(): Unit = {

@@ -128,11 +128,14 @@ class KeyedFacesSpec extends SparkSpec {
   }
 
   test("a DSv2 merge-on-read tombstone follows the hive layout, as the table API's does") {
-    // both faces write the tombstone through one writer: the batch
-    // carries the partition column, so the tombstone lands under rk=
+    // every face writes the tombstone under one rule: the batch carries
+    // the partition column, so the tombstone lands under rk=
     val (name, root) = seeded(hive = true)
     upsertBatch.writeTo(name).option("keys", "k").option("mergeOnRead", "true").append()
     val dsv2 = new LakehouseTable(spark, root)
+    val (_, streamRoot) = seeded(hive = true)
+    streamEpoch(upsertBatch, streamRoot, mor = true, hive = true)
+    val stream = new LakehouseTable(spark, streamRoot)
     val (_, apiRoot) = seeded(hive = true)
     val api = new LakehouseTable(spark, apiRoot)
     api.upsert(upsertBatch, Seq("k"), mergeOnRead = true)
@@ -141,6 +144,8 @@ class KeyedFacesSpec extends SparkSpec {
     assert(layoutOf(api) === Seq(Seq("rk=even")))
     assert(layoutOf(dsv2) === layoutOf(api),
       s"DSv2 tombstone ${dsv2.currentSnapshot().get.tombstones} lands outside the hive layout")
-    assert(rowsOf(dsv2.read()) === upserted && rowsOf(api.read()) === upserted)
+    assert(layoutOf(stream) === layoutOf(api),
+      s"DSv2 stream tombstone ${stream.currentSnapshot().get.tombstones} lands outside the hive layout")
+    Seq(dsv2, stream, api).foreach(t => assert(rowsOf(t.read()) === upserted, t.root))
   }
 }

@@ -584,4 +584,42 @@ class LakehouseWriteSpec extends SparkSpec {
     assert(t.currentSnapshot().get.stats.exists(_.get(file).exists(_.cols.nonEmpty)))
     spark.sql(s"DROP TABLE $cat.db.stamped")
   }
+
+  /** Rows in one written parquet file, from its footer. */
+  private def footerRows(path: java.nio.file.Path): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path.toString), new org.apache.hadoop.conf.Configuration()))
+    try r.getRecordCount finally r.close()
+  }
+
+  test("a table-API append whose first task is empty writes one file and no zero-row file or _SUCCESS") {
+    val root = tmpDir("lw-empty-task")
+    val t = new LakehouseTable(spark, root)
+    // four tasks; the one row lands in the last, so task 0 is empty
+    val snap = t.append(spark.range(0, 1, 1, 4).toDF("id"))
+    assert(snap.files.size === 1, s"one row must commit one file: ${snap.files}")
+    assert(footerRows(java.nio.file.Paths.get(root, snap.files.head)) === 1L)
+    val claimDir = java.nio.file.Paths.get(root, LakehouseTable.claimDirOf(snap.files.head))
+    val onDisk = graft.Fs.walkAll(claimDir).filter(java.nio.file.Files.isRegularFile(_))
+    assert(!onDisk.exists(_.getFileName.toString == "_SUCCESS"), s"_SUCCESS written: $onDisk")
+    val parts = onDisk.filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(parts.size === 1 && parts.forall(footerRows(_) > 0),
+      s"the claim dir holds a zero-row part file: $parts")
+  }
+
+  test("compact to one task over 100 interleaved identity-partition values lands one file per value") {
+    val root = tmpDir("lw-compact-100")
+    val t = new LakehouseTable(spark, root)
+    // flat files whose rows cycle through every value, so the one
+    // compaction task meets the 100 values interleaved
+    val df = spark.range(0, 2000, 1, 4).select(col("id"), (col("id") % 100).as("p"))
+    t.append(df)
+    t.append(df)
+    t.setPartitionSpec(Seq("p"))
+    val snap = t.compact(fileThreshold = 1, maxRows = Long.MaxValue, targetFiles = 1).get
+    assert(snap.files.size === 100, s"${snap.files.size} files for 100 partition values")
+    assert(snap.files.map(f => LakehouseTable.hiveSegsOf(f).toSeq).distinct.size === 100)
+    assert(t.read().collect().length === 4000)
+  }
 }
