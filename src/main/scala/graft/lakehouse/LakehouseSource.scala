@@ -6,8 +6,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{SortOrder, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, TableScan}
@@ -755,9 +757,13 @@ private[lakehouse] final class LakehouseV2Table(
             LakehouseSource.rootOf(options), writeOpts, info.schema(), mode)
         }
         // the PATH face: batch inserts dispatch like `df.write.save`,
-        // streams ride the DSv2 face (append- or keyed-shaped only)
+        // streams ride the DSv2 face (append- or keyed-shaped only),
+        // sorted by the layout this Write requests
         val root = LakehouseSource.rootOf(options)
-        new org.apache.spark.sql.connector.write.V1Write {
+        new org.apache.spark.sql.connector.write.V1Write with RequiresDistributionAndOrdering {
+          override def requiredDistribution(): Distribution = Distributions.unspecified()
+          override def requiredOrdering(): Array[SortOrder] =
+            LakehouseDsv2Write.layoutOrdering(LakehouseSource.colListOf(writeOpts, "partitionBy"))
           override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
             new org.apache.spark.sql.sources.InsertableRelation {
               override def insert(data: DataFrame, overwrite: Boolean): Unit =

@@ -4402,22 +4402,22 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * through the DSv2 executor writers ([[LakehouseStagingTable]]),
     * returning the root-relative paths of the files produced (hive
     * `col=value` / `col_bucket=` sub-dirs when `partitionCols` is set).
-    * Optimize-write clusters the batch on its dir columns; a local sort
-    * on them (the one Spark's own file writer runs) keeps one file per
-    * value per task past the writer's open-file cap. `head` stamps the
-    * field ids and sizes the bins — a branch write's is the BRANCH head.
+    * Optimize-write clusters the batch on its dir columns. The ordering
+    * comes from the write ([[LakehouseDsv2Write.layoutOrdering]]): each
+    * task meets an identity value's rows together and keeps one open
+    * file per bucket dir of it. `head` stamps the field ids and sizes
+    * the bins — a branch write's is the BRANCH head.
     */
   private def writeDataFiles(
       df0: DataFrame, id: Long, suffix: String = "",
       partitionCols: Seq[String] = Nil,
       head: Option[Snapshot] = currentSnapshot()): Seq[String] = {
-    val dirs = partitionCols.map {
-      case LakehouseTable.BucketSpecRe(n, c) => pmod(xxhash64(col(c)), lit(n.toInt))
-      case c => col(c)
-    }
     val df =
-      if (dirs.isEmpty) df0
-      else (if (optimizeWrite) df0.repartition(dirs: _*) else df0).sortWithinPartitions(dirs: _*)
+      if (!optimizeWrite || partitionCols.isEmpty) df0
+      else df0.repartition(partitionCols.map {
+        case LakehouseTable.BucketSpecRe(n, c) => pmod(xxhash64(col(c)), lit(n.toInt))
+        case c => col(c)
+      }: _*)
     val stage = Dsv2CommitMode.Stage(this, id, suffix, partitionCols, head)
     org.apache.spark.sql.GraftDatasetAccess.ofRows(spark,
       org.apache.spark.sql.catalyst.plans.logical.AppendData.byPosition(

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection, XxHash64Function}
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
+import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
@@ -102,7 +102,8 @@ object Dsv2CommitMode {
   *  - BATCH (`INSERT INTO` a catalog table, `df.writeTo(...).append()`):
   *    [[createBatchWriterFactory]] claims a data dir against the head,
   *    each task writes its partitions' rows DIRECTLY as parquet (Spark's
-  *    own `ParquetWriteSupport`, field-id stamps included), and
+  *    own `ParquetWriteSupport`, field-id stamps included; sorted by
+  *    identity partition value, [[requiredOrdering]]), and
   *    [[commit(Array*]] publishes ONE snapshot referencing the
   *    executor-written files, with the same cross-process rebase loop
   *    as every other append. N partitions = N writers in parallel, one
@@ -203,7 +204,8 @@ private[lakehouse] final class LakehouseDsv2Write(
       }.toArray)
     else Distributions.unspecified()
 
-  override def requiredOrdering(): Array[SortOrder] = Array.empty
+  override def requiredOrdering(): Array[SortOrder] =
+    LakehouseDsv2Write.layoutOrdering(partSpec)
 
   /** (claimed snapshot id, the batch's canonical logical schema) of the
     * factory most recently created — commit consumes it. Streaming
@@ -341,12 +343,7 @@ private[lakehouse] final class LakehouseDsv2Write(
       if (ddlMode) idxOf("_ddl") else -1,
       // size-targeted optimize-write: roll files at ≈targetBytes
       maxRecordsPerFile = t.writeRecordCap(head),
-      keyIdxs = keyIdxs,
-      // a staged batch arrives sorted by its dirs (writeDataFiles), so
-      // a file closes when its value ends — Spark's own file writer's
-      // discipline, one buffered row group per task
-      maxOpenWriters = if (mode.isInstanceOf[Dsv2CommitMode.Stage]) 1
-        else LakehouseDataWriter.MaxOpenWriters)
+      keyIdxs = keyIdxs)
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
@@ -456,27 +453,26 @@ private[lakehouse] final class LakehouseDsv2Write(
       }.toSeq: _*)
     }
 
-  /** Target-authoritative column drop (the V1 sink rule): a batch
-    * column the post-DDL target doesn't declare — and no alias
-    * explains — was dropped by the history; additive re-entry would
-    * diverge the replica. `_change` always survives (op channel).
+  /** The target-authoritative column rule (the V1 sink's): a batch
+    * column the target's head doesn't declare — and no alias explains —
+    * was dropped by the history; additive re-entry would diverge the
+    * replica. `_change` always survives (op channel); a snapshot-less
+    * target keeps every column.
     */
-  private def conformToTarget(t: LakehouseTable,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val keep: String => Boolean = t.currentSnapshot() match {
+  private def targetKeeps(t: LakehouseTable): String => Boolean =
+    t.currentSnapshot() match {
       case Some(s) =>
-        val declared = org.apache.spark.sql.types.DataType
-          .fromJson(s.schemaJson).asInstanceOf[StructType]
-          .fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-        val aliases = s.aliases.flatMap { case (_, olds) =>
-          olds.map(_.name.toLowerCase(java.util.Locale.ROOT)) }.toSet
-        c => c == "_change" ||
-          declared(c.toLowerCase(java.util.Locale.ROOT)) ||
-          aliases(c.toLowerCase(java.util.Locale.ROOT))
+        def lc(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+        val declared = DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
+          .fieldNames.map(lc).toSet
+        val aliases = s.aliases.flatMap { case (_, olds) => olds.map(o => lc(o.name)) }.toSet
+        c => c == "_change" || declared(lc(c)) || aliases(lc(c))
       case None => _ => true
     }
-    df.columns.filterNot(keep).foldLeft(df)((d, c) => d.drop(c))
-  }
+
+  private def conformToTarget(t: LakehouseTable,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.drop(df.columns.filterNot(targetKeeps(t)).toSeq: _*)
 
   /** Does any schema-channel record rename/drop/retype/add a column
     * name the staged files carry? When NOT (the common rename-
@@ -521,16 +517,9 @@ private[lakehouse] final class LakehouseDsv2Write(
     // diverge the replica (the V1 sink conformed every batch this way)
     val dataSchema =
       if (!schemaChannel) dataSchema0
-      else t.currentSnapshot() match {
-        case Some(s) =>
-          val declared = DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-            .fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-          val aliases = s.aliases.flatMap { case (_, olds) =>
-            olds.map(_.name.toLowerCase(java.util.Locale.ROOT)) }.toSet
-          StructType(dataSchema0.filter(f =>
-            declared(f.name.toLowerCase(java.util.Locale.ROOT)) ||
-              aliases(f.name.toLowerCase(java.util.Locale.ROOT))))
-        case None => dataSchema0
+      else {
+        val keep = targetKeeps(t)
+        StructType(dataSchema0.filter(f => keep(f.name)))
       }
     val cdcShape = querySchema.fieldNames.exists(_.equalsIgnoreCase("_change"))
     // ORTHOGONAL DDL epochs (no record touches a column the staged
@@ -615,28 +604,22 @@ private[lakehouse] final class LakehouseDsv2Write(
         ddl.foreach(t.applySchemaChange)
         // ORTHOGONALITY ([[ddlTouches]]): a non-touching epoch commits
         // its executor files directly and skips the driver re-write
-        val ddlTouchesBatch = ddlTouches(ddl, batchSchema)
-        val out =
-          if (files.isEmpty)
-            t.commitWrittenFiles(Nil, batchSchema, claimed,
-              mark = Some(TxnMark(appId, epochId)), targetAuthoritative = true)
-          else if (!ddlTouchesBatch)
-            t.commitWrittenFiles(files, batchSchema, claimed,
-              mark = Some(TxnMark(appId, epochId)), targetAuthoritative = true)
-          else {
-            // readStaged pins path-inferred identity-partition types
-            // back to the staged batch schema (a digit-only string
-            // partition value re-infers numeric, and appendIdempotent's
-            // compatibility check would then wedge the epoch on every
-            // retry); conformToTarget applies the V1 sink's target-
-            // authoritative column drop over the post-DDL head
-            val conformed = conformToTarget(t, readStaged(t, files, batchSchema))
-            val res = t.appendIdempotent(conformed, appId, epochId,
-              partitionBy = partSpec)
-            t.discardWrittenFiles(files)
-            res
-          }
-        out
+        if (files.isEmpty || !ddlTouches(ddl, batchSchema))
+          t.commitWrittenFiles(files, batchSchema, claimed,
+            mark = Some(TxnMark(appId, epochId)), targetAuthoritative = true)
+        else {
+          // readStaged pins path-inferred identity-partition types
+          // back to the staged batch schema (a digit-only string
+          // partition value re-infers numeric, and appendIdempotent's
+          // compatibility check would then wedge the epoch on every
+          // retry); conformToTarget applies the V1 sink's target-
+          // authoritative column drop over the post-DDL head
+          val conformed = conformToTarget(t, readStaged(t, files, batchSchema))
+          val res = t.appendIdempotent(conformed, appId, epochId,
+            partitionBy = partSpec)
+          t.discardWrittenFiles(files)
+          res
+        }
       }
     if (applied.isEmpty) {
       t.discardWrittenFiles(files)
@@ -656,6 +639,16 @@ private[lakehouse] final class LakehouseDsv2Write(
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     abort(messages)
+}
+
+private[lakehouse] object LakehouseDsv2Write {
+  /** A write's layout order, ascending on each IDENTITY spec entry:
+    * Spark sorts each task by it on every face, so
+    * [[LakehouseDataWriter]] meets each value's rows together.
+    */
+  def layoutOrdering(partSpec: Seq[String]): Array[SortOrder] =
+    partSpec.filterNot(LakehouseTable.BucketSpecRe.matches).map(c =>
+      Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
 }
 
 /** A table-API write as a DSv2 table: [[LakehouseTable.writeDataFiles]]
@@ -687,15 +680,14 @@ private[lakehouse] final class LakehouseWriterFactory(
     tz: String, parquetConf: Map[String, String], codec: String,
     ddlMode: Boolean, changeIdx: Int, ddlIdx: Int,
     maxRecordsPerFile: Option[Long] = None,
-    keyIdxs: Seq[Int] = Nil,
-    maxOpenWriters: Int = LakehouseDataWriter.MaxOpenWriters)
+    keyIdxs: Seq[Int] = Nil)
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     LakehouseWriteStats.writersCreated.incrementAndGet()
     new LakehouseDataWriter(rootAbs, dirName, plan, partCols, tz,
       parquetConf, codec, ddlMode, changeIdx, ddlIdx, partitionId, taskId,
-      maxRecordsPerFile, keyIdxs, maxOpenWriters)
+      maxRecordsPerFile, keyIdxs)
   }
 
   override def createWriter(partitionId: Int, taskId: Long,
@@ -716,7 +708,10 @@ object LakehouseWriteStats {
   * canonical file columns (case-canonical names, widening casts,
   * field-id stamps), and streams them through Spark's
   * `ParquetWriteSupport`. A file opens on its first row, so an empty
-  * task writes none. DDL-channel rows divert into the commit message.
+  * task writes none. Rows arrive grouped by identity value
+  * ([[LakehouseDsv2Write.layoutOrdering]]), so only the current
+  * value's files are open, one per bucket dir under it; the value
+  * changing closes them. DDL-channel rows divert into the commit message.
   */
 private[lakehouse] final class LakehouseDataWriter(
     rootAbs: String, dirName: String,
@@ -725,8 +720,7 @@ private[lakehouse] final class LakehouseDataWriter(
     ddlMode: Boolean, changeIdx: Int, ddlIdx: Int,
     partitionId: Int, taskId: Long,
     maxRecordsPerFile: Option[Long] = None,
-    keyIdxs: Seq[Int] = Nil,
-    maxOpenWriters: Int = LakehouseDataWriter.MaxOpenWriters)
+    keyIdxs: Seq[Int] = Nil)
     extends DataWriter[InternalRow] {
 
   /** Keyed-stream split mode (round 15): data rows land in the data
@@ -740,6 +734,10 @@ private[lakehouse] final class LakehouseDataWriter(
 
   private val identityPlanIdx: Set[Int] =
     partCols.collect { case WritePartCol(i, None) => i }.toSet
+
+  // the spec positions of the identity entries: the dirs of ONE value
+  private val identityEntries: Seq[Int] =
+    partCols.indices.filter(j => partCols(j).bucketN.isEmpty)
 
   /** Channel marker columns never enter KEYED data files — the V1
     * apply drops `_change` (and `_ddl`) before writing, and the keyed
@@ -830,19 +828,28 @@ private[lakehouse] final class LakehouseDataWriter(
   private val ddl = mutable.ArrayBuffer.empty[String]
   private val nonce = java.util.UUID.randomUUID().toString.take(8)
   private var fileSeq = 0
-  // files already rolled shut (size-targeted optimize-write)
+  // files already shut: their value ended, or they hit the record cap
   private val closed = mutable.ArrayBuffer.empty[String]
-  // suffix -> (relative path, open record writer, rows written)
-  private val open = mutable.LinkedHashMap.empty[String,
-    (String, org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow], Long)]
+  // an open data file: root-relative path, record writer, rows written
+  private final class OpenFile(val rel: String,
+      val w: org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow]) {
+    var rows = 0L
+  }
+  // the current identity value's files, by dir suffix
+  private val open = mutable.HashMap.empty[String, OpenFile]
+  private var currentValue: Seq[String] = Nil
 
-  private def openWriter(suffix: String)
-      : (String, org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow], Long) = {
+  private def closeOpen(): Unit = {
+    open.values.foreach { f => f.w.close(null); closed += f.rel }
+    open.clear()
+  }
+
+  private def openWriter(suffix: String): OpenFile = {
     val rel = "data/" + dirName +
       (if (suffix.isEmpty) "" else "/" + suffix) +
       f"/part-$partitionId%05d-$taskId-$nonce-$fileSeq.parquet"
     fileSeq += 1
-    (rel, openParquet(rel, fileSchema), 0L)
+    new OpenFile(rel, openParquet(rel, fileSchema))
   }
 
   private def openParquet(rel: String, schema: StructType)
@@ -907,51 +914,40 @@ private[lakehouse] final class LakehouseDataWriter(
         return // delete rows carry keys only — never data
       }
     }
-    val suffix = if (dirs.isEmpty) "" else dirs.mkString("/")
-    // bound OPEN writers: an unclustered task spanning many partition
-    // values would otherwise hold a parquet buffer set per value (the
-    // 100 TB date-partitioned-append OOM). True LRU: a hit REMOVES and
-    // re-inserts at the tail below, so the head really is the least-
-    // recently-USED writer (a least-recently-OPENED head would evict
-    // the writer a round-robin interleave is about to need next —
-    // worst case one file per row). A re-appearing evicted value rolls
-    // a new file — bounded memory for a few extra small files, and
-    // optimizeWrite clustering avoids the spread entirely
-    val w = open.remove(suffix).getOrElse {
-      if (open.size >= maxOpenWriters) {
-        val (oldSuffix, oldW) = open.head
-        oldW._2.close(null)
-        closed += oldW._1
-        open.remove(oldSuffix)
-        ()
-      }
-      openWriter(suffix)
+    // the write's required ordering groups each identity value's rows,
+    // so a value that ends never comes back: its files close for good
+    val value = identityEntries.map(dirs)
+    if (value != currentValue) {
+      closeOpen()
+      currentValue = value
     }
+    val suffix = dirs.mkString("/")
+    val f = open.getOrElseUpdate(suffix, openWriter(suffix))
     // the record consumer serializes the row into parquet buffers
     // immediately, so the projection's reused row needs no copy
-    w._2.write(null, proj(row))
-    val n = w._3 + 1
+    f.w.write(null, proj(row))
+    f.rows += 1
     // size-targeted optimize-write: roll the file shut at the record
     // cap so a skewed partition value bins into ≈targetBytes files
-    if (maxRecordsPerFile.exists(n >= _)) {
-      w._2.close(null)
-      closed += w._1
-      ()
-    } else open.put(suffix, (w._1, w._2, n))
+    if (maxRecordsPerFile.exists(f.rows >= _)) {
+      f.w.close(null)
+      closed += f.rel
+      open.remove(suffix)
+    }
   }
 
   override def commit(): WriterCommitMessage = {
-    open.values.foreach(_._2.close(null))
-    LakehouseWriteMessage(closed.toSeq ++ open.values.map(_._1).toSeq, ddl.toSeq,
+    closeOpen()
+    LakehouseWriteMessage(closed.toSeq, ddl.toSeq,
       tombFiles = tombKeys.toSeq.flatMap { case (dir, ks) => writeKeyFile("tomb", dir, ks) },
       delFiles = writeKeyFile("del", "", delKeys).toSeq)
   }
 
   override def abort(): Unit = {
-    open.values.foreach { case (_, w, _) =>
-      try w.close(null) catch { case _: Exception => () }
+    open.values.foreach { f =>
+      try f.w.close(null) catch { case _: Exception => () }
     }
-    (closed.toSeq ++ open.values.map(_._1).toSeq).foreach { rel =>
+    (closed.toSeq ++ open.values.map(_.rel)).foreach { rel =>
       try { java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(rootAbs, rel)); () }
       catch { case _: Exception => () }
@@ -959,14 +955,4 @@ private[lakehouse] final class LakehouseDataWriter(
   }
 
   override def close(): Unit = ()
-}
-
-object LakehouseDataWriter {
-  /** Cap on concurrently OPEN per-partition-value parquet writers in
-    * one task — beyond it the least-recently-USED rolls shut (its
-    * value re-appearing opens a fresh file). Each open writer holds a
-    * row-group buffer set, so unbounded spread is an executor OOM at
-    * scale; clustered writes (optimizeWrite) never approach the cap.
-    */
-  val MaxOpenWriters = 64
 }

@@ -364,10 +364,8 @@ class LakehouseWriteSpec extends SparkSpec {
 
   test("open-writer eviction is true LRU: a hot partition value interleaved past the cap keeps ONE file") {
     // one HOT value recurring between a stream of 320 cold values, all
-    // from a single task, cap 64: true LRU keeps the hot writer
-    // resident (a hit repositions it), so the hot dir gets exactly one
-    // file — the round-14 least-recently-OPENED head evicted the hot
-    // writer every ~63 cold values and sprayed it across several files
+    // from a single task: the write's layout sort groups the hot rows,
+    // so the hot dir gets exactly one file
     val cat = mkCatalog("dsv2w")
     spark.sql(s"DROP TABLE IF EXISTS $cat.db.lru")
     spark.sql(s"CREATE TABLE $cat.db.lru (id BIGINT, pv STRING) PARTITIONED BY (pv)")
@@ -608,18 +606,85 @@ class LakehouseWriteSpec extends SparkSpec {
       s"the claim dir holds a zero-row part file: $parts")
   }
 
+  /** Each hive dir of `files` holds exactly one of them; the dirs. */
+  private def oneFilePerDir(face: String, files: Seq[String]): Set[Seq[String]] = {
+    val byDir = files.groupBy(f => LakehouseTable.hiveSegsOf(f).toSeq)
+    assert(byDir.values.forall(_.size == 1),
+      s"$face: ${files.size} files for ${byDir.size} partition dirs")
+    byDir.keySet
+  }
+
   test("compact to one task over 100 interleaved identity-partition values lands one file per value") {
+    // every write face meets the 100 values interleaved in one task:
+    // the write's layout sort alone keeps one file per value
+    val values = (0L until 100L).map(p => Seq(s"p=$p")).toSet
+    // the table API: flat files whose rows cycle through every value,
+    // so the one compaction task meets the values interleaved
     val root = tmpDir("lw-compact-100")
     val t = new LakehouseTable(spark, root)
-    // flat files whose rows cycle through every value, so the one
-    // compaction task meets the 100 values interleaved
     val df = spark.range(0, 2000, 1, 4).select(col("id"), (col("id") % 100).as("p"))
     t.append(df)
     t.append(df)
     t.setPartitionSpec(Seq("p"))
     val snap = t.compact(fileThreshold = 1, maxRows = Long.MaxValue, targetFiles = 1).get
-    assert(snap.files.size === 100, s"${snap.files.size} files for 100 partition values")
-    assert(snap.files.map(f => LakehouseTable.hiveSegsOf(f).toSeq).distinct.size === 100)
+    assert(oneFilePerDir("compact", snap.files) === values)
     assert(t.read().collect().length === 4000)
+
+    // SQL INSERT INTO a PARTITIONED BY (p) catalog table, one task
+    // cycling through the values five times
+    val cat = mkCatalog("dsv2w")
+    spark.sql(s"DROP TABLE IF EXISTS $cat.db.cyc")
+    spark.sql(s"CREATE TABLE $cat.db.cyc (id BIGINT, p BIGINT) PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $cat.db.cyc SELECT id, id % 100 FROM range(0, 500, 1, 1)")
+    val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
+    val ct = new LakehouseTable(spark, java.nio.file.Paths.get(wh, "db", "cyc").toString)
+    assert(oneFilePerDir("SQL INSERT", ct.currentSnapshot().get.files) === values)
+    assert(spark.sql(s"SELECT count(*), count(DISTINCT p) FROM $cat.db.cyc").head ===
+      org.apache.spark.sql.Row(500L, 100L))
+    spark.sql(s"DROP TABLE $cat.db.cyc")
+
+    // the path face's keyed writeStream: one input file, one task
+    val src = tmpDir("lw-cyc-stream-src") + "/in"
+    spark.range(0, 500, 1, 1).select(col("id"), (col("id") % 100).as("p"))
+      .write.json(src)
+    val sroot = tmpDir("lw-cyc-stream")
+    val q = spark.readStream.schema("id BIGINT, p BIGINT").json(src)
+      .writeStream.format("graft-lakehouse")
+      .option("path", sroot).option("keys", "id").option("partitionBy", "p")
+      .option("checkpointLocation", tmpDir("lw-cyc-stream-ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000), "the keyed stream did not drain")
+    val st = new LakehouseTable(spark, sroot)
+    assert(oneFilePerDir("keyed writeStream", st.currentSnapshot().get.files) === values)
+    assert(st.read().collect().length === 500)
+  }
+
+  test("a one-task write to an identity + bucket layout lands at most one file per dir") {
+    // 20 identity values x 4 buckets, consecutive rows in different
+    // dirs: the sort groups rk, and the writer keeps one file per bucket
+    // dir of the current rk open
+    def bucketOf(k: Long) = LakehouseTable.bucketId(k, org.apache.spark.sql.types.LongType, 4)
+    val dirs = (0L until 800L).map(k => Seq(s"rk=r${k % 20}", s"k_bucket=${bucketOf(k)}")).toSet
+    assert(dirs.size === 80, "every (rk, k_bucket) pair is present")
+    val cat = mkCatalog("dsv2w")
+    spark.sql(s"DROP TABLE IF EXISTS $cat.db.mixed")
+    spark.sql(s"CREATE TABLE $cat.db.mixed (k BIGINT, rk STRING, v STRING) " +
+      "PARTITIONED BY (rk, bucket(4, k))")
+    spark.sql(s"INSERT INTO $cat.db.mixed " +
+      "SELECT id, concat('r', id % 20), concat('v', id) FROM range(0, 800, 1, 1)")
+    val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
+    val mt = new LakehouseTable(spark, java.nio.file.Paths.get(wh, "db", "mixed").toString)
+    assert(oneFilePerDir("SQL INSERT", mt.currentSnapshot().get.files) === dirs)
+    assert(spark.sql(s"SELECT count(*) FROM $cat.db.mixed WHERE rk = 'r3'").head.getLong(0) === 40L)
+    spark.sql(s"DROP TABLE $cat.db.mixed")
+    // the staged table-API face: one file per dir, as when the staged
+    // write sorted by every dir column
+    val t = new LakehouseTable(spark, tmpDir("lw-mixed-api"))
+    val snap = t.append(spark.range(0, 800, 1, 1).select(col("id").as("k"),
+      concat(lit("r"), col("id") % 20).as("rk"), concat(lit("v"), col("id")).as("v")),
+      Seq("rk", "bucket(4, k)"))
+    assert(oneFilePerDir("table-API append", snap.files) === dirs)
+    assert(snap.files.size === 80)
+    assert(t.read().collect().length === 800)
   }
 }

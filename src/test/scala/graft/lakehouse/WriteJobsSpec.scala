@@ -6,7 +6,7 @@ import graft.SparkSpec
 /** The Spark jobs each driver-side write call site runs, on a flat and
   * a hive-partitioned catalog table: `append`, `upsert` (copy-on-write
   * and merge-on-read), `overwrite`, a SQL `UPDATE` (`sqlMutate`),
-  * `compact`, `foldTombstones` and `compactZOrder`. Each count is
+  * `compact`, `foldTombstones`, `compactZOrder` and a SQL `INSERT INTO`. Each count is
   * reported as an `info` line; the rows after the sequence must equal
   * an in-memory model.
   */
@@ -66,6 +66,10 @@ class WriteJobsSpec extends SparkSpec {
       val fresh = (100L to 120L).map(rec(_, "o"))
       site("overwrite") { t.overwrite(batch(fresh)); () }
       assert(t.read().select("k", "rk", "v").as[Rec].collect().toSet === fresh.toSet)
+      val inserted = (121L to 140L).map(rec(_, "i"))
+      batch(inserted).createOrReplaceTempView(s"wj_ins_$layout")
+      site("SQL INSERT INTO") { spark.sql(s"INSERT INTO $name SELECT k, rk, v FROM wj_ins_$layout"); () }
+      assert(t.read().select("k", "rk", "v").as[Rec].collect().toSet === (fresh ++ inserted).toSet)
       spark.sql(s"DROP TABLE IF EXISTS $name")
     }
   }
