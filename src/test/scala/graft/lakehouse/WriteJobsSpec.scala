@@ -6,9 +6,9 @@ import graft.SparkSpec
 /** The Spark jobs each driver-side write call site runs, on a flat and
   * a hive-partitioned catalog table: `append`, `upsert` (copy-on-write
   * and merge-on-read), `overwrite`, a SQL `UPDATE` (`sqlMutate`),
-  * `compact`, `foldTombstones`, `compactZOrder` and a SQL `INSERT INTO`. Each count is
-  * reported as an `info` line; the rows after the sequence must equal
-  * an in-memory model.
+  * `compact`, `foldTombstones`, `compactZOrder` and a SQL `INSERT
+  * INTO`. Each count is reported as an `info` line; the rows after the
+  * sequence must equal an in-memory model.
   */
 class WriteJobsSpec extends SparkSpec {
   import spark.implicits._
