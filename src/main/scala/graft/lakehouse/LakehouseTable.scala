@@ -3,7 +3,7 @@ package graft.lakehouse
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.sources
@@ -608,8 +608,10 @@ final class LakehouseTable(spark: SparkSession, val root: String,
 
   /** Stats map for a snapshot's file set: carried over for files an
     * earlier snapshot already recorded (files are immutable, so stats
-    * never go stale), collected from the parquet footer — in parallel,
-    * at WRITE time, the one moment the footer is hot — for new files.
+    * never go stale) or the executor writers shipped
+    * ([[recordWrittenStats]]); only files that came without stats —
+    * legacy and foreign ones — have their parquet footer read, in
+    * parallel, at commit time.
     * Planning then never opens a footer (the Iceberg/Delta shape: scan
     * planning is a manifest read, object-store-friendly).
     */
@@ -872,51 +874,88 @@ final class LakehouseTable(spark: SparkSession, val root: String,
 
   /** The one KEYED commit. Every face that lands a keyed batch — the
     * table API's upsert / applyChanges (main line or branch), the DSv2
-    * batch write and the DSv2 stream epoch — stages its data files
-    * (`added`, written under `claimedId`), then commits here against
-    * the (head, id) and `target` it already resolved:
+    * batch write and the DSv2 stream epoch — commits here against the
+    * (head, id) and `target` it already resolved. The DSv2 faces hand
+    * over their executor-`staged` data files (written under
+    * `claimedId`); the table-API faces hand over their `inserts` rows,
+    * which this commit writes:
     *
-    *  1. bootstrap: no head — the staged files become the table;
+    *  1. bootstrap: no head — the batch becomes the table;
     *  2. a raced tombstone newer than `claimedId` ([[racedTombstone]])
     *     throws [[ConcurrentCommitException]];
     *  3. merge-on-read: the tombstone appends to the head's — staged
     *     files, or key rows written through [[writeTombstone]] at
     *     `claimedId` (masking is strictly-older, so the batch's own
     *     rows stay visible);
-    *  4. copy-on-write: the head's files holding the batch's keys swap
-    *     for their rewrites ([[rewriteTouched]]);
-    *  5. publish on `target`.
+    *  4. copy-on-write: the head's files holding the batch's keys
+    *     ([[touchedFilesFor]]) swap for their survivors — the rows whose
+    *     key the batch does not carry;
+    *  5. the survivors and the inserts land in ONE write, both projected
+    *     onto the commit's evolved schema, under the head's layout;
+    *  6. publish on `target`.
     *
     * `removal` is evaluated only past the bootstrap. This never
     * re-resolves or retries: a lost publish race surfaces as
     * [[ConcurrentCommitException]] to the caller.
     */
   private[lakehouse] def commitKeyed(target: WriteTarget, head: Option[Snapshot],
-      id: Long, claimedId: Long, op: String, added: Seq[String],
-      batchSchema: StructType, keys: Seq[String], mark: Option[TxnMark])(
-      removal: => KeyedRemoval): Snapshot = writeLock.synchronized {
+      id: Long, claimedId: Long, op: String, staged: Seq[String],
+      inserts: Option[DataFrame], batchSchema: StructType, keys: Seq[String],
+      mark: Option[TxnMark])(removal: => KeyedRemoval): Snapshot = writeLock.synchronized {
     require(keys.nonEmpty, "keyed commit requires key columns")
     requireCompatibleSchemaFor(head, batchSchema)
+    val schemaJson = evolvedSchemaJsonFor(head, batchSchema)
+    def written(survivors: Option[DataFrame]): Seq[String] = {
+      val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+      // the head's layout, minus dir names no column sources (a path
+      // table's inferred `<col>_bucket` dirs carry no bucket count)
+      val layout = head.fold(Seq.empty[String])(c => inferPartitionCols(c.files))
+        .filter(pc => schema.fieldNames.exists(f => nameKey(f) == nameKey(specSourceCol(pc))))
+      (survivors.toSeq ++ inserts).map(projectOnto(_, schema)).reduceOption(_ union _)
+        .fold(Seq.empty[String])(rows =>
+          writeDataFiles(rows, id, head = head, partitionCols = layout))
+    }
     val (files, deletes) = head match {
-      case None => (added, None)
+      case None => (staged ++ written(None), None)
       case Some(c) =>
         if (racedTombstone(head, claimedId))
           throw new ConcurrentCommitException(root, claimedId)
         removal match {
           case KeyedRemoval.Tombstones(tomb) =>
-            (c.files ++ added, Some(c.tombstones ++ tomb).filter(_.nonEmpty))
+            (c.files ++ staged ++ written(None),
+              Some(c.tombstones ++ tomb).filter(_.nonEmpty))
           case KeyedRemoval.MaskKeys(batch) =>
-            (c.files ++ added, Some(c.tombstones ++
-              writeTombstone(c, batch, keys, claimedId)).filter(_.nonEmpty))
+            val tomb = writeTombstone(c, batch, keys, claimedId)
+            (c.files ++ staged ++ written(None),
+              Some(c.tombstones ++ tomb).filter(_.nonEmpty))
           case KeyedRemoval.RewriteKeys(keyRows, ranges) =>
-            val (touched, rewritten) = rewriteTouched(c, keyRows, keys, id,
-              inferPartitionCols(c.files), ranges)
-            (c.files.diff(touched) ++ rewritten ++ added, c.deletes)
+            val touched = touchedFilesFor(c, keyRows, keys, ranges)
+            // effective (tombstone-masked) read: a raw read would copy
+            // MoR-deleted rows into a fresh-origin file and resurrect
+            // them. An anti-join ignores duplicate keys, so the key
+            // rows need no distinct.
+            val survivors = Option.when(touched.nonEmpty)(
+              scanFiles(c, touched).join(keyRows, keys, "left_anti"))
+            (c.files.diff(touched) ++ staged ++ written(survivors), c.deletes)
         }
     }
     target.publish(Snapshot(id, head.map(_.snapshotId), System.currentTimeMillis(),
-      op, files, evolvedSchemaJsonFor(head, batchSchema), txn = mark,
-      deletes = deletes))
+      op, files, schemaJson, txn = mark, deletes = deletes))
+  }
+
+  /** `df` with exactly `schema`'s columns, in order: a column `df`
+    * carries (under the name-resolution key) casts to the declared
+    * type, one it lacks reads NULL.
+    */
+  private def projectOnto(df: DataFrame, schema: StructType): DataFrame = {
+    val have = df.schema.fields.map(f => nameKey(f.name) -> f).toMap
+    df.select(schema.fields.toIndexedSeq.map { f =>
+      have.get(nameKey(f.name)) match {
+        case Some(g) if sameIgnoringNullability(g.dataType, f.dataType) => col(g.name).as(f.name)
+        case Some(g) => col(g.name).cast(f.dataType).as(f.name)
+        case None => lit(null).cast(f.dataType).as(f.name)
+      }
+    }: _*)
   }
 
   /** The one merge-on-read TOMBSTONE writer: `batch`'s distinct key
@@ -946,7 +985,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * tuples, both staged task-side at `claimedId` — the driver never
     * touches row data on the merge-on-read path, where the tomb files
     * ARE the tombstone. Copy-on-write reads the tomb keys back as the
-    * probe side (stage-1 ranges from their footers); the caller then
+    * probe side (stage-1 ranges from their stats; duplicate keys across
+    * tasks are harmless to the semi- and anti-join); the caller then
     * discards them. `mark` is the epoch's exactly-once transaction
     * mark: an absorbed replay returns None (caller discards every
     * staged file); an empty epoch still commits so its mark is
@@ -960,8 +1000,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       return None // a racing replica of this exact epoch already landed
     val (head, id) = MainLine.resolve()
     Some(commitKeyed(MainLine, head, id, claimedId,
-        if (cdc || mergeOnRead) "apply" else "upsert", dataFiles, batchSchema,
-        keys, mark) {
+        if (cdc || mergeOnRead) "apply" else "upsert", dataFiles, inserts = None,
+        batchSchema, keys, mark) {
       if (mergeOnRead || tombFiles.isEmpty) KeyedRemoval.Tombstones(tombFiles)
       else {
         val canon = batchSchema.fields.map(f => nameKey(f.name) -> f).toMap
@@ -976,8 +1016,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
         // per epoch commit
         KeyedRemoval.RewriteKeys(
           spark.read.schema(keyFields)
-            .parquet(tombFiles.map(f => rootPath.resolve(f).toString): _*)
-            .distinct(),
+            .parquet(tombFiles.map(f => rootPath.resolve(f).toString): _*),
           footerKeyRanges(tombFiles, keys, keyFields))
       }
     })
@@ -1288,7 +1327,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     *     data-file I/O and zero jobs, so a key-disjoint batch exits
     *     here having read NOTHING of the existing table;
     *  2. only surviving candidate files pay an exact COLUMN-PRUNED
-    *     semi-join over their key columns.
+    *     semi-join over their key columns (duplicate key rows are
+    *     harmless to it), collected in one shuffle-free job.
     *
     * At 100 TB this is the difference between a CDC micro-batch paying
     * O(batch) and paying an O(table) key-column scan per commit
@@ -1323,11 +1363,13 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     val candidates = pruneFiles(cur, ranges)._1
     if (candidates.isEmpty) return Nil
     keyedWriteProbedFiles.addAndGet(candidates.size)
+    // each task hands back its distinct file names: one shuffle-free job
     val probed = scanFiles(cur, candidates, masked = false)
       .select(keys.map(col) :+ input_file_name().as("_file"): _*)
       .join(keyRows, keys, "left_semi")
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)).toSet
+      .select(col("_file")).as(Encoders.STRING)
+      .mapPartitions((fs: Iterator[String]) => fs.toSet.iterator)(Encoders.STRING)
+      .collect().toSet
     // map each probed URI back to its manifest-relative path ONCE and
     // intersect sets — O(candidates + probed) driver work (the r9 form
     // rescanned the probed set per candidate via endsWith: quadratic at
@@ -1374,12 +1416,10 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
   }
 
-  /** Copy-on-write upsert: the batch lands FIRST, under the head's hive
-    * layout — its freshly written footers then answer the stage-1
-    * key-range prune driver-side ([[footerKeyRanges]]), so no min/max
-    * job runs. Order is safe: files only become visible at the commit,
-    * and a failed attempt orphans them like a failed rewrite (snapshot
-    * expiry collects orphans).
+  /** Copy-on-write upsert: the batch's rows are the commit's inserts;
+    * the key-range prune runs one min/max job over the cached batch,
+    * and the rewrite's survivors land with the batch in one write
+    * ([[commitKeyed]]).
     */
   private def upsertWith(df0: DataFrame, keys: Seq[String],
       mark: Option[TxnMark], target: WriteTarget = MainLine): Snapshot = {
@@ -1387,43 +1427,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     val (cur, id) = target.resolve()
     requireCompatibleSchemaFor(cur, df0.schema)
     val incoming = canonicalizedNamesAt(cur, df0).cache()
-    try {
-      val added = writeDataFiles(incoming, id, head = cur,
-        partitionCols = layoutFor(cur, incoming))
-      commitKeyed(target, cur, id, id, "upsert", added, incoming.schema, keys, mark)(
-        KeyedRemoval.RewriteKeys(incoming.select(keys.map(col): _*).distinct(),
-          footerKeyRanges(added, keys, incoming.schema)))
-    } finally incoming.unpersist()
-  }
-
-  /** The hive layout a keyed write's batch lands under: the head's
-    * partition scheme, restricted to the entries whose source column
-    * the batch carries (nothing for a bootstrap).
-    */
-  private def layoutFor(head: Option[Snapshot], batch: DataFrame): Seq[String] =
-    head.fold(Seq.empty[String])(c => inferPartitionCols(c.files))
-      .filter(pc => batch.columns.contains(specSourceCol(pc)))
-
-  /** The copy-on-write half of every keyed write: find `head`'s data
-    * files holding any key tuple of `keyRows` (two-stage — manifest
-    * prune, then an exact semi-join over the candidates only; see
-    * [[touchedFilesFor]]) and rewrite them without those keys, under
-    * the table's hive layout `partCols`. Returns (touched, rewritten):
-    * the commit swaps the first for the second, every other file
-    * carries over by reference.
-    */
-  private def rewriteTouched(head: Snapshot, keyRows: DataFrame, keys: Seq[String],
-      id: Long, partCols: Seq[String],
-      knownRanges: Option[Seq[ScanPredicate.Range]]): (Seq[String], Seq[String]) = {
-    val touched = touchedFilesFor(head, keyRows, keys, knownRanges)
-    val rewritten =
-      if (touched.isEmpty) Nil
-      else writeDataFiles(
-        // effective (tombstone-masked) read: a raw read would copy
-        // MoR-deleted rows into a fresh-origin file and resurrect them
-        scanFiles(head, touched).join(keyRows, keys, "left_anti"),
-        id, suffix = "rw", partitionCols = partCols, head = Some(head))
-    (touched, rewritten)
+    try commitKeyed(target, cur, id, id, "upsert", Nil, Some(incoming), incoming.schema,
+        keys, mark)(KeyedRemoval.RewriteKeys(incoming.select(keys.map(col): _*), None))
+    finally incoming.unpersist()
   }
 
   /** CDC-apply: consume one change-feed batch (rows tagged by a
@@ -1503,17 +1509,17 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       // an empty-insert batch (pure deletes, or a compaction-only feed
       // advance) still snapshots for its txn mark, but writes no
       // zero-row part files
-      val added =
-        if (nIns == 0L) Nil
-        else writeDataFiles(inserts, id, head = cur, partitionCols = layoutFor(cur, inserts))
-      commitKeyed(target, cur, id, id, "apply", added, inserts.schema, keys, mark) {
+      commitKeyed(target, cur, id, id, "apply", Nil, Option.when(nIns > 0L)(inserts),
+          inserts.schema, keys, mark) {
         // MERGE-ON-READ: no existing file is read OR rewritten — the
         // batch's key set lands as a tombstone that masks older
         // versions (insert = replace, delete = remove). COPY-ON-WRITE:
         // the key ranges come from the chStats pass above, so a
-        // key-disjoint CDC batch reads zero existing files.
+        // key-disjoint CDC batch reads zero existing files; the probe
+        // and the rewrite read the cached batch's key columns as they
+        // are (semi- and anti-joins ignore duplicate keys).
         if (!mergeOnRead)
-          KeyedRemoval.RewriteKeys(ch.select(keys.map(col): _*).distinct(), Some(keyRanges))
+          KeyedRemoval.RewriteKeys(ch.select(keys.map(col): _*), Some(keyRanges))
         else if (nAll == 0L) KeyedRemoval.Tombstones(Nil)
         else KeyedRemoval.MaskKeys(ch)
       }
@@ -3366,7 +3372,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
               val rd = footerSchemaOf(fs.head)
                 .fold(spark.read)(s => spark.read.schema(s))
               val keyRows = rd.parquet(
-                fs.map(f => rootPath.resolve(f).toString): _*).distinct()
+                fs.map(f => rootPath.resolve(f).toString): _*)
               touchedFilesFor(fromS, keyRows, keyRows.columns.toSeq)
             }.distinct
           align(toNames(scanFiles(fromS, cand)))
@@ -3600,55 +3606,35 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   @transient private lazy val footerHadoopConf =
     spark.sessionState.newHadoopConf()
 
-  /** Read one parquet footer → FileStats (all top-level primitive
-    * columns in one open). Unreadable footer → None (no evidence).
+  /** Read one parquet footer → FileStats ([[LakehouseTable.footerStats]]).
+    * Unreadable footer → None (no evidence).
     */
   private def footerFileStats(relFile: String): Option[FileStats] =
     footerCache.computeIfAbsent(relFile, { _ =>
       footerOpens.incrementAndGet()
       try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(rootPath.resolve(relFile).toString),
-          footerHadoopConf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val footer = reader.getFooter
-          val rows = footer.getBlocks.asScala.map(_.getRowCount).sum
-          val logicalString = footer.getFileMetaData.getSchema.getFields.asScala
-            .filter(f => f.isPrimitive && f.getLogicalTypeAnnotation.isInstanceOf[
-              org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation])
-            .map(f => nameKey(f.getName)).toSet
-          val byCol = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
-            .filter(_.getPath.size == 1)
-            .groupBy(ch => nameKey(ch.getPath.toDotString))
-          val cols = byCol.flatMap { case (ck, chunks) =>
-            val stats = chunks.map(_.getStatistics)
-            if (stats.exists(s => s == null || !s.hasNonNullValue)) None
-            else {
-              def pick(worse: Int => Boolean) =
-                stats.flatMap(s => Seq(s.genericGetMin, s.genericGetMax)).reduce { (a, b) =>
-                  if (worse(a.asInstanceOf[Comparable[Any]].compareTo(b))) b else a
-                }
-              // null counts power IS NULL skipping; -1 = unknown in any
-              // chunk poisons the whole file's count (never mis-prune)
-              val nulls =
-                if (stats.exists(!_.isNumNullsSet)) None
-                else Some(stats.map(_.getNumNulls).sum)
-              encodeStat(pick(_ > 0), pick(_ < 0), logicalString(ck))
-                .map(st => ck -> st.copy(nulls = nulls))
-            }
-          }.toMap
-          val bytes = try Some(Files.size(rootPath.resolve(relFile)))
-            catch { case _: Exception => None }
-          // fully-stamped = every top-level column carries a field id
-          // (a column THIS commit introduced stays unstamped, so such
-          // files route name-based until their next rewrite)
-          val fields = footer.getFileMetaData.getSchema.getFields.asScala
-          val stamped = fields.nonEmpty && fields.forall(_.getId != null)
-          Some(FileStats(rows, cols, bytes, fids = Some(stamped)))
-        } finally reader.close()
+        val footer = readFooter(relFile)
+        val bytes = try Some(Files.size(rootPath.resolve(relFile)))
+          catch { case _: Exception => None }
+        Some(LakehouseTable.footerStats(footer, bytes, nameKey))
       } catch { case _: Exception => None } // unreadable footer → no evidence → keep
     })
+
+  /** The parquet footer of a data/key file, read driver-side. */
+  private def readFooter(relFile: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(rootPath.resolve(relFile).toString),
+      footerHadoopConf)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Record stats the executor writers computed for the files they
+    * closed ([[LakehouseWriteMessage.stats]]): the commit's manifest
+    * pass and the staged-key range fold then open no footer for them.
+    */
+  private[lakehouse] def recordWrittenStats(stats: Map[String, FileStats]): Unit =
+    stats.foreach { case (f, st) => knownStats.put(f, st) }
 
   /** The parquet FILE schema of a data/key file as Spark types, read
     * driver-side from the footer (NO Spark job — `spark.read.parquet`
@@ -3669,27 +3655,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
         Some(conv.convert(reader.getFooter.getFileMetaData.getSchema))
       } finally reader.close()
     } catch { case _: Throwable => None }
-
-  /** Encode a (min, max) pair of parquet stat values as a typed
-    * ColumnStat; None = a type the pruner must never decide on.
-    */
-  private def encodeStat(mn: Any, mx: Any, isString: Boolean): Option[ColumnStat] =
-    (mn, mx) match {
-      case (a: java.lang.Long, b: java.lang.Long) =>
-        Some(ColumnStat("long", a.toString, b.toString))
-      case (a: java.lang.Integer, b: java.lang.Integer) =>
-        Some(ColumnStat("long", a.toString, b.toString))
-      case (a: java.lang.Double, b: java.lang.Double) =>
-        Some(ColumnStat("double", a.toString, b.toString))
-      case (a: java.lang.Float, b: java.lang.Float) =>
-        // widen to EXACT doubles first: Float.toString re-parsed as a
-        // double is a different value than f.toDouble near boundaries
-        Some(ColumnStat("double", a.doubleValue.toString, b.doubleValue.toString))
-      case (a: org.apache.parquet.io.api.Binary, b: org.apache.parquet.io.api.Binary)
-          if isString => // Binary also backs DECIMAL etc. — String only
-        Some(ColumnStat("string", a.toStringUsingUTF8, b.toStringUsingUTF8))
-      case _ => None
-    }
 
   /** Collect footer stats for freshly written files, in parallel on the
     * driver (write-time cost, once per file ever).
@@ -4000,13 +3965,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   }
 
   /** Per-key (min, max) prune ranges for a STAGED keyed commit, derived
-    * from the staged files' parquet footers instead of a Spark job
-    * (guide §1.2): the executor writers just produced these files, so
-    * their chunk statistics carry the batch's exact key extrema — and
-    * [[writeSnapshot]]'s manifest-stats pass reads the same footers
-    * through the same [[footerFileStats]] cache moments later, so this
-    * costs zero extra I/O while saving the one-job min/max aggregate
-    * every keyed CoW epoch paid. Exactness discipline is
+    * from the staged files' stats instead of a Spark job (guide §1.2):
+    * the executor writers just produced these files and shipped their
+    * footer stats ([[recordWrittenStats]]), which carry the batch's
+    * exact key extrema — zero I/O, where the min/max aggregate cost
+    * every keyed CoW epoch a job. Exactness discipline is
     * [[manifestMinMax]]'s: every row-bearing file must carry a stat for
     * every key column (absence is ambiguous between "all null here" and
     * "stats unavailable") and the declared type must round-trip
@@ -4019,8 +3982,10 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   private[lakehouse] def footerKeyRanges(files: Seq[String], keys: Seq[String],
       schema: StructType): Option[Seq[ScanPredicate.Range]] = {
     import org.apache.spark.sql.types._
-    collectStats(files) // warm the footer cache in PARALLEL (collectStats' pool)
-    val sts = files.map(footerFileStats)
+    // writer-side stats first; only files without them open a footer
+    // (warmed in PARALLEL through collectStats' pool)
+    collectStats(files.filterNot(knownStats.containsKey))
+    val sts = files.map(f => Option(knownStats.get(f)).orElse(footerFileStats(f)))
     if (sts.exists(_.isEmpty)) return None // unreadable footer: real agg answers
     val live = sts.flatten.filter(_.rows > 0)
     if (live.isEmpty) return Some(Nil)
@@ -4402,22 +4367,23 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * through the DSv2 executor writers ([[LakehouseStagingTable]]),
     * returning the root-relative paths of the files produced (hive
     * `col=value` / `col_bucket=` sub-dirs when `partitionCols` is set).
-    * Optimize-write clusters the batch on its dir columns. The ordering
-    * comes from the write ([[LakehouseDsv2Write.layoutOrdering]]): each
-    * task meets an identity value's rows together and keeps one open
-    * file per bucket dir of it. `head` stamps the field ids and sizes
+    * Optimize-write clusters the batch on its dir columns, and each
+    * task sorts by them, so it keeps one file open at a time. `head` stamps the field ids and sizes
     * the bins — a branch write's is the BRANCH head.
     */
   private def writeDataFiles(
       df0: DataFrame, id: Long, suffix: String = "",
       partitionCols: Seq[String] = Nil,
       head: Option[Snapshot] = currentSnapshot()): Seq[String] = {
-    val df =
-      if (!optimizeWrite || partitionCols.isEmpty) df0
-      else df0.repartition(partitionCols.map {
-        case LakehouseTable.BucketSpecRe(n, c) => pmod(xxhash64(col(c)), lit(n.toInt))
-        case c => col(c)
-      }: _*)
+    val dirCols = partitionCols.map {
+      case LakehouseTable.BucketSpecRe(n, c) => pmod(xxhash64(col(c)), lit(n.toInt))
+      case c => col(c)
+    }
+    val clustered = if (!optimizeWrite || partitionCols.isEmpty) df0 else df0.repartition(dirCols: _*)
+    // sorted by every dir, bucket ids included (which the write's
+    // required ordering cannot name without a catalog), each task meets
+    // one dir's rows together and keeps one file open
+    val df = if (partitionCols.isEmpty) clustered else clustered.sortWithinPartitions(dirCols: _*)
     val stage = Dsv2CommitMode.Stage(this, id, suffix, partitionCols, head)
     org.apache.spark.sql.GraftDatasetAccess.ofRows(spark,
       org.apache.spark.sql.catalyst.plans.logical.AppendData.byPosition(
@@ -4438,6 +4404,82 @@ object LakehouseTable {
   private[lakehouse] def claimDirName(id: Long, tag: String): String =
     (if (tag.isEmpty) s"s$id" else s"s$id-$tag") +
       s"-w${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** A parquet footer → FileStats: row count, per-column min/max and
+    * null counts of every top-level primitive column, the field-id
+    * stamp verdict, and `bytes`. Pure: the driver's footer read and the
+    * executor writer (over the footer it just closed) share it. Column
+    * keys go through `key` (the table's name-resolution key).
+    */
+  private[lakehouse] def footerStats(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      bytes: Option[Long], key: String => String): FileStats = {
+    val rows = footer.getBlocks.asScala.map(_.getRowCount).sum
+    val logicalString = footer.getFileMetaData.getSchema.getFields.asScala
+      .filter(f => f.isPrimitive && f.getLogicalTypeAnnotation.isInstanceOf[
+        org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation])
+      .map(f => key(f.getName)).toSet
+    val byCol = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      .filter(_.getPath.size == 1)
+      .groupBy(ch => key(ch.getPath.toDotString))
+    val cols = byCol.flatMap { case (ck, chunks) =>
+      val stats = chunks.map(_.getStatistics)
+      if (stats.exists(s => s == null || !s.hasNonNullValue)) None
+      else {
+        def pick(worse: Int => Boolean) =
+          stats.flatMap(s => Seq(s.genericGetMin, s.genericGetMax)).reduce { (a, b) =>
+            if (worse(a.asInstanceOf[Comparable[Any]].compareTo(b))) b else a
+          }
+        // null counts power IS NULL skipping; -1 = unknown in any
+        // chunk poisons the whole file's count (never mis-prune)
+        val nulls =
+          if (stats.exists(!_.isNumNullsSet)) None
+          else Some(stats.map(_.getNumNulls).sum)
+        encodeStat(pick(_ > 0), pick(_ < 0), logicalString(ck))
+          .map(st => ck -> st.copy(nulls = nulls))
+      }
+    }.toMap
+    // fully-stamped = every top-level column carries a field id
+    // (a column THIS commit introduced stays unstamped, so such
+    // files route name-based until their next rewrite)
+    val fields = footer.getFileMetaData.getSchema.getFields.asScala
+    val stamped = fields.nonEmpty && fields.forall(_.getId != null)
+    FileStats(rows, cols, bytes, fids = Some(stamped))
+  }
+
+  /** A footer as a READER of its file sees it: the writer's in-memory
+    * footer run through the thrift round trip every footer read takes
+    * (the reader normalizes float/double bounds and drops statistics it
+    * cannot trust), so writer-side stats equal footer-read ones.
+    */
+  private[lakehouse] def footerAsRead(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val conv = new org.apache.parquet.format.converter.ParquetMetadataConverter()
+    conv.fromParquetMetadata(conv.toParquetMetadata(
+      org.apache.parquet.hadoop.ParquetFileWriter.CURRENT_VERSION, footer))
+  }
+
+  /** Encode a (min, max) pair of parquet stat values as a typed
+    * ColumnStat; None = a type the pruner must never decide on.
+    */
+  private def encodeStat(mn: Any, mx: Any, isString: Boolean): Option[ColumnStat] =
+    (mn, mx) match {
+      case (a: java.lang.Long, b: java.lang.Long) =>
+        Some(ColumnStat("long", a.toString, b.toString))
+      case (a: java.lang.Integer, b: java.lang.Integer) =>
+        Some(ColumnStat("long", a.toString, b.toString))
+      case (a: java.lang.Double, b: java.lang.Double) =>
+        Some(ColumnStat("double", a.toString, b.toString))
+      case (a: java.lang.Float, b: java.lang.Float) =>
+        // widen to EXACT doubles first: Float.toString re-parsed as a
+        // double is a different value than f.toDouble near boundaries
+        Some(ColumnStat("double", a.doubleValue.toString, b.doubleValue.toString))
+      case (a: org.apache.parquet.io.api.Binary, b: org.apache.parquet.io.api.Binary)
+          if isString => // Binary also backs DECIMAL etc. — String only
+        Some(ColumnStat("string", a.toStringUsingUTF8, b.toStringUsingUTF8))
+      case _ => None
+    }
 
   /** `bucket(N, col)` partition-spec entry (whitespace-tolerant). */
   private[lakehouse] val BucketSpecRe =

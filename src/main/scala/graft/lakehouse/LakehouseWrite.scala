@@ -27,9 +27,12 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * of every touched row — the MoR tombstone / CoW probe side) and
   * `delFiles` (the delete-tagged keys alone — commit transport for the
   * rare DDL-epoch driver fallback, never referenced by a manifest).
+  * `stats` holds each closed file's [[FileStats]], converted from the
+  * footer the writer just wrote, so the commit opens no footer for it.
   */
 final case class LakehouseWriteMessage(files: Seq[String], ddl: Seq[String],
-    tombFiles: Seq[String] = Nil, delFiles: Seq[String] = Nil)
+    tombFiles: Seq[String] = Nil, delFiles: Seq[String] = Nil,
+    stats: Map[String, FileStats] = Map.empty)
     extends WriterCommitMessage
 
 /** One query column's canonical landing spot in the table: input
@@ -204,8 +207,13 @@ private[lakehouse] final class LakehouseDsv2Write(
       }.toArray)
     else Distributions.unspecified()
 
-  override def requiredOrdering(): Array[SortOrder] =
-    LakehouseDsv2Write.layoutOrdering(partSpec)
+  override def requiredOrdering(): Array[SortOrder] = mode match {
+    // a bucket id has no catalog-free sort key here: a staged batch
+    // arrives sorted by every dir instead ([[LakehouseTable
+    // .writeDataFiles]]), and Spark would drop that sort under its own
+    case _: Dsv2CommitMode.Stage => Array.empty
+    case _ => LakehouseDsv2Write.layoutOrdering(partSpec)
+  }
 
   /** (claimed snapshot id, the batch's canonical logical schema) of the
     * factory most recently created — commit consumes it. Streaming
@@ -343,7 +351,11 @@ private[lakehouse] final class LakehouseDsv2Write(
       if (ddlMode) idxOf("_ddl") else -1,
       // size-targeted optimize-write: roll files at ≈targetBytes
       maxRecordsPerFile = t.writeRecordCap(head),
-      keyIdxs = keyIdxs)
+      keyIdxs = keyIdxs,
+      // a staged batch arrives sorted by every dir, bucket ids included
+      // ([[LakehouseTable.writeDataFiles]])
+      sortedByDir = mode.isInstanceOf[Dsv2CommitMode.Stage],
+      caseSensitive = conf.caseSensitiveAnalysis)
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
@@ -361,6 +373,11 @@ private[lakehouse] final class LakehouseDsv2Write(
     messages.toSeq.collect { case m: LakehouseWriteMessage => m.ddl }
       .flatten.distinct.sortBy(DdlRecord.seqOf)
 
+  /** Hand the writers' file stats to the table before it commits. */
+  private def recordStats(t: LakehouseTable, messages: Array[WriterCommitMessage]): Unit =
+    t.recordWrittenStats(messages.toSeq.collect {
+      case m: LakehouseWriteMessage => m.stats }.flatten.toMap)
+
   /** BATCH commit: one snapshot over the executor-written files,
     * through the table's commit for the mode's shape — append (rebase
     * loop inside: a racing writer costs a metadata retry, the files are
@@ -375,6 +392,7 @@ private[lakehouse] final class LakehouseDsv2Write(
     val (claimed, batchSchema) = staged
     val files = filesOf(messages)
     val t = table()
+    recordStats(t, messages)
     mode match {
       case s: Dsv2CommitMode.Stage => s.written = files
       case Dsv2CommitMode.Append =>
@@ -388,14 +406,14 @@ private[lakehouse] final class LakehouseDsv2Write(
       case Dsv2CommitMode.Keyed(keys, mor) =>
         val (head, id) = t.MainLine.resolve()
         t.commitKeyed(t.MainLine, head, id, claimed,
-            if (mor && files.nonEmpty) "apply" else "upsert", files, batchSchema,
-            keys, mark = None) {
+            if (mor && files.nonEmpty) "apply" else "upsert", files, inserts = None,
+            batchSchema, keys, mark = None) {
           // the staged files read back (key and partition columns only
           // are consumed) as the keyed removal's key side
           lazy val staged = readStaged(t, files, batchSchema)
           if (files.isEmpty) KeyedRemoval.Tombstones(Nil) // schema-only evolution
           else if (mor) KeyedRemoval.MaskKeys(staged)
-          else KeyedRemoval.RewriteKeys(staged.select(keys.map(functions.col): _*).distinct(),
+          else KeyedRemoval.RewriteKeys(staged.select(keys.map(functions.col): _*),
             t.footerKeyRanges(files, keys, batchSchema))
         }
     }
@@ -581,6 +599,7 @@ private[lakehouse] final class LakehouseDsv2Write(
       java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString)
     val ddl = ddlOf(messages)
     val files = filesOf(messages)
+    recordStats(t, messages)
     val tombs = messages.toSeq.collect {
       case m: LakehouseWriteMessage => m.tombFiles }.flatten.sorted
     val dels = messages.toSeq.collect {
@@ -643,7 +662,7 @@ private[lakehouse] final class LakehouseDsv2Write(
 
 private[lakehouse] object LakehouseDsv2Write {
   /** A write's layout order, ascending on each IDENTITY spec entry:
-    * Spark sorts each task by it on every face, so
+    * Spark sorts each SQL/`writeTo` and stream task by it, so
     * [[LakehouseDataWriter]] meets each value's rows together.
     */
   def layoutOrdering(partSpec: Seq[String]): Array[SortOrder] =
@@ -680,14 +699,16 @@ private[lakehouse] final class LakehouseWriterFactory(
     tz: String, parquetConf: Map[String, String], codec: String,
     ddlMode: Boolean, changeIdx: Int, ddlIdx: Int,
     maxRecordsPerFile: Option[Long] = None,
-    keyIdxs: Seq[Int] = Nil)
+    keyIdxs: Seq[Int] = Nil,
+    sortedByDir: Boolean = false,
+    caseSensitive: Boolean = false)
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     LakehouseWriteStats.writersCreated.incrementAndGet()
     new LakehouseDataWriter(rootAbs, dirName, plan, partCols, tz,
       parquetConf, codec, ddlMode, changeIdx, ddlIdx, partitionId, taskId,
-      maxRecordsPerFile, keyIdxs)
+      maxRecordsPerFile, keyIdxs, sortedByDir, caseSensitive)
   }
 
   override def createWriter(partitionId: Int, taskId: Long,
@@ -699,6 +720,8 @@ private[lakehouse] final class LakehouseWriterFactory(
   */
 object LakehouseWriteStats {
   val writersCreated = new java.util.concurrent.atomic.AtomicLong
+  /** The most data files any one writer has held open at once. */
+  val peakOpenFiles = new java.util.concurrent.atomic.AtomicLong
 }
 
 /** The per-task writer: routes each row to its hive partition dir
@@ -711,7 +734,10 @@ object LakehouseWriteStats {
   * task writes none. Rows arrive grouped by identity value
   * ([[LakehouseDsv2Write.layoutOrdering]]), so only the current
   * value's files are open, one per bucket dir under it; the value
-  * changing closes them. DDL-channel rows divert into the commit message.
+  * changing closes them. A staged batch (`sortedByDir`) also arrives
+  * grouped by bucket id, so it keeps ONE file open: any dir change
+  * closes it. Each closed file's stats ride the commit message.
+  * DDL-channel rows divert into the commit message.
   */
 private[lakehouse] final class LakehouseDataWriter(
     rootAbs: String, dirName: String,
@@ -720,7 +746,9 @@ private[lakehouse] final class LakehouseDataWriter(
     ddlMode: Boolean, changeIdx: Int, ddlIdx: Int,
     partitionId: Int, taskId: Long,
     maxRecordsPerFile: Option[Long] = None,
-    keyIdxs: Seq[Int] = Nil)
+    keyIdxs: Seq[Int] = Nil,
+    sortedByDir: Boolean = false,
+    caseSensitive: Boolean = false)
     extends DataWriter[InternalRow] {
 
   /** Keyed-stream split mode (round 15): data rows land in the data
@@ -735,9 +763,10 @@ private[lakehouse] final class LakehouseDataWriter(
   private val identityPlanIdx: Set[Int] =
     partCols.collect { case WritePartCol(i, None) => i }.toSet
 
-  // the spec positions of the identity entries: the dirs of ONE value
-  private val identityEntries: Seq[Int] =
-    partCols.indices.filter(j => partCols(j).bucketN.isEmpty)
+  // the spec positions whose dirs stay together in the input: the
+  // identity entries, or every entry of a staged (fully sorted) batch
+  private val groupedEntries: Seq[Int] =
+    partCols.indices.filter(j => sortedByDir || partCols(j).bucketN.isEmpty)
 
   /** Channel marker columns never enter KEYED data files — the V1
     * apply drops `_change` (and `_ddl`) before writing, and the keyed
@@ -830,6 +859,7 @@ private[lakehouse] final class LakehouseDataWriter(
   private var fileSeq = 0
   // files already shut: their value ended, or they hit the record cap
   private val closed = mutable.ArrayBuffer.empty[String]
+  private val stats = mutable.HashMap.empty[String, FileStats]
   // an open data file: root-relative path, record writer, rows written
   private final class OpenFile(val rel: String,
       val w: org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow]) {
@@ -840,8 +870,23 @@ private[lakehouse] final class LakehouseDataWriter(
   private var currentValue: Seq[String] = Nil
 
   private def closeOpen(): Unit = {
-    open.values.foreach { f => f.w.close(null); closed += f.rel }
+    open.values.foreach { f => finish(f.rel, f.w); closed += f.rel }
     open.clear()
+  }
+
+  /** Close a parquet file and keep its stats, from the footer it wrote. */
+  private def finish(rel: String,
+      w: org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow]): Unit = {
+    w.close(null)
+    try {
+      val footer = LakehouseDataWriter.footerOf(w)
+      stats(rel) = LakehouseTable.footerStats(LakehouseTable.footerAsRead(footer),
+        Some(java.nio.file.Files.size(java.nio.file.Paths.get(rootAbs, rel))),
+        n => if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT))
+    } catch {
+      // no stats is no evidence: the commit reads this file's footer
+      case scala.util.control.NonFatal(_) => ()
+    }
   }
 
   private def openWriter(suffix: String): OpenFile = {
@@ -879,7 +924,7 @@ private[lakehouse] final class LakehouseDataWriter(
         f"/part-$partitionId%05d-$taskId-$nonce-k.parquet"
       val rw = openParquet(rel, keySchema)
       rows.foreach(rw.write(null, _))
-      rw.close(null)
+      finish(rel, rw)
       Some(rel)
     }
   }
@@ -914,15 +959,20 @@ private[lakehouse] final class LakehouseDataWriter(
         return // delete rows carry keys only — never data
       }
     }
-    // the write's required ordering groups each identity value's rows,
-    // so a value that ends never comes back: its files close for good
-    val value = identityEntries.map(dirs)
+    // the write's required ordering (a staged batch: its own sort)
+    // groups these dirs' rows, so a value that ends never comes back:
+    // its files close for good
+    val value = groupedEntries.map(dirs)
     if (value != currentValue) {
       closeOpen()
       currentValue = value
     }
     val suffix = dirs.mkString("/")
-    val f = open.getOrElseUpdate(suffix, openWriter(suffix))
+    val f = open.getOrElseUpdate(suffix, {
+      val o = openWriter(suffix)
+      LakehouseWriteStats.peakOpenFiles.accumulateAndGet(open.size + 1L, math.max(_, _))
+      o
+    })
     // the record consumer serializes the row into parquet buffers
     // immediately, so the projection's reused row needs no copy
     f.w.write(null, proj(row))
@@ -930,7 +980,7 @@ private[lakehouse] final class LakehouseDataWriter(
     // size-targeted optimize-write: roll the file shut at the record
     // cap so a skewed partition value bins into ≈targetBytes files
     if (maxRecordsPerFile.exists(f.rows >= _)) {
-      f.w.close(null)
+      finish(f.rel, f.w)
       closed += f.rel
       open.remove(suffix)
     }
@@ -938,9 +988,9 @@ private[lakehouse] final class LakehouseDataWriter(
 
   override def commit(): WriterCommitMessage = {
     closeOpen()
-    LakehouseWriteMessage(closed.toSeq, ddl.toSeq,
-      tombFiles = tombKeys.toSeq.flatMap { case (dir, ks) => writeKeyFile("tomb", dir, ks) },
-      delFiles = writeKeyFile("del", "", delKeys).toSeq)
+    val tombFiles = tombKeys.toSeq.flatMap { case (dir, ks) => writeKeyFile("tomb", dir, ks) }
+    val delFiles = writeKeyFile("del", "", delKeys).toSeq
+    LakehouseWriteMessage(closed.toSeq, ddl.toSeq, tombFiles, delFiles, stats.toMap)
   }
 
   override def abort(): Unit = {
@@ -955,4 +1005,27 @@ private[lakehouse] final class LakehouseDataWriter(
   }
 
   override def close(): Unit = ()
+}
+
+private[lakehouse] object LakehouseDataWriter {
+  // parquet-mr keeps the footer a closed file wrote on its internal
+  // writer, which ParquetRecordWriter does not expose
+  private lazy val internalWriter = {
+    val f = classOf[org.apache.parquet.hadoop.ParquetRecordWriter[_]]
+      .getDeclaredField("internalWriter")
+    f.setAccessible(true)
+    f
+  }
+  private lazy val getFooter = {
+    val m = Class.forName("org.apache.parquet.hadoop.InternalParquetRecordWriter")
+      .getDeclaredMethod("getFooter")
+    m.setAccessible(true)
+    m
+  }
+
+  /** The footer a closed parquet record writer wrote. */
+  def footerOf(w: org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow])
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    getFooter.invoke(internalWriter.get(w))
+      .asInstanceOf[org.apache.parquet.hadoop.metadata.ParquetMetadata]
 }

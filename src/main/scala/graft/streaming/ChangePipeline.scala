@@ -318,45 +318,123 @@ final class ChangePipeline(
   /** One micro-batch: fan-out → record flushes → min-watermark commit.
     *
     * The batch is cached only when MORE than one consumer re-scans it
-    * (N sinks + the offset agg): with a single sink, a cache write +
+    * (N sinks + the offset scan): with a single sink, a cache write +
     * two cached reads costs more than just scanning the source twice,
     * and the cache was ~20% of e2e wall time in the single-sink bench.
+    *
+    * The per-(topic, partition) max offsets come from [[OffsetScan]]:
+    * one shuffle-free job submitted from this thread (so it carries the
+    * stream's job group and stopping the stream cancels it) that runs
+    * BESIDE the sinks. Only its first row-bearing partition gates the
+    * sinks — an empty batch never reaches one — and the full result is
+    * joined before the first `recordFlush`.
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val b = if (sinks.size > 1) batch.cache() else batch
     try {
-      val maxOffsets = b.groupBy(col("topic"), col("partition"))
-        .agg(max(col("offset")).as("max_offset"))
-        .collect()
-        .map(r => ((r.getString(0), r.getInt(1)), r.getLong(2)))
-      if (maxOffsets.isEmpty) return
+      val offsets = OffsetScan.start(b)
+      try fanOut(b, batchId, offsets) finally offsets.cancel()
+    } finally if (sinks.size > 1) b.unpersist()
+  }
 
-      sinks.foreach { sink =>
-        // a batch gets 1 + dlqMaxRetries write attempts before routing
-        // to the DLQ (`DLQConfig.max_retries`, config/models.py:212);
-        // sinks stay responsible for their own finer-grained retry
-        // (e.g. the webhook per-request backoff)
-        var attempt = 0
-        var done = false
-        while (!done) {
-          try {
-            sink.write(b, batchId)
-            maxOffsets.foreach { case (tp, off) => ledger.recordFlush(sink.sinkId, tp, off) }
-            done = true
-          } catch {
-            case e: Exception =>
-              attempt += 1
-              if (attempt > dlqMaxRetries) {
-                dlq.route(b, sink.sinkId, e)
-                done = true
-                // flushed offsets deliberately NOT advanced on failure
-                // (`test_iceberg_sink.py:373-395` semantics)
-              }
-          }
+  private def fanOut(b: DataFrame, batchId: Long, offsets: OffsetScan): Unit = {
+    if (!offsets.nonEmpty()) return
+
+    sinks.foreach { sink =>
+      // a batch gets 1 + dlqMaxRetries write attempts before routing
+      // to the DLQ (`DLQConfig.max_retries`, config/models.py:212);
+      // sinks stay responsible for their own finer-grained retry
+      // (e.g. the webhook per-request backoff)
+      var attempt = 0
+      var written = false
+      while (!written && attempt <= dlqMaxRetries) {
+        try {
+          sink.write(b, batchId)
+          written = true
+        } catch {
+          case e: Exception =>
+            attempt += 1
+            // flushed offsets deliberately NOT advanced on failure
+            // (`test_iceberg_sink.py:373-395` semantics)
+            if (attempt > dlqMaxRetries) dlq.route(b, sink.sinkId, e)
         }
       }
-      val commits = ledger.commitableNextToFetch()
-      if (commits.nonEmpty) onCommit(commits)
-    } finally if (sinks.size > 1) b.unpersist()
+      // outside the retry loop: a failed offset scan fails the batch,
+      // it is not the sink's failure to route
+      if (written)
+        offsets.maxOffsets().foreach { case (tp, off) => ledger.recordFlush(sink.sinkId, tp, off) }
+    }
+    val commits = ledger.commitableNextToFetch()
+    if (commits.nonEmpty) onCommit(commits)
+  }
+}
+
+/** The max offset per (topic, partition) of one micro-batch, computed
+  * by ONE shuffle-free Spark job: each task folds its rows into a
+  * small map, the driver merges the per-task maps as they arrive. The
+  * job is submitted asynchronously from the calling thread, so it
+  * inherits that thread's local properties (job group, description)
+  * and runs while the caller goes on with the batch.
+  */
+private[streaming] final class OffsetScan private (
+    job: org.apache.spark.FutureAction[Unit],
+    parts: Array[OffsetScan.Partial],
+    rowsSeen: scala.concurrent.Promise[Boolean]) {
+  import scala.concurrent.Await
+  import scala.concurrent.duration.Duration
+
+  /** Does the batch hold any row? Answers at the first row-bearing
+    * task, or once every task reported none.
+    */
+  def nonEmpty(): Boolean = Await.result(rowsSeen.future, Duration.Inf)
+
+  /** The merged per-(topic, partition) maxima; waits for the job. */
+  def maxOffsets(): Map[(String, Int), Long] = merged
+
+  private lazy val merged: Map[(String, Int), Long] = {
+    Await.result(job, Duration.Inf)
+    parts.iterator.flatMap(_.maxOffsets).foldLeft(Map.empty[(String, Int), Long]) {
+      case (m, (tp, off)) => m.updated(tp, math.max(off, m.getOrElse(tp, off)))
+    }
+  }
+
+  /** Stop the job if it is still running (no sink needs its result). */
+  def cancel(): Unit = if (!job.isCompleted) job.cancel()
+}
+
+private[streaming] object OffsetScan {
+  /** One task's fold: rows seen, max offset per (topic, partition). */
+  final case class Partial(rows: Long, maxOffsets: Map[(String, Int), Long])
+
+  def start(batch: DataFrame): OffsetScan = {
+    val rdd = batch.select(col("topic"), col("partition"), col("offset")).queryExecution.toRdd
+    val parts = new Array[Partial](rdd.getNumPartitions)
+    val rowsSeen = scala.concurrent.Promise[Boolean]()
+    val job = batch.sparkSession.sparkContext.submitJob(rdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        var rows = 0L
+        val m = scala.collection.mutable.HashMap.empty[(String, Int), Long]
+        it.foreach { r =>
+          rows += 1
+          // a row without coordinates has no offset to commit
+          if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
+            val tp = (r.getUTF8String(0).toString, r.getInt(1))
+            val off = r.getLong(2)
+            if (off > m.getOrElse(tp, Long.MinValue)) m(tp) = off
+          }
+        }
+        Partial(rows, m.toMap)
+      },
+      0 until parts.length,
+      (i: Int, p: Partial) => {
+        parts(i) = p
+        if (p.rows > 0) rowsSeen.trySuccess(true)
+      },
+      ())
+    job.onComplete {
+      case scala.util.Success(_) => rowsSeen.trySuccess(false)
+      case scala.util.Failure(e) => rowsSeen.tryFailure(e)
+    }(scala.concurrent.ExecutionContext.parasitic)
+    new OffsetScan(job, parts, rowsSeen)
   }
 }

@@ -362,7 +362,7 @@ class LakehouseWriteSpec extends SparkSpec {
         "not null out under a stale physical name")
   }
 
-  test("open-writer eviction is true LRU: a hot partition value interleaved past the cap keeps ONE file") {
+  test("the layout sort groups a hot partition value interleaved with 320 cold values into ONE file") {
     // one HOT value recurring between a stream of 320 cold values, all
     // from a single task: the write's layout sort groups the hot rows,
     // so the hot dir gets exactly one file
@@ -686,5 +686,57 @@ class LakehouseWriteSpec extends SparkSpec {
     assert(oneFilePerDir("table-API append", snap.files) === dirs)
     assert(snap.files.size === 80)
     assert(t.read().collect().length === 800)
+  }
+
+  test("a staged bucket-only append keeps one open file per task at a time") {
+    // 4 tasks x 64 buckets: unsorted by bucket id, every task held all
+    // 64 bucket files open at once (256 parquet writers sharing the
+    // heap's row-group budget); sorted, each holds one
+    val t = new LakehouseTable(spark, tmpDir("lw-bucket-open"))
+    LakehouseWriteStats.peakOpenFiles.set(0)
+    val snap = t.append(spark.range(0, 64000, 1, 4).select(col("id").as("k"),
+      concat(lit("v"), col("id")).as("v")), Seq("bucket(64, k)"))
+    assert(LakehouseWriteStats.peakOpenFiles.get === 1L)
+    assert(snap.files.size === 256)
+    assert(snap.files.map(f => LakehouseTable.hiveSegsOf(f).toSeq).distinct.size === 64)
+    assert(t.read().collect().length === 64000)
+  }
+
+  test("writer-side file stats equal a footer read: flat, hive and bucketed, strings and nulls") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("k", LongType), StructField("rk", StringType),
+      StructField("s", StringType), StructField("i", IntegerType),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("allnull", StringType)))
+    val rows = (0 until 200).map { n =>
+      org.apache.spark.sql.Row(n.toLong, s"r${n % 3}", if (n % 5 == 0) null else s"s\u00e9$n",
+        if (n % 7 == 0) null else n - 100, if (n % 11 == 0) 0.0 else n * 0.5,
+        if (n % 2 == 0) -n.toFloat else n.toFloat, null)
+    }
+    import scala.jdk.CollectionConverters._
+    def batch(from: Int) = spark.createDataFrame(rows.drop(from).asJava, schema).repartition(3)
+    for ((layout, spec) <- Seq("flat" -> Nil, "hive" -> Seq("rk"),
+        "bucketed" -> Seq("bucket(4, k)"))) {
+      val t = new LakehouseTable(spark, tmpDir(s"lw-stats-$layout"))
+      t.append(batch(0), spec)
+      t.upsert(batch(150), Seq("k")) // a keyed commit: survivors + inserts
+      val snap = t.currentSnapshot().get
+      val stats = snap.stats.getOrElse(fail(s"$layout: no manifest stats"))
+      assert(snap.files.nonEmpty && snap.files.forall(stats.contains), layout)
+      snap.files.foreach { f =>
+        val path = java.nio.file.Paths.get(t.root, f)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(path.toString), spark.sessionState.newHadoopConf()))
+        val fromFooter = try LakehouseTable.footerStats(reader.getFooter,
+          Some(java.nio.file.Files.size(path)), _.toLowerCase(java.util.Locale.ROOT))
+          finally reader.close()
+        assert(stats(f) === fromFooter, s"$layout $f")
+      }
+      assert(stats.values.exists(_.cols.get("s").exists(_.nulls.exists(_ > 0))), layout)
+      assert(stats.values.forall(st => !st.cols.contains("allnull")), layout)
+      // the commits took every file's stats from its writer
+      assert(t.footerOpens.get === 0L, layout)
+    }
   }
 }

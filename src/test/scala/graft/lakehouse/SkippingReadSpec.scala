@@ -283,8 +283,8 @@ class SkippingReadSpec extends SparkSpec {
     val oldFiles = t2.listSnapshots().takeRight(2).head.files
     assert(oldFiles.forall(snap.files.contains),
       "every pre-existing file must carry over by reference (nothing rewritten)")
-    // footer opens are write-time stat collection for the NEW files only
-    assert(t2.footerOpens.get() - footersBefore === snap.files.size - oldFiles.size,
+    // the new files' stats come from their writers: no footer opens at all
+    assert(t2.footerOpens.get() - footersBefore === 0,
       "stage 1 must answer from manifest stats — no existing file's footer opened")
     assert(t2.read().count() === 16100)
   }

@@ -140,6 +140,55 @@ class ChangePipelineSpec extends SparkSpec {
       Set((1L, "alice"), (2L, "bob"), (3L, "carol2"), (5L, "erin")))
   }
 
+  test("a keyed c/u/d micro-batch runs in at most 8 Spark jobs, offsets included") {
+    // the benchmark session's cached-plan setting (perfbench Harness);
+    // the specs' default costs one more job to build the cached batch
+    val conf = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val was = spark.conf.getOption(conf)
+    spark.conf.set(conf, "true")
+    try {
+      import spark.implicits._
+      val src = tmpDir("cp8-src")
+      val table = new LakehouseTable(spark, tmpDir("cp8-table"))
+      table.append((0L until 400L).map(i => (i, s"n$i", "cdc.public.users", 0L, -1L, "r"))
+        .toDF("id", "name", "_cdc_topic", "_cdc_partition", "_cdc_offset", "_cdc_op")
+        .repartitionByRange(4, $"id"))
+      writeEnvelopes(src, Seq(env("c", 0, 1000, "new"), env("u", 1, 5, "five"),
+        env("d", 2, 45, "x"), env("u", 3, 6, "six"), env("u", 4, 6, "six2")))
+      var committed = Map.empty[(String, Int), Long]
+      val pipe = new ChangePipeline(spark, src,
+        Seq(new LakehouseSink("lh", table, payloadSchema, upsertKeys = Seq("id"))),
+        new DlqWriter(new LakehouseTable(spark, tmpDir("cp8-dlq"))), tmpDir("cp8-ckpt"),
+        onCommit = committed = _)
+      val jobs = jobsRunBy(pipe.start().awaitTermination(60000))
+      info(s"keyed c/u/d micro-batch: $jobs Spark jobs")
+      assert(jobs <= 8, s"a keyed micro-batch ran $jobs Spark jobs")
+      assert(table.read().select("id", "name").as[(Long, String)].collect().toMap ===
+        (0L until 400L).map(i => i -> s"n$i").toMap - 45L ++
+          Map(1000L -> "new", 5L -> "five", 6L -> "six2"))
+      assert(committed === Map(("cdc.public.users", 0) -> 5L))
+    } finally was match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
+  }
+
+  test("a batch whose rows are all filtered out reaches no sink and commits nothing") {
+    val src = tmpDir("cp9-src")
+    writeEnvelopes(src, Seq(env("c", 0, 1, "x", topic = "cdc.public.users.dlq")))
+    var writes = 0
+    val sink = new Sink {
+      val sinkId = "counting"
+      def write(batch: DataFrame, batchId: Long): Unit = writes += 1
+    }
+    var committed = Map.empty[(String, Int), Long]
+    new ChangePipeline(spark, src, Seq(sink),
+      new DlqWriter(new LakehouseTable(spark, tmpDir("cp9-dlq"))), tmpDir("cp9-ckpt"),
+      onCommit = committed = _).start().awaitTermination(60000)
+    assert(writes === 0)
+    assert(committed.isEmpty)
+  }
+
   test("restart from checkpoint resumes without reprocessing (T9 recovery)") {
     val src = tmpDir("cp5-src")
     val ckpt = tmpDir("cp5-ckpt")
