@@ -227,23 +227,6 @@ final case class Snapshot(
   def rebornFloors: Map[String, Long] = reborn.getOrElse(Map.empty)
 }
 
-/** What a keyed commit ([[LakehouseTable.commitKeyed]]) removes from
-  * its head besides adding the batch's files.
-  */
-private[lakehouse] sealed trait KeyedRemoval
-private[lakehouse] object KeyedRemoval {
-  /** Merge-on-read with tombstone files the caller already staged. */
-  final case class Tombstones(files: Seq[String]) extends KeyedRemoval
-  /** Merge-on-read: `batch`'s key tuples land as the tombstone. */
-  final case class MaskKeys(batch: DataFrame) extends KeyedRemoval
-  /** Copy-on-write: the head's files holding any of `keyRows` rewrite
-    * without them; `ranges` are the batch's per-key ranges when known
-    * (None runs the min/max job).
-    */
-  final case class RewriteKeys(keyRows: DataFrame,
-      ranges: Option[Seq[ScanPredicate.Range]]) extends KeyedRemoval
-}
-
 /** Pushed-down scan predicate for the skipping read path
   * ([[LakehouseTable.read(preds*)]]): equality probes consult bloom
   * sidecars AND parquet-footer min/max, ranges consult footer min/max
@@ -874,73 +857,98 @@ final class LakehouseTable(spark: SparkSession, val root: String,
 
   /** The one KEYED commit. Every face that lands a keyed batch — the
     * table API's upsert / applyChanges (main line or branch), the DSv2
-    * batch write and the DSv2 stream epoch — commits here against the
-    * (head, id) and `target` it already resolved. The DSv2 faces hand
-    * over their executor-`staged` data files (written under
-    * `claimedId`); the table-API faces hand over their `inserts` rows,
-    * which this commit writes:
+    * batch write and the DSv2 stream epoch — writes it once through the
+    * executor writers' keyed split ([[LakehouseDataWriter]]) at
+    * `claimedId` and hands the `written` halves here: the data files
+    * (the insert rows), the tomb files (every touched key tuple, deduped
+    * per task, under the layout's non-key partition dirs) and the del
+    * files (delete keys, transport only). Against the head `target`
+    * resolves now:
     *
-    *  1. bootstrap: no head — the batch becomes the table;
-    *  2. a raced tombstone newer than `claimedId` ([[racedTombstone]])
+    *  1. a txn `mark` a racing replica already landed absorbs the batch
+    *     (None);
+    *  2. bootstrap: no head — the data files become the table;
+    *  3. a raced tombstone newer than `claimedId` ([[racedTombstone]])
     *     throws [[ConcurrentCommitException]];
-    *  3. merge-on-read: the tombstone appends to the head's — staged
-    *     files, or key rows written through [[writeTombstone]] at
-    *     `claimedId` (masking is strictly-older, so the batch's own
-    *     rows stay visible);
-    *  4. copy-on-write: the head's files holding the batch's keys
-    *     ([[touchedFilesFor]]) swap for their survivors — the rows whose
-    *     key the batch does not carry;
-    *  5. the survivors and the inserts land in ONE write, both projected
-    *     onto the commit's evolved schema, under the head's layout;
-    *  6. publish on `target`.
+    *  4. merge-on-read: the tomb files append to the head's tombstone
+    *     (masking is strictly-older, so the batch's own rows stay
+    *     visible);
+    *  5. copy-on-write: the head's files holding a tomb key
+    *     ([[touchedFilesFor]], key ranges from the tomb files' stats)
+    *     swap for their survivors — the rows whose key the batch does
+    *     not carry — written at the commit's id, projected onto its
+    *     evolved schema, under the head's layout;
+    *  6. publish on `target`; `cdc` (or merge-on-read) names the op
+    *     `apply`, else `upsert`.
     *
-    * `removal` is evaluated only past the bootstrap. This never
-    * re-resolves or retries: a lost publish race surfaces as
+    * Files no manifest references are discarded here: the del files
+    * (and copy-on-write's tomb files) after the publish, every staged
+    * and survivor file when the batch is absorbed or anything throws.
+    * This never retries: a lost publish race surfaces as
     * [[ConcurrentCommitException]] to the caller.
     */
-  private[lakehouse] def commitKeyed(target: WriteTarget, head: Option[Snapshot],
-      id: Long, claimedId: Long, op: String, staged: Seq[String],
-      inserts: Option[DataFrame], batchSchema: StructType, keys: Seq[String],
-      mark: Option[TxnMark])(removal: => KeyedRemoval): Snapshot = writeLock.synchronized {
-    require(keys.nonEmpty, "keyed commit requires key columns")
-    requireCompatibleSchemaFor(head, batchSchema)
-    val schemaJson = evolvedSchemaJsonFor(head, batchSchema)
-    def written(survivors: Option[DataFrame]): Seq[String] = {
-      val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      // the head's layout, minus dir names no column sources (a path
-      // table's inferred `<col>_bucket` dirs carry no bucket count)
-      val layout = head.fold(Seq.empty[String])(c => inferPartitionCols(c.files))
-        .filter(pc => schema.fieldNames.exists(f => nameKey(f) == nameKey(specSourceCol(pc))))
-      (survivors.toSeq ++ inserts).map(projectOnto(_, schema)).reduceOption(_ union _)
-        .fold(Seq.empty[String])(rows =>
-          writeDataFiles(rows, id, head = head, partitionCols = layout))
-    }
-    val (files, deletes) = head match {
-      case None => (staged ++ written(None), None)
-      case Some(c) =>
-        if (racedTombstone(head, claimedId))
-          throw new ConcurrentCommitException(root, claimedId)
-        removal match {
-          case KeyedRemoval.Tombstones(tomb) =>
-            (c.files ++ staged ++ written(None),
-              Some(c.tombstones ++ tomb).filter(_.nonEmpty))
-          case KeyedRemoval.MaskKeys(batch) =>
-            val tomb = writeTombstone(c, batch, keys, claimedId)
-            (c.files ++ staged ++ written(None),
-              Some(c.tombstones ++ tomb).filter(_.nonEmpty))
-          case KeyedRemoval.RewriteKeys(keyRows, ranges) =>
-            val touched = touchedFilesFor(c, keyRows, keys, ranges)
-            // effective (tombstone-masked) read: a raw read would copy
-            // MoR-deleted rows into a fresh-origin file and resurrect
-            // them. An anti-join ignores duplicate keys, so the key
-            // rows need no distinct.
-            val survivors = Option.when(touched.nonEmpty)(
-              scanFiles(c, touched).join(keyRows, keys, "left_anti"))
-            (c.files.diff(touched) ++ staged ++ written(survivors), c.deletes)
+  private[lakehouse] def commitKeyed(target: WriteTarget, claimedId: Long,
+      written: WrittenFiles, batchSchema: StructType, keys: Seq[String],
+      mergeOnRead: Boolean, cdc: Boolean,
+      mark: Option[TxnMark]): Option[Snapshot] = writeLock.synchronized {
+    var survivors = Seq.empty[String]
+    val published = try {
+      if (mark.exists(m => lastTxnVersion(m.appId).exists(_ >= m.version))) None
+      else {
+        require(keys.nonEmpty, "keyed commit requires key columns")
+        val (head, id) = target.resolve()
+        requireCompatibleSchemaFor(head, batchSchema)
+        val schemaJson = evolvedSchemaJsonFor(head, batchSchema)
+        val (files, deletes) = head match {
+          case None => (written.data, None)
+          case Some(c) =>
+            if (racedTombstone(head, claimedId))
+              throw new ConcurrentCommitException(root, claimedId)
+            if (mergeOnRead)
+              (c.files ++ written.data, Some(c.tombstones ++ written.tombs).filter(_.nonEmpty))
+            else if (written.tombs.isEmpty) (c.files ++ written.data, c.deletes)
+            else {
+              val canon = batchSchema.fields.map(f => nameKey(f.name) -> f).toMap
+              val keyFields = StructType(keys.map { k =>
+                val f = canon.getOrElse(nameKey(k), throw new IllegalArgumentException(
+                  s"keys column '$k' not in the batch schema ${batchSchema.simpleString}"))
+                org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)
+              })
+              // explicit schema: the writers stamped the tomb key files
+              // with exactly these (name, type) pairs ([[LakehouseDataWriter
+              // .keySchema]]); re-inferring would cost a footer job
+              val keyRows = spark.read.schema(keyFields)
+                .parquet(written.tombs.map(f => rootPath.resolve(f).toString): _*)
+              val touched = touchedFilesFor(c, keyRows, keys,
+                footerKeyRanges(written.tombs, keys, keyFields))
+              if (touched.nonEmpty) {
+                val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+                // the head's layout, minus dir names no column sources (a
+                // path table's inferred `<col>_bucket` dirs carry no count)
+                val layout = inferPartitionCols(c.files).filter(pc =>
+                  schema.fieldNames.exists(f => nameKey(f) == nameKey(specSourceCol(pc))))
+                // effective (tombstone-masked) read: a raw read would copy
+                // MoR-deleted rows into a fresh-origin file and resurrect
+                // them. An anti-join ignores duplicate keys.
+                survivors = writeDataFiles(projectOnto(
+                  scanFiles(c, touched).join(keyRows, keys, "left_anti"), schema),
+                  id, head = head, partitionCols = layout)
+              }
+              (c.files.diff(touched) ++ written.data ++ survivors, c.deletes)
+            }
         }
+        Some(target.publish(Snapshot(id, head.map(_.snapshotId), System.currentTimeMillis(),
+          if (cdc || mergeOnRead) "apply" else "upsert", files, schemaJson, txn = mark,
+          deletes = deletes)))
+      }
+    } catch {
+      case e: Exception =>
+        discardWrittenFiles(written.all ++ survivors)
+        throw e
     }
-    target.publish(Snapshot(id, head.map(_.snapshotId), System.currentTimeMillis(),
-      op, files, schemaJson, txn = mark, deletes = deletes))
+    discardWrittenFiles(published.fold(written.all)(s =>
+      written.dels ++ written.tombs.filterNot(s.tombstones.toSet)))
+    published
   }
 
   /** `df` with exactly `schema`'s columns, in order: a column `df`
@@ -958,72 +966,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }: _*)
   }
 
-  /** The one merge-on-read TOMBSTONE writer: `batch`'s distinct key
-    * tuples at origin `id`. The tombstone lands under `head`'s hive
-    * layout when the batch carries the partition columns (beyond the
-    * keys): per-partition key-file accounting — e.g. the ANN occupancy
-    * probe — then answers from the MANIFEST alone. Masking semantics
-    * are unchanged: partition values live in the PATH, not the file,
-    * so the mask keys (read from the tomb file's columns) stay exactly
-    * `keys`.
-    */
-  private def writeTombstone(head: Snapshot, batch: DataFrame, keys: Seq[String],
-      id: Long): Seq[String] = {
-    val tombPartSpecs = inferPartitionCols(head.files).filter { pc =>
-      val src = specSourceCol(pc)
-      batch.columns.exists(_.equalsIgnoreCase(src)) &&
-        !keys.exists(_.equalsIgnoreCase(src))
-    }
-    val tombKeys = batch.select((keys ++ tombPartSpecs.map(specSourceCol))
-      .map(col): _*).distinct()
-    writeDataFiles(tombKeys, id, suffix = "tomb",
-      partitionCols = tombPartSpecs, head = Some(head))
-  }
-
-  /** KEYED STREAMING epoch over EXECUTOR-WRITTEN halves: `dataFiles`
-    * are the batch's insert rows, `tombFiles` its deduped touched-key
-    * tuples, both staged task-side at `claimedId` — the driver never
-    * touches row data on the merge-on-read path, where the tomb files
-    * ARE the tombstone. Copy-on-write reads the tomb keys back as the
-    * probe side (stage-1 ranges from their stats; duplicate keys across
-    * tasks are harmless to the semi- and anti-join); the caller then
-    * discards them. `mark` is the epoch's exactly-once transaction
-    * mark: an absorbed replay returns None (caller discards every
-    * staged file); an empty epoch still commits so its mark is
-    * recorded. `cdc` only names the op lineage (`apply` vs `upsert`).
-    */
-  private[lakehouse] def commitApplyStagedFiles(dataFiles: Seq[String],
-      tombFiles: Seq[String], batchSchema: StructType, claimedId: Long,
-      keys: Seq[String], mergeOnRead: Boolean, cdc: Boolean,
-      mark: Option[TxnMark]): Option[Snapshot] = writeLock.synchronized {
-    if (mark.exists(m => lastTxnVersion(m.appId).exists(_ >= m.version)))
-      return None // a racing replica of this exact epoch already landed
-    val (head, id) = MainLine.resolve()
-    Some(commitKeyed(MainLine, head, id, claimedId,
-        if (cdc || mergeOnRead) "apply" else "upsert", dataFiles, inserts = None,
-        batchSchema, keys, mark) {
-      if (mergeOnRead || tombFiles.isEmpty) KeyedRemoval.Tombstones(tombFiles)
-      else {
-        val canon = batchSchema.fields.map(f => nameKey(f.name) -> f).toMap
-        val keyFields = StructType(keys.map { k =>
-          val f = canon.getOrElse(nameKey(k), throw new IllegalArgumentException(
-            s"keys column '$k' not in the batch schema ${batchSchema.simpleString}"))
-          org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)
-        })
-        // explicit schema: the executor writers stamped the tomb key
-        // files with exactly these (name, type) pairs ([[LakehouseData
-        // Writer.keySchema]]); re-inferring would cost a footer job
-        // per epoch commit
-        KeyedRemoval.RewriteKeys(
-          spark.read.schema(keyFields)
-            .parquet(tombFiles.map(f => rootPath.resolve(f).toString): _*),
-          footerKeyRanges(tombFiles, keys, keyFields))
-      }
-    })
-  }
-
   /** Drop uncommitted executor-written files (aborted job, absorbed
-    * replay) and their now-empty claim dirs.
+    * replay) and their claim dirs with everything in them; an entry
+    * `data/<dir>/` names a claim dir alone.
     */
   private[lakehouse] def discardWrittenFiles(files: Seq[String]): Unit = {
     files.foreach { f =>
@@ -1277,26 +1222,18 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
 
   /** Upsert on `keys`: rows in the incoming batch replace existing rows
-    * with equal key tuples. Only files that actually contain matching
-    * keys are rewritten; untouched files carry over by reference.
+    * with equal key tuples. Copy-on-write rewrites only the files that
+    * actually contain matching keys; untouched files carry over by
+    * reference. `mergeOnRead = true` lands it as a pure append (batch
+    * keys as a tombstone masking older versions + the batch as new
+    * files — an upsert IS an all-inserts change batch), zero
+    * existing-file reads or rewrites. A `_change` column is data here;
+    * see [[applyChanges]] for the change-feed form.
     */
-  def upsert(df0: DataFrame, keys: Seq[String]): Snapshot =
-    upsert(df0, keys, mergeOnRead = false)
-
-  /** Keyed upsert; `mergeOnRead = true` lands it as a pure append
-    * (batch keys as a tombstone masking older versions + the batch as
-    * new files — an upsert IS an all-inserts change batch), zero
-    * existing-file reads or rewrites. See [[applyChanges]].
-    */
-  def upsert(df0: DataFrame, keys: Seq[String], mergeOnRead: Boolean): Snapshot =
-    writeLock.synchronized { upsertOn(MainLine, df0, keys, mergeOnRead) }
-
-  private def upsertOn(target: WriteTarget, df0: DataFrame, keys: Seq[String],
-      mergeOnRead: Boolean): Snapshot =
-    if (mergeOnRead)
-      applyChangesWith(df0.withColumn("_change", lit("insert")), keys,
-        mark = None, mergeOnRead = true, target)
-    else upsertWith(df0, keys, mark = None, target)
+  def upsert(df0: DataFrame, keys: Seq[String], mergeOnRead: Boolean = false): Snapshot =
+    writeLock.synchronized {
+      writeKeyed(MainLine, df0, keys, mark = None, mergeOnRead, cdc = false).get
+    }
 
   /** Upsert guarded by the transaction ledger — None means `version`
     * was already applied for `appId` and nothing was written. See
@@ -1305,7 +1242,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   def upsertIdempotent(df: DataFrame, keys: Seq[String], appId: String,
       version: Long): Option[Snapshot] = writeLock.synchronized {
     if (lastTxnVersion(appId).exists(_ >= version)) None
-    else Some(upsertWith(df, keys, Some(TxnMark(appId, version))))
+    else writeKeyed(MainLine, df, keys, Some(TxnMark(appId, version)),
+      mergeOnRead = false, cdc = false)
   }
 
   /** Data files of keyed-write stage-2 collision probes — the exact
@@ -1321,8 +1259,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * key tuples? Two stages, cheapest first — the AnnIndex.append
     * collision discipline generalized to every keyed write:
     *
-    *  1. the batch's per-key-column min/max (ONE tiny agg over the
-    *     already-cached batch) feeds [[pruneFiles]] as conjunctive
+    *  1. the batch's per-key-column min/max (`knownRanges`, or ONE
+    *     tiny agg over `keyRows`) feeds [[pruneFiles]] as conjunctive
     *     ranges — manifest stats and partition paths answer with zero
     *     data-file I/O and zero jobs, so a key-disjoint batch exits
     *     here having read NOTHING of the existing table;
@@ -1342,11 +1280,12 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   private[lakehouse] def touchedFilesFor(cur: Snapshot, keyRows: DataFrame,
       keys: Seq[String],
-      /** Pre-computed per-key (min, max) ranges, when the caller's own
-        * batch aggregate already carries them (applyChanges folds them
-        * into its tag-validation pass — one Spark job per CDC batch
-        * instead of two). Min/max over the raw batch equals min/max
-        * over its distinct keys, so the prune is unchanged.
+      /** Pre-computed per-key (min, max) ranges, when the caller
+        * already knows them: [[commitKeyed]] folds them from the
+        * staged tomb files' writer stats ([[footerKeyRanges]]), so a
+        * keyed write runs no aggregate job. Min/max over the key rows
+        * equals min/max over their distinct keys, so the prune is
+        * unchanged.
         */
       knownRanges: Option[Seq[ScanPredicate.Range]] = None): Seq[String] = {
     val ranges = knownRanges.getOrElse {
@@ -1416,22 +1355,6 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     }
   }
 
-  /** Copy-on-write upsert: the batch's rows are the commit's inserts;
-    * the key-range prune runs one min/max job over the cached batch,
-    * and the rewrite's survivors land with the batch in one write
-    * ([[commitKeyed]]).
-    */
-  private def upsertWith(df0: DataFrame, keys: Seq[String],
-      mark: Option[TxnMark], target: WriteTarget = MainLine): Snapshot = {
-    require(keys.nonEmpty, "upsert requires key columns")
-    val (cur, id) = target.resolve()
-    requireCompatibleSchemaFor(cur, df0.schema)
-    val incoming = canonicalizedNamesAt(cur, df0).cache()
-    try commitKeyed(target, cur, id, id, "upsert", Nil, Some(incoming), incoming.schema,
-        keys, mark)(KeyedRemoval.RewriteKeys(incoming.select(keys.map(col): _*), None))
-    finally incoming.unpersist()
-  }
-
   /** CDC-apply: consume one change-feed batch (rows tagged by a
     * `_change` column, "insert" | "delete") into this table keyed by
     * `keys`, as ONE snapshot — the downstream half of the
@@ -1455,75 +1378,38 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       mergeOnRead: Boolean = false): Option[Snapshot] = writeLock.synchronized {
     txn match {
       case Some((app, v)) if lastTxnVersion(app).exists(_ >= v) => None
-      case _ => Some(applyChangesWith(ch0, keys,
-        txn.map { case (a, v) => TxnMark(a, v) }, mergeOnRead, MainLine))
+      case _ => writeKeyed(MainLine, ch0, keys, txn.map { case (a, v) => TxnMark(a, v) },
+        mergeOnRead, cdc = true)
     }
   }
 
-  private def applyChangesWith(ch0: DataFrame, keys: Seq[String],
-      mark: Option[TxnMark], mergeOnRead: Boolean, target: WriteTarget): Snapshot = {
-    require(keys.nonEmpty, "applyChanges requires key columns")
-    require(ch0.columns.contains("_change"),
+  /** The table API's keyed write: [[upsert]] (`cdc = false`) or
+    * [[applyChanges]] (`cdc`: the `_change` column tags each row
+    * insert|delete and never lands as data) on `target`. Every check
+    * runs before anything is written: key presence, merge-on-read key
+    * maskability, schema compatibility. The batch is then written ONCE
+    * by the executor writers' keyed split, which also fails the write
+    * on the first tag outside insert|delete (NULL included) a task
+    * meets, and lands through [[commitKeyed]].
+    */
+  private def writeKeyed(target: WriteTarget, df0: DataFrame, keys: Seq[String],
+      mark: Option[TxnMark], mergeOnRead: Boolean, cdc: Boolean): Option[Snapshot] = {
+    require(keys.nonEmpty, s"${if (cdc) "applyChanges" else "upsert"} requires key columns")
+    require(!cdc || df0.columns.contains("_change"),
       "applyChanges input must carry a _change column (insert|delete)")
-    if (mergeOnRead) LakehouseMor.requireMaskableKeys(ch0.schema, keys)
-    val (cur, id) = target.resolve()
-    val ch = canonicalizedNamesAt(cur, ch0).cache()
-    try {
-      requireCompatibleSchemaFor(cur, ch.drop("_change").schema)
-      // unknown tags must fail LOUDLY: an unvalidated tag (a typo,
-      // or another feed dialect's "update_postimage") would fall
-      // into the delete path below and silently destroy the row.
-      // NULL needs its own disjunct — under SQL three-valued logic
-      // `!isin(...)` is NULL for a null tag and the filter would
-      // silently drop exactly the row it exists to catch.
-      // ONE aggregate pass answers tag validity AND the emptiness
-      // probes the branches below need (nIns/nAll) — the separate
-      // distinct-collect + isEmpty actions cost a Spark job each
-      // per CDC batch (guide §1.2: don't compute things twice)
-      // per-key min/max ride the same pass: the CoW branch's
-      // touched-file prune needs exactly these ranges, and a
-      // separate agg job per CDC batch paid for them twice
-      val statAggs = Seq(
-        // bounded sample of bad tags (r16 ADVICE): an unbounded
-        // collect_set over a high-cardinality corrupt feed would
-        // materialize every distinct bad value on the driver just
-        // to fail; five examples diagnose the same
-        slice(sort_array(collect_set(when(
-          col("_change").isNull || !col("_change").isin("insert", "delete"),
-          coalesce(col("_change"), lit("NULL"))))), 1, 5).as("bad"),
-        count(when(col("_change") === "insert", lit(1))).as("nins"),
-        count(lit(1)).as("nall")) ++
-        keys.flatMap(k => Seq(min(col(k)), max(col(k))))
-      val chStats = ch.agg(statAggs.head, statAggs.tail: _*).head
-      val badTags = chStats.getSeq[String](0).take(5)
-      val keyRanges: Seq[ScanPredicate.Range] =
-        keys.zipWithIndex.flatMap { case (k, i) =>
-          Option(chStats.get(3 + 2 * i)).map(mn =>
-            ScanPredicate.Range(k, Some(mn), Some(chStats.get(3 + 2 * i + 1))))
-        }
-      require(badTags.isEmpty,
-        s"applyChanges: unsupported _change tag(s) ${badTags.mkString("'", "', '", "'")} " +
-          "(this feed speaks insert|delete; updates arrive as delete(old)+insert(new))")
-      val (nIns, nAll) = (chStats.getLong(1), chStats.getLong(2))
-      val inserts = ch.filter(col("_change") === "insert").drop("_change")
-      // an empty-insert batch (pure deletes, or a compaction-only feed
-      // advance) still snapshots for its txn mark, but writes no
-      // zero-row part files
-      commitKeyed(target, cur, id, id, "apply", Nil, Option.when(nIns > 0L)(inserts),
-          inserts.schema, keys, mark) {
-        // MERGE-ON-READ: no existing file is read OR rewritten — the
-        // batch's key set lands as a tombstone that masks older
-        // versions (insert = replace, delete = remove). COPY-ON-WRITE:
-        // the key ranges come from the chStats pass above, so a
-        // key-disjoint CDC batch reads zero existing files; the probe
-        // and the rewrite read the cached batch's key columns as they
-        // are (semi- and anti-joins ignore duplicate keys).
-        if (!mergeOnRead)
-          KeyedRemoval.RewriteKeys(ch.select(keys.map(col): _*), Some(keyRanges))
-        else if (nAll == 0L) KeyedRemoval.Tombstones(Nil)
-        else KeyedRemoval.MaskKeys(ch)
-      }
-    } finally ch.unpersist()
+    if (mergeOnRead) LakehouseMor.requireMaskableKeys(df0.schema, keys)
+    val (head, id) = target.resolve()
+    val df = canonicalizedNamesAt(head, df0)
+    val batchSchema = if (cdc) df.drop("_change").schema else df.schema
+    keys.foreach(k => require(batchSchema.fieldNames.exists(nameKey(_) == nameKey(k)),
+      s"keys column '$k' not in the batch schema ${batchSchema.simpleString}"))
+    requireCompatibleSchemaFor(head, batchSchema)
+    // the head's layout, for the columns the batch carries (the tomb
+    // files' partition dirs are its non-key entries)
+    val layout = head.fold(Seq.empty[String])(c => inferPartitionCols(c.files))
+      .filter(pc => df.columns.exists(nameKey(_) == nameKey(specSourceCol(pc))))
+    val stage = Dsv2CommitMode.Stage(this, id, "", layout, head, keys, cdc)
+    commitKeyed(target, id, stageWrite(df, stage), batchSchema, keys, mergeOnRead, cdc, mark)
   }
 
   /** The hive partition scheme every file of a snapshot shares, from
@@ -2824,7 +2710,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   def upsertToBranch(df0: DataFrame, keys: Seq[String], name: String,
       mergeOnRead: Boolean = false): Snapshot = writeLock.synchronized {
-    upsertOn(onBranch(name), df0, keys, mergeOnRead)
+    writeKeyed(onBranch(name), df0, keys, mark = None, mergeOnRead, cdc = false).get
   }
 
   /** [[applyChanges]] against branch `name`'s head. No txn ledger on
@@ -2833,7 +2719,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   def applyChangesToBranch(ch0: DataFrame, keys: Seq[String], name: String,
       mergeOnRead: Boolean = false): Snapshot = writeLock.synchronized {
-    applyChangesWith(ch0, keys, mark = None, mergeOnRead, onBranch(name))
+    writeKeyed(onBranch(name), ch0, keys, mark = None, mergeOnRead, cdc = true).get
   }
 
   /** PUBLISH — the PUBLISH of write-audit-publish: one main commit
@@ -4367,24 +4253,29 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * through the DSv2 executor writers ([[LakehouseStagingTable]]),
     * returning the root-relative paths of the files produced (hive
     * `col=value` / `col_bucket=` sub-dirs when `partitionCols` is set).
-    * Optimize-write clusters the batch on its dir columns, and each
-    * task sorts by them, so it keeps one file open at a time. `head` stamps the field ids and sizes
-    * the bins — a branch write's is the BRANCH head.
+    * `head` stamps the field ids and sizes the bins — a branch write's
+    * is the BRANCH head.
     */
   private def writeDataFiles(
       df0: DataFrame, id: Long, suffix: String = "",
       partitionCols: Seq[String] = Nil,
-      head: Option[Snapshot] = currentSnapshot()): Seq[String] = {
-    val dirCols = partitionCols.map {
+      head: Option[Snapshot] = currentSnapshot()): Seq[String] =
+    stageWrite(df0, Dsv2CommitMode.Stage(this, id, suffix, partitionCols, head)).data
+
+  /** Run `stage` over `df0` and return what its writers produced.
+    * Optimize-write clusters the batch on its dir columns, and each
+    * task sorts by them, so it keeps one file open at a time.
+    */
+  private def stageWrite(df0: DataFrame, stage: Dsv2CommitMode.Stage): WrittenFiles = {
+    val dirCols = stage.partitionCols.map {
       case LakehouseTable.BucketSpecRe(n, c) => pmod(xxhash64(col(c)), lit(n.toInt))
       case c => col(c)
     }
-    val clustered = if (!optimizeWrite || partitionCols.isEmpty) df0 else df0.repartition(dirCols: _*)
+    val clustered = if (!optimizeWrite || dirCols.isEmpty) df0 else df0.repartition(dirCols: _*)
     // sorted by every dir, bucket ids included (which the write's
     // required ordering cannot name without a catalog), each task meets
     // one dir's rows together and keeps one file open
-    val df = if (partitionCols.isEmpty) clustered else clustered.sortWithinPartitions(dirCols: _*)
-    val stage = Dsv2CommitMode.Stage(this, id, suffix, partitionCols, head)
+    val df = if (dirCols.isEmpty) clustered else clustered.sortWithinPartitions(dirCols: _*)
     org.apache.spark.sql.GraftDatasetAccess.ofRows(spark,
       org.apache.spark.sql.catalyst.plans.logical.AppendData.byPosition(
         org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.{SparkSession, functions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection, XxHash64Function}
@@ -22,11 +22,11 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * parquet files it produced (written EXECUTOR-SIDE, straight into the
   * table's claimed data dir) plus any schema-channel DDL records its
   * rows carried (`_change = 'schema'` rows — a handful per batch, never
-  * data volume). KEYED STREAMS (round 15) additionally ship two
-  * executor-written KEY file sets: `tombFiles` (the distinct key tuples
-  * of every touched row — the MoR tombstone / CoW probe side) and
-  * `delFiles` (the delete-tagged keys alone — commit transport for the
-  * rare DDL-epoch driver fallback, never referenced by a manifest).
+  * data volume). KEYED writes additionally ship two executor-written
+  * KEY file sets: `tombFiles` (the distinct key tuples of every touched
+  * row — the MoR tombstone / CoW probe side) and `delFiles` (the
+  * delete-tagged keys alone — commit transport for the rare DDL-epoch
+  * driver fallback, never referenced by a manifest).
   * `stats` holds each closed file's [[FileStats]], converted from the
   * footer the writer just wrote, so the commit opens no footer for it.
   */
@@ -34,6 +34,23 @@ final case class LakehouseWriteMessage(files: Seq[String], ddl: Seq[String],
     tombFiles: Seq[String] = Nil, delFiles: Seq[String] = Nil,
     stats: Map[String, FileStats] = Map.empty)
     extends WriterCommitMessage
+
+/** What one write's tasks produced, merged and sorted: data files, and
+  * for a keyed write its tomb and del key files
+  * ([[LakehouseWriteMessage]]).
+  */
+private[lakehouse] final case class WrittenFiles(data: Seq[String],
+    tombs: Seq[String] = Nil, dels: Seq[String] = Nil) {
+  def all: Seq[String] = data ++ tombs ++ dels
+}
+
+private[lakehouse] object WrittenFiles {
+  def of(messages: Array[WriterCommitMessage]): WrittenFiles = {
+    val ms = messages.toSeq.collect { case m: LakehouseWriteMessage => m }
+    WrittenFiles(ms.flatMap(_.files).sorted, ms.flatMap(_.tombFiles).sorted,
+      ms.flatMap(_.delFiles).sorted)
+  }
+}
 
 /** One query column's canonical landing spot in the table: input
   * ordinal, canonical (declared-case / alias-resolved) name, the
@@ -80,20 +97,24 @@ object Dsv2CommitMode {
     */
   final case class OverwriteBy(filters: Seq[org.apache.spark.sql.sources.Filter])
       extends Dsv2CommitMode
-  /** Keyed upsert (writeTo .option("keys", ...)): the staged files ARE
-    * the added side; touched existing files rewrite (copy-on-write) or
-    * a key tombstone masks them (merge-on-read).
+  /** Keyed upsert (writeTo .option("keys", ...)) or keyed stream epoch:
+    * the writers split the batch into data, tomb and del files, which
+    * land through [[LakehouseTable.commitKeyed]].
     */
   final case class Keyed(keys: Seq[String], mergeOnRead: Boolean)
       extends Dsv2CommitMode
   /** A table-API data write (`LakehouseTable.writeDataFiles`): the
     * batch lands verbatim under claim dir `s<id>[-suffix]-w<nonce>`,
     * ids stamped and bins sized from `head`. Nothing publishes: the
-    * files come back through `written`.
+    * files come back through `written`. With `keys` the writers split
+    * the batch as a keyed write's do (`cdc`: the `_change` column tags
+    * each row insert|delete), and the table API's upsert/applyChanges
+    * commit the three file sets through [[LakehouseTable.commitKeyed]].
     */
   final case class Stage(table: LakehouseTable, id: Long, suffix: String,
-      partitionCols: Seq[String], head: Option[Snapshot]) extends Dsv2CommitMode {
-    @volatile private[lakehouse] var written: Seq[String] = Nil
+      partitionCols: Seq[String], head: Option[Snapshot],
+      keys: Seq[String] = Nil, cdc: Boolean = false) extends Dsv2CommitMode {
+    @volatile private[lakehouse] var written: WrittenFiles = WrittenFiles(Nil)
     override def toString: String = s"Stage(${table.root}, $id, $suffix)"
   }
 }
@@ -126,20 +147,20 @@ object Dsv2CommitMode {
   *    doc), so era resolution stays exact whichever side of a rename
   *    the batch's names speak.
   *
-  * KEYED STREAMS (round 15) ride the same executor writers with a
-  * per-task SPLIT: data rows to the data files, every touched row's
-  * deduped key tuple to a `-tomb` key file, delete-tagged keys to a
-  * `-del` file. The epoch commit
-  * ([[LakehouseTable.commitApplyStagedFiles]]) is then pure metadata
-  * for merge-on-read (data files add, the tomb files ARE the
-  * tombstone) and a probe + touched-file rewrite for copy-on-write.
-  * Every keyed face — this one, the keyed batch write and the table
-  * API's upsert/applyChanges — commits through the one keyed core
-  * ([[LakehouseTable.commitKeyed]]), so tag validation, strictly-older
-  * masking and txn absorption are one contract. Only a DDL-CARRYING
-  * keyed epoch reconstructs the batch driver-side — the same bounded
-  * trade as the keyless face. Snapshot-less roots ride this face from
-  * the first epoch (the write seeds the table from the query schema).
+  * KEYED writes — every face: a keyed stream epoch, a keyed
+  * `writeTo`/`INSERT`, and the table API's upsert/applyChanges through
+  * a keyed [[Dsv2CommitMode.Stage]] — ride the same executor writers
+  * with a per-task SPLIT: data rows to the data files, every touched
+  * row's deduped key tuple to a `-tomb` key file, delete-tagged keys to
+  * a `-del` file. The batch is written once, and the one keyed commit
+  * ([[LakehouseTable.commitKeyed]]) is then pure metadata for
+  * merge-on-read (data files add, the tomb files ARE the tombstone) and
+  * a probe + touched-file rewrite for copy-on-write. The `_change` tag
+  * check, the tombstone layout, the key ranges and strictly-older
+  * masking each have one definition. Only a DDL-CARRYING keyed epoch
+  * reconstructs the batch driver-side — the same bounded trade as the
+  * keyless face. Snapshot-less roots ride this face from the first
+  * epoch (the write seeds the table from the query schema).
   */
 private[lakehouse] final class LakehouseDsv2Write(
     root: String, writeOpts: Map[String, String], querySchema: StructType,
@@ -215,16 +236,25 @@ private[lakehouse] final class LakehouseDsv2Write(
     case _ => LakehouseDsv2Write.layoutOrdering(partSpec)
   }
 
-  /** (claimed snapshot id, the batch's canonical logical schema) of the
-    * factory most recently created — commit consumes it. Streaming
-    * creates one factory per epoch and the engine serializes epochs,
-    * so the slot is never contended.
+  /** (claimed snapshot id, the batch's canonical logical schema, claim
+    * dir) of the factory most recently created — commit and abort
+    * consume it. Streaming creates one factory per epoch and the engine
+    * serializes epochs, so the slot is never contended.
     */
-  @volatile private var staged: (Long, StructType) = _
+  @volatile private var staged: (Long, StructType, String) = _
 
   private def makeFactory(streaming: Boolean): LakehouseWriterFactory = {
     val ddlMode = schemaChannel && streaming
     val keyedStream = streaming && mode.isInstanceOf[Dsv2CommitMode.Keyed]
+    // the keyed faces' key columns, and whether `_change` is their op
+    // channel: a keyed stream whose query carries it, or a staged
+    // applyChanges — on every upsert face it stays data
+    val (keys, cdc) = mode match {
+      case Dsv2CommitMode.Keyed(ks, _) =>
+        (ks, keyedStream && querySchema.fieldNames.exists(_.equalsIgnoreCase("_change")))
+      case s: Dsv2CommitMode.Stage => (s.keys, s.cdc)
+      case _ => (Nil, false)
+    }
     val t = table()
     // round 16: the DSv2 face serves EVERY stream epoch, the FIRST
     // included — a snapshot-less root seeds an empty table from the
@@ -302,7 +332,7 @@ private[lakehouse] final class LakehouseDsv2Write(
       case s: Dsv2CommitMode.Stage => (s.id, LakehouseTable.claimDirName(s.id, s.suffix))
       case _ => t.claimWriteDir("dsv2")
     }
-    staged = (claimed, batchSchema)
+    staged = (claimed, batchSchema, dirName)
     def keyOf(n: String) = n.toLowerCase(java.util.Locale.ROOT)
     val byKey = plan.zipWithIndex.map { case (p, i) => keyOf(p.name) -> i }.toMap
     val partCols = partSpec.map {
@@ -326,29 +356,22 @@ private[lakehouse] final class LakehouseDsv2Write(
       SQLConf.SESSION_LOCAL_TIMEZONE.key -> conf.sessionLocalTimeZone)
     def idxOf(n: String): Int =
       querySchema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
-    // keyed STREAMING (round 15): the writers split — data rows to data
-    // files, key tuples to a -tomb key file, delete keys to -del — so
-    // the epoch commit is pure metadata (MoR) or probe+rewrite (CoW)
-    // over executor-written halves. The `_change` slot index routes
-    // delete tags even without the full schema channel.
-    val keyIdxs: Seq[Int] =
-      if (!keyedStream) Nil
-      else mode match {
-        case Dsv2CommitMode.Keyed(keys, _) => keys.map { k =>
-          val i = plan.indexWhere(_.name.equalsIgnoreCase(k))
-          require(i >= 0, s"keys column '$k' not in the write schema " +
-            querySchema.simpleString)
-          i
-        }
-        case _ => Nil
-      }
-    val cdcStream = keyedStream &&
-      querySchema.fieldNames.exists(_.equalsIgnoreCase("_change"))
+    // keyed: the writers split — data rows to data files, key tuples to
+    // a -tomb key file, delete keys to -del — so the keyed commit is
+    // pure metadata (MoR) or probe+rewrite (CoW) over executor-written
+    // halves. The `_change` slot index routes delete tags even without
+    // the full schema channel; a keyed stream never writes `_ddl`.
+    val keyIdxs: Seq[Int] = keys.map { k =>
+      val i = plan.indexWhere(_.name.equalsIgnoreCase(k))
+      require(i >= 0, s"keys column '$k' not in the write schema " +
+        querySchema.simpleString)
+      i
+    }
     new LakehouseWriterFactory(t.rootAbsPath, dirName, plan, partCols,
       conf.sessionLocalTimeZone, parquetConf,
       conf.getConfString("spark.sql.parquet.compression.codec", "snappy"),
-      ddlMode, if (ddlMode || cdcStream) idxOf("_change") else -1,
-      if (ddlMode) idxOf("_ddl") else -1,
+      ddlMode, if (ddlMode || cdc) idxOf("_change") else -1,
+      if (ddlMode || keyedStream) idxOf("_ddl") else -1,
       // size-targeted optimize-write: roll files at ≈targetBytes
       maxRecordsPerFile = t.writeRecordCap(head),
       keyIdxs = keyIdxs,
@@ -365,10 +388,6 @@ private[lakehouse] final class LakehouseDsv2Write(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     makeFactory(streaming = true)
 
-  private def filesOf(messages: Array[WriterCommitMessage]): Seq[String] =
-    messages.toSeq.collect { case m: LakehouseWriteMessage => m.files }
-      .flatten.sorted
-
   private def ddlOf(messages: Array[WriterCommitMessage]): Seq[String] =
     messages.toSeq.collect { case m: LakehouseWriteMessage => m.ddl }
       .flatten.distinct.sortBy(DdlRecord.seqOf)
@@ -382,19 +401,19 @@ private[lakehouse] final class LakehouseDsv2Write(
     * through the table's commit for the mode's shape — append (rebase
     * loop inside: a racing writer costs a metadata retry, the files are
     * written once), full overwrite, filter overwrite (the overwriteWhere
-    * statement with the files as its insert side), or keyed (the staged
-    * files are the added side; their key and partition columns read
-    * back as the tombstone or the rewrite probe). An all-empty append
+    * statement with the files as its insert side), or keyed (the
+    * stream epoch's commit without a txn mark). An all-empty append
     * still commits, so `INSERT INTO t SELECT ... WHERE false` records a
     * version.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val (claimed, batchSchema) = staged
-    val files = filesOf(messages)
+    val (claimed, batchSchema, _) = staged
+    val written = WrittenFiles.of(messages)
+    val files = written.data
     val t = table()
     recordStats(t, messages)
     mode match {
-      case s: Dsv2CommitMode.Stage => s.written = files
+      case s: Dsv2CommitMode.Stage => s.written = written
       case Dsv2CommitMode.Append =>
         t.commitWrittenFiles(files, batchSchema, claimed,
           mark = None, targetAuthoritative = false)
@@ -404,25 +423,21 @@ private[lakehouse] final class LakehouseDsv2Write(
       case Dsv2CommitMode.OverwriteBy(filters) =>
         t.overwriteMatching(filters, inserts = None, written = files)
       case Dsv2CommitMode.Keyed(keys, mor) =>
-        val (head, id) = t.MainLine.resolve()
-        t.commitKeyed(t.MainLine, head, id, claimed,
-            if (mor && files.nonEmpty) "apply" else "upsert", files, inserts = None,
-            batchSchema, keys, mark = None) {
-          // the staged files read back (key and partition columns only
-          // are consumed) as the keyed removal's key side
-          lazy val staged = readStaged(t, files, batchSchema)
-          if (files.isEmpty) KeyedRemoval.Tombstones(Nil) // schema-only evolution
-          else if (mor) KeyedRemoval.MaskKeys(staged)
-          else KeyedRemoval.RewriteKeys(staged.select(keys.map(functions.col): _*),
-            t.footerKeyRanges(files, keys, batchSchema))
-        }
+        t.commitKeyed(t.MainLine, claimed, written, batchSchema, keys,
+          mergeOnRead = mor, cdc = false, mark = None)
     }
     ()
   }
 
+  /** Drop every file the write staged, and its claim dirs with what a
+    * failed task left there (checksums of the files it deleted).
+    */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    table().discardWrittenFiles(
-      messages.toSeq.collect { case m: LakehouseWriteMessage => m.files }.flatten)
+    val t = table()
+    t.discardWrittenFiles(WrittenFiles.of(messages).all)
+    Option(staged).foreach { case (_, _, dir) =>
+      t.discardWrittenFiles(Seq("", "-tomb", "-del").map(k => s"data/$dir$k/"))
+    }
   }
 
   /** The batch reconstructed from staged parquet halves (driver
@@ -511,20 +526,21 @@ private[lakehouse] final class LakehouseDsv2Write(
     }
   }
 
-  /** KEYED streaming epoch (round 15): the staged executor halves —
-    * data files, deduped `-tomb` key files, `-del` delete keys —
-    * commit through [[LakehouseTable.commitApplyStagedFiles]] under
-    * the epoch's txn mark: MoR is a pure metadata commit (data files
-    * add, tomb files become THE tombstone), CoW probes with the tomb
-    * keys and rewrites only touched files. A DDL-carrying epoch falls
-    * back to the driver-side apply (the batch reconstructed from the
-    * staged halves, re-canonicalized post-DDL) — rare, bounded by
-    * schema-change frequency, the same trade as the keyless face.
+  /** KEYED streaming epoch: the staged executor halves — data files,
+    * deduped `-tomb` key files, `-del` delete keys — commit through
+    * [[LakehouseTable.commitKeyed]] under the epoch's txn mark: MoR is
+    * a pure metadata commit (data files add, tomb files become THE
+    * tombstone), CoW probes with the tomb keys and rewrites only
+    * touched files. A DDL-carrying epoch falls back to the driver-side
+    * apply (the batch reconstructed from the staged halves,
+    * re-canonicalized post-DDL) — rare, bounded by schema-change
+    * frequency, the same trade as the keyless face.
     */
   private def commitKeyedEpoch(t: LakehouseTable, keys: Seq[String],
       mor: Boolean, claimed: Long, batchSchema: StructType,
-      ddl: Seq[String], files: Seq[String], tombs: Seq[String],
-      dels: Seq[String], appId: String, epochId: Long): Option[Snapshot] = {
+      ddl: Seq[String], written: WrittenFiles, appId: String,
+      epochId: Long): Option[Snapshot] = {
+    val WrittenFiles(files, tombs, dels) = written
     val dataSchema0 = StructType(batchSchema.filterNot(f =>
       f.name.equalsIgnoreCase("_change") || f.name.equalsIgnoreCase("_ddl")))
     // under the SCHEMA CHANNEL the target is authoritative on DDL-free
@@ -547,12 +563,8 @@ private[lakehouse] final class LakehouseDsv2Write(
     // change a batch column's name, type, or conformance verdict
     if (ddl.isEmpty || !ddlTouches(ddl, batchSchema)) {
       ddl.foreach(t.applySchemaChange)
-      val r = t.commitApplyStagedFiles(files, tombs, dataSchema, claimed,
-        keys, mergeOnRead = mor, cdc = cdcShape,
-        mark = Some(TxnMark(appId, epochId)))
-      // -del files are commit transport only; CoW keeps no tomb either
-      if (r.isDefined) t.discardWrittenFiles(dels ++ (if (mor) Nil else tombs))
-      r
+      t.commitKeyed(t.MainLine, claimed, written, dataSchema, keys,
+        mergeOnRead = mor, cdc = cdcShape, mark = Some(TxnMark(appId, epochId)))
     } else {
       ddl.foreach(t.applySchemaChange)
       val keyFields = StructType(keys.map(k =>
@@ -567,7 +579,7 @@ private[lakehouse] final class LakehouseDsv2Write(
           allowMissingColumns = true)
       val r = t.applyChanges(conformToTarget(t, ch0), keys,
         txn = Some((appId, epochId)), mergeOnRead = mor)
-      t.discardWrittenFiles(files ++ tombs ++ dels)
+      t.discardWrittenFiles(written.all)
       r
     }
   }
@@ -592,26 +604,21 @@ private[lakehouse] final class LakehouseDsv2Write(
     */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val t = table()
-    val (claimed, batchSchema) = staged
+    val (claimed, batchSchema, _) = staged
     val appId = writeOpts.collectFirst {
       case (k, v) if k.equalsIgnoreCase("txnAppId") => v
     }.getOrElse("graft-lakehouse-sink:" +
       java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString)
     val ddl = ddlOf(messages)
-    val files = filesOf(messages)
+    val written = WrittenFiles.of(messages)
+    val files = written.data
     recordStats(t, messages)
-    val tombs = messages.toSeq.collect {
-      case m: LakehouseWriteMessage => m.tombFiles }.flatten.sorted
-    val dels = messages.toSeq.collect {
-      case m: LakehouseWriteMessage => m.delFiles }.flatten.sorted
     mode match {
       case Dsv2CommitMode.Keyed(keys, mor) =>
-        val applied = commitKeyedEpoch(t, keys, mor, claimed, batchSchema,
-          ddl, files, tombs, dels, appId, epochId)
-        if (applied.isEmpty) {
-          t.discardWrittenFiles(files ++ tombs ++ dels)
+        // an absorbed epoch's files are already discarded
+        if (commitKeyedEpoch(t, keys, mor, claimed, batchSchema, ddl, written,
+            appId, epochId).isEmpty)
           warnOnResetCheckpoint(t, appId, epochId)
-        }
         return
       case _ => ()
     }
@@ -751,11 +758,11 @@ private[lakehouse] final class LakehouseDataWriter(
     caseSensitive: Boolean = false)
     extends DataWriter[InternalRow] {
 
-  /** Keyed-stream split mode (round 15): data rows land in the data
+  /** Keyed split mode (every keyed face): data rows land in the data
     * files, every touched row's key tuple lands (deduped per task) in
     * a `-tomb` key file, and with a CDC `_change` column delete-tagged
     * rows land ONLY their keys (`-del` file too) — the executor-side
-    * halves of [[LakehouseTable.commitApplyStagedFiles]].
+    * halves of [[LakehouseTable.commitKeyed]].
     */
   private val keyed = keyIdxs.nonEmpty
   private val cdc = keyed && changeIdx >= 0
@@ -768,12 +775,14 @@ private[lakehouse] final class LakehouseDataWriter(
   private val groupedEntries: Seq[Int] =
     partCols.indices.filter(j => sortedByDir || partCols(j).bucketN.isEmpty)
 
-  /** Channel marker columns never enter KEYED data files — the V1
-    * apply drops `_change` (and `_ddl`) before writing, and the keyed
-    * commit's schema does the same.
+  /** Channel marker columns never enter KEYED data files: `_change`
+    * when it is the op channel, `_ddl` on a keyed stream (its factory
+    * passes the slot). The keyed commit's schema drops them too; on an
+    * upsert face `_change` is data.
     */
   private def isChannelCol(p: WriteColPlan): Boolean =
-    keyed && (p.name.equalsIgnoreCase("_change") || p.name.equalsIgnoreCase("_ddl"))
+    (cdc && p.name.equalsIgnoreCase("_change")) ||
+      (keyed && ddlIdx >= 0 && p.name.equalsIgnoreCase("_ddl"))
 
   /** File columns = the plan minus identity partition columns (their
     * values live in the path, the hive layout).

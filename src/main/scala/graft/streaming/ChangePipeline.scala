@@ -51,9 +51,11 @@ trait Sink {
   * metadata (`sinks/iceberg.py:124-129`); append or key-upsert mode.
   * Deletes (null `after`) are tombstones: in upsert mode they remove the
   * key from the table in the SAME snapshot that lands the batch's
-  * upserts (one [[LakehouseTable.applyChanges]] commit, copy-on-write
-  * over only the files holding touched keys); in append mode they
-  * append with null payload (tombstone pass-through, §2.2 P4).
+  * upserts — one [[LakehouseTable.applyChanges]]: the executor writers
+  * write the batch once (insert rows, touched keys, delete keys), and
+  * one keyed commit rewrites only the files holding touched keys
+  * (copy-on-write); in append mode they append with null payload
+  * (tombstone pass-through, §2.2 P4).
   *
   * `payloadSchema = None` → schema is INFERRED from the first non-empty
   * micro-batch's `after` JSON and frozen for the table's lifetime —

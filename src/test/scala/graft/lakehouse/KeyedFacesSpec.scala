@@ -12,7 +12,9 @@ import graft.SparkSpec
   * insert, a replace and (for the change-feed faces) a delete, in
   * copy-on-write and in merge-on-read. Faces that claim one semantics
   * must land the same rows, the same lineage operation and the same
-  * tombstone emptiness; the Spark jobs each face runs are reported.
+  * tombstone emptiness, and each face's Spark jobs stay at or under
+  * its ceiling. The table-API faces also pin what fails: a bad
+  * `_change` tag and a lost publish race leave no staged file behind.
   */
 class KeyedFacesSpec extends SparkSpec {
   import spark.implicits._
@@ -46,14 +48,33 @@ class KeyedFacesSpec extends SparkSpec {
 
   private var seq = 0
 
-  /** A fresh catalog table seeded with `seedRows`: (catalog name, root). */
-  private def seeded(hive: Boolean): (String, String) = {
+  /** Spark-job ceilings per (face, merge-on-read), flat and hive alike,
+    * in the specs' default session: the counts each face ran while the
+    * table API still validated tags and derived key ranges in a driver
+    * pass. A face may get cheaper, never dearer.
+    */
+  private val jobCeiling: Map[(String, Boolean), Int] = Map(
+    ("upsert", false) -> 6, ("upsert", true) -> 4,
+    ("writeTo keys (DSv2 batch)", false) -> 5, ("writeTo keys (DSv2 batch)", true) -> 3,
+    ("writeStream keys (DSv2 stream)", false) -> 6, ("writeStream keys (DSv2 stream)", true) -> 2,
+    ("applyChanges", false) -> 6, ("applyChanges", true) -> 4,
+    ("applyChangesToBranch", false) -> 6, ("applyChangesToBranch", true) -> 4,
+    ("writeStream keys + _change (DSv2 stream)", false) -> 6,
+    ("writeStream keys + _change (DSv2 stream)", true) -> 2)
+
+  /** A fresh catalog table seeded with `seedRows` (plus a NULL `_change`
+    * column when `changeCol`): (catalog name, root).
+    */
+  private def seeded(hive: Boolean, changeCol: Boolean = false): (String, String) = {
     seq += 1
     val name = s"$cat.db.kf$seq"
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    spark.sql(s"CREATE TABLE $name (k BIGINT, rk STRING, v STRING)" +
+    spark.sql(s"CREATE TABLE $name (k BIGINT, rk STRING, v STRING" +
+      (if (changeCol) ", _change STRING)" else ")") +
       (if (hive) " PARTITIONED BY (rk)" else ""))
-    seedRows.toDF("k", "rk", "v").coalesce(1).writeTo(name).append()
+    val seed = seedRows.toDF("k", "rk", "v").coalesce(1)
+    (if (changeCol) seed.withColumn("_change", org.apache.spark.sql.functions.lit(null)
+      .cast("string")) else seed).writeTo(name).append()
     val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
     (name, java.nio.file.Paths.get(wh, "db", s"kf$seq").toString)
   }
@@ -91,6 +112,8 @@ class KeyedFacesSpec extends SparkSpec {
     if (branch) t.forkBranch("wap")
     val jobs = jobsRunBy(write(name, root, t))
     info(s"${if (hive) "hive" else "flat"} ${if (mor) "MoR" else "CoW"} $face: $jobs Spark jobs")
+    assert(jobs <= jobCeiling((face, mor)),
+      s"$face ran $jobs Spark jobs, over its ceiling of ${jobCeiling((face, mor))}")
     val head = if (branch) t.branchHead("wap") else t.currentSnapshot().get
     val rows = rowsOf(
       if (branch) spark.read.format("graft-lakehouse")
@@ -147,5 +170,94 @@ class KeyedFacesSpec extends SparkSpec {
     assert(layoutOf(stream) === layoutOf(api),
       s"DSv2 stream tombstone ${stream.currentSnapshot().get.tombstones} lands outside the hive layout")
     Seq(dsv2, stream, api).foreach(t => assert(rowsOf(t.read()) === upserted, t.root))
+  }
+
+  /** Parquet files under `root`'s data dir that no snapshot references,
+    * and data dirs holding none a snapshot references.
+    */
+  private def strays(t: LakehouseTable): (Seq[String], Seq[String]) = {
+    val live = t.listSnapshots().flatMap(s => s.files ++ s.tombstones).toSet
+    val data = java.nio.file.Paths.get(t.root, "data")
+    val all = graft.Fs.walkAll(data).filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => data.getParent.relativize(p).toString)
+    (all.filter(f => f.endsWith(".parquet") && !live(f)),
+      all.map(_.split('/')(1)).distinct.filterNot(d => live.exists(_.split('/')(1) == d)))
+  }
+
+  test("on every upsert face _change is data; only the change faces read it as the op") {
+    // a `_change` of "delete" on an upsert face is a value like any other:
+    // the row lands (replacing k=2 / inserting k=10) and keeps the value
+    val tagged = Seq((10L, "even", "new10", "delete"), (2L, "even", "R2", "insert"))
+    def batch = tagged.toDF("k", "rk", "v", "_change").coalesce(1)
+    val expected = seedRows.filterNot(_._1 == 2L).map { case (k, rk, v) =>
+      (k, rk, v, null.asInstanceOf[String]) }.toSet ++ tagged
+    for (mor <- Seq(false, true)) {
+      val faces: Seq[(String, (String, LakehouseTable) => Unit)] = Seq(
+        "upsert" -> { (_, t) => t.upsert(batch, Seq("k"), mergeOnRead = mor); () },
+        "upsertToBranch" -> { (_, t) =>
+          t.upsertToBranch(batch, Seq("k"), "wap", mergeOnRead = mor); () },
+        "writeTo keys (DSv2 batch)" -> { (name, _) =>
+          batch.writeTo(name).option("keys", "k").option("mergeOnRead", mor.toString).append() })
+      faces.foreach { case (face, write) =>
+        val (name, root) = seeded(hive = false, changeCol = true)
+        val t = new LakehouseTable(spark, root)
+        val branch = face == "upsertToBranch"
+        if (branch) t.forkBranch("wap")
+        write(name, t)
+        val landed =
+          if (branch) spark.read.format("graft-lakehouse").option("snapshotBranch", "wap").load(root)
+          else t.read()
+        assert(landed.select("k", "rk", "v", "_change").as[(Long, String, String, String)]
+          .collect().toSet === expected, s"$face, mergeOnRead = $mor")
+        spark.sql(s"DROP TABLE IF EXISTS $name")
+      }
+    }
+  }
+
+  test("a bad _change tag fails applyChanges and its branch form: head unchanged, nothing staged left") {
+    for (branch <- Seq(false, true); mor <- Seq(false, true);
+         bad <- Seq("update_postimage", null)) {
+      val what = s"${if (branch) "applyChangesToBranch" else "applyChanges"}, " +
+        s"mergeOnRead = $mor, tag ${Option(bad).getOrElse("NULL")}"
+      val t = new LakehouseTable(spark, tmpDir("kf-badtag"))
+      t.append(seedRows.toDF("k", "rk", "v").coalesce(1))
+      if (branch) t.forkBranch("wap")
+      def head = if (branch) t.branchHead("wap") else t.currentSnapshot().get
+      val before = (t.listSnapshots().map(_.snapshotId), head.snapshotId)
+      // good rows first, so the failing task already holds open files
+      val ch = (changeRows :+ ((11L, "odd", "bad", bad))).toDF("k", "rk", "v", "_change")
+        .coalesce(1)
+      val failed = intercept[Exception] {
+        if (branch) t.applyChangesToBranch(ch, Seq("k"), "wap", mergeOnRead = mor)
+        else t.applyChanges(ch, Seq("k"), mergeOnRead = mor)
+      }
+      val chain = Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => Option(e.getMessage).exists(_.contains(
+        s"unsupported _change tag '${Option(bad).getOrElse("NULL")}'"))), s"$what: $failed")
+      assert((t.listSnapshots().map(_.snapshotId), head.snapshotId) === before, what)
+      assert(strays(t) === ((Nil, Nil)), s"$what left staged files")
+    }
+  }
+
+  test("a keyed table-API write that loses its publish race discards everything it staged") {
+    for (mor <- Seq(false, true)) {
+      val t = new LakehouseTable(spark, tmpDir("kf-race"))
+      t.append(seedRows.toDF("k", "rk", "v").coalesce(1))
+      val racer = new LakehouseTable(spark, t.root)
+      t.onBeforePublish = () => {
+        t.onBeforePublish = () => ()
+        racer.append(Seq((20L, "even", "r20")).toDF("k", "rk", "v").coalesce(1))
+        ()
+      }
+      try intercept[ConcurrentCommitException] {
+        t.applyChanges(changeBatch, Seq("k"), mergeOnRead = mor)
+      } finally t.onBeforePublish = () => ()
+      val head = t.currentSnapshot().get
+      val onDisk = graft.Fs.walkAll(java.nio.file.Paths.get(t.root, "data"))
+        .map(_.toString).filter(_.endsWith(".parquet"))
+        .map(p => java.nio.file.Paths.get(t.root).relativize(java.nio.file.Paths.get(p)).toString)
+      assert(onDisk.toSet === (head.files ++ head.tombstones).toSet, s"mergeOnRead = $mor")
+      assert(rowsOf(t.read()) === seedRows.toSet + ((20L, "even", "r20")), s"mergeOnRead = $mor")
+    }
   }
 }
