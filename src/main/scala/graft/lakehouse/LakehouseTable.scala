@@ -869,7 +869,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     *     (None);
     *  2. bootstrap: no head — the data files become the table;
     *  3. a raced tombstone newer than `claimedId` ([[racedTombstone]])
-    *     throws [[ConcurrentCommitException]];
+    *     throws [[ConcurrentCommitException]], and so, on merge-on-read,
+    *     does a head holding a data file of origin `claimedId` or newer:
+    *     the batch's tomb files sit at `claimedId` and mask strictly
+    *     older rows only, so a racer's rows (or a compaction's copies)
+    *     for the batch's keys would stay visible beside the batch's own;
     *  4. merge-on-read: the tomb files append to the head's tombstone
     *     (masking is strictly-older, so the batch's own rows stay
     *     visible);
@@ -884,7 +888,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * Files no manifest references are discarded here: the del files
     * (and copy-on-write's tomb files) after the publish, every staged
     * and survivor file when the batch is absorbed or anything throws.
-    * This never retries: a lost publish race surfaces as
+    * A copy-on-write batch rebases past any other racing commit (the
+    * touched files are found in the head it resolves now), as an append
+    * does. This never retries: a lost publish race surfaces as
     * [[ConcurrentCommitException]] to the caller.
     */
   private[lakehouse] def commitKeyed(target: WriteTarget, claimedId: Long,
@@ -895,23 +901,22 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     val published = try {
       if (mark.exists(m => lastTxnVersion(m.appId).exists(_ >= m.version))) None
       else {
-        require(keys.nonEmpty, "keyed commit requires key columns")
         val (head, id) = target.resolve()
         requireCompatibleSchemaFor(head, batchSchema)
         val schemaJson = evolvedSchemaJsonFor(head, batchSchema)
         val (files, deletes) = head match {
           case None => (written.data, None)
           case Some(c) =>
-            if (racedTombstone(head, claimedId))
+            if (racedTombstone(head, claimedId) ||
+                mergeOnRead && c.files.exists(originOf(_) >= claimedId))
               throw new ConcurrentCommitException(root, claimedId)
             if (mergeOnRead)
               (c.files ++ written.data, Some(c.tombstones ++ written.tombs).filter(_.nonEmpty))
             else if (written.tombs.isEmpty) (c.files ++ written.data, c.deletes)
             else {
-              val canon = batchSchema.fields.map(f => nameKey(f.name) -> f).toMap
+              // the writers' factory checked every key column is present
               val keyFields = StructType(keys.map { k =>
-                val f = canon.getOrElse(nameKey(k), throw new IllegalArgumentException(
-                  s"keys column '$k' not in the batch schema ${batchSchema.simpleString}"))
+                val f = batchSchema.fields.find(_.name.equalsIgnoreCase(k)).get
                 org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)
               })
               // explicit schema: the writers stamped the tomb key files
@@ -1386,11 +1391,12 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   /** The table API's keyed write: [[upsert]] (`cdc = false`) or
     * [[applyChanges]] (`cdc`: the `_change` column tags each row
     * insert|delete and never lands as data) on `target`. Every check
-    * runs before anything is written: key presence, merge-on-read key
-    * maskability, schema compatibility. The batch is then written ONCE
-    * by the executor writers' keyed split, which also fails the write
-    * on the first tag outside insert|delete (NULL included) a task
-    * meets, and lands through [[commitKeyed]].
+    * runs before anything is written: merge-on-read key maskability,
+    * schema compatibility, and (in the writers' factory) key presence.
+    * The batch is then written ONCE by the executor writers' keyed
+    * split, which also fails the write on the first tag outside
+    * insert|delete (NULL included) a task meets, and lands through
+    * [[commitKeyed]].
     */
   private def writeKeyed(target: WriteTarget, df0: DataFrame, keys: Seq[String],
       mark: Option[TxnMark], mergeOnRead: Boolean, cdc: Boolean): Option[Snapshot] = {
@@ -1399,16 +1405,21 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       "applyChanges input must carry a _change column (insert|delete)")
     if (mergeOnRead) LakehouseMor.requireMaskableKeys(df0.schema, keys)
     val (head, id) = target.resolve()
-    val df = canonicalizedNamesAt(head, df0)
-    val batchSchema = if (cdc) df.drop("_change").schema else df.schema
-    keys.foreach(k => require(batchSchema.fieldNames.exists(nameKey(_) == nameKey(k)),
-      s"keys column '$k' not in the batch schema ${batchSchema.simpleString}"))
+    val df1 = canonicalizedNamesAt(head, df0)
+    val batchSchema = if (cdc) df1.drop("_change").schema else df1.schema
     requireCompatibleSchemaFor(head, batchSchema)
-    // the head's layout, for the columns the batch carries (the tomb
-    // files' partition dirs are its non-key entries)
+    // the head's layout: a non-key column of it the batch lacks reads
+    // NULL, so the insert files land under its NULL dir, and the tomb
+    // files stay out of its dirs (the batch names no value for them)
+    def has(cols: Seq[String], c: String) = cols.exists(nameKey(_) == nameKey(c))
+    val declared = head.toSeq.flatMap(c =>
+      DataType.fromJson(c.schemaJson).asInstanceOf[StructType].fields)
     val layout = head.fold(Seq.empty[String])(c => inferPartitionCols(c.files))
-      .filter(pc => df.columns.exists(nameKey(_) == nameKey(specSourceCol(pc))))
-    val stage = Dsv2CommitMode.Stage(this, id, "", layout, head, keys, cdc)
+      .filter(pc => has(declared.map(_.name) ++ df1.columns, specSourceCol(pc)))
+    val filled = declared.filter(f => has(layout.map(specSourceCol), f.name) &&
+      !has(df1.columns.toSeq, f.name) && !has(keys, f.name))
+    val df = filled.foldLeft(df1)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+    val stage = Dsv2CommitMode.Stage(this, id, "", layout, head, keys, cdc, filled.map(_.name))
     commitKeyed(target, id, stageWrite(df, stage), batchSchema, keys, mergeOnRead, cdc, mark)
   }
 

@@ -110,10 +110,13 @@ object Dsv2CommitMode {
     * the batch as a keyed write's do (`cdc`: the `_change` column tags
     * each row insert|delete), and the table API's upsert/applyChanges
     * commit the three file sets through [[LakehouseTable.commitKeyed]].
+    * `nullFilled` names the layout columns the caller added as NULL
+    * because its batch lacked them: the tomb files skip their dirs.
     */
   final case class Stage(table: LakehouseTable, id: Long, suffix: String,
       partitionCols: Seq[String], head: Option[Snapshot],
-      keys: Seq[String] = Nil, cdc: Boolean = false) extends Dsv2CommitMode {
+      keys: Seq[String] = Nil, cdc: Boolean = false,
+      nullFilled: Seq[String] = Nil) extends Dsv2CommitMode {
     @volatile private[lakehouse] var written: WrittenFiles = WrittenFiles(Nil)
     override def toString: String = s"Stage(${table.root}, $id, $suffix)"
   }
@@ -333,6 +336,23 @@ private[lakehouse] final class LakehouseDsv2Write(
       case _ => t.claimWriteDir("dsv2")
     }
     staged = (claimed, batchSchema, dirName)
+    // keyed: the writers split — data rows to data files, key tuples to
+    // a -tomb key file, delete keys to -del — so the keyed commit is
+    // pure metadata (MoR) or probe+rewrite (CoW) over executor-written
+    // halves. The `_change` slot index routes delete tags even without
+    // the full schema channel; a keyed stream never writes `_ddl`. The
+    // one check that every key column is present, for every keyed face.
+    val keyIdxs: Seq[Int] = keys.map { k =>
+      val i = plan.indexWhere(_.name.equalsIgnoreCase(k))
+      require(i >= 0, s"keys column '$k' not in the write schema " +
+        querySchema.simpleString)
+      i
+    }
+    val nullFilled: Set[Int] = mode match {
+      case s: Dsv2CommitMode.Stage =>
+        s.nullFilled.map(c => plan.indexWhere(_.name.equalsIgnoreCase(c))).toSet
+      case _ => Set.empty
+    }
     def keyOf(n: String) = n.toLowerCase(java.util.Locale.ROOT)
     val byKey = plan.zipWithIndex.map { case (p, i) => keyOf(p.name) -> i }.toMap
     val partCols = partSpec.map {
@@ -356,17 +376,6 @@ private[lakehouse] final class LakehouseDsv2Write(
       SQLConf.SESSION_LOCAL_TIMEZONE.key -> conf.sessionLocalTimeZone)
     def idxOf(n: String): Int =
       querySchema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
-    // keyed: the writers split — data rows to data files, key tuples to
-    // a -tomb key file, delete keys to -del — so the keyed commit is
-    // pure metadata (MoR) or probe+rewrite (CoW) over executor-written
-    // halves. The `_change` slot index routes delete tags even without
-    // the full schema channel; a keyed stream never writes `_ddl`.
-    val keyIdxs: Seq[Int] = keys.map { k =>
-      val i = plan.indexWhere(_.name.equalsIgnoreCase(k))
-      require(i >= 0, s"keys column '$k' not in the write schema " +
-        querySchema.simpleString)
-      i
-    }
     new LakehouseWriterFactory(t.rootAbsPath, dirName, plan, partCols,
       conf.sessionLocalTimeZone, parquetConf,
       conf.getConfString("spark.sql.parquet.compression.codec", "snappy"),
@@ -374,7 +383,7 @@ private[lakehouse] final class LakehouseDsv2Write(
       if (ddlMode || keyedStream) idxOf("_ddl") else -1,
       // size-targeted optimize-write: roll files at ≈targetBytes
       maxRecordsPerFile = t.writeRecordCap(head),
-      keyIdxs = keyIdxs,
+      keyIdxs = keyIdxs, nullFilled = nullFilled,
       // a staged batch arrives sorted by every dir, bucket ids included
       // ([[LakehouseTable.writeDataFiles]])
       sortedByDir = mode.isInstanceOf[Dsv2CommitMode.Stage],
@@ -430,14 +439,14 @@ private[lakehouse] final class LakehouseDsv2Write(
   }
 
   /** Drop every file the write staged, and its claim dirs with what a
-    * failed task left there (checksums of the files it deleted).
+    * failed task left there (checksums of the files it deleted). Key
+    * files are written only in a task's commit, so the messages name
+    * every one that exists.
     */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val t = table()
     t.discardWrittenFiles(WrittenFiles.of(messages).all)
-    Option(staged).foreach { case (_, _, dir) =>
-      t.discardWrittenFiles(Seq("", "-tomb", "-del").map(k => s"data/$dir$k/"))
-    }
+    Option(staged).foreach { case (_, _, dir) => t.discardWrittenFiles(Seq(s"data/$dir/")) }
   }
 
   /** The batch reconstructed from staged parquet halves (driver
@@ -707,6 +716,7 @@ private[lakehouse] final class LakehouseWriterFactory(
     ddlMode: Boolean, changeIdx: Int, ddlIdx: Int,
     maxRecordsPerFile: Option[Long] = None,
     keyIdxs: Seq[Int] = Nil,
+    nullFilled: Set[Int] = Set.empty,
     sortedByDir: Boolean = false,
     caseSensitive: Boolean = false)
     extends DataWriterFactory with StreamingDataWriterFactory {
@@ -715,7 +725,7 @@ private[lakehouse] final class LakehouseWriterFactory(
     LakehouseWriteStats.writersCreated.incrementAndGet()
     new LakehouseDataWriter(rootAbs, dirName, plan, partCols, tz,
       parquetConf, codec, ddlMode, changeIdx, ddlIdx, partitionId, taskId,
-      maxRecordsPerFile, keyIdxs, sortedByDir, caseSensitive)
+      maxRecordsPerFile, keyIdxs, nullFilled, sortedByDir, caseSensitive)
   }
 
   override def createWriter(partitionId: Int, taskId: Long,
@@ -754,6 +764,7 @@ private[lakehouse] final class LakehouseDataWriter(
     partitionId: Int, taskId: Long,
     maxRecordsPerFile: Option[Long] = None,
     keyIdxs: Seq[Int] = Nil,
+    nullFilled: Set[Int] = Set.empty,
     sortedByDir: Boolean = false,
     caseSensitive: Boolean = false)
     extends DataWriter[InternalRow] {
@@ -811,11 +822,13 @@ private[lakehouse] final class LakehouseDataWriter(
     mutable.LinkedHashMap.empty[String, mutable.LinkedHashSet[InternalRow]]
   private val delKeys = mutable.LinkedHashSet.empty[InternalRow]
 
-  /** The `-tomb` key files' hive layout — the table API tombstone's
-    * rule: the partition entries whose source column is not a key.
+  /** The `-tomb` key files' hive layout: the partition entries whose
+    * source column is neither a key nor one the caller filled NULL
+    * (`nullFilled`: the batch named no value for it).
     */
-  private val tombPartIdx: Seq[Int] =
-    partCols.indices.filterNot(j => keyIdxs.contains(partCols(j).planIdx))
+  private val tombPartIdx: Seq[Int] = partCols.indices.filterNot { j =>
+    keyIdxs.contains(partCols(j).planIdx) || nullFilled(partCols(j).planIdx)
+  }
 
   private val fileSchema: StructType = StructType(fileCols.map { p =>
     val md = p.fieldId.fold(org.apache.spark.sql.types.Metadata.empty) { id =>

@@ -14,7 +14,9 @@ import graft.SparkSpec
   * must land the same rows, the same lineage operation and the same
   * tombstone emptiness, and each face's Spark jobs stay at or under
   * its ceiling. The table-API faces also pin what fails: a bad
-  * `_change` tag and a lost publish race leave no staged file behind.
+  * `_change` tag and a lost publish race leave no staged file behind,
+  * and a racer that commits while the batch stages is rebased over
+  * (copy-on-write) or refused (merge-on-read).
   */
 class KeyedFacesSpec extends SparkSpec {
   import spark.implicits._
@@ -259,5 +261,116 @@ class KeyedFacesSpec extends SparkSpec {
       assert(onDisk.toSet === (head.files ++ head.tombstones).toSet, s"mergeOnRead = $mor")
       assert(rowsOf(t.read()) === seedRows.toSet + ((20L, "even", "r20")), s"mergeOnRead = $mor")
     }
+  }
+
+  test("a racer that commits a batch key while a keyed write stages: CoW rebases, MoR refuses") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val gate = org.apache.spark.sql.functions.udf(KeyedRaceGate.pass _)
+    for (mor <- Seq(false, true); change <- Seq(false, true)) {
+      val what = s"${if (change) "applyChanges" else "upsert"}, mergeOnRead = $mor"
+      val t = new LakehouseTable(spark, tmpDir("kf-stage-race"))
+      t.append(seedRows.toDF("k", "rk", "v").coalesce(1))
+      val batch = (if (change) changeBatch else upsertBatch)
+        .withColumn("v", gate(org.apache.spark.sql.functions.col("v")))
+      KeyedRaceGate.arm()
+      val write = Future {
+        if (change) t.applyChanges(batch, Seq("k"), mergeOnRead = mor)
+        else t.upsert(batch, Seq("k"), mergeOnRead = mor)
+      }(ExecutionContext.global)
+      assert(KeyedRaceGate.entered.await(60, SECONDS), s"$what: the staged write never ran")
+      // another handle lands a row for key 2 between the stage and the commit
+      new LakehouseTable(spark, t.root)
+        .append(Seq((2L, "even", "racer2")).toDF("k", "rk", "v").coalesce(1))
+      KeyedRaceGate.release.countDown()
+      val outcome = Await.ready(write, 2.minutes).value.get
+      if (mor) {
+        // the batch's tomb files share the racer's origin and could not
+        // mask its k=2 row: the write must refuse, not read k=2 twice
+        assert(outcome.failed.toOption.exists(_.isInstanceOf[ConcurrentCommitException]),
+          s"$what: $outcome")
+        assert(rowsOf(t.read()) === seedRows.toSet + ((2L, "even", "racer2")), what)
+      } else {
+        assert(outcome.isSuccess, s"$what: $outcome")
+        // latest wins: the batch replaces the racer's k=2 row as well
+        assert(rowsOf(t.read()) === (if (change) applied else upserted), what)
+      }
+      assert(strays(t)._1 === Nil, s"$what left staged files")
+    }
+  }
+
+  test("a keyed table-API batch lacking a key column fails before it writes anything") {
+    for (mor <- Seq(false, true); change <- Seq(false, true)) {
+      val what = s"${if (change) "applyChanges" else "upsert"}, mergeOnRead = $mor"
+      val t = new LakehouseTable(spark, tmpDir("kf-nokey"))
+      t.append(seedRows.toDF("k", "rk", "v").coalesce(1))
+      val before = t.listSnapshots().map(_.snapshotId)
+      val failed = intercept[Exception] {
+        if (change) t.applyChanges(changeBatch.drop("k"), Seq("k"), mergeOnRead = mor)
+        else t.upsert(upsertBatch.drop("k"), Seq("k"), mergeOnRead = mor)
+      }
+      val chain = Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => Option(e.getMessage).exists(_.contains(
+        "keys column 'k' not in the write schema"))), s"$what: $failed")
+      assert(t.listSnapshots().map(_.snapshotId) === before, what)
+      assert(strays(t) === ((Nil, Nil)), s"$what left staged files")
+    }
+  }
+
+  test("a keyed batch lacking a layout column lands its data files under that column's dirs") {
+    // the batch's rows read rk NULL and land under its NULL dir; the tomb
+    // files name no rk value, so they stay flat. The second write meets
+    // the first's files, which keep the lineage's layout one scheme.
+    val kv = Seq((10L, "new10"), (2L, "R2"))
+    val expected = seedRows.filterNot(_._1 == 2L).toSet ++
+      kv.map { case (k, v) => (k, null.asInstanceOf[String], v) }
+    for (catalog <- Seq(true, false); mor <- Seq(false, true); change <- Seq(false, true)) {
+      val what = s"${if (catalog) "catalog" else "path"} table, " +
+        s"${if (change) "applyChanges" else "upsert"}, mergeOnRead = $mor"
+      val (name, root) =
+        if (catalog) seeded(hive = true)
+        else {
+          val r = tmpDir("kf-layout")
+          new LakehouseTable(spark, r)
+            .append(seedRows.toDF("k", "rk", "v").coalesce(1), partitionBy = Seq("rk"))
+          ("", r)
+        }
+      val t = new LakehouseTable(spark, root)
+      for (_ <- 1 to 2) {
+        if (change) t.applyChanges(kv.map { case (k, v) => (k, v, "insert") }
+          .toDF("k", "v", "_change").coalesce(1), Seq("k"), mergeOnRead = mor)
+        else t.upsert(kv.toDF("k", "v").coalesce(1), Seq("k"), mergeOnRead = mor)
+      }
+      val head = t.currentSnapshot().get
+      assert(head.files.forall(f => LakehouseTable.hiveSegsOf(f).exists(_.startsWith("rk="))),
+        s"$what: ${head.files}")
+      assert(head.tombstones.forall(f => LakehouseTable.hiveSegsOf(f).isEmpty),
+        s"$what: ${head.tombstones}")
+      assert(rowsOf(t.read()) === expected, what)
+      if (catalog) spark.sql(s"DROP TABLE IF EXISTS $name")
+    }
+  }
+}
+
+/** A one-shot gate on a batch's rows, evaluated in its write task (a
+  * local session shares the JVM): the first row signals `entered` and
+  * waits for `release`, holding the staged write open while a spec
+  * commits a racer.
+  */
+private object KeyedRaceGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+
+  def arm(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  def pass(v: String): String = {
+    if (entered.getCount > 0) {
+      entered.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    v
   }
 }
