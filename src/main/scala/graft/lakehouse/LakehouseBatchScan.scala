@@ -77,7 +77,12 @@ final class LakehouseBatchScan private[lakehouse] (
     /** The already-resolved (table, snapshot) of an engine-internal
       * read; None resolves from `options` (user scans).
       */
-    pinned: Option[(LakehouseTable, Snapshot)] = None)
+    pinned: Option[(LakehouseTable, Snapshot)] = None,
+    /** Masks applied beside the snapshot's own (a keyed batch's key
+      * set, [[LakehouseMor.batchKeys]]): every file they could mask
+      * reads through the mask probe.
+      */
+    extraMasks: Seq[org.apache.spark.broadcast.Broadcast[MorMaskData]] = Nil)
   extends Scan with Batch with SupportsRuntimeFiltering with SupportsReportStatistics
   with SupportsReportPartitioning {
 
@@ -142,7 +147,7 @@ final class LakehouseBatchScan private[lakehouse] (
     * driver collect of the batch-sized key tombstones (empty for plain
     * copy-on-write snapshots and all-null-key tombstones).
     */
-  @transient private lazy val morMasks: Seq[MorMaskData] =
+  @transient private lazy val ownMasks: Seq[MorMaskData] =
     // unmasked: the micro-batch stream's INCREMENTAL batches plan
     // tombstone-free — appended files deliver as-committed, so a
     // skipChangeCommits batch spanning append-then-MoR-apply can't let
@@ -151,9 +156,12 @@ final class LakehouseBatchScan private[lakehouse] (
     if (snap.tombstones.isEmpty || !masked) Nil
     else LakehouseMor.build(spark, t, snap)
 
+  @transient private lazy val morMasks: Seq[MorMaskData] =
+    ownMasks ++ extraMasks.map(_.value)
+
   @transient private lazy val maskBcs
       : Seq[org.apache.spark.broadcast.Broadcast[MorMaskData]] =
-    morMasks.map(spark.sparkContext.broadcast(_))
+    ownMasks.map(spark.sparkContext.broadcast(_)) ++ extraMasks
 
   /** Files a tombstone could actually mask rows in
     * ([[LakehouseMor.affectedFiles]]) → their origin id. Everything
@@ -436,7 +444,43 @@ final class LakehouseBatchScan private[lakehouse] (
       columnsRead = required.fieldNames.toSeq,
       pushed = accepted.map(_.toString).toSeq ++ runtimeDesc))
     if (files.isEmpty) return Array.empty
+    val groups = layoutGroups(files)
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      groups.flatMap(_._3).map(_._2.length + openCost).sum)
+    var globalIdx = 0
+    groups.flatMap { case (spec, keyRow, whole) =>
+      val pfs = whole.flatMap { case (_, pf) =>
+        if (pf.length <= 0L) Seq(pf)
+        else (0L until pf.length by maxSplit).map(off =>
+          pf.copy(start = off, length = math.min(maxSplit, pf.length - off)))
+      }
+      FilePartition.getFilePartitions(spark, pfs.sortBy(-_.length), maxSplit).map { fp =>
+        val p = LakehouseGroupedPartition(spec, fp.copy(index = globalIdx),
+          fp.preferredLocations(), keyRow)
+        globalIdx += 1
+        p
+      }
+    }.toArray
+  }
 
+  /** One unsplit single-file partition per planned file, by manifest
+    * path: an engine pass that must see each file whole (the keyed
+    * rewrite's per-file key gate) packs these into its own tasks.
+    */
+  private[lakehouse] def wholeFilePartitions(): Map[String, LakehouseGroupedPartition] =
+    layoutGroups(currentFiles).flatMap { case (spec, keyRow, whole) =>
+      whole.map { case (f, pf) =>
+        f -> LakehouseGroupedPartition(spec, FilePartition(0, Array(pf)), Array.empty, keyRow)
+      }
+    }.toMap
+
+  /** `files` in their read groups: each group's reader spec, its SPJ
+    * key row (null outside SPJ), and every file as one whole
+    * [[PartitionedFile]] beside its manifest path.
+    */
+  private def layoutGroups(files: Seq[String])
+      : Seq[(LakehouseGroupSpec, InternalRow, Seq[(String, PartitionedFile)])] = {
     // under SPJ each group is ONE partition-value tuple (tasks align
     // value-for-value across the join); otherwise groups are layout
     // signatures only and files pack freely. MoR-affected files
@@ -460,15 +504,9 @@ final class LakehouseBatchScan private[lakehouse] (
           ep.mkString(","), idr) }
       .map { case ((sig, _, mo, bid, _, idr), fs) => (sig, mo, bid, idr, fs) }
 
-    val conf = spark.sessionState.conf
-    val openCost = conf.filesOpenCostInBytes
-    val sizes: Map[String, Long] = files.map(f => f -> t.fileSizeOf(snap, f)).toMap
-    val maxSplit = FilePartition.maxSplitBytes(spark,
-      sizes.valuesIterator.map(_ + openCost).sum)
-    val zone = java.time.ZoneId.of(conf.sessionLocalTimeZone)
+    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
 
-    var globalIdx = 0
-    grouped.flatMap { case (pathKeys, maskOrigin, bucketId, idRouted, groupFiles) =>
+    grouped.map { case (pathKeys, maskOrigin, bucketId, idRouted, groupFiles) =>
       if (idRouted) LakehouseBatchScan.idRoutedFiles.addAndGet(groupFiles.size)
       val inPath = pathKeys.toSet
       def nk(f: StructField): String = t.resolvedNameKey(f.name)
@@ -519,16 +557,10 @@ final class LakehouseBatchScan private[lakehouse] (
 
       val dataFieldsPhys = dataFields.map(phys)
       val partFieldsPhys = partFields.map(phys)
-      val pfs = groupFiles.flatMap { f =>
-        val len = sizes(f)
-        val pv = partitionValuesFor(f, partFieldsPhys, zone)
-        val path = SparkPath.fromPathString(t.absDataPath(f))
-        if (len <= 0L)
-          Seq(PartitionedFile(pv, path, 0L, 0L, Array.empty, 0L, 0L))
-        else (0L until len by maxSplit).map { off =>
-          PartitionedFile(pv, path, off, math.min(maxSplit, len - off),
-            Array.empty, 0L, len)
-        }
+      val whole = groupFiles.map { f =>
+        val len = t.fileSizeOf(snap, f)
+        f -> PartitionedFile(partitionValuesFor(f, partFieldsPhys, zone),
+          SparkPath.fromPathString(t.absDataPath(f)), 0L, len, Array.empty, 0L, len)
       }
       // each partition carries its group's reader spec, so a runtime
       // re-plan can never pair stale group state with fresh partitions
@@ -550,13 +582,8 @@ final class LakehouseBatchScan private[lakehouse] (
               s"bucket id lost during grouping for ${groupFiles.head}"))))
         else if (spjFields.isEmpty) null
         else partitionValuesFor(groupFiles.head, spjFields, zone)
-      FilePartition.getFilePartitions(spark, pfs.sortBy(-_.length), maxSplit).map { fp =>
-        val p = LakehouseGroupedPartition(spec, fp.copy(index = globalIdx),
-          fp.preferredLocations(), keyRow)
-        globalIdx += 1
-        p
-      }
-    }.toArray
+      (spec, keyRow, whole)
+    }
   }
 
   /** Internal partition values of one file, in `partFields` order:
@@ -712,18 +739,31 @@ private[lakehouse] final class LakehouseReaderFactory extends PartitionReaderFac
     val g = p.spec
     val in = g.factory.createReader(p.fp)
     if (g.perm == null && g.masks.isEmpty) in
-    else new PartitionReader[InternalRow] {
+    else keptRows(g, Iterator.continually(in.next()).takeWhile(identity).map(_ => in.get()), in)
+  }
+
+  /** The rows `p` serves, as [[createReader]] serves them, decoded by
+    * the vectorized reader when `p` supports it and masked per row (no
+    * survivor copy): an engine pass that consumes rows in its own task
+    * (the keyed rewrite) reads through this.
+    */
+  def rowsOf(p: LakehouseGroupedPartition): PartitionReader[InternalRow] =
+    if (!supportColumnarReads(p)) createReader(p)
+    else {
+      val in = p.spec.factory.createColumnarReader(p.fp)
+      keptRows(p.spec, Iterator.continually(in.next()).takeWhile(identity)
+        .flatMap(_ => in.get().rowIterator().asScala), in)
+    }
+
+  /** `rows` minus the masked ones, permuted to the scan's output order. */
+  private def keptRows(g: LakehouseGroupSpec, rows: Iterator[InternalRow],
+      in: PartitionReader[_]): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private val kept =
+        if (g.masks.isEmpty) rows
+        else rows.filterNot(LakehouseMor.masked(_, g.masks, g.maskOrigin))
       private var cur: InternalRow = _
-      override def next(): Boolean = {
-        while (in.next()) {
-          val row = in.get()
-          if (g.masks.isEmpty || !LakehouseMor.masked(row, g.masks, g.maskOrigin)) {
-            cur = row
-            return true
-          }
-        }
-        false
-      }
+      override def next(): Boolean = kept.hasNext && { cur = kept.next(); true }
       override def get(): InternalRow = {
         if (g.perm == null) cur
         else {
@@ -735,7 +775,6 @@ private[lakehouse] final class LakehouseReaderFactory extends PartitionReaderFac
       }
       override def close(): Unit = in.close()
     }
-  }
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[LakehouseGroupedPartition]

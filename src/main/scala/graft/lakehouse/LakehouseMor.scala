@@ -51,8 +51,8 @@ object LakehouseMor {
     * date/timestamp as their int/long encodings. Integral widths fold
     * to Long so a (future) type-widened lineage still matches. Binary
     * keys copy into an immutable byte sequence (content equality and
-    * hashing; the reader may reuse the row's buffer). Nested keys are
-    * refused at write time ([[requireMaskableKeys]]).
+    * hashing; the reader may reuse the row's buffer). Merge-on-read
+    * writes refuse nested keys ([[requireMaskableKeys]]).
     */
   def canon(dt: DataType, v: Any): Any = dt match {
     case StringType => v.toString
@@ -77,6 +77,17 @@ object LakehouseMor {
       // BigDecimal("0E-7").stripTrailingZeros keeps its scale pre-Java-8
       // semantics for zero on some paths — pin zero to ONE image
       if (jbd.signum == 0) java.math.BigDecimal.ZERO else jbd
+    // nested values fold to lists of their canon'd parts (NULL parts
+    // kept): only a copy-on-write key set holds them, as merge-on-read
+    // writes refuse nested keys
+    case st: StructType =>
+      val r = v.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      st.fields.indices.map(i =>
+        if (r.isNullAt(i)) null else canon(st(i).dataType, r.get(i, st(i).dataType))).toList
+    case ArrayType(et, _) =>
+      val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      (0 until a.numElements()).map(i =>
+        if (a.isNullAt(i)) null else canon(et, a.get(i, et))).toList
     case other => throw new IllegalStateException(
       s"unsupported MoR mask key type $other (merge-on-read writes refuse such keys)")
   }
@@ -155,11 +166,41 @@ object LakehouseMor {
     maskCache.synchronized(Option(maskCache.get(key))) match {
       case Some(hit) => hit
       case None =>
-        val built = buildUncached(spark, t, snap)
+        val dirs = snap.tombstones.groupBy(dirOf).toSeq.sortBy(_._1).map { case (_, fs) =>
+          // files within one claim dir come from ONE write (one schema), so
+          // the DRIVER-side footer read is exact (leaf-file reads discover
+          // no hive partition columns, same as the changesBetween path) —
+          // an uninferred read paid a schema-inference Spark job per dir
+          // per mask build; inference remains the unreadable-footer fallback
+          val df = t.footerSchemaOf(fs.head)
+            .fold(spark.read)(s => spark.read.schema(s))
+            .parquet(fs.map(t.absDataPath): _*)
+          val names = df.columns.sorted.toSeq
+          // .copy() is load-bearing: the scan REUSES its UnsafeRow per
+          // partition, so uncopied rows would all alias the LAST one —
+          // every tombstone key but one would vanish. collect() (not
+          // toLocalIterator, which submits one job PER PARTITION) drains
+          // the batch-sized key set in a single job.
+          (names, names.map(n => df.schema(n).dataType), t.originOfFile(fs.head),
+            () => df.select(names.map(col): _*).queryExecution.toRdd.map(_.copy()).collect().toSeq)
+        }
+        val built = keyMasks(DataType.fromJson(snap.schemaJson).asInstanceOf[StructType], dirs)
         maskCache.synchronized(maskCache.put(key, built))
         built
     }
   }
+
+  /** A keyed batch's key set, from `rows` of its tomb key files (in
+    * `schema`'s column order) as one mask whose every tuple sits at
+    * origin `Long.MaxValue`: it drops the batch's keys from every data
+    * file, a racer's newer files included — the copy-on-write rewrite's
+    * gate ([[LakehouseTable.commitKeyed]]). None when every tuple holds
+    * a NULL key, which equals nothing.
+    */
+  def batchKeys(schema: StructType, rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : Option[MorMaskData] =
+    keyMasks(schema, Seq((schema.fieldNames.toSeq, schema.fields.map(_.dataType).toSeq,
+      Long.MaxValue, () => rows))).headOption
 
   /** The files among `files` that `masks` could mask rows in.
     * Metadata-only: per mask, the file must be OLDER than the mask's
@@ -183,24 +224,16 @@ object LakehouseMor {
       }.distinct
     }
 
-  private def buildUncached(spark: SparkSession, t: LakehouseTable,
-      snap: Snapshot): Seq[MorMaskData] = {
-    val declared = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-      .fields.map(f => f.name.toLowerCase(java.util.Locale.ROOT) -> f.dataType).toMap
-    val perDir = snap.tombstones.groupBy(dirOf).toSeq.sortBy(_._1).map { case (_, fs) =>
-      val origin = t.originOfFile(fs.head)
-      // files within one claim dir come from ONE write (one schema), so
-      // the DRIVER-side footer read is exact (leaf-file reads discover
-      // no hive partition columns, same as the changesBetween path) —
-      // an uninferred read paid a schema-inference Spark job per dir
-      // per mask build; inference remains the unreadable-footer fallback
-      val df = t.footerSchemaOf(fs.head)
-        .fold(spark.read)(s => spark.read.schema(s))
-        .parquet(fs.map(t.absDataPath): _*)
-      val names = df.columns.sorted.toSeq
-      (names, names.map(n => df.schema(n).dataType), origin,
-        df.select(names.map(col): _*))
-    }
+  /** The masks of key-file dirs, each given as (its key column names,
+    * their physical types, its origin, its rows in that column order):
+    * dirs sharing one key set merge max-origin-wins, recorded at
+    * `schema`'s declared key types.
+    */
+  private def keyMasks(schema: StructType,
+      perDir: Seq[(Seq[String], Seq[DataType], Long,
+        () => Seq[org.apache.spark.sql.catalyst.InternalRow])]): Seq[MorMaskData] = {
+    val declared = schema.fields
+      .map(f => f.name.toLowerCase(java.util.Locale.ROOT) -> f.dataType).toMap
     perDir.groupBy(_._1).toSeq.sortBy(_._1.mkString(",")).map { case (names, group) =>
       // recorded key types are the DECLARED (widest) ones: canon folds
       // integral widths to Long, so a tombstone written before a type
@@ -209,13 +242,8 @@ object LakehouseMor {
       val types = names.map(n =>
         declared.getOrElse(n.toLowerCase(java.util.Locale.ROOT), group.head._2(names.indexOf(n))))
       val acc = scala.collection.mutable.HashMap.empty[List[Any], Long]
-      group.foreach { case (_, ts, origin, df) =>
-        // .copy() is load-bearing: the scan REUSES its UnsafeRow per
-        // partition, so uncopied rows would all alias the LAST one —
-        // every tombstone key but one would vanish. collect() (not
-        // toLocalIterator, which submits one job PER PARTITION) drains
-        // the batch-sized key set in a single job.
-        df.queryExecution.toRdd.map(_.copy()).collect().foreach { row =>
+      group.foreach { case (_, ts, origin, rows) =>
+        rows().foreach { row =>
           var i = 0
           var ok = true
           val vals = new Array[Any](types.length)
@@ -246,24 +274,30 @@ object LakehouseMor {
     var m = 0
     while (m < masks.length) {
       val sp = masks(m)
-      val data = sp.bc.value
-      if (data.maxOrigin > origin) {
-        val n = sp.ordinals.length
-        val vals = new Array[Any](n)
-        var i = 0
-        var ok = true
-        while (i < n && ok) {
-          val ord = sp.ordinals(i)
-          if (row.isNullAt(ord)) ok = false
-          else { vals(i) = canon(sp.types(i), row.get(ord, sp.types(i))); i += 1 }
-        }
-        if (ok) data.byKey.get(vals.toList) match {
-          case Some(to) if to > origin => return true
-          case _ => ()
-        }
-      }
+      if (sp.bc.value.maxOrigin > origin && newestOrigin(row, sp) > origin) return true
       m += 1
     }
     false
+  }
+
+  /** Does `sp`'s mask hold `row`'s full non-null key tuple at all? */
+  def holds(row: org.apache.spark.sql.catalyst.InternalRow, sp: MorMaskSpec): Boolean =
+    newestOrigin(row, sp) > Long.MinValue
+
+  /** The newest origin `sp`'s mask holds `row`'s key tuple at;
+    * `Long.MinValue` for a NULL key part or a tuple it does not hold.
+    */
+  private def newestOrigin(row: org.apache.spark.sql.catalyst.InternalRow,
+      sp: MorMaskSpec): Long = {
+    val n = sp.ordinals.length
+    val vals = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      val ord = sp.ordinals(i)
+      if (row.isNullAt(ord)) return Long.MinValue
+      vals(i) = canon(sp.types(i), row.get(ord, sp.types(i)))
+      i += 1
+    }
+    sp.bc.value.byKey.getOrElse(vals.toList, Long.MinValue)
   }
 }

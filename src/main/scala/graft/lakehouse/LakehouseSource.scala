@@ -235,27 +235,28 @@ private[lakehouse] object LakehouseSource {
   /** The PATH face's batch write, shared by `df.write...save(root)`
     * and the V1Write insert: (save mode, `keys`, `mergeOnRead`,
     * `partitionBy`, filter overwrite, `branch`) map onto one table call.
-    * Without a branch, Append appends — or UPSERTS when `keys` names
-    * merge columns — Overwrite replaces the content, a filter overwrite
+    * Without a branch, Append appends — or, when `keys` names merge
+    * columns, UPSERTS, and CDC-applies a batch carrying a `_change`
+    * column — Overwrite replaces the content, a filter overwrite
     * replaces the matching rows, and ErrorIfExists/Ignore follow their
     * SaveMode contracts against table existence. A `branch` write
     * (write-audit-publish: invisible to main until publishBranch) takes
-    * the append and keyed shapes only — with `keys` and a `_change`
-    * column it CDC-applies; replacing a branch is re-forking, which is
-    * what forkBranch is for.
+    * the append and keyed shapes only, with the same `_change` rule;
+    * replacing a branch is re-forking, which is what forkBranch is for.
     */
   def writePath(t: LakehouseTable, data: DataFrame, options: Map[String, String],
       mode: SaveMode, overwriteBy: Option[Seq[Filter]]): Unit = {
     val (keys, mor) = keyedOptsOf(options)
     val partitionBy = colListOf(options, "partitionBy")
+    // `_change` is a keyed write's op channel on both lines
+    val cdc = keys.nonEmpty && data.columns.contains("_change")
     branchWriteOf(options) match {
       case Some(b) =>
         require(mode == SaveMode.Append && overwriteBy.isEmpty,
           s"branch writes are append/upsert-shaped (write-audit-publish), got " +
             s"${overwriteBy.fold(mode.toString)(_ => "a filter overwrite")} — to " +
             "replace a branch, drop and re-fork it")
-        if (keys.nonEmpty && data.columns.contains("_change"))
-          t.applyChangesToBranch(data, keys, b, mergeOnRead = mor)
+        if (cdc) t.applyChangesToBranch(data, keys, b, mergeOnRead = mor)
         else if (keys.nonEmpty) t.upsertToBranch(data, keys, b, mergeOnRead = mor)
         else t.appendToBranch(data, b, partitionBy)
       case None => mode match {
@@ -265,7 +266,8 @@ private[lakehouse] object LakehouseSource {
         case _ if overwriteBy.isDefined => t.overwriteWhere(data, overwriteBy.get)
         case SaveMode.Overwrite => t.overwrite(data)
         case _ => // Append, or first write under ErrorIfExists/Ignore
-          if (keys.nonEmpty) t.upsert(data, keys, mergeOnRead = mor)
+          if (cdc) t.applyChanges(data, keys, mergeOnRead = mor)
+          else if (keys.nonEmpty) t.upsert(data, keys, mergeOnRead = mor)
           else t.append(data, partitionBy)
       }
     }

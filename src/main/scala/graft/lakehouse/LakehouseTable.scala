@@ -877,11 +877,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     *  4. merge-on-read: the tomb files append to the head's tombstone
     *     (masking is strictly-older, so the batch's own rows stay
     *     visible);
-    *  5. copy-on-write: the head's files holding a tomb key
-    *     ([[touchedFilesFor]], key ranges from the tomb files' stats)
-    *     swap for their survivors — the rows whose key the batch does
-    *     not carry — written at the commit's id, projected onto its
-    *     evolved schema, under the head's layout;
+    *  5. copy-on-write: the head's files holding a tomb key swap for
+    *     their survivors — the rows whose key the batch does not carry —
+    *     written at the commit's id, projected onto its evolved schema,
+    *     under the head's layout, in one key-gated rewrite job
+    *     ([[rewriteTouched]]; key ranges from the tomb files' stats);
     *  6. publish on `target`; `cdc` (or merge-on-read) names the op
     *     `apply`, else `upsert`.
     *
@@ -914,32 +914,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
               (c.files ++ written.data, Some(c.tombstones ++ written.tombs).filter(_.nonEmpty))
             else if (written.tombs.isEmpty) (c.files ++ written.data, c.deletes)
             else {
-              // the writers' factory checked every key column is present
-              val keyFields = StructType(keys.map { k =>
-                val f = batchSchema.fields.find(_.name.equalsIgnoreCase(k)).get
-                org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)
-              })
-              // explicit schema: the writers stamped the tomb key files
-              // with exactly these (name, type) pairs ([[LakehouseDataWriter
-              // .keySchema]]); re-inferring would cost a footer job
-              val keyRows = spark.read.schema(keyFields)
-                .parquet(written.tombs.map(f => rootPath.resolve(f).toString): _*)
-              val touched = touchedFilesFor(c, keyRows, keys,
-                footerKeyRanges(written.tombs, keys, keyFields))
-              if (touched.nonEmpty) {
-                val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-                // the head's layout, minus dir names no column sources (a
-                // path table's inferred `<col>_bucket` dirs carry no count)
-                val layout = inferPartitionCols(c.files).filter(pc =>
-                  schema.fieldNames.exists(f => nameKey(f) == nameKey(specSourceCol(pc))))
-                // effective (tombstone-masked) read: a raw read would copy
-                // MoR-deleted rows into a fresh-origin file and resurrect
-                // them. An anti-join ignores duplicate keys.
-                survivors = writeDataFiles(projectOnto(
-                  scanFiles(c, touched).join(keyRows, keys, "left_anti"), schema),
-                  id, head = head, partitionCols = layout)
-              }
-              (c.files.diff(touched) ++ written.data ++ survivors, c.deletes)
+              val rewritten = rewriteTouched(c, id, written.tombs, keys, batchSchema,
+                DataType.fromJson(schemaJson).asInstanceOf[StructType])
+              survivors = rewritten.data
+              val gone = rewritten.replaced.toSet
+              (c.files.filterNot(gone) ++ written.data ++ survivors, c.deletes)
             }
         }
         Some(target.publish(Snapshot(id, head.map(_.snapshotId), System.currentTimeMillis(),
@@ -956,19 +935,126 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     published
   }
 
-  /** `df` with exactly `schema`'s columns, in order: a column `df`
-    * carries (under the name-resolution key) casts to the declared
-    * type, one it lacks reads NULL.
+  /** The copy-on-write half of [[commitKeyed]]: the head files holding a
+    * key of the batch (`tombs`, its staged tomb key files) swap for their
+    * survivors, in ONE key-gated rewrite job.
+    *
+    * The batch's key ranges (the tomb files' writer stats,
+    * [[footerKeyRanges]]) prune the head's files on manifest metadata, so
+    * a key-disjoint batch reads nothing. The key set is read once on the
+    * driver into a mask whose tuples sit at origin `Long.MaxValue`
+    * ([[LakehouseMor.batchKeys]]) and ships as one broadcast. One task per
+    * pack of candidate files then reads each candidate whole: its key
+    * columns first, tested against the set; a file holding none writes
+    * nothing and stays in the manifest. A file holding one is read again
+    * in full through the effective read (the head's tombstone masks plus
+    * the batch keys, which drop every row the batch carries, a racer's
+    * newer rows included), projected onto the commit's evolved `schema`
+    * and written at `id` under the head's layout by the task's
+    * [[LakehouseDataWriter]], whose commit message names the file as
+    * replaced — also when none of its rows survive.
+    *
+    * Returns the survivor files (`data`) and the head files they replace
+    * (`replaced`); a failed job leaves no survivor file behind.
     */
-  private def projectOnto(df: DataFrame, schema: StructType): DataFrame = {
-    val have = df.schema.fields.map(f => nameKey(f.name) -> f).toMap
-    df.select(schema.fields.toIndexedSeq.map { f =>
-      have.get(nameKey(f.name)) match {
-        case Some(g) if sameIgnoringNullability(g.dataType, f.dataType) => col(g.name).as(f.name)
-        case Some(g) => col(g.name).cast(f.dataType).as(f.name)
-        case None => lit(null).cast(f.dataType).as(f.name)
+  private def rewriteTouched(head: Snapshot, id: Long, tombs: Seq[String],
+      keys: Seq[String], batchSchema: StructType, schema: StructType): WrittenFiles = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal}
+    val none = WrittenFiles(Nil)
+    val headSchema = org.apache.spark.sql.GraftDatasetAccess.nullable(
+      DataType.fromJson(head.schemaJson).asInstanceOf[StructType])
+    // a key column the head never declared is NULL in all its files
+    val headKeys = keys.map(k =>
+      headSchema.fields.find(f => nameKey(f.name) == nameKey(k)).getOrElse(return none))
+    val ranges = footerKeyRanges(tombs, keys, batchSchema)
+    // no range: every key tuple holds a NULL (or the batch is empty),
+    // and a NULL key equals nothing
+    if (ranges.contains(Nil)) return none
+    val inRange = ranges.fold(head.files)(pruneFiles(head, _)._1)
+    if (inRange.isEmpty) return none
+    val opts = Map("path" -> root)
+    val readers = new LakehouseReaderFactory
+    // the batch's key set, read on the driver by the native scan over a
+    // snapshot view of its tomb files: a handful of key files this batch
+    // just wrote, not worth a job's launch
+    val keySchema = StructType(keys.map(k =>
+      batchSchema.fields.find(f => nameKey(f.name) == nameKey(k)).get.copy(nullable = true)))
+    val tombView = Snapshot(head.snapshotId, None, head.timestampMs, "tombs", tombs, keySchema.json,
+      stats = Some(tombs.flatMap(f => Option(knownStats.get(f)).map(f -> _)).toMap))
+    val keyRows = new LakehouseBatchScan(opts, keySchema, Array.empty, masked = false,
+      pinned = Some((this, tombView))).wholeFilePartitions().values.toSeq.flatMap { p =>
+        val r = readers.rowsOf(p)
+        try Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().copy()).toVector
+        finally r.close()
       }
-    }: _*)
+    val batch = LakehouseMor.batchKeys(keySchema, keyRows).getOrElse(return none)
+    // key types the stats cannot range prune on the key set itself
+    val candidates =
+      if (ranges.isDefined) inRange else LakehouseMor.affectedFiles(this, head, Seq(batch), inRange)
+    if (candidates.isEmpty) return none
+    keyedWriteProbedFiles.addAndGet(candidates.size)
+    val bc = spark.sparkContext.broadcast(batch)
+    try {
+      val pinned = Some((this, head))
+      val subset = Some(candidates.toSet)
+      val keyParts = new LakehouseBatchScan(opts, StructType(headKeys), Array.empty, subset,
+        masked = false, pinned = pinned).wholeFilePartitions()
+      val rowParts = new LakehouseBatchScan(opts, headSchema, Array.empty, subset,
+        pinned = pinned, extraMasks = Seq(bc)).wholeFilePartitions()
+      val probeOrds = batch.keyNames.map(k => headKeys.indexWhere(f => nameKey(f.name) == nameKey(k)))
+      val probe = MorMaskSpec(bc, probeOrds.toArray, probeOrds.map(headKeys(_).dataType).toArray)
+      // the survivors take the commit's evolved schema: a column the
+      // head lacks reads NULL, a widened one casts up
+      val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+      val exprs = schema.fields.toSeq.map { f =>
+        headSchema.fields.indexWhere(h => nameKey(h.name) == nameKey(f.name)) match {
+          case -1 => Literal(null, f.dataType)
+          case i =>
+            val from = headSchema(i).dataType
+            val br = BoundReference(i, from, nullable = true)
+            if (sameIgnoringNullability(from, f.dataType)) br else Cast(br, f.dataType, tz)
+        }
+      }
+      val project = Some(exprs).filterNot(es => es.size == headSchema.size &&
+        es.zipWithIndex.forall { case (e, i) => e == BoundReference(i, headSchema(i).dataType, true) })
+      // the head's layout, minus dir names no column sources (a path
+      // table's inferred `<col>_bucket` dirs carry no count)
+      val layout = inferPartitionCols(head.files).filter(pc =>
+        schema.fieldNames.exists(f => nameKey(f) == nameKey(specSourceCol(pc))))
+      val write = new LakehouseDsv2Write(root, Map.empty, schema,
+        Dsv2CommitMode.Stage(this, id, "", layout, Some(head)))
+      val factory = write.makeFactory(streaming = false)
+      // whole files in as many tasks as a scan of them would split into,
+      // largest first onto the lightest task; each task's files in path
+      // order, so one dir's files meet its writer together
+      val openCost = spark.sessionState.conf.filesOpenCostInBytes
+      val sized = candidates.map(f => f -> (fileSizeOf(head, f) + openCost)).sortBy(-_._2)
+      val total = sized.map(_._2).sum
+      val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
+        .maxSplitBytes(spark, total)
+      val packs = Array.fill(
+        math.max(1L, math.min(sized.size.toLong, total / maxSplit)).toInt)(
+        (0L, List.empty[String]))
+      sized.foreach { case (f, w) =>
+        val i = packs.indices.minBy(packs(_)._1)
+        packs(i) = (packs(i)._1 + w, f :: packs(i)._2)
+      }
+      val tasks = packs.toSeq.map(_._2.sorted.map(f => (f, keyParts(f), rowParts(f))))
+      val messages = try {
+        org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(
+            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]) {
+          spark.sparkContext.runJob(spark.sparkContext.parallelize(tasks, tasks.size),
+            (it: Iterator[Seq[(String, LakehouseGroupedPartition, LakehouseGroupedPartition)]]) =>
+              LakehouseTable.rewriteTask(factory, probe, project, it.next()))
+        }
+      } catch {
+        case e: Throwable =>
+          write.abort(Array.empty)
+          throw e
+      }
+      write.commit(messages)
+      WrittenFiles.of(messages)
+    } finally bc.destroy()
   }
 
   /** Drop uncommitted executor-written files (aborted job, absorbed
@@ -1259,41 +1345,31 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   private[lakehouse] val keyedWriteProbedFiles = new java.util.concurrent.atomic.AtomicLong
 
-  /** Touched-file discovery for a keyed write (upsert / applyChanges):
-    * which of `cur`'s data files hold rows colliding with the batch's
-    * key tuples? Two stages, cheapest first — the AnnIndex.append
-    * collision discipline generalized to every keyed write:
+  /** Touched-file discovery for a key set (the DML probes: MERGE,
+    * UPDATE and DELETE by key, and the change feed's file diff): which of
+    * `cur`'s data files hold rows colliding with `keyRows`' key tuples?
+    * Two stages, cheapest first — the AnnIndex.append collision
+    * discipline:
     *
-    *  1. the batch's per-key-column min/max (`knownRanges`, or ONE
-    *     tiny agg over `keyRows`) feeds [[pruneFiles]] as conjunctive
-    *     ranges — manifest stats and partition paths answer with zero
-    *     data-file I/O and zero jobs, so a key-disjoint batch exits
-    *     here having read NOTHING of the existing table;
+    *  1. ONE tiny agg over `keyRows` gives the per-key-column min/max,
+    *     which feeds [[pruneFiles]] as conjunctive ranges — manifest
+    *     stats and partition paths answer with zero data-file I/O, so a
+    *     key-disjoint set exits here having read NOTHING of the table;
     *  2. only surviving candidate files pay an exact COLUMN-PRUNED
     *     semi-join over their key columns (duplicate key rows are
     *     harmless to it), collected in one shuffle-free job.
     *
-    * At 100 TB this is the difference between a CDC micro-batch paying
-    * O(batch) and paying an O(table) key-column scan per commit
-    * (reference upsert contract: `sinks/postgres.py:141-146`,
-    * `sinks/iceberg.py:184`).
+    * A keyed write finds its touched files inside its one rewrite job
+    * instead ([[rewriteTouched]]).
     *
     * Conservative under evolution/unsupported types: a key column whose
     * min/max can't compare against a file's stats simply keeps the file
     * for stage 2. All-null key tuples match nothing under SQL equality,
-    * so an all-null (or empty) batch touches no files by definition.
+    * so an all-null (or empty) key set touches no files by definition.
     */
   private[lakehouse] def touchedFilesFor(cur: Snapshot, keyRows: DataFrame,
-      keys: Seq[String],
-      /** Pre-computed per-key (min, max) ranges, when the caller
-        * already knows them: [[commitKeyed]] folds them from the
-        * staged tomb files' writer stats ([[footerKeyRanges]]), so a
-        * keyed write runs no aggregate job. Min/max over the key rows
-        * equals min/max over their distinct keys, so the prune is
-        * unchanged.
-        */
-      knownRanges: Option[Seq[ScanPredicate.Range]] = None): Seq[String] = {
-    val ranges = knownRanges.getOrElse {
+      keys: Seq[String]): Seq[String] = {
+    val ranges = {
       val aggs = keys.flatMap(k => Seq(min(col(k)), max(col(k))))
       val r = keyRows.agg(aggs.head, aggs.tail: _*).head()
       keys.zipWithIndex.flatMap { case (k, i) =>
@@ -3870,11 +3946,10 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * [[manifestMinMax]]'s: every row-bearing file must carry a stat for
     * every key column (absence is ambiguous between "all null here" and
     * "stats unavailable") and the declared type must round-trip
-    * losslessly — anything else returns None and the caller's
-    * aggregate-job fallback answers, so this is purely an optimization.
-    * All files empty ⇒ Some(Nil): min/max over an empty batch are SQL
-    * NULL, and [[touchedFilesFor]] maps an empty range list to "touches
-    * nothing" exactly like the job path does.
+    * losslessly — anything else returns None, and [[rewriteTouched]]
+    * prunes on the batch's key set instead. All files empty ⇒
+    * Some(Nil): min/max over an empty batch are SQL NULL, and an empty
+    * range list touches nothing.
     */
   private[lakehouse] def footerKeyRanges(files: Seq[String], keys: Seq[String],
       schema: StructType): Option[Seq[ScanPredicate.Range]] = {
@@ -4297,6 +4372,43 @@ final class LakehouseTable(spark: SparkSession, val root: String,
 }
 
 object LakehouseTable {
+  /** One task of [[LakehouseTable.rewriteTouched]]: for each whole file
+    * (its manifest path, key-column read, masked full read), test its
+    * keys against `probe`; a file holding a batch key is replaced by the
+    * rows its masked read keeps, projected by `project`.
+    */
+  private[lakehouse] def rewriteTask(factory: LakehouseWriterFactory, probe: MorMaskSpec,
+      project: Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]],
+      files: Seq[(String, LakehouseGroupedPartition, LakehouseGroupedPartition)])
+      : org.apache.spark.sql.connector.write.WriterCommitMessage = {
+    val ctx = org.apache.spark.TaskContext.get()
+    val writer = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+    val readers = new LakehouseReaderFactory
+    val proj = project.map(org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(_))
+    try {
+      files.foreach { case (rel, keyPart, rowPart) =>
+        val keys = readers.rowsOf(keyPart)
+        val hit =
+          try Iterator.continually(keys.next()).takeWhile(identity)
+            .exists(_ => LakehouseMor.holds(keys.get(), probe))
+          finally keys.close()
+        if (hit) {
+          writer.replaced(rel)
+          val rows = readers.rowsOf(rowPart)
+          try while (rows.next()) {
+            val r = rows.get()
+            writer.write(proj.fold(r)(_(r)))
+          } finally rows.close()
+        }
+      }
+      writer.commit()
+    } catch {
+      case e: Throwable =>
+        writer.abort()
+        throw e
+    } finally writer.close()
+  }
+
   /** The claim dir of a write of version `id`: `s<id>[-tag]-w<nonce>`.
     * The digits record the origin ([[originOf]] reads only them; they
     * stay correct under an append rebase, which masks nothing), and the

@@ -29,18 +29,21 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * driver fallback, never referenced by a manifest).
   * `stats` holds each closed file's [[FileStats]], converted from the
   * footer the writer just wrote, so the commit opens no footer for it.
+  * `replaced` names the table files a keyed rewrite task replaced with
+  * the rows it wrote (a replaced file may leave no row behind).
   */
 final case class LakehouseWriteMessage(files: Seq[String], ddl: Seq[String],
     tombFiles: Seq[String] = Nil, delFiles: Seq[String] = Nil,
-    stats: Map[String, FileStats] = Map.empty)
+    stats: Map[String, FileStats] = Map.empty, replaced: Seq[String] = Nil)
     extends WriterCommitMessage
 
 /** What one write's tasks produced, merged and sorted: data files, and
-  * for a keyed write its tomb and del key files
-  * ([[LakehouseWriteMessage]]).
+  * for a keyed write its tomb and del key files, or for a keyed rewrite
+  * the table files it replaced ([[LakehouseWriteMessage]]). `all` is
+  * what the write itself put on disk.
   */
 private[lakehouse] final case class WrittenFiles(data: Seq[String],
-    tombs: Seq[String] = Nil, dels: Seq[String] = Nil) {
+    tombs: Seq[String] = Nil, dels: Seq[String] = Nil, replaced: Seq[String] = Nil) {
   def all: Seq[String] = data ++ tombs ++ dels
 }
 
@@ -48,7 +51,7 @@ private[lakehouse] object WrittenFiles {
   def of(messages: Array[WriterCommitMessage]): WrittenFiles = {
     val ms = messages.toSeq.collect { case m: LakehouseWriteMessage => m }
     WrittenFiles(ms.flatMap(_.files).sorted, ms.flatMap(_.tombFiles).sorted,
-      ms.flatMap(_.delFiles).sorted)
+      ms.flatMap(_.delFiles).sorted, ms.flatMap(_.replaced).sorted)
   }
 }
 
@@ -246,7 +249,7 @@ private[lakehouse] final class LakehouseDsv2Write(
     */
   @volatile private var staged: (Long, StructType, String) = _
 
-  private def makeFactory(streaming: Boolean): LakehouseWriterFactory = {
+  private[lakehouse] def makeFactory(streaming: Boolean): LakehouseWriterFactory = {
     val ddlMode = schemaChannel && streaming
     val keyedStream = streaming && mode.isInstanceOf[Dsv2CommitMode.Keyed]
     // the keyed faces' key columns, and whether `_change` is their op
@@ -549,7 +552,7 @@ private[lakehouse] final class LakehouseDsv2Write(
       mor: Boolean, claimed: Long, batchSchema: StructType,
       ddl: Seq[String], written: WrittenFiles, appId: String,
       epochId: Long): Option[Snapshot] = {
-    val WrittenFiles(files, tombs, dels) = written
+    val WrittenFiles(files, tombs, dels, _) = written
     val dataSchema0 = StructType(batchSchema.filterNot(f =>
       f.name.equalsIgnoreCase("_change") || f.name.equalsIgnoreCase("_ddl")))
     // under the SCHEMA CHANNEL the target is authoritative on DDL-free
@@ -721,7 +724,7 @@ private[lakehouse] final class LakehouseWriterFactory(
     caseSensitive: Boolean = false)
     extends DataWriterFactory with StreamingDataWriterFactory {
 
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
+  override def createWriter(partitionId: Int, taskId: Long): LakehouseDataWriter = {
     LakehouseWriteStats.writersCreated.incrementAndGet()
     new LakehouseDataWriter(rootAbs, dirName, plan, partCols, tz,
       parquetConf, codec, ddlMode, changeIdx, ddlIdx, partitionId, taskId,
@@ -877,6 +880,7 @@ private[lakehouse] final class LakehouseDataWriter(
   }
 
   private val ddl = mutable.ArrayBuffer.empty[String]
+  private val replacedFiles = mutable.ArrayBuffer.empty[String]
   private val nonce = java.util.UUID.randomUUID().toString.take(8)
   private var fileSeq = 0
   // files already shut: their value ended, or they hit the record cap
@@ -921,7 +925,7 @@ private[lakehouse] final class LakehouseDataWriter(
 
   private def openParquet(rel: String, schema: StructType)
       : org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = new org.apache.hadoop.conf.Configuration(LakehouseDataWriter.hadoopDefaults)
     parquetConf.foreach { case (k, v) => conf.set(k, v) }
     ParquetWriteSupport.setSchema(schema, conf)
     conf.set(ParquetOutputFormat.WRITE_SUPPORT_CLASS,
@@ -1008,11 +1012,17 @@ private[lakehouse] final class LakehouseDataWriter(
     }
   }
 
+  /** Record that table file `rel` is replaced by the rows this task
+    * writes (the keyed rewrite: its survivors, possibly none).
+    */
+  def replaced(rel: String): Unit = replacedFiles += rel
+
   override def commit(): WriterCommitMessage = {
     closeOpen()
     val tombFiles = tombKeys.toSeq.flatMap { case (dir, ks) => writeKeyFile("tomb", dir, ks) }
     val delFiles = writeKeyFile("del", "", delKeys).toSeq
-    LakehouseWriteMessage(closed.toSeq, ddl.toSeq, tombFiles, delFiles, stats.toMap)
+    LakehouseWriteMessage(closed.toSeq, ddl.toSeq, tombFiles, delFiles, stats.toMap,
+      replacedFiles.toSeq)
   }
 
   override def abort(): Unit = {
@@ -1030,6 +1040,16 @@ private[lakehouse] final class LakehouseDataWriter(
 }
 
 private[lakehouse] object LakehouseDataWriter {
+  /** Hadoop's default configuration, loaded once: every file a writer
+    * opens copies it, where a fresh `Configuration` re-parses the default
+    * XML resources (a measurable share of a small rewrite task).
+    */
+  lazy val hadoopDefaults: org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    c.size() // loads the resources before any copy is taken
+    c
+  }
+
   // parquet-mr keeps the footer a closed file wrote on its internal
   // writer, which ParquetRecordWriter does not expose
   private lazy val internalWriter = {

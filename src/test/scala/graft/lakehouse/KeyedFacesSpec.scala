@@ -16,7 +16,9 @@ import graft.SparkSpec
   * its ceiling. The table-API faces also pin what fails: a bad
   * `_change` tag and a lost publish race leave no staged file behind,
   * and a racer that commits while the batch stages is rebased over
-  * (copy-on-write) or refused (merge-on-read).
+  * (copy-on-write) or refused (merge-on-read). The copy-on-write
+  * rewrite is pinned per layout: it replaces exactly the files holding
+  * a batch key, each read whole, and keeps merge-on-read masks.
   */
 class KeyedFacesSpec extends SparkSpec {
   import spark.implicits._
@@ -51,17 +53,18 @@ class KeyedFacesSpec extends SparkSpec {
   private var seq = 0
 
   /** Spark-job ceilings per (face, merge-on-read), flat and hive alike,
-    * in the specs' default session: the counts each face ran while the
-    * table API still validated tags and derived key ranges in a driver
-    * pass. A face may get cheaper, never dearer.
+    * in the specs' default session: the counts each face runs. A
+    * copy-on-write batch whose keys meet the seeded file pays the
+    * staged write and the one rewrite job. A face may get cheaper,
+    * never dearer.
     */
   private val jobCeiling: Map[(String, Boolean), Int] = Map(
-    ("upsert", false) -> 6, ("upsert", true) -> 4,
-    ("writeTo keys (DSv2 batch)", false) -> 5, ("writeTo keys (DSv2 batch)", true) -> 3,
-    ("writeStream keys (DSv2 stream)", false) -> 6, ("writeStream keys (DSv2 stream)", true) -> 2,
-    ("applyChanges", false) -> 6, ("applyChanges", true) -> 4,
-    ("applyChangesToBranch", false) -> 6, ("applyChangesToBranch", true) -> 4,
-    ("writeStream keys + _change (DSv2 stream)", false) -> 6,
+    ("upsert", false) -> 2, ("upsert", true) -> 1,
+    ("writeTo keys (DSv2 batch)", false) -> 2, ("writeTo keys (DSv2 batch)", true) -> 1,
+    ("writeStream keys (DSv2 stream)", false) -> 3, ("writeStream keys (DSv2 stream)", true) -> 2,
+    ("applyChanges", false) -> 2, ("applyChanges", true) -> 1,
+    ("applyChangesToBranch", false) -> 2, ("applyChangesToBranch", true) -> 1,
+    ("writeStream keys + _change (DSv2 stream)", false) -> 3,
     ("writeStream keys + _change (DSv2 stream)", true) -> 2)
 
   /** A fresh catalog table seeded with `seedRows` (plus a NULL `_change`
@@ -297,6 +300,95 @@ class KeyedFacesSpec extends SparkSpec {
       }
       assert(strays(t)._1 === Nil, s"$what left staged files")
     }
+  }
+
+  test("a keyed path-face write reads _change as the op on the main line, as on a branch") {
+    for (branch <- Seq(false, true); mor <- Seq(false, true)) {
+      val what = s"${if (branch) "branch" else "main line"}, mergeOnRead = $mor"
+      val t = new LakehouseTable(spark, tmpDir("kf-pathface"))
+      t.append(seedRows.toDF("k", "rk", "v").coalesce(1))
+      if (branch) t.forkBranch("wap")
+      val w = changeBatch.write.format("graft-lakehouse").mode("append")
+        .option("keys", "k").option("mergeOnRead", mor.toString)
+      (if (branch) w.option("branch", "wap") else w).save(t.root)
+      val landed =
+        if (branch) spark.read.format("graft-lakehouse").option("snapshotBranch", "wap").load(t.root)
+        else t.read()
+      assert(rowsOf(landed) === applied, what)
+      assert(!landed.columns.contains("_change"), what)
+    }
+  }
+
+  /** Keys of each data file of `t`'s head, read raw from the file. */
+  private def fileKeys(t: LakehouseTable): Map[String, Set[Long]] =
+    t.currentSnapshot().get.files.map(f =>
+      f -> spark.read.parquet(t.absDataPath(f)).select("k").as[Long].collect().toSet).toMap
+
+  for (layout <- Seq("flat", "hive", "bucketed"); change <- Seq(false, true)) {
+    val face = if (change) "applyChanges" else "upsert"
+    test(s"a copy-on-write batch rewrites exactly the files holding its keys, each whole: $layout, $face") {
+      seq += 1
+      val name = s"$cat.db.kfrw$seq"
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(s"CREATE TABLE $name (k BIGINT, rk STRING, v STRING)" + (layout match {
+        case "hive" => " PARTITIONED BY (rk)"
+        case "bucketed" => " PARTITIONED BY (bucket(4, k))"
+        case _ => ""
+      }))
+      val root = java.nio.file.Paths.get(
+        spark.conf.get(s"spark.sql.catalog.$cat.warehouse"), "db", s"kfrw$seq").toString
+      val t = new LakehouseTable(spark, root)
+      // A holds only batch keys, B only keys inside the batch's range,
+      // C one batch key among 2,000 others, D keys outside the range
+      val a = Seq(1L, 2L).map(k => (k, "x", s"a$k"))
+      val b = Seq(3L, 5L).map(k => (k, "y", s"b$k"))
+      val c = (Seq(4L, 6L) ++ (1000L until 3000L)).map(k => (k, "x", s"c$k"))
+      val d = (50L to 60L).map(k => (k, "y", s"d$k"))
+      Seq(a, b, c, d).foreach(rows => rows.toDF("k", "rk", "v").coalesce(1).writeTo(name).append())
+      // a merge-on-read delete masks k=6 in C's file
+      t.applyChanges(Seq((6L, "x", "c6", "delete")).toDF("k", "rk", "v", "_change").coalesce(1),
+        Seq("k"), mergeOnRead = true)
+      val before = fileKeys(t)
+      val batchKeys = Set(1L, 2L, 4L)
+      val expected = (a ++ b ++ c ++ d).filterNot(r => r._1 == 6L || batchKeys(r._1)).toSet ++
+        (if (change) Set((2L, "x", "n2"), (4L, "x", "n4"))
+         else Set((1L, "x", "n1"), (2L, "x", "n2"), (4L, "x", "n4")))
+      val maxPart = "spark.sql.files.maxPartitionBytes"
+      val was = spark.conf.getOption(maxPart)
+      spark.conf.set(maxPart, "1024")
+      val probed0 = t.keyedWriteProbedFiles.get()
+      try {
+        if (change) t.applyChanges(Seq((1L, "x", "n1", "delete"), (2L, "x", "n2", "insert"),
+          (4L, "x", "n4", "insert")).toDF("k", "rk", "v", "_change").coalesce(1), Seq("k"))
+        else t.upsert(Seq((1L, "x", "n1"), (2L, "x", "n2"), (4L, "x", "n4"))
+          .toDF("k", "rk", "v").coalesce(1), Seq("k"))
+      } finally was.fold(spark.conf.unset(maxPart))(spark.conf.set(maxPart, _))
+      val head = t.currentSnapshot().get
+      val (touched, kept) = before.partition(_._2.exists(batchKeys))
+      // the batch's key range is [1, 4]: these files' key stats overlap it
+      val inRange = before.filter { case (_, ks) => ks.min <= 4L && ks.max >= 1L }.keySet
+      assert(touched.keySet.exists(f => before(f).forall(batchKeys)),
+        s"no file holds batch keys alone: $before")
+      assert(touched.keySet.exists(f => t.fileSizeOf(head, f) > 1024L),
+        s"no touched file is larger than a split: $before")
+      assert(kept.keySet.exists(inRange), s"no in-range file lacks a batch key: $before")
+      assert(touched.keySet.forall(f => !head.files.contains(f)),
+        s"a touched file stayed: ${touched.keySet.filter(head.files.contains)}")
+      assert(kept.keySet.forall(head.files.contains),
+        s"an untouched file was rewritten: ${kept.keySet.filterNot(head.files.contains)}")
+      assert(t.keyedWriteProbedFiles.get() - probed0 === inRange.size,
+        s"probed files, range candidates $inRange")
+      assert(rowsOf(t.read()) === expected)
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+    }
+  }
+
+  test("a copy-on-write upsert keyed on a struct column replaces exactly its keys") {
+    val t = new LakehouseTable(spark, tmpDir("kf-structkey"))
+    t.append((1 to 4).map(i => ((i, s"n$i"), s"v$i")).toDF("s", "v").coalesce(1))
+    t.upsert(Seq(((2, "n2"), "R2"), ((9, "n9"), "new9")).toDF("s", "v").coalesce(1), Seq("s"))
+    assert(t.read().select("s.*", "v").as[(Int, String, String)].collect().toSet ===
+      Set((1, "n1", "v1"), (2, "n2", "R2"), (3, "n3", "v3"), (4, "n4", "v4"), (9, "n9", "new9")))
   }
 
   test("a keyed table-API batch lacking a key column fails before it writes anything") {

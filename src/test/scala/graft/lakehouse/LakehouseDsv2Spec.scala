@@ -420,6 +420,34 @@ class LakehouseDsv2Spec extends SparkSpec {
     assert(got === Seq((1L, 10.0), (2L, 25.0), (3L, 30.0)))
   }
 
+  test("a DataFrame re-run after a timezone and case-sensitivity change reads what a fresh read does") {
+    import spark.implicits._
+    // the scan's reader factories capture both settings; every query
+    // execution plans its own scan, so none outlives the conf it read
+    val t = new LakehouseTable(spark, tmpDir("dsv2-conf"))
+    t.append(Seq((1L, "2024-03-10 01:30:00", "a"), (2L, "2024-11-03 01:30:00", "b"))
+      .toDF("id", "at", "tag").select($"id", $"at".cast("timestamp").as("ts"),
+        $"at".cast("timestamp").cast("date").as("day"), $"tag").coalesce(1),
+      partitionBy = Seq("tag"))
+    val df = dsv2(t)
+    def rows(d: DataFrame): Set[Seq[Any]] = d.collect().map(_.toSeq).toSet
+    val before = rows(df)
+    val utc = rows(df.select($"id", $"ts".cast("string"), $"day", $"tag"))
+    val confs = Seq("spark.sql.session.timeZone" -> "America/Los_Angeles",
+      "spark.sql.caseSensitive" -> "true")
+    val was = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val fresh = dsv2(t)
+      assert(rows(df) === before)
+      assert(rows(df) === rows(fresh))
+      assert(rows(df.filter($"id" > 1L)) === rows(fresh.filter($"id" > 1L)))
+      val shown = rows(df.select($"id", $"ts".cast("string"), $"day", $"tag"))
+      assert(shown === rows(fresh.select($"id", $"ts".cast("string"), $"day", $"tag")))
+      assert(shown !== utc, "the timestamps must render in the new session timezone")
+    } finally was.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("a table opened by a relative root path takes keyed upserts") {
     import spark.implicits._
     val abs = java.nio.file.Paths.get(tmpDir("dsv2-relative-root"))

@@ -7,8 +7,8 @@ import graft.SparkSpec
   * a hive-partitioned catalog table: `append`, `upsert` (copy-on-write
   * and merge-on-read), `overwrite`, a SQL `UPDATE` (`sqlMutate`),
   * `compact`, `foldTombstones`, `compactZOrder` and a SQL `INSERT
-  * INTO`. Each count is reported as an `info` line; the rows after the
-  * sequence must equal an in-memory model.
+  * INTO`. Each count is reported as an `info` line, and the upsert's
+  * is pinned; the rows after the sequence must equal an in-memory model.
   */
 class WriteJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -42,8 +42,11 @@ class WriteJobsSpec extends SparkSpec {
       val partitionBy = if (hive) Seq("rk") else Nil
       var model: Map[Long, Rec] = Map.empty
       def land(rows: Seq[Rec]): Unit = model ++= rows.map(r => r._1 -> r)
-      def site(label: String)(body: => Unit): Unit =
-        info(s"$layout $label: ${jobsRunBy(body)} Spark jobs")
+      def site(label: String)(body: => Unit): Int = {
+        val jobs = jobsRunBy(body)
+        info(s"$layout $label: $jobs Spark jobs")
+        jobs
+      }
 
       val seed = (1L to 40L).map(rec(_, "a"))
       site("append") { t.append(batch(seed), partitionBy); () }
@@ -52,7 +55,9 @@ class WriteJobsSpec extends SparkSpec {
       site("append (second)") { t.append(batch(more), partitionBy); () }
       land(more)
       val up = (35L to 45L).map(rec(_, "u"))
-      site("upsert") { t.upsert(batch(up), Seq("k")); () }
+      val upsertJobs = site("upsert") { t.upsert(batch(up), Seq("k")); () }
+      // the staged write and the one rewrite job
+      assert(upsertJobs <= 2, s"a copy-on-write upsert ran $upsertJobs Spark jobs")
       land(up)
       site("sqlMutate (UPDATE)") { spark.sql(s"UPDATE $name SET v = 'x' WHERE k <= 5"); () }
       land((1L to 5L).map(k => model(k).copy(_3 = "x")))
