@@ -481,12 +481,24 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     */
   private[graft] var onBeforePublish: () => Unit = () => ()
 
-  /** Test seam for the tag-vs-expiry arbitration: runs at the top of
-    * an expiry sweep BEFORE the ref lock is taken, so a spec can land
-    * a concurrent tag at exactly the window the round-12 race lived
-    * in and prove the locked listing protects it. Production no-op.
+  /** Test seam for the tag-vs-expiry handshake: runs at the top of an
+    * expiry sweep BEFORE its first ref listing, so a spec can land a
+    * concurrent tag in the window the round-12 race lived in and prove
+    * the sweep's listings protect it. Production no-op.
     */
   private[graft] var onBeforeExpireSweep: () => Unit = () => ()
+
+  /** Test seam: named phase points inside a table operation, fired with
+    * the phase's name so a spec can act at exactly that step. Phases of
+    * the ref handshake: `"expire.listed"` (a sweep listed snapshots and
+    * refs, nothing marked yet), `"expire.marked"` (marked, refs not yet
+    * re-listed), `"ref.checked"` (a ref writer's pre-check passed, the
+    * ref is not yet written) and `"ref.take"` (a ref was read and is
+    * about to move aside, [[takeRefIf]]). Production no-op.
+    */
+  private[graft] var onPhase: String => Unit = _ => ()
+
+  private def manifestPath(id: Long): Path = snapsDir.resolve(f"$id%09d.json")
 
   /** Publish a manifest ATOMICALLY with put-if-absent semantics: the
     * body lands in a hidden temp file first, then hard-links to its
@@ -536,7 +548,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     val s = s0.copy(stats = Some(manifestStatsFor(s0.files ++ s0.tombstones)))
     Files.createDirectories(snapsDir)
     onBeforePublish()
-    val p = snapsDir.resolve(f"${s.snapshotId}%09d.json")
+    val p = manifestPath(s.snapshotId)
     val tmp = Files.createTempFile(snapsDir, ".commit-", ".tmp")
     try {
       Files.writeString(tmp, Serialization.write(s))
@@ -2293,165 +2305,89 @@ final class LakehouseTable(spark: SparkSession, val root: String,
 
   private def refPath(name: String): Path = refsDir.resolve(name + ".json")
 
-  /** Cross-PROCESS mutual exclusion between the two ref-sensitive
-    * critical sections: a tag WRITE (validate the snapshot exists,
-    * then land the pointer) and an expiry's { authoritative tag
-    * listing → manifest delete } pass. Without it, a setTag racing a
-    * remote expiry could validate against a manifest the sweep deletes
-    * a moment later — a dangling tag with no error anywhere (round-12
-    * What's-wrong #2). The lock is a put-if-absent file (`_refs/
-    * .lock`, `Files.createFile` — the same conditional-PUT shape the
-    * commit protocol uses), held for milliseconds; a crashed holder's
-    * lock ages out after [[LakehouseTable.RefLockStaleMs]]. With it,
-    * the race has exactly two linearizations: the tag lands first (the
-    * sweep's in-lock listing sees it — the snapshot survives) or the
-    * sweep deletes first (setTag's in-lock validation fails LOUDLY) —
-    * never a silently lost tag.
+  /** Expiry marks, `_refs/expiring/<id>`: the sweep's half of the ref
+    * handshake ([[expireSnapshotsOlderThan]]).
     */
-  /** Stale threshold for THIS handle's ref-lock arbitration — an
-    * instance var so a spec can race breakers against a live holder
-    * without perturbing other suites. Production value:
-    * [[LakehouseTable.RefLockStaleMs]].
-    */
-  private[graft] var refLockStaleMs: Long = LakehouseTable.RefLockStaleMs
+  private def expiringDir: Path = refsDir.resolve("expiring")
 
-  private def withRefsLock[T](body: => T): T = {
-    Files.createDirectories(refsDir)
-    val lock = refsDir.resolve(".lock")
-    // unique token written into the lock: a breaker re-verifies WHICH
-    // lock it renamed aside before discarding it (ADVICE r13 — a bare
-    // mtime-check + delete could destroy a lock another process created
-    // between the check and the delete)
-    val token = java.util.UUID.randomUUID().toString
-    val deadline = System.currentTimeMillis() + LakehouseTable.RefLockWaitMs
-    var held = false
-    while (!held) {
-      try {
-        Files.createFile(lock) // the single atomic arbiter (put-if-absent)
-        // content lands right after the claim; a reader seeing the
-        // empty window sees a lock milliseconds old, which no breaker
-        // ever touches
-        Files.writeString(lock, token)
-        held = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          tryBreakStaleRefLock(lock)
-          if (System.currentTimeMillis() > deadline)
-            throw new IllegalStateException(
-              s"could not acquire the ref lock '$lock' within " +
-                s"${LakehouseTable.RefLockWaitMs} ms — a concurrent expiry " +
-                "or tag write is wedged (a crashed holder ages out after " +
-                s"$refLockStaleMs ms)")
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(2L, 16L))
-      }
-    }
-    // heartbeat: a long-running critical section (a slow-storage expiry
-    // sweep) refreshes its own lock's mtime, so "mtime older than the
-    // stale threshold" really does mean a CRASHED holder — a live one
-    // can only look stale across a JVM pause longer than the margin
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val hb = new Thread(() => {
-      val interval = math.max(50L, refLockStaleMs / 6)
-      while (!done.await(interval, java.util.concurrent.TimeUnit.MILLISECONDS)) {
-        // refresh only OUR OWN lock's mtime: if the slot now holds a
-        // different token (a breaker displaced this holder and lost
-        // the restore to a third acquirer), touching it would keep a
-        // FOREIGN lock artificially fresh; warn once instead — the
-        // residual two-holder window is documented at
-        // [[tryBreakStaleRefLock]]
-        try {
-          if (Files.readString(lock) == token)
-            Files.setLastModifiedTime(lock,
-              java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-          else {
-            System.err.println(s"[graft-lakehouse] WARNING: ref lock '$lock' " +
-              "was broken from under a live holder (JVM pause longer than " +
-              s"the $refLockStaleMs ms stale margin?) — another process may " +
-              "be in the refs critical section concurrently; ref writes are " +
-              "atomic renames, so the damage bound is a lost tag update")
-            done.await() // stop heartbeating a lock that is no longer ours
-          }
-        } catch { case _: java.io.IOException => () } // broken/raced: acquire arbiter rules
-      }
-    }, s"graft-ref-lock-heartbeat-${rootPath.getFileName}")
-    hb.setDaemon(true)
-    hb.start()
-    try body finally {
-      done.countDown()
-      hb.join(1000)
-      // delete only OUR lock: if a breaker displaced it (pause longer
-      // than the stale margin), the current lock belongs to someone else
-      try {
-        if (Files.readString(lock) == token) { Files.deleteIfExists(lock); () }
-      } catch { case _: java.io.IOException => () }
+  private def expiringMark(id: Long): Path = expiringDir.resolve(id.toString)
+
+  /** Could a sweep drop snapshot `id` under a ref written before this
+    * call? Yes if it is marked or its manifest is gone. The mark is read
+    * FIRST: a sweep deletes the manifest before the mark, so an absent
+    * mark followed by a present manifest means any later mark comes
+    * from a sweep whose second ref listing sees the ref.
+    */
+  private def expiring(id: Long): Boolean =
+    Files.exists(expiringMark(id)) || !Files.exists(manifestPath(id))
+
+  private def beingExpired(id: Long) = new IllegalStateException(
+    s"snapshot $id of table '$root' is being expired: a snapshot marked " +
+      "for expiry takes no new refs")
+
+  /** The snapshot the ref body at `p` pins (a branch's fork point). */
+  private def pinOf(p: Path, body: String): Long =
+    if (p.getParent == branchesDir) Serialization.read[BranchRef](body).fork
+    else Serialization.read[TagRef](body).snapshot
+
+  /** The ref-writer's half of the handshake, for the ref `write` lands
+    * at `p` pinning `snapshotId`: refuse a missing or marked snapshot
+    * before touching any ref, write the ref, then check again. Each side
+    * writes its own claim before it reads the other's, so either this
+    * check sees a sweep's mark or that sweep's second listing sees this
+    * ref. A failed check withdraws the ref (only if `p` still holds the
+    * body `write` returned) and fails loudly.
+    */
+  private def landRef(p: Path, snapshotId: Long)(write: => String): Unit = {
+    snapshotOrThrow(snapshotId)
+    if (Files.exists(expiringMark(snapshotId))) throw beingExpired(snapshotId)
+    onPhase("ref.checked")
+    val body = write
+    if (expiring(snapshotId)) {
+      takeRefIf(p)(_ == body)
+      snapshotOrThrow(snapshotId) // manifest gone: the standard "not found"
+      throw beingExpired(snapshotId)
     }
   }
 
-  /** Test seam: run `body` holding the ref lock (heartbeat active), so
-    * specs can pin the live-holder-survives-breakers contract without
-    * reaching into the private acquire path.
+  /** Remove the ref at `p` if `drop` holds for its body, without losing
+    * a ref that replaced it after the caller read it: the file moves
+    * aside atomically and is re-read there. A body `drop` refuses goes
+    * back put-if-absent (a ref that landed meanwhile wins); the put-back
+    * is a ref write, so it re-checks like [[landRef]] and withdraws
+    * rather than dangles if a sweep marked its snapshot while it stood
+    * aside. The aside name ends in `.tmp`, so a crash here ages out
+    * with the other temps.
     */
-  private[graft] def refsLockedForTest[T](body: => T): T = withRefsLock(body)
-
-  /** Break `lock` iff it is genuinely stale, without ever destroying a
-    * live holder's claim: rename it ASIDE first (atomic — of N racing
-    * breakers exactly one wins; the losers see NoSuchFile and simply
-    * retry the acquire), then re-verify the renamed file's age. If the
-    * rename caught a FRESH lock (the stale one vanished and a new
-    * holder claimed between this breaker's mtime read and its rename),
-    * the aside file moves straight back — the breaker held the only
-    * reference, so the restore can only fail if yet another acquirer
-    * claimed meanwhile. The restore RETRIES briefly (the third
-    * acquirer's critical sections are short), so the displaced fresh
-    * holder gets its claim back in almost every interleaving; if every
-    * retry loses, the aside is dropped and a RESIDUAL TWO-HOLDER WINDOW
-    * remains: the displaced holder runs its critical section
-    * concurrently with the new acquirer until its heartbeat notices the
-    * foreign token and warns (its release degrades to a token-mismatch
-    * no-op, never a wrong delete). The sections this lock guards are
-    * themselves atomic ref-file renames, so the damage bound of that
-    * window is a lost tag/ref update, not corruption.
-    */
-  private def tryBreakStaleRefLock(lock: Path): Unit = {
-    val aside = refsDir.resolve(
-      s".lock-breaking-${java.util.UUID.randomUUID().toString.take(12)}")
+  private def takeRefIf(p: Path)(drop: String => Boolean): Unit = {
+    onPhase("ref.take")
+    val aside = p.resolveSibling(
+      s".take-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
+    try Files.move(p, aside, StandardCopyOption.ATOMIC_MOVE)
+    catch { case _: java.nio.file.NoSuchFileException => return }
     try {
-      val now = System.currentTimeMillis()
-      if (Files.getLastModifiedTime(lock).toMillis >= now - refLockStaleMs) return
-      Files.move(lock, aside, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      // won the break: re-verify the file we actually renamed
-      val fresh = try
-        Files.getLastModifiedTime(aside).toMillis >=
-          System.currentTimeMillis() - refLockStaleMs
-      catch { case _: java.io.IOException => false }
-      if (fresh) {
-        // raced a new holder — restore its claim, retrying briefly past
-        // third acquirers that grab the slot mid-restore (see Scaladoc)
-        var restored = false
-        var tries = 0
-        while (!restored && tries < 25) {
-          try {
-            Files.move(aside, lock, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            restored = true
-          } catch {
-            case _: java.io.IOException =>
-              tries += 1
-              Thread.sleep(2)
-          }
+      val body = Files.readString(aside)
+      if (!drop(body)) {
+        val back =
+          try { Files.createLink(p, aside); true }
+          catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        if (back && expiring(pinOf(p, body))) {
+          System.err.println(s"[graft-lakehouse] WARNING: ref '$p' withdrawn: " +
+            s"snapshot ${pinOf(p, body)} was marked for expiry while the ref stood aside")
+          takeRefIf(p)(_ == body)
         }
-        if (!restored) { Files.deleteIfExists(aside); () }
-      } else { Files.deleteIfExists(aside); () }
-    } catch {
-      case _: java.io.IOException => () // lost the break race: retry acquire
-    }
+      }
+    } finally { Files.deleteIfExists(aside); () }
   }
 
   /** Point tag `name` at snapshot `snapshotId` (REPLACES an existing
-    * tag — tags are movable pointers, the Iceberg ref shape). The
-    * validate-then-write pair runs under [[withRefsLock]]: a snapshot
-    * a concurrent expiry already swept fails here LOUDLY instead of
-    * leaving a dangling pointer.
+    * tag — tags are movable pointers, the Iceberg ref shape). The write
+    * is the ref half of the expiry handshake ([[landRef]]): a snapshot
+    * that is gone, or marked by a running (or crashed) sweep, refuses
+    * before any ref is touched; a mark or a manifest delete that lands
+    * while the tag is written withdraws it and fails loudly — a
+    * successful setTag's snapshot survives every sweep until the tag
+    * drops.
     */
   def setTag(name: String, snapshotId: Long,
       maxRefAgeMs: Option[Long] = None): Unit = writeLock.synchronized {
@@ -2460,16 +2396,16 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       s"illegal tag name '$name' (letters, digits, '-', '_', '.'; no leading dot)")
     require(maxRefAgeMs.forall(_ > 0),
       s"maxRefAgeMs must be positive, got $maxRefAgeMs")
-    withRefsLock {
-      snapshotOrThrow(snapshotId)
+    landRef(refPath(name), snapshotId) {
+      Files.createDirectories(refsDir)
+      val body = Serialization.write(
+        TagRef(snapshotId, System.currentTimeMillis(), maxRefAgeMs))
       val tmp = Files.createTempFile(refsDir, ".ref-", ".tmp")
-      Files.writeString(tmp, Serialization.write(
-        TagRef(snapshotId, System.currentTimeMillis(), maxRefAgeMs)))
+      Files.writeString(tmp, body)
       Files.move(tmp, refPath(name),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      body
     }
-    ()
   }
 
   /** Drop tag `name`; false when it never existed. */
@@ -2482,14 +2418,20 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     tagRefs.map { case (n, r) => n -> (r.snapshot, r.createdMs) }
 
   /** All tags with their full ref bodies (incl. the max-ref-age). */
-  def tagRefs: Map[String, TagRef] =
-    if (!Files.isDirectory(refsDir)) Map.empty
-    else graft.Fs.listAll(refsDir)
+  def tagRefs: Map[String, TagRef] = readRefs[TagRef](refsDir)
+
+  /** Every `<name>.json` ref in `dir`, skipping one dropped, withdrawn
+    * or moved aside between the listing and its read.
+    */
+  private def readRefs[R: Manifest](dir: Path): Map[String, R] =
+    if (!Files.isDirectory(dir)) Map.empty
+    else graft.Fs.listAll(dir)
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".json") &&
         !p.getFileName.toString.startsWith("."))
-      .map { p =>
-        p.getFileName.toString.stripSuffix(".json") ->
-          Serialization.read[TagRef](Files.readString(p))
+      .flatMap { p =>
+        try Some(p.getFileName.toString.stripSuffix(".json") ->
+          Serialization.read[R](Files.readString(p)))
+        catch { case _: java.nio.file.NoSuchFileException => None }
       }.toMap
 
   /** Resolve a tag to its snapshot; unknown tags list what exists. */
@@ -2708,49 +2650,50 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   private def branchPath(name: String): Path = branchesDir.resolve(name + ".json")
 
   /** All branches: name → ref (fork snapshot + creation time). */
-  def branches: Map[String, BranchRef] =
-    if (!Files.isDirectory(branchesDir)) Map.empty
-    else graft.Fs.listAll(branchesDir)
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".json") &&
-        !p.getFileName.toString.startsWith("."))
-      .map(p => p.getFileName.toString.stripSuffix(".json") ->
-        Serialization.read[BranchRef](Files.readString(p)))
-      .toMap
+  def branches: Map[String, BranchRef] = readRefs[BranchRef](branchesDir)
 
   /** Create branch `name` forking from `fromSnapshot` (default: the
     * main head) — the Iceberg write-audit-publish entry point: commits
     * to the branch are invisible to main consumers until
-    * [[publishBranch]] fast-forwards them in. The ref write shares the
-    * tag machinery's cross-process arbitration ([[withRefsLock]]).
+    * [[publishBranch]] fast-forwards them in. The ref lands
+    * put-if-absent (a hard link, as [[writeSnapshot]] publishes), so of
+    * two forks of one name across processes exactly one wins and the
+    * other fails with "already exists"; the fork snapshot goes through
+    * the same expiry handshake as a tag ([[landRef]]) — a marked fork
+    * point refuses.
     */
   def forkBranch(name: String, fromSnapshot: Option[Long] = None): Unit =
     writeLock.synchronized {
       require(name.nonEmpty && !name.startsWith(".") &&
         name.forall(c => c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
         s"illegal branch name '$name' (letters, digits, '-', '_', '.'; no leading dot)")
-      withRefsLock {
-        require(!branches.contains(name), s"branch '$name' already exists")
-        // name REUSE is fine (the fixed-branch-name-per-pipeline-run WAP
-        // pattern): the fresh incarnation epoch below keys membership,
-        // so a dead incarnation's unexpired snapshots can never resolve
-        // as the new branch's head (ADVICE r13)
-        val fork = fromSnapshot.getOrElse(currentSnapshot().getOrElse(
-          throw new IllegalStateException(
-            s"cannot branch a snapshot-less table $root")).snapshotId)
-        val target = snapshotOrThrow(fork)
-        require(target.branch.isEmpty,
-          s"snapshot $fork belongs to branch '${target.branch.get}' — branches " +
-            "fork from the main lineage")
+      // name REUSE is fine (the fixed-branch-name-per-pipeline-run WAP
+      // pattern): the fresh incarnation epoch below keys membership,
+      // so a dead incarnation's unexpired snapshots can never resolve
+      // as the new branch's head (ADVICE r13)
+      val fork = fromSnapshot.getOrElse(currentSnapshot().getOrElse(
+        throw new IllegalStateException(
+          s"cannot branch a snapshot-less table $root")).snapshotId)
+      val target = snapshotOrThrow(fork)
+      require(target.branch.isEmpty,
+        s"snapshot $fork belongs to branch '${target.branch.get}' — branches " +
+          "fork from the main lineage")
+      landRef(branchPath(name), fork) {
         Files.createDirectories(branchesDir)
-        val tmp = Files.createTempFile(branchesDir, ".ref-", ".tmp")
-        Files.writeString(tmp, Serialization.write(
+        val body = Serialization.write(
           BranchRef(fork, System.currentTimeMillis(), epoch = Some(
-            java.util.concurrent.ThreadLocalRandom.current().nextLong()))))
-        Files.move(tmp, branchPath(name),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            java.util.concurrent.ThreadLocalRandom.current().nextLong())))
+        val tmp = Files.createTempFile(branchesDir, ".ref-", ".tmp")
+        try {
+          Files.writeString(tmp, body)
+          try Files.createLink(branchPath(name), tmp)
+          catch {
+            case _: java.nio.file.FileAlreadyExistsException =>
+              throw new IllegalArgumentException(s"branch '$name' already exists")
+          }
+        } finally Files.deleteIfExists(tmp)
+        body
       }
-      ()
     }
 
   /** Does snapshot `s` belong to the CURRENT incarnation of branch
@@ -2770,6 +2713,19 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     snaps.reverseIterator.find(inBranch(_, name, ref))
       .orElse(snaps.find(_.snapshotId == ref.fork))
       .getOrElse(throw invalidSnapshot(ref.fork))
+
+  /** Snapshot ids the refs pin against expiry, heads resolved within
+    * `snaps`: every TAGGED snapshot (a tag is a promise that this exact
+    * table state stays addressable — drop it, or let its max-ref-age
+    * lapse, to let it expire), and each live BRANCH's fork point and
+    * head, so an in-flight write-audit-publish stays publishable through
+    * maintenance; intermediate branch snapshots age out like main
+    * history.
+    */
+  private def refPins(snaps: Seq[Snapshot]): Set[Long] =
+    tagRefs.values.map(_.snapshot).toSet ++ branches.flatMap { case (n, ref) =>
+      snaps.reverseIterator.find(inBranch(_, n, ref)).map(_.snapshotId).toSet + ref.fork
+    }
 
   private def branchRef(name: String): BranchRef =
     branches.getOrElse(name, throw new IllegalArgumentException(
@@ -2932,74 +2888,87 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   /** Drop snapshot manifests older than `cutoffMs` (keeping the current
     * one regardless) and delete data files no surviving snapshot
     * references (`maintenance.py:106-124`).
+    *
+    * Refs survive the sweep through a HANDSHAKE, not a lock: each side
+    * writes its own claim before it reads the other's. The sweep lists
+    * the snapshots and the refs (tags, branch forks and heads), marks
+    * each eligible snapshot no ref names put-if-absent
+    * (`_refs/expiring/<id>`; a mark another sweep made counts as made),
+    * lists the refs AGAIN, and deletes only the marked snapshots that
+    * second listing shows unreferenced — each mark after its manifest.
+    * A ref writer ([[setTag]], [[forkBranch]], a clone pin) writes its
+    * ref and then looks for a mark, so either it sees the mark and
+    * withdraws, or the second listing sees its ref. A marked snapshot
+    * therefore takes no new refs, and a mark is never cleared while its
+    * manifest exists (clearing one could let a racing sweep delete a
+    * snapshot a fresh ref names). A crashed sweep blocks nothing but new
+    * refs to the snapshots it marked; the next sweep that still finds
+    * one eligible and unreferenced removes it. No timer is involved.
     */
   def expireSnapshotsOlderThan(cutoffMs: Long): Int = writeLock.synchronized {
     if (listSnapshots().isEmpty) return 0
     onBeforeExpireSweep()
-    // the { authoritative tag listing → manifest delete } pass runs
-    // under the cross-process ref lock: a tag landing concurrently is
-    // either visible to THIS listing (its snapshot survives) or its
-    // setTag fails loudly against the already-deleted manifest — the
-    // two legal linearizations, never a silently dangling ref
-    val (kept, expiredCount) = withRefsLock {
-      val snaps = listSnapshots()
-      // the protected "current" is the MAIN head — the newest GLOBAL
-      // snapshot may be a branch commit, whose survival is the branch
-      // ref's business below
-      val current = currentSnapshot().getOrElse(snaps.last)
-      // a tag past its own max-ref-age drops FIRST (its pin ends with
-      // it): the age sweep and the tagged listing share the lock, so a
-      // ref is either young enough to protect its snapshot through
-      // this whole sweep or gone before the listing
-      val nowMs = System.currentTimeMillis()
-      tagRefs.foreach { case (n, r) =>
-        if (r.maxRefAgeMs.exists(a => r.createdMs + a <= nowMs)) {
-          Files.deleteIfExists(refPath(n)); ()
-        }
-      }
-      // TAGGED snapshots survive retention regardless of age — a tag
-      // is a promise that this exact table state stays addressable
-      // (drop the tag, or let its max-ref-age lapse, to let it expire).
-      // Live BRANCH HEADS (and each branch's fork point) survive the
-      // same way: an in-flight write-audit-publish must stay
-      // publishable through maintenance; intermediate branch snapshots
-      // age out like main history.
-      val branchKept = branches.flatMap { case (n, ref) =>
-        Seq(branchHead(n).snapshotId, ref.fork)
-      }.toSet
-      val tagged = tags.values.map(_._1).toSet ++ branchKept
-      val (expired, kept0) = snaps.filterNot(_.snapshotId == current.snapshotId)
-        .partition(s => s.timestampMs < cutoffMs && !tagged(s.snapshotId))
-      // the exactly-once ledger must survive retention (the Delta
-      // SetTransaction-retention concern): deleting the manifest that
-      // carries an app's LATEST txn mark would let a replayed streaming
-      // batch apply twice after maintenance. Fold the expiring marks
-      // into the floor file BEFORE deleting — a few bytes per
-      // producer — so data files vacuum freely and the ledger still
-      // never forgets.
-      val expiringMarks = expired.flatMap(_.txn)
-      if (expiringMarks.nonEmpty) {
-        // one consistent (files, merged) view: the files GC'd below are
-        // exactly the ones whose marks the new merged file absorbed
-        val (consumed, floor) = listAndReadFloor()
-        val merged = expiringMarks.foldLeft(floor) { (m, t) =>
-          m + (t.appId -> math.max(t.version, m.getOrElse(t.appId, Long.MinValue)))
-        }
-        writeTxnFloor(merged, consumed)
-      }
-      expired.foreach { s =>
-        val name = f"${s.snapshotId}%09d.json"
-        Files.deleteIfExists(snapsDir.resolve(name))
-        // the parsed entry (full file list + stats maps) must go with
-        // the manifest, or a long-lived handle under continuous
-        // commit+expiry grows driver memory one dead snapshot per cycle
-        snapshotCache.remove(name)
-      }
-      (kept0 :+ current, expired.size)
+    // a tag past its own max-ref-age drops FIRST (its pin ends with
+    // it); a setTag that re-points the name after it was read survives
+    // the take ([[takeRefIf]] re-reads the body it moved aside)
+    val nowMs = System.currentTimeMillis()
+    def aged(r: TagRef) = r.maxRefAgeMs.exists(a => r.createdMs + a <= nowMs)
+    tagRefs.foreach { case (n, r) =>
+      if (aged(r)) takeRefIf(refPath(n))(b => aged(Serialization.read[TagRef](b)))
     }
+    val snaps = listSnapshots()
+    // the protected "current" is the MAIN head — the newest GLOBAL
+    // snapshot may be a branch commit, whose survival is the branch
+    // ref's business
+    val current = snaps.reverseIterator.find(_.branch.isEmpty).getOrElse(snaps.last)
+    val pinned = refPins(snaps)
+    val marked = snaps.filter(s => s.snapshotId != current.snapshotId &&
+      s.timestampMs < cutoffMs && !pinned(s.snapshotId))
+    onPhase("expire.listed")
+    if (marked.nonEmpty) Files.createDirectories(expiringDir)
+    marked.foreach { s =>
+      try { Files.createFile(expiringMark(s.snapshotId)); () }
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    }
+    onPhase("expire.marked")
+    val pinnedNow = refPins(snaps)
+    val expired = marked.filterNot(s => pinnedNow(s.snapshotId))
+    // the exactly-once ledger must survive retention (the Delta
+    // SetTransaction-retention concern): deleting the manifest that
+    // carries an app's LATEST txn mark would let a replayed streaming
+    // batch apply twice after maintenance. Fold the expiring marks
+    // into the floor file BEFORE deleting — a few bytes per
+    // producer — so data files vacuum freely and the ledger still
+    // never forgets.
+    val expiringTxns = expired.flatMap(_.txn)
+    if (expiringTxns.nonEmpty) {
+      // one consistent (files, merged) view: the files GC'd below are
+      // exactly the ones whose marks the new merged file absorbed
+      val (consumed, floor) = listAndReadFloor()
+      val merged = expiringTxns.foldLeft(floor) { (m, t) =>
+        m + (t.appId -> math.max(t.version, m.getOrElse(t.appId, Long.MinValue)))
+      }
+      writeTxnFloor(merged, consumed)
+    }
+    expired.foreach { s =>
+      val p = manifestPath(s.snapshotId)
+      Files.deleteIfExists(p)
+      // the parsed entry (full file list + stats maps) must go with
+      // the manifest, or a long-lived handle under continuous
+      // commit+expiry grows driver memory one dead snapshot per cycle
+      snapshotCache.remove(p.getFileName.toString)
+      Files.deleteIfExists(expiringMark(s.snapshotId))
+    }
+    val expiredIds = expired.map(_.snapshotId).toSet
+    val kept = snaps.filterNot(s => expiredIds(s.snapshotId))
     // tombstone files are live references too — GC'ing one that a
     // retained snapshot still consults would resurrect its deleted rows
     val live = kept.flatMap(s => s.files ++ s.tombstones).toSet
+    // a file may vanish between the walk and its mtime read (a racing
+    // sweep's GC, a temp its writer just published)
+    def agedOut(p: Path) =
+      try Files.getLastModifiedTime(p).toMillis < cutoffMs
+      catch { case _: java.nio.file.NoSuchFileException => false }
     if (Files.isDirectory(dataDir)) {
       graft.Fs.walkAll(dataDir)
         .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
@@ -3008,21 +2977,21 @@ final class LakehouseTable(spark: SparkSession, val root: String,
         // in-flight write (data lands before its manifest publishes) —
         // vacuum it only once it is older than the retention cutoff,
         // the same grace Delta's VACUUM gives uncommitted files
-        .filter(p => Files.getLastModifiedTime(p).toMillis < cutoffMs)
+        .filter(agedOut)
         .foreach(Files.deleteIfExists(_))
     }
     // orphaned commit temps (a writer that crashed mid-publish) age out
     // on the same clock; live temps are seconds old and stay — tag-ref
-    // temps (a crashed setTag) and branch-ref temps (a crashed
-    // forkBranch) ride the same sweep
+    // temps (a crashed setTag), branch-ref temps (a crashed forkBranch)
+    // and refs moved aside by a crashed [[takeRefIf]] ride the same sweep
     Seq(snapsDir, refsDir, branchesDir).filter(Files.isDirectory(_)).foreach { dir =>
       graft.Fs.listAll(dir)
         .filter(_.getFileName.toString.endsWith(".tmp"))
-        .filter(p => Files.getLastModifiedTime(p).toMillis < cutoffMs)
+        .filter(agedOut)
         .foreach(Files.deleteIfExists(_))
     }
     pruneBloomSidecars()
-    expiredCount
+    expired.size
   }
 
   /** Delete bloom sidecars whose data file no retained snapshot
@@ -4605,8 +4574,4 @@ object LakehouseTable {
     */
   val MaxCommitAttempts = 16
 
-  /** How long a ref-lock acquirer spins before giving up loudly. */
-  val RefLockWaitMs = 30000L
-  /** Age past which a ref lock is presumed crashed and broken. */
-  val RefLockStaleMs = 60000L
 }

@@ -373,4 +373,30 @@ class BranchSpec extends SparkSpec {
       (30L, "m"), (40L, "o"), (50L, "p")))
   }
 
+  test("two handles fork the same name concurrently: exactly one wins, the other says already exists") {
+    val root = tmpDir("br-same-name")
+    new LakehouseTable(spark, root).append(Seq((1L, "a")).toDF("k", "v").coalesce(1))
+    (1 to 5).foreach { round =>
+      val handles = Seq(new LakehouseTable(spark, root), new LakehouseTable(spark, root))
+      val start = new java.util.concurrent.CyclicBarrier(handles.size)
+      val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Unit]]()
+      val ts = handles.map { h =>
+        new Thread(() => {
+          start.await()
+          outcomes.add(
+            try Right(h.forkBranch(s"x$round"))
+            catch { case e: Throwable => Left(e) })
+          ()
+        })
+      }
+      ts.foreach(_.start()); ts.foreach(_.join(60000))
+      val all = outcomes.toArray.toSeq.map(_.asInstanceOf[Either[Throwable, Unit]])
+      assert(all.size === 2)
+      assert(all.count(_.isRight) === 1, s"round $round: exactly one fork must win: $all")
+      all.collect { case Left(e) => e }.foreach { e =>
+        assert(e.getMessage.contains("already exists"), s"round $round: ${e.getMessage}")
+      }
+      assert(handles.head.branchHead(s"x$round").snapshotId === 1L)
+    }
+  }
 }

@@ -103,8 +103,10 @@ class CrossProcessCommitSpec extends SparkSpec {
         Thread.sleep(100)
       }
       java.nio.file.Files.writeString(java.nio.file.Paths.get(markers, "go"), "go")
-      // sweep continuously while the child tags: every sweep lists tags
-      // UNDER the ref lock, so each attempt linearizes cleanly
+      // sweep continuously while the child tags: every sweep marks its
+      // candidates before it re-lists the tags, and every setTag checks
+      // for a mark after its write, so each attempt either pins its
+      // snapshot or fails and withdraws
       val sweepDeadline = System.currentTimeMillis() + 120000
       while (!java.nio.file.Files.exists(done)) {
         assert(child.isAlive, "child JVM died mid-race: " + drain(child))

@@ -122,7 +122,7 @@ class SnapshotTagSpec extends SparkSpec {
     assert(e.getMessage.contains("neither a snapshot id"), e.getMessage)
     spark.sql("DROP TABLE tagdig.db.t")
   }
-  test("tag-vs-expiry arbitration: a tag landing in the sweep window survives; late tags fail loudly; stale locks break") {
+  test("tag-vs-expiry arbitration: a tag landing in the sweep window survives; late tags fail loudly") {
     val root = tmpDir("tag-arb")
     val t = new LakehouseTable(spark, root)
     t.append(Seq((1L, "a")).toDF("k", "v").coalesce(1)) // snap 1 (old)
@@ -130,8 +130,8 @@ class SnapshotTagSpec extends SparkSpec {
     t.append(Seq((2L, "b")).toDF("k", "v").coalesce(1)) // snap 2 (current)
     val other = new LakehouseTable(spark, root) // the "remote" writer
     // 1. the round-12 race window: the tag lands AFTER the sweep
-    //    started but BEFORE its locked listing — the in-lock listing
-    //    must see it and keep the snapshot
+    //    started but BEFORE its ref listing — the listing must see it
+    //    and keep the snapshot
     t.onBeforeExpireSweep = () => {
       other.setTag("pinned", 1L)
       t.onBeforeExpireSweep = () => ()
@@ -149,67 +149,6 @@ class SnapshotTagSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](other.setTag("late", 1L))
     assert(e.getMessage.contains("not found"), e.getMessage)
     assert(!t.tags.contains("late"), "a failed setTag must leave no ref")
-    // 3. a crashed holder's lock ages out: setTag breaks it and lands
-    val lock = java.nio.file.Paths.get(root, "_refs", ".lock")
-    java.nio.file.Files.createDirectories(lock.getParent)
-    java.nio.file.Files.createFile(lock)
-    java.nio.file.Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - LakehouseTable.RefLockStaleMs - 60000L))
-    t.setTag("after-stale", 2L)
-    assert(t.snapshotForTag("after-stale").snapshotId === 2L)
-    assert(!java.nio.file.Files.exists(lock), "the lock releases after the write")
-  }
-
-  test("a LIVE holder's long critical section survives breakers: the heartbeat refreshes the lock") {
-    val root = tmpDir("tag-hb")
-    val a = new LakehouseTable(spark, root)
-    a.append(Seq((1L, "a")).toDF("k", "v").coalesce(1))
-    val b = new LakehouseTable(spark, root)
-    // stale threshold far BELOW the critical-section length: without
-    // the heartbeat, b would break a's live lock mid-section (the
-    // ADVICE r13 two-holders race); with it, mtime never ages past the
-    // threshold and b waits for the real release
-    a.refLockStaleMs = 250L
-    b.refLockStaleMs = 250L
-    val aInside = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val overlap = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val holder = new Thread(() => a.refsLockedForTest {
-      aInside.set(true); Thread.sleep(1200); aInside.set(false)
-    })
-    holder.start()
-    Thread.sleep(400) // a's lock is now older than the naive threshold
-    b.refsLockedForTest { if (aInside.get) overlap.set(true) }
-    holder.join(10000)
-    assert(!overlap.get,
-      "a second holder entered while the live holder was still inside " +
-        "its critical section — the heartbeat failed to protect the lock")
-  }
-
-  test("racing breakers over a genuinely stale lock: one wins the rename-aside, all land") {
-    val root = tmpDir("tag-brk")
-    val t = new LakehouseTable(spark, root)
-    t.append(Seq((1L, "a")).toDF("k", "v").coalesce(1))
-    val lock = java.nio.file.Paths.get(root, "_refs", ".lock")
-    java.nio.file.Files.createDirectories(lock.getParent)
-    java.nio.file.Files.writeString(lock, "crashed-holder-token")
-    java.nio.file.Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - LakehouseTable.RefLockStaleMs - 60000L))
-    val handles = (0 until 4).map(_ => new LakehouseTable(spark, root))
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ts = handles.zipWithIndex.map { case (h, i) =>
-      new Thread(() => try h.setTag(s"brk-$i", 1L)
-        catch { case e: Throwable => errs.add(e); () })
-    }
-    ts.foreach(_.start()); ts.foreach(_.join(30000))
-    assert(errs.isEmpty, s"racing breakers must all land: ${errs.peek()}")
-    assert((0 until 4).forall(i => t.tags.contains(s"brk-$i")))
-    assert(!java.nio.file.Files.exists(lock))
-    // no leftover break-in-progress files either
-    val leftovers = graft.Fs.listAll(lock.getParent)
-      .filter(_.getFileName.toString.startsWith(".lock-breaking"))
-    assert(leftovers.isEmpty, s"leaked aside files: $leftovers")
   }
 
   test("max-ref-age: an aged tag drops at the next sweep and its snapshot expires with it") {
@@ -243,4 +182,97 @@ class SnapshotTagSpec extends SparkSpec {
     intercept[IllegalArgumentException](t.setTag("bad", 2L, Some(0L)))
   }
 
+  test("max-ref-age drop keeps a tag re-pointed after the sweep read it") {
+    val root = tmpDir("tag-age-repoint")
+    val t = new LakehouseTable(spark, root)
+    t.append(Seq((1L, "a")).toDF("k", "v").coalesce(1)) // snap 1
+    Thread.sleep(15)
+    t.append(Seq((2L, "b")).toDF("k", "v").coalesce(1)) // snap 2 (current)
+    t.setTag("ephemeral", 1L, maxRefAgeMs = Some(40L))
+    Thread.sleep(60)
+    // the sweep has read the aged ref; another handle re-points the
+    // name (no age) before the sweep takes the file
+    val other = new LakehouseTable(spark, root)
+    t.onPhase = {
+      case "ref.take" => t.onPhase = _ => (); other.setTag("ephemeral", 2L)
+      case _ => ()
+    }
+    try t.expireSnapshotsOlderThan(System.currentTimeMillis() + 3600000L)
+    finally t.onPhase = _ => ()
+    val r = t.tagRefs.get("ephemeral")
+    assert(r.map(x => (x.snapshot, x.maxRefAgeMs)) === Some((2L, None)),
+      s"the re-pointed tag must survive the aged drop: $r")
+    assert(t.listSnapshots().map(_.snapshotId) === Seq(2L),
+      "the aged ref's old snapshot expires with its pin")
+    val refDir = java.nio.file.Paths.get(root, "_refs")
+    assert(graft.Fs.listAll(refDir).map(_.getFileName.toString)
+      .filter(_.startsWith(".")).isEmpty, "no file may stay aside")
+  }
+
+  test("the ref handshake at each step: between the sweep's listings a tag pins, inside the mark window it refuses, before its write it withdraws") {
+    def twoSnapshots(prefix: String) = {
+      val root = tmpDir(prefix)
+      val t = new LakehouseTable(spark, root)
+      t.append(Seq((1L, "a")).toDF("k", "v").coalesce(1)) // snap 1 (old)
+      Thread.sleep(15)
+      t.append(Seq((2L, "b")).toDF("k", "v").coalesce(1)) // snap 2 (current)
+      (t, new LakehouseTable(spark, root))
+    }
+    def at(t: LakehouseTable, phase: String)(act: => Unit): Unit =
+      t.onPhase = p => if (p == phase) { t.onPhase = _ => (); act }
+    val future = System.currentTimeMillis() + 3600000L
+    // 1. the tag lands after the sweep's first listing, before its
+    //    marks: the second listing sees it and the snapshot survives
+    val (t1, o1) = twoSnapshots("tag-hs-listed")
+    at(t1, "expire.listed") { o1.setTag("mid", 1L) }
+    t1.expireSnapshotsOlderThan(future)
+    assert(t1.snapshotForTag("mid").snapshotId === 1L)
+    assert(t1.listSnapshots().map(_.snapshotId) === Seq(1L, 2L))
+    // 2. the tag lands inside the mark-then-list window: it refuses
+    //    as being expired, leaves no ref, and the sweep deletes
+    val (t2, o2) = twoSnapshots("tag-hs-marked")
+    var late: Option[Throwable] = None
+    at(t2, "expire.marked") { late = scala.util.Try(o2.setTag("late", 1L)).failed.toOption }
+    t2.expireSnapshotsOlderThan(future)
+    assert(late.exists(_.getMessage.contains("being expired")), s"got $late")
+    assert(t2.listSnapshots().map(_.snapshotId) === Seq(2L))
+    assert(!t2.tags.contains("late"), "a refused setTag must leave no ref")
+    // 3. a whole sweep runs between a setTag's pre-check and its write:
+    //    the post-write check finds the manifest gone and withdraws
+    val (t3, o3) = twoSnapshots("tag-hs-checked")
+    at(o3, "ref.checked") { t3.expireSnapshotsOlderThan(future) }
+    val e = intercept[IllegalArgumentException](o3.setTag("racer", 1L))
+    assert(e.getMessage.contains("not found"), e.getMessage)
+    assert(!t3.tags.contains("racer"), "a withdrawn tag must leave no ref")
+    assert(t3.listSnapshots().map(_.snapshotId) === Seq(2L))
+  }
+
+  test("a crashed sweep's mark refuses new refs at once; the next sweep removes snapshot and mark") {
+    val root = tmpDir("tag-crashed-sweep")
+    val t = new LakehouseTable(spark, root)
+    t.append(Seq((1L, "a")).toDF("k", "v").coalesce(1)) // snap 1 (old, untagged)
+    Thread.sleep(15)
+    t.append(Seq((2L, "b")).toDF("k", "v").coalesce(1)) // snap 2 (current)
+    // what a sweep that died right after marking leaves behind
+    val mark = java.nio.file.Paths.get(root, "_refs", "expiring", "1")
+    java.nio.file.Files.createDirectories(mark.getParent)
+    java.nio.file.Files.createFile(mark)
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](t.setTag("x", 1L))
+    val waitedMs = (System.nanoTime() - t0) / 1000000
+    assert(e.getMessage.contains("being expired"), e.getMessage)
+    assert(waitedMs < 2000, s"a marked snapshot must refuse at once, waited $waitedMs ms")
+    assert(!t.tags.contains("x"))
+    val eb = intercept[IllegalStateException](t.forkBranch("b", Some(1L)))
+    assert(eb.getMessage.contains("being expired"), eb.getMessage)
+    assert(t.branches.isEmpty)
+    intercept[IllegalStateException](t.cloneAtSnapshot(tmpDir("tag-crashed-clone"), 1L))
+    assert(t.tags.isEmpty, "a refused clone leaves no pin")
+    // unmarked snapshots still take refs
+    t.setTag("head", 2L)
+    t.dropTag("head")
+    t.expireSnapshotsOlderThan(System.currentTimeMillis() + 3600000L)
+    assert(t.listSnapshots().map(_.snapshotId) === Seq(2L))
+    assert(!java.nio.file.Files.exists(mark), "the sweep deletes the mark after the manifest")
+  }
 }

@@ -8,10 +8,11 @@ import org.apache.spark.sql.SparkSession
   * table's historical snapshots trying to TAG each one while the
   * parent process runs concurrent expiry sweeps against the same
   * root. Every attempt's outcome (ok / fail) is recorded to a result
-  * file — the parent asserts the two-linearizations contract: an OK
-  * tag's snapshot must still resolve (the sweep saw the ref), a FAILED
-  * attempt must have left no ref behind (the sweep deleted the
-  * manifest first and setTag refused loudly).
+  * file — the parent asserts the expiry handshake's contract: an OK
+  * tag's snapshot must still resolve (the sweep's second ref listing
+  * saw the ref), a FAILED attempt must have left no ref behind (the
+  * sweep marked or deleted the snapshot first, and setTag refused or
+  * withdrew its ref loudly).
   */
 object TagRaceMain {
   def main(args: Array[String]): Unit = {
