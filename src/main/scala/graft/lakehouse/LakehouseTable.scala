@@ -1,6 +1,7 @@
 package graft.lakehouse
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths,
+  StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
@@ -465,8 +466,10 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   /** The MAIN head: branch commits (write-audit-publish) are invisible
     * until published.
     */
-  def currentSnapshot(): Option[Snapshot] =
-    listSnapshots().reverseIterator.find(_.branch.isEmpty)
+  def currentSnapshot(): Option[Snapshot] = mainHeadIn(listSnapshots())
+
+  private def mainHeadIn(snaps: Seq[Snapshot]): Option[Snapshot] =
+    snaps.reverseIterator.find(_.branch.isEmpty)
 
   /** Version ids are GLOBAL across main and branches (one id space,
     * one put-if-absent arbiter per id).
@@ -720,7 +723,7 @@ final class LakehouseTable(spark: SparkSession, val root: String,
   }
 
   private[lakehouse] object MainLine extends WriteTarget {
-    protected def headIn(snaps: Seq[Snapshot]) = snaps.reverseIterator.find(_.branch.isEmpty)
+    protected def headIn(snaps: Seq[Snapshot]) = mainHeadIn(snaps)
     def publish(s: Snapshot) = writeSnapshot(s)
   }
 
@@ -2305,21 +2308,26 @@ final class LakehouseTable(spark: SparkSession, val root: String,
 
   private def refPath(name: String): Path = refsDir.resolve(name + ".json")
 
-  /** Expiry marks, `_refs/expiring/<id>`: the sweep's half of the ref
-    * handshake ([[expireSnapshotsOlderThan]]).
+  /** Expiry marks, `_refs/expiring/<id>.<sweep>`: the sweep's half of
+    * the ref handshake ([[expireSnapshotsOlderThan]]). Each sweep names
+    * its own marks, so it can clear what it marked without clearing a
+    * mark another sweep relies on.
     */
   private def expiringDir: Path = refsDir.resolve("expiring")
 
-  private def expiringMark(id: Long): Path = expiringDir.resolve(id.toString)
+  /** Every expiry mark, by the snapshot id it marks (any sweep's). */
+  private def marks(): Map[Long, Seq[Path]] =
+    (if (Files.isDirectory(expiringDir)) graft.Fs.listAll(expiringDir) else Nil)
+      .groupBy(_.getFileName.toString.takeWhile(_ != '.').toLong)
 
   /** Could a sweep drop snapshot `id` under a ref written before this
-    * call? Yes if it is marked or its manifest is gone. The mark is read
-    * FIRST: a sweep deletes the manifest before the mark, so an absent
-    * mark followed by a present manifest means any later mark comes
-    * from a sweep whose second ref listing sees the ref.
+    * call? Yes if any sweep marked it or its manifest is gone. The marks
+    * are read FIRST: a sweep deletes the manifest before its mark, so no
+    * mark followed by a present manifest means any later mark comes from
+    * a sweep whose second ref listing sees the ref.
     */
   private def expiring(id: Long): Boolean =
-    Files.exists(expiringMark(id)) || !Files.exists(manifestPath(id))
+    marks().contains(id) || !Files.exists(manifestPath(id))
 
   private def beingExpired(id: Long) = new IllegalStateException(
     s"snapshot $id of table '$root' is being expired: a snapshot marked " +
@@ -2336,49 +2344,67 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * writes its own claim before it reads the other's, so either this
     * check sees a sweep's mark or that sweep's second listing sees this
     * ref. A failed check withdraws the ref (only if `p` still holds the
-    * body `write` returned) and fails loudly.
+    * body `write` returned), puts back the ref it replaced (a re-pointed
+    * tag keeps its old target) and fails loudly.
     */
   private def landRef(p: Path, snapshotId: Long)(write: => String): Unit = {
     snapshotOrThrow(snapshotId)
-    if (Files.exists(expiringMark(snapshotId))) throw beingExpired(snapshotId)
+    if (marks().contains(snapshotId)) throw beingExpired(snapshotId)
     onPhase("ref.checked")
-    val body = write
-    if (expiring(snapshotId)) {
-      takeRefIf(p)(_ == body)
-      snapshotOrThrow(snapshotId) // manifest gone: the standard "not found"
-      throw beingExpired(snapshotId)
-    }
+    // the ref this write replaces, held by a hard link so a withdrawal
+    // can put it back (a branch write never replaces: it fails instead)
+    val prev = asidePath(p, "prev")
+    val hadPrev = tryLink(prev, p)
+    try {
+      val body = write
+      if (expiring(snapshotId)) {
+        if (takeRefIf(p)(_ == body) && hadPrev) putBack(p, prev, Files.readString(prev))
+        snapshotOrThrow(snapshotId) // manifest gone: the standard "not found"
+        throw beingExpired(snapshotId)
+      }
+    } finally { Files.deleteIfExists(prev); () }
   }
+
+  /** A hidden sibling of ref `p` to hold a ref aside. The name ends in
+    * `.tmp`, so one a crash leaves behind ages out with the other temps.
+    */
+  private def asidePath(p: Path, kind: String): Path =
+    p.resolveSibling(s".$kind-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
+
+  /** Hard-link `link` to `target`, put-if-absent: false when `link`
+    * already exists or `target` does not.
+    */
+  private def tryLink(link: Path, target: Path): Boolean =
+    try { Files.createLink(link, target); true }
+    catch { case _: FileAlreadyExistsException | _: NoSuchFileException => false }
 
   /** Remove the ref at `p` if `drop` holds for its body, without losing
     * a ref that replaced it after the caller read it: the file moves
-    * aside atomically and is re-read there. A body `drop` refuses goes
-    * back put-if-absent (a ref that landed meanwhile wins); the put-back
-    * is a ref write, so it re-checks like [[landRef]] and withdraws
-    * rather than dangles if a sweep marked its snapshot while it stood
-    * aside. The aside name ends in `.tmp`, so a crash here ages out
-    * with the other temps.
+    * aside atomically and is re-read there, and a body `drop` refuses
+    * goes back ([[putBack]]). True when this call removed a ref.
     */
-  private def takeRefIf(p: Path)(drop: String => Boolean): Unit = {
+  private def takeRefIf(p: Path)(drop: String => Boolean): Boolean = {
     onPhase("ref.take")
-    val aside = p.resolveSibling(
-      s".take-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
+    val aside = asidePath(p, "take")
     try Files.move(p, aside, StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.NoSuchFileException => return }
+    catch { case _: java.nio.file.NoSuchFileException => return false }
     try {
       val body = Files.readString(aside)
-      if (!drop(body)) {
-        val back =
-          try { Files.createLink(p, aside); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        if (back && expiring(pinOf(p, body))) {
-          System.err.println(s"[graft-lakehouse] WARNING: ref '$p' withdrawn: " +
-            s"snapshot ${pinOf(p, body)} was marked for expiry while the ref stood aside")
-          takeRefIf(p)(_ == body)
-        }
-      }
+      drop(body) || { putBack(p, aside, body); false }
     } finally { Files.deleteIfExists(aside); () }
   }
+
+  /** Put the ref `body` held at `from` back at `p`, put-if-absent (a ref
+    * that landed meanwhile wins). The put-back is a ref write, so it
+    * re-checks like [[landRef]] and withdraws, loudly, rather than
+    * dangle if a sweep marked its snapshot while `p` did not name it.
+    */
+  private def putBack(p: Path, from: Path, body: String): Unit =
+    if (tryLink(p, from) && expiring(pinOf(p, body))) {
+      System.err.println(s"[graft-lakehouse] WARNING: ref '$p' withdrawn: " +
+        s"snapshot ${pinOf(p, body)} was marked for expiry while the ref stood aside")
+      takeRefIf(p)(_ == body)
+    }
 
   /** Point tag `name` at snapshot `snapshotId` (REPLACES an existing
     * tag — tags are movable pointers, the Iceberg ref shape). The write
@@ -2387,7 +2413,9 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * before any ref is touched; a mark or a manifest delete that lands
     * while the tag is written withdraws it and fails loudly — a
     * successful setTag's snapshot survives every sweep until the tag
-    * drops.
+    * drops. A refused re-point puts the tag's previous target back,
+    * unless a sweep marked that snapshot in the moment no tag named it;
+    * then the old tag is withdrawn too, with a warning.
     */
   def setTag(name: String, snapshotId: Long,
       maxRefAgeMs: Option[Long] = None): Unit = writeLock.synchronized {
@@ -2686,11 +2714,8 @@ final class LakehouseTable(spark: SparkSession, val root: String,
         val tmp = Files.createTempFile(branchesDir, ".ref-", ".tmp")
         try {
           Files.writeString(tmp, body)
-          try Files.createLink(branchPath(name), tmp)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              throw new IllegalArgumentException(s"branch '$name' already exists")
-          }
+          if (!tryLink(branchPath(name), tmp))
+            throw new IllegalArgumentException(s"branch '$name' already exists")
         } finally Files.deleteIfExists(tmp)
         body
       }
@@ -2710,9 +2735,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     branchHeadIn(listSnapshots(), name, branchRef(name))
 
   private def branchHeadIn(snaps: Seq[Snapshot], name: String, ref: BranchRef): Snapshot =
+    branchHeadOpt(snaps, name, ref).getOrElse(throw invalidSnapshot(ref.fork))
+
+  private def branchHeadOpt(snaps: Seq[Snapshot], name: String, ref: BranchRef): Option[Snapshot] =
     snaps.reverseIterator.find(inBranch(_, name, ref))
       .orElse(snaps.find(_.snapshotId == ref.fork))
-      .getOrElse(throw invalidSnapshot(ref.fork))
 
   /** Snapshot ids the refs pin against expiry, heads resolved within
     * `snaps`: every TAGGED snapshot (a tag is a promise that this exact
@@ -2720,11 +2747,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * lapse, to let it expire), and each live BRANCH's fork point and
     * head, so an in-flight write-audit-publish stays publishable through
     * maintenance; intermediate branch snapshots age out like main
-    * history.
+    * history. A branch forked after `snaps` was listed pins its fork.
     */
   private def refPins(snaps: Seq[Snapshot]): Set[Long] =
     tagRefs.values.map(_.snapshot).toSet ++ branches.flatMap { case (n, ref) =>
-      snaps.reverseIterator.find(inBranch(_, n, ref)).map(_.snapshotId).toSet + ref.fork
+      branchHeadOpt(snaps, n, ref).map(_.snapshotId).toSet + ref.fork
     }
 
   private def branchRef(name: String): BranchRef =
@@ -2892,18 +2919,18 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     * Refs survive the sweep through a HANDSHAKE, not a lock: each side
     * writes its own claim before it reads the other's. The sweep lists
     * the snapshots and the refs (tags, branch forks and heads), marks
-    * each eligible snapshot no ref names put-if-absent
-    * (`_refs/expiring/<id>`; a mark another sweep made counts as made),
-    * lists the refs AGAIN, and deletes only the marked snapshots that
-    * second listing shows unreferenced — each mark after its manifest.
-    * A ref writer ([[setTag]], [[forkBranch]], a clone pin) writes its
-    * ref and then looks for a mark, so either it sees the mark and
-    * withdraws, or the second listing sees its ref. A marked snapshot
-    * therefore takes no new refs, and a mark is never cleared while its
-    * manifest exists (clearing one could let a racing sweep delete a
-    * snapshot a fresh ref names). A crashed sweep blocks nothing but new
-    * refs to the snapshots it marked; the next sweep that still finds
-    * one eligible and unreferenced removes it. No timer is involved.
+    * each eligible snapshot no ref names with a mark of its own
+    * (`_refs/expiring/<id>.<sweep>`), lists the refs AGAIN, and deletes
+    * only the marked snapshots that second listing shows unreferenced,
+    * then all their marks. On a snapshot the second listing pins it
+    * clears only its OWN mark: clearing another sweep's could let a fresh
+    * ref pass its check while that sweep deletes the snapshot. A ref
+    * writer ([[setTag]], [[forkBranch]], a clone pin) writes its ref and
+    * then looks for any mark, so either it withdraws, or every sweep
+    * that marked later sees its ref. A marked snapshot takes no new
+    * refs; a crashed sweep blocks nothing but new refs to what it
+    * marked, and the next sweep that still finds one eligible and
+    * unreferenced removes it and its marks. No timer is involved.
     */
   def expireSnapshotsOlderThan(cutoffMs: Long): Int = writeLock.synchronized {
     if (listSnapshots().isEmpty) return 0
@@ -2920,19 +2947,19 @@ final class LakehouseTable(spark: SparkSession, val root: String,
     // the protected "current" is the MAIN head — the newest GLOBAL
     // snapshot may be a branch commit, whose survival is the branch
     // ref's business
-    val current = snaps.reverseIterator.find(_.branch.isEmpty).getOrElse(snaps.last)
+    val current = mainHeadIn(snaps).getOrElse(snaps.last)
     val pinned = refPins(snaps)
     val marked = snaps.filter(s => s.snapshotId != current.snapshotId &&
       s.timestampMs < cutoffMs && !pinned(s.snapshotId))
     onPhase("expire.listed")
+    val sweep = java.util.UUID.randomUUID().toString.take(12)
+    def mark(id: Long) = expiringDir.resolve(s"$id.$sweep")
     if (marked.nonEmpty) Files.createDirectories(expiringDir)
-    marked.foreach { s =>
-      try { Files.createFile(expiringMark(s.snapshotId)); () }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
+    marked.foreach(s => Files.createFile(mark(s.snapshotId)))
     onPhase("expire.marked")
     val pinnedNow = refPins(snaps)
-    val expired = marked.filterNot(s => pinnedNow(s.snapshotId))
+    val (stay, expired) = marked.partition(s => pinnedNow(s.snapshotId))
+    stay.foreach(s => Files.deleteIfExists(mark(s.snapshotId)))
     // the exactly-once ledger must survive retention (the Delta
     // SetTransaction-retention concern): deleting the manifest that
     // carries an app's LATEST txn mark would let a replayed streaming
@@ -2957,9 +2984,11 @@ final class LakehouseTable(spark: SparkSession, val root: String,
       // the manifest, or a long-lived handle under continuous
       // commit+expiry grows driver memory one dead snapshot per cycle
       snapshotCache.remove(p.getFileName.toString)
-      Files.deleteIfExists(expiringMark(s.snapshotId))
     }
     val expiredIds = expired.map(_.snapshotId).toSet
+    // every sweep's marks on a deleted manifest go (a crashed sweep's
+    // too): the missing manifest now refuses new refs by itself
+    marks().foreach { case (id, ps) => if (expiredIds(id)) ps.foreach(Files.deleteIfExists(_)) }
     val kept = snaps.filterNot(s => expiredIds(s.snapshotId))
     // tombstone files are live references too — GC'ing one that a
     // retained snapshot still consults would resurrect its deleted rows

@@ -12,7 +12,7 @@ import graft.SparkSpec
   * ([[LakehouseTable.expireSnapshotsOlderThan]]): every successful ref
   * resolves with all its data files present, every failed attempt left
   * no ref (and failed with the "not found" or "being expired" wording),
-  * and no ref dangles.
+  * no ref dangles, and no expiry mark outlives the sweeps.
   */
 class RefExpiryRaceSpec extends SparkSpec {
   import spark.implicits._
@@ -165,6 +165,13 @@ class RefExpiryRaceSpec extends SparkSpec {
     // no ref dangles
     tags.keys.foreach(k => t.snapshotForTag(k))
     branches.values.foreach(b => t.snapshotOrThrow(b.fork))
+    // no mark outlives the sweeps (each clears its own on what it kept,
+    // and every mark of what it deleted), so every surviving snapshot
+    // still takes new refs
+    val marksLeft = java.nio.file.Paths.get(root, "_refs", "expiring")
+    assert(!java.nio.file.Files.isDirectory(marksLeft) || graft.Fs.listAll(marksLeft).isEmpty,
+      s"seed $seed: expiry marks outlived the sweeps: ${graft.Fs.listAll(marksLeft)}")
+    t.listSnapshots().foreach(s => t.setTag(s"after-${s.snapshotId}", s.snapshotId))
     // the race genuinely exercised both outcomes
     def failedWith(w: String) = all.count(_.error.exists(_.getMessage.contains(w)))
     info(s"seed $seed: ${all.count(_.error.isEmpty)} refs landed, " +

@@ -228,6 +228,10 @@ class SnapshotTagSpec extends SparkSpec {
     t1.expireSnapshotsOlderThan(future)
     assert(t1.snapshotForTag("mid").snapshotId === 1L)
     assert(t1.listSnapshots().map(_.snapshotId) === Seq(1L, 2L))
+    //    and the sweep that kept it cleared its own mark: the snapshot
+    //    still takes new refs
+    o1.setTag("again", 1L)
+    assert(t1.snapshotForTag("again").snapshotId === 1L)
     // 2. the tag lands inside the mark-then-list window: it refuses
     //    as being expired, leaves no ref, and the sweep deletes
     val (t2, o2) = twoSnapshots("tag-hs-marked")
@@ -247,6 +251,37 @@ class SnapshotTagSpec extends SparkSpec {
     assert(t3.listSnapshots().map(_.snapshotId) === Seq(2L))
   }
 
+  test("a re-point refused as expiring keeps the tag's previous target") {
+    val root = tmpDir("tag-repoint-refused")
+    val t = new LakehouseTable(spark, root)
+    t.append(Seq((1L, "a")).toDF("k", "v").coalesce(1)) // snap 1 (old)
+    Thread.sleep(15)
+    t.append(Seq((2L, "b")).toDF("k", "v").coalesce(1)) // snap 2 (current)
+    t.setTag("rel", 2L)
+    val other = new LakehouseTable(spark, root)
+    def at(phase: String)(act: => Unit): Unit =
+      other.onPhase = p => if (p == phase) { other.onPhase = _ => (); act }
+    // a sweep marks snapshot 1 between the pre-check and the write
+    val mark = java.nio.file.Paths.get(root, "_refs", "expiring", "1.other-sweep")
+    at("ref.checked") {
+      java.nio.file.Files.createDirectories(mark.getParent)
+      java.nio.file.Files.createFile(mark)
+    }
+    val e1 = intercept[IllegalStateException](other.setTag("rel", 1L))
+    assert(e1.getMessage.contains("being expired"), e1.getMessage)
+    assert(t.snapshotForTag("rel").snapshotId === 2L, "the old target must stand")
+    // a whole sweep deletes snapshot 1 between the pre-check and the write
+    java.nio.file.Files.delete(mark)
+    at("ref.checked") { t.expireSnapshotsOlderThan(System.currentTimeMillis() + 3600000L) }
+    val e2 = intercept[IllegalArgumentException](other.setTag("rel", 1L))
+    assert(e2.getMessage.contains("not found"), e2.getMessage)
+    assert(t.snapshotForTag("rel").snapshotId === 2L, "the old target must stand")
+    assert(t.listSnapshots().map(_.snapshotId) === Seq(2L))
+    val refDir = java.nio.file.Paths.get(root, "_refs")
+    assert(graft.Fs.listAll(refDir).map(_.getFileName.toString)
+      .filter(_.startsWith(".")).isEmpty, "no file may stay aside")
+  }
+
   test("a crashed sweep's mark refuses new refs at once; the next sweep removes snapshot and mark") {
     val root = tmpDir("tag-crashed-sweep")
     val t = new LakehouseTable(spark, root)
@@ -254,7 +289,7 @@ class SnapshotTagSpec extends SparkSpec {
     Thread.sleep(15)
     t.append(Seq((2L, "b")).toDF("k", "v").coalesce(1)) // snap 2 (current)
     // what a sweep that died right after marking leaves behind
-    val mark = java.nio.file.Paths.get(root, "_refs", "expiring", "1")
+    val mark = java.nio.file.Paths.get(root, "_refs", "expiring", "1.dead-sweep")
     java.nio.file.Files.createDirectories(mark.getParent)
     java.nio.file.Files.createFile(mark)
     val t0 = System.nanoTime()
